@@ -22,8 +22,12 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 
+# heap: SPARK_DRIVER_MEM when set, else half of MemTotal clamped to 2-8 g
+# (the same rule the tier-1 test command uses)
+HEAP=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo 2>/dev/null || echo 2g)}
+
 run_side() {
-  java $ADD_OPENS -Xmx24g -XX:+UseParallelGC \
+  java $ADD_OPENS -Xmx"$HEAP" -XX:+UseParallelGC \
     -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
     -cp "${CLASSES_DIR:-target/scala-2.13/classes}:/opt/spark/jars/*" \
     graft.ScalingBench "$1"

@@ -10,8 +10,8 @@ package graft
   * each executor is its own JVM with its own heap, GC, and netty shuffle
   * server, so adding executors adds memory the way a real cluster does.
   * Both campaigns share one unavoidable caveat: all JVMs sit on one
-  * socket of one box, so shared-DRAM ceilings (measured by
-  * MemBandwidthProbe) still bound bandwidth-heavy workloads.
+  * socket of one box, so shared-DRAM ceilings still bound
+  * bandwidth-heavy workloads.
   *
   * Driven by BENCH/run_cluster_scaling.sh, which boots the master and
   * the per-side worker set, then runs

@@ -52,11 +52,8 @@ object GraftSession {
     b.appName(appName)
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      // AQE on by default (skew-join splitting is part of the scale
-      // story); SPARK_GRAFT_AQE=false lets benchmarks measure the
-      // driver-side re-planning overhead AQE adds per query stage
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
+      // AQE always on: skew-join splitting is part of the scale story
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -38,9 +38,9 @@ object Pipeline {
       val assigned = Tiling.assign(tiles, level)
         .withColumnRenamed("label_x", "x").withColumnRenamed("label_y", "y")
         .withColumnRenamed("cell_id", "tile_cell_id")
-      // bucket re-derived from image_id with EXACTLY IcebergLite.run's
-      // default bucket expression — bit-identical values, so wave closure
-      // still provably holds. The former `.join(slice.select("image_id",
+      // bucket re-derived from image_id with IcebergLite.run's own default
+      // bucket expression — bit-identical values, so wave closure still
+      // provably holds. The former `.join(slice.select("image_id",
       // "bucket"))` evaluated the images table a SECOND time per wave:
       // the table is an opaque typed MapPartitions, so column pruning
       // cannot reach inside it and the join leg re-rendered and
@@ -49,7 +49,7 @@ object Pipeline {
       SpatialJoins.pipJoin(assigned, polys, level)
         .select(col("image_id"), col("tile_ix"), col("tile_iy"),
           col("tile_cell_id").as("cell_id"), col("poly_id"))
-        .withColumn("bucket", pmod(xxhash64(col("image_id")), lit(buckets)).cast("int"))
+        .withColumn("bucket", IcebergLite.bucketOf(Seq("image_id"), buckets))
     }
   }
 }

@@ -20,9 +20,6 @@ object ExprHelpers {
   def kRing(cell: Long, k: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(CellIndex.kRing(cell, k))
 
-  def annulus(cell: Long, rInner: Int, rOuter: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(CellIndex.annulus(cell, rInner, rOuter))
-
   /** Sign-LSH bucket of a quantized embedding: bit j of the result is
     * (sum_i q_i * w(j, i)) > 0 with the closed-form integer plane weight
     * w(j, i) = ((j*dim + i) * 2654435761) mod 2001 - 1000 — one pure

@@ -211,29 +211,6 @@ case class CellKRingExpr(left: Expression, right: Expression)
     copy(left = l, right = r)
 }
 
-/** `cell_annulus(cell, r_inner, r_outer) -> array<bigint>` — cells with
-  * Chebyshev distance in (r_inner, r_outer]: the INCREMENTAL kNN-round
-  * neighbourhood (kRing(r_outer) minus kRing(r_inner)), so round r+1
-  * re-scans only the new ring shell instead of the whole disk.
-  */
-case class CellAnnulusExpr(cell: Expression, rInner: Expression, rOuter: Expression)
-    extends TernaryExpression {
-  override def first: Expression = cell
-  override def second: Expression = rInner
-  override def third: Expression = rOuter
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "cell_annulus"
-
-  override protected def nullSafeEval(c: Any, ri: Any, ro: Any): Any =
-    ExprHelpers.annulus(c.asInstanceOf[Long], ri.asInstanceOf[Int], ro.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, ri, ro) => s"graft.functions.ExprHelpers.annulus($c, $ri, $ro)")
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): Expression =
-    copy(cell = f, rInner = s, rOuter = t)
-}
-
 /** `lsh_bucket(q, planes, dim) -> bigint` — sign-LSH bucket of a quantized
   * (array<bigint>) embedding, computed per row in ONE codegen'd pass.
   * Replaces the relational posexplode -> broadcast-join -> two-level

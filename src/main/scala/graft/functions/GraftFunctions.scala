@@ -16,7 +16,6 @@ object GraftFunctions {
     "cell_of" -> (e => CellOfExpr(e(0), e(1), e(2))),
     "cell_parent" -> (e => CellParentExpr(e(0))),
     "cell_kring" -> (e => CellKRingExpr(e(0), e(1))),
-    "cell_annulus" -> (e => CellAnnulusExpr(e(0), e(1), e(2))),
     "lsh_bucket" -> (e => LshBucketExpr(e(0), e(1), e(2))),
     "ivf_nearest" -> (e => IvfNearestExpr(e(0), e(1), e(2), e(3))),
     "text_fingerprint" -> (e => TextFingerprintExpr(e(0))),
@@ -26,12 +25,17 @@ object GraftFunctions {
     "geojson_polygon" -> (e => GeoJsonPolygonExpr(e(0))),
     "geojson_feature_collection" -> (e => GeoJsonFeatureCollectionExpr(e(0))))
 
-  /** Idempotent registration into an existing session. */
-  def register(spark: SparkSession): Unit =
+  /** Idempotent registration into an existing session: names the
+    * registry already has (a session built with [[GraftExtensions]]) are
+    * left as they are, so each function is registered exactly once.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(new FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   // DataFrame Column API — Columns are built DIRECTLY from the catalyst
   // expressions (org.apache.spark.sql.graftbridge.ColumnBridge), not via
@@ -51,8 +55,6 @@ object GraftFunctions {
     fn("cell_of", x, y, level)
   def cell_parent(cell: Column): Column = fn("cell_parent", cell)
   def cell_kring(cell: Column, k: Column): Column = fn("cell_kring", cell, k)
-  def cell_annulus(cell: Column, rInner: Column, rOuter: Column): Column =
-    fn("cell_annulus", cell, rInner, rOuter)
   def lsh_bucket(q: Column, planes: Column, dim: Column): Column =
     fn("lsh_bucket", q, planes, dim)
   def ivf_nearest(q: Column, cent: Column, nLists: Column, rank: Column): Column =

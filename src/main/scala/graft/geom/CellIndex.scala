@@ -122,37 +122,6 @@ object CellIndex {
     out
   }
 
-  /** Cells with Chebyshev distance in (rInner, rOuter] of `cell` — exactly
-    * kRing(rOuter) minus kRing(rInner), with the same boundary clamping —
-    * sorted ascending. The incremental kNN-round neighbourhood: round r
-    * explodes only the cells NOT already scanned at radius rInner.
-    */
-  def annulus(cell: Long, rInner: Int, rOuter: Int): Array[Long] = {
-    require(rInner >= 0 && rOuter >= rInner, s"bad annulus [$rInner, $rOuter]")
-    val lvl = levelOf(cell)
-    val n = gridSize(lvl)
-    val cx = ixOfCell(cell)
-    val cy = iyOfCell(cell)
-    val X0 = math.max(cx - rOuter, 0L); val X1 = math.min(cx + rOuter, n - 1)
-    val Y0 = math.max(cy - rOuter, 0L); val Y1 = math.min(cy + rOuter, n - 1)
-    val x0 = math.max(cx - rInner, 0L); val x1 = math.min(cx + rInner, n - 1)
-    val y0 = math.max(cy - rInner, 0L); val y1 = math.min(cy + rInner, n - 1)
-    val out = mutable.ArrayBuilder.make[Long]
-    out.sizeHint((((X1 - X0 + 1) * (Y1 - Y0 + 1)) - ((x1 - x0 + 1) * (y1 - y0 + 1))).toInt)
-    var x = X0
-    while (x <= X1) {
-      var y = Y0
-      while (y <= Y1) {
-        if (x < x0 || x > x1 || y < y0 || y > y1) out += pack(x, y, lvl)
-        y += 1
-      }
-      x += 1
-    }
-    val res = out.result()
-    java.util.Arrays.sort(res)
-    res
-  }
-
   /** Geographic bounds of a cell. */
   def cellRect(cell: Long): Rect2 = {
     val lvl = levelOf(cell)

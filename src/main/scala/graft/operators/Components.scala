@@ -99,8 +99,6 @@ object Components {
         e = next
         sig = nextSig
         it += 1
-        if (sys.env.contains("SPARK_GRAFT_CC_DEBUG"))
-          System.err.println(s"[cc] iteration $it edges=${sig._1} converged=$converged")
       }
       if (!converged)
         throw new IllegalStateException(

@@ -2,12 +2,12 @@ package graft.operators
 
 import graft.{BenchWorkloads, GraftSession}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 
-/** Round-7 optimization evidence tool (NOT part of the frozen bench
-  * contract): writes `.explain("formatted")` output for every bench
-  * workload — plus the internal stage shapes the optimization claims are
-  * about — to plans/r07/<name>_<suffix>.txt.
+/** Plan evidence tool (NOT part of the frozen bench contract): writes
+  * `.explain("formatted")` output for every bench workload — plus the
+  * internal stage shapes optimization claims are about — to
+  * plans/r07/<name>_<suffix>.txt. Run it once on each side of a change,
+  * naming the side with the suffix.
   *
   * Usage: sbt "runMain graft.operators.PlanDump before|after"
   * Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as in graft.Bench.
@@ -19,7 +19,7 @@ object PlanDump {
       org.apache.spark.sql.execution.FormattedMode)
 
   def main(args: Array[String]): Unit = {
-    val suffix = args.headOption.getOrElse("before")
+    val suffix = args.headOption.getOrElse("after")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val outDir = java.nio.file.Paths.get("plans/r07")
@@ -53,7 +53,7 @@ object PlanDump {
     // claims): exact-dup collapse, shingle carrier, signature build,
     // band candidates, exact verify — all pre-materialization
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    write("dedup_components", dedupComponents(docs, suffix))
+    write("dedup_components", dedupComponents(docs))
 
     // 3) one CC iteration's plan (the dedup_clusters per-iteration claim)
     import spark.implicits._
@@ -65,53 +65,18 @@ object PlanDump {
     spark.stop()
   }
 
-  /** The stage shapes of the pair-producing dedup path, matching the code
-    * of this commit (the `suffix` records which side is being dumped).
+  /** The stage shapes of the pair-producing dedup path, straight from
+    * the operator's own stage builder.
     */
-  private def dedupComponents(docs: DataFrame, suffix: String): Seq[(String, String)] = {
-    def fmt(df: DataFrame): String =
-      df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
-    if (suffix == "before") {
-      // verbatim the round-6 minhashLshPairsImpl stage construction
-      val reps = docs.groupBy("text").agg(min("doc_id").as("rep_id"))
-      val members = docs.select(col("doc_id"), col("text")).join(reps, "text")
-        .select("doc_id", "rep_id")
-      val repDocs = docs.join(
-        members.where(col("doc_id") === col("rep_id")).select("doc_id"), "doc_id")
-      val sh = TextOps.shingles3(repDocs).select("doc_id", "shingle")
-      val wide = Dedup.minhashSignaturesWide(sh, 16)
-      val cand = Dedup.bandCandidates(wide, 16, 4)
-      val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      val inter = cand
-        .join(sh.withColumnRenamed("doc_id", "rep_a").withColumnRenamed("shingle", "sa"), "rep_a")
-        .join(sh.withColumnRenamed("doc_id", "rep_b2").withColumnRenamed("shingle", "sb"),
-          col("rep_b") === col("rep_b2") && col("sa") === col("sb"))
-        .groupBy("rep_a", "rep_b")
-        .agg(count(lit(1)).as("inter"))
-      val verified = inter
-        .join(sizes.withColumnRenamed("doc_id", "rep_a").withColumnRenamed("n", "na"), "rep_a")
-        .join(sizes.withColumnRenamed("doc_id", "rep_b").withColumnRenamed("n", "nb"), "rep_b")
-        .withColumn("uni", col("na") + col("nb") - col("inter"))
-        .where(col("inter") * 2 >= col("uni") * 1)
-        .select("rep_a", "rep_b", "inter", "uni")
-      Seq(
-        "collapse: members (groupBy text + join back)" -> fmt(members),
-        "shingle carrier: shingles3 (exploded + distinct)" -> fmt(sh),
-        "signatures: minhashSignaturesWide over shingle rows" -> fmt(wide),
-        "band candidates" -> fmt(cand),
-        "exact verify: per-shingle re-join + sizes joins" -> fmt(verified))
-    } else {
-      // the round-7 shapes, straight from the operator's own stage builder
-      val s = Dedup.minhashLshStages(docs, 16, 4, 1, 2, expandWithin = true)
-      val sections = Seq(
-        "collapse + shingle arrays: one text exchange, in-row array_distinct (shA)" -> fmt(s.shA),
-        "members: narrow explode of the collapse aggregate" -> fmt(s.members),
-        "signatures: in-row array_min folds over shA (no exchange added)" -> fmt(s.wide),
-        "band candidates" -> fmt(s.cand),
-        "exact verify: in-row array_intersect, 1 row/pair (no shingle re-join, no sizes agg)" -> fmt(s.verified))
-      s.shA.unpersist(blocking = false) // plan-only: drop the cache marker
-      sections
-    }
+  private def dedupComponents(docs: DataFrame): Seq[(String, String)] = {
+    val s = Dedup.minhashLshStages(docs, 16, 4, 1, 2, expandWithin = true)
+    val sections = Seq(
+      "collapse + shingle arrays: one text exchange, in-row array_distinct (shA)" -> fmt(s.shA),
+      "members: narrow explode of the collapse aggregate" -> fmt(s.members),
+      "signatures: in-row array_min folds over shA (no exchange added)" -> fmt(s.wide),
+      "band candidates" -> fmt(s.cand),
+      "exact verify: in-row array_intersect, 1 row/pair (no shingle re-join, no sizes agg)" -> fmt(s.verified))
+    s.shA.unpersist(blocking = false) // plan-only: drop the cache marker
+    sections
   }
 }

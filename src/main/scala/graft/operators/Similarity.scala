@@ -28,16 +28,6 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("i"),
         round(col("col").cast("double") * 1000.0, 0).cast("long").as("q"))
 
-  /** Exact top-k by integer dot product for the `nQueries` lowest vec_ids
-    * against the whole table. Output: (query_id, vec_id, dot, rank).
-    *
-    * The declared brute-force baseline — O(nQueries x N) pairs by
-    * definition — but the PLAN is still scale-shaped: the (tiny) query
-    * side broadcasts and each pair's dot is one in-row
-    * `aggregate(zip_with(...))`, so no exchange carries dim x pairs rows
-    * (the former per-component join + groupBy shuffled 64x the pair
-    * count); the only exchange left is the slim window rank.
-    */
   /** In-row exact integer dot over two quantized arrays. `zip_with` pads
     * the shorter array with nulls, so the per-element product is wrapped
     * in coalesce(_, 0): ragged lengths then contribute the partial dot
@@ -50,6 +40,20 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => coalesce(x * y, lit(0L))),
       lit(0L), (acc, v) => acc + v)
 
+  /** Exact top-k by integer dot product for the `nQueries` lowest vec_ids
+    * against the whole table. Output: (query_id, vec_id, dot, rank).
+    *
+    * The declared brute-force baseline — O(nQueries x N) pairs by
+    * definition — but the PLAN is still scale-shaped: the (tiny) query
+    * side broadcasts and each pair's dot is one in-row
+    * `aggregate(zip_with(...))`, so no exchange carries dim x pairs rows
+    * (the former per-component join + groupBy shuffled 64x the pair
+    * count); the only exchange left is the slim window rank.
+    *
+    * Returns a LAZY frame: nothing is persisted or computed here, so every
+    * action on the result re-runs the whole all-pairs scan. A caller that
+    * reads it more than once must persist it first (and unpersist after).
+    */
   def bruteTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
     // null/empty embeddings produce no pair — mirroring the relational
     // per-component inner join, where they contribute no (i, q) rows

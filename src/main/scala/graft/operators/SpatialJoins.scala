@@ -87,8 +87,7 @@ object SpatialJoins {
     * tables keep the broadcast.
     */
   def pipJoin(points: DataFrame, polygons: DataFrame, level: Int = AutoLevel,
-              broadcastPolygons: Option[Boolean] = None,
-              slimShuffle: Boolean = true): DataFrame = {
+              broadcastPolygons: Option[Boolean] = None): DataFrame = {
     val spark = points.sparkSession
     val lvl = if (level == AutoLevel) autoLevel(polygons) else level
     val doBroadcast = broadcastPolygons.getOrElse {
@@ -146,32 +145,25 @@ object SpatialJoins {
         explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id"))
       pts.join(broadcast(cellMap), "cell_id")
         .join(broadcast(polygons), "poly_id")
-    } else if (slimShuffle) {
+    } else {
       // shuffle path, two-stage like the broadcast path: shuffle the SLIM
       // (cell_id, poly_id) cover against the points, then re-join the
       // geometry once per matched pair by poly_id for the refine. The
-      // alternative (geometry riding the cell shuffle, `slimShuffle =
-      // false` below) replicates each polygon's full geometry once per
-      // cover cell — an 8,854-vertex Norway-class polygon's ~140 KB rides
-      // the shuffle thousands of times at level 12+, and this path is
-      // exactly the one chosen for KNOWN-huge polygon tables. Measured
-      // A/B (graft.AbBench pip_shuffle, 2M points, min over interleaved
-      // passes; table in COVERAGE.md): level 12 x 1 Norway copy slim
-      // 2.0 s vs fat 13.5 s (6.8x); level 12 x 4 copies slim 8.3 s vs
-      // fat OutOfMemoryError (the ~36 GB replicated-geometry shuffle
-      // exhausts the 16 GB JVM); level 10 x 30 copies (small covers,
-      // the fat plan's best regime) slim 5.0 s vs fat 7.7 s — the slim
-      // re-join's extra shuffle of (point, poly_id) pairs never loses.
+      // alternative (geometry riding the cell shuffle) replicates each
+      // polygon's full geometry once per cover cell — an 8,854-vertex
+      // Norway-class polygon's ~140 KB rides the shuffle thousands of
+      // times at level 12+, and this path is exactly the one chosen for
+      // KNOWN-huge polygon tables. Measured A/B (2M points, min over
+      // interleaved passes; table in COVERAGE.md): level 12 x 1 Norway
+      // copy slim 2.0 s vs fat 13.5 s (6.8x); level 12 x 4 copies slim
+      // 8.3 s vs fat OutOfMemoryError (the ~36 GB replicated-geometry
+      // shuffle exhausts the 16 GB JVM); level 10 x 30 copies (small
+      // covers, the fat plan's best regime) slim 5.0 s vs fat 7.7 s — the
+      // slim re-join's extra shuffle of (point, poly_id) pairs never loses.
       val cover = polygons.select(col("poly_id"),
         explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id"))
       pts.join(cover, "cell_id")
         .join(polygons, "poly_id")
-    } else {
-      // measured-and-rejected default; kept for the small-geometry regime
-      // and the A/B harness
-      val cover = polygons
-        .withColumn("cell_id", explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))))
-      pts.join(cover, "cell_id")
     }
     joined
       .where(pip(col("x"), col("y"), col("exterior"), col("holes")))
@@ -290,29 +282,23 @@ object SpatialJoins {
     * `Caching.release(result)` (a bare `unpersist()` would leave the
     * part caches behind) — no other cached state leaks.
     *
-    * CARRY-FORWARD (`carryForward = true`, off by default): round r+1
-    * reuses the previous round's candidates — cached UNPRUNED, restricted
-    * to surviving points — and explodes only the NEW ring shell
-    * (`cell_annulus(prevR, r]`); Chebyshev disks nest, so the candidate
-    * set is identical to the full re-explode (SpatialJoinSpec asserts
-    * output equality). MEASURED AND DEFAULTED OFF: making candidates
-    * carriable forces materializing the unpruned candidate frame
-    * (points x ring cells x label density rows — ~190M rows / ~8 GB at
-    * bench scale 32), and that materialization took the 8-core bench
-    * round from ~30 s to 346 s. With a well-chosen cell level almost
-    * every point resolves in round 1, so re-exploding the small
-    * unresolved TAIL (the default) is strictly cheaper than storing
-    * everything in case it is needed. The option remains for workloads
-    * whose label density forces most points through many rounds.
+    * Every round re-explodes the FULL disk for the unresolved points and
+    * prunes its candidates lazily inside the ranking job — never stored.
+    * Carrying the previous round's candidates forward and exploding only
+    * the new ring shell was measured and deleted (COVERAGE.md): it forces
+    * materializing the unpruned candidate frame (~190M rows / ~8 GB at
+    * bench scale 32) and took the 8-core bench round from ~30 s to 346 s,
+    * while with a well-chosen cell level almost every point resolves in
+    * round 1, so re-exploding the small unresolved TAIL is cheaper.
     *
-    * LINEAGE TRUNCATION: the unresolved-points chain (and the carried
-    * candidates in carry mode) is periodically materialized with an EAGER
-    * `localCheckpoint`, not a bare persist — "periodically" because lazy
-    * advancement (resolvePass) stacks at most three anti-join filters
-    * between checkpoints, so plan depth stays bounded. An iterative chain of
-    * persisted frames keeps its full LOGICAL lineage, and this loop's
-    * lineage otherwise grows exponentially in the round count (each
-    * round references the previous unresolved set twice) — measured: a
+    * LINEAGE TRUNCATION: the unresolved-points chain is periodically
+    * materialized with an EAGER `localCheckpoint`, not a bare persist —
+    * "periodically" because lazy advancement (resolvePass) stacks at most
+    * three anti-join filters between checkpoints, so plan depth stays
+    * bounded. An iterative chain of persisted frames keeps its full
+    * LOGICAL lineage, and this loop's lineage otherwise grows
+    * exponentially in the round count (each round references the
+    * previous unresolved set twice) — measured: a
     * 5-round run built a 2.1 GB plan string and OOM'd the driver inside
     * AQE's plan-update logging. The checkpoint replaces the chain's plan
     * with a LogicalRDD leaf, so every round's plan is constant-size.
@@ -329,23 +315,18 @@ object SpatialJoins {
     * iterative-Spark trade, bounded to this operator's lifetime).
     *
     * OUTPUT: (point_id, poly_id, d2, dist, rank) — the caller's own
-    * point coordinates are NOT echoed back by default (`outputXY =
-    * false`): they already sit keyed by point_id on the caller's side,
-    * and measured at campaign density (6.4M points, 3-variant A/B, min
-    * over interleaved rounds) dropping them from the ranking
-    * exchange/window sort AND skipping the output-sized re-join is
-    * 11-21% faster end-to-end at both 4 and 16 cores (noxy 11.7/25.3 s
-    * vs fat 13.2/32.7 s; the re-join variant ~= fat — it pays back what
-    * the slim window saves). `outputXY = true` restores the old
-    * 7-column shape via a point_id re-join.
+    * point coordinates are NOT echoed back: they already sit keyed by
+    * point_id on the caller's side, and measured at campaign density
+    * (6.4M points, 3-variant A/B, min over interleaved rounds) dropping
+    * them from the ranking exchange/window sort AND skipping an
+    * output-sized re-join is 11-21% faster end-to-end at both 4 and 16
+    * cores (11.7/25.3 s vs 13.2/32.7 s carrying x,y; a re-join variant
+    * ~= carrying — it pays back what the slim window saves).
     */
   def knnJoin(points: DataFrame, labels: DataFrame, k: Int,
               level: Int = AutoLevel,
               rounds: Seq[Int] = Seq(1, 2, 4, 8),
-              broadcastLabels: Boolean = true,
-              carryForward: Boolean = false,
-              slimWindow: Boolean = true,
-              outputXY: Boolean = false): DataFrame = {
+              broadcastLabels: Boolean = true): DataFrame = {
     val lvl0 = if (level == AutoLevel) knnAutoLevel(labels) else level
     val cellW = CellIndex.SpanX / CellIndex.gridSize(lvl0).toDouble
     val cellH = CellIndex.SpanY / CellIndex.gridSize(lvl0).toDouble
@@ -369,18 +350,12 @@ object SpatialJoins {
     // thrash the GC at millions of groups).
     val w = Window.partitionBy("point_id").orderBy(col("d2"), col("poly_id"))
 
-    // The candidate frame drops x,y right after d2 is computed
-    // (slimWindow, the default): the ranking exchange and window sort
-    // then carry only (point_id, poly_id, d2) — 24 B of payload instead
-    // of 40 B. x,y are re-joined onto the OUTPUT-sized result at the end
-    // (candidates outnumber outputs ~10x at bench density, so shrinking
-    // the sorted bytes beats carrying the columns). This was the
+    // The candidate frame drops x,y right after d2 is computed: the
+    // ranking exchange and window sort then carry only (point_id,
+    // poly_id, d2) — 24 B of payload instead of 40 B. This was the
     // operator's measured scaling gap: ~25x more intermediate bytes per
     // output row than pip_join, with x,y dead weight through the sort.
-    // slimWindow=false keeps the old carry-everything shape for A/B.
-    val candCols =
-      if (slimWindow) Seq("point_id", "poly_id", "d2")
-      else Seq("point_id", "x", "y", "poly_id", "d2")
+    val candCols = Seq("point_id", "poly_id", "d2")
     def withD2(cand: DataFrame): DataFrame = cand
       .withColumn("d2", (col("x") - col("lx")) * (col("x") - col("lx")) +
         (col("y") - col("ly")) * (col("y") - col("ly")))
@@ -408,8 +383,6 @@ object SpatialJoins {
     // lazy-advancement note in resolvePass)
     var stackedDepth = 0
     var resolvedParts = List.empty[DataFrame]
-    var carried: DataFrame = null // prev round's UNPRUNED candidates, cached
-    var prevR = 0
     val cacheHandles = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val releaseHandles = scala.collection.mutable.ListBuffer.empty[DataFrame]
     releaseHandles += unresolved
@@ -430,8 +403,7 @@ object SpatialJoins {
     // With `requireK = false` (a round whose candidate set is COMPLETE —
     // the search disk covers the whole grid) every remaining point
     // resolves with whatever candidates exist.
-    def resolvePass(candAll: DataFrame, rad2: Double, requireK: Boolean,
-                    tag: String): Unit = {
+    def resolvePass(candAll: DataFrame, rad2: Double, requireK: Boolean): Unit = {
       val pruned =
         if (rad2 == Double.MaxValue) candAll else candAll.where(col("d2") <= rad2)
       val ranked = pruned
@@ -468,7 +440,6 @@ object SpatialJoins {
       // resolved ids come off the part's cache (rank==1 marks each
       // resolved point exactly once)
       val okIds = part.where(col("rank") === 1).select(col("point_id").as("ok_id"))
-      val t0 = System.nanoTime()
       // LAZY ADVANCEMENT: nLeft is maintained ARITHMETICALLY (every okId
       // is by construction a still-unresolved point, and row_number rank 1
       // marks each resolved point exactly once), so a round costs one
@@ -505,9 +476,6 @@ object SpatialJoins {
           releaseHandles += unresolved
         } else unresolved = next
       }
-      if (sys.env.contains("SPARK_GRAFT_KNN_DEBUG"))
-        System.err.println(f"[knn] round $tag advance=${(System.nanoTime() - t0) / 1e9}%.2f s " +
-          f"resolved=$nResolved nLeft=$nLeft stacked=$stackedDepth")
     }
 
     // NOTE (round 7): a "skip ring rounds whose expected candidate count
@@ -528,32 +496,8 @@ object SpatialJoins {
     val it = rounds.iterator
     while (it.hasNext && nLeft > 0) {
       val r = it.next()
-      // in carry mode, rounds after the first explode only the new shell;
-      // in the default mode every round explodes the full disk for the
-      // (small) unresolved tail
-      val fullDisk = !carryForward || carried == null
-      val newCand = roundCandidates(unresolved, lab, r, prevR,
-        first = fullDisk, broadcastLabels = broadcastLabels)
-      // Default path: the full-disk candidates are computed LAZILY inside
-      // the ranking job and pruned before its exchange — never stored.
-      // Carry-forward path: carried (restricted to surviving points — no
-      // broadcast hint, AQE picks one when small) union the new shell,
-      // materialized unpruned for the next round (see the trade-off note
-      // in the scaladoc).
-      val candAll =
-        if (!carryForward) withD2(newCand)
-        else truncated(
-          if (carried == null) withD2(newCand)
-          else carried
-            .join(unresolved.select("point_id"), Seq("point_id"), "leftsemi")
-            .unionByName(withD2(newCand)))
-
-      if (carryForward) {
-        if (carried != null) releaseHandles += carried
-        carried = candAll
-      }
-      resolvePass(candAll, (r * minDim) * (r * minDim), requireK = true, s"r=$r")
-      prevR = r
+      resolvePass(withD2(roundCandidates(unresolved, lab, r, broadcastLabels)),
+        (r * minDim) * (r * minDim), requireK = true)
     }
     // ADAPTIVE EXTENSION ROUNDS replace the old all-labels cross-join
     // fallback (which, in cell-partitioned mode, was the engine's one
@@ -589,12 +533,11 @@ object SpatialJoins {
           CellIndex.SpanY / CellIndex.gridSize(lvl).toDouble)
         val cand = extensionCandidates(unresolved, lab, lvl, broadcastLabels)
         val rad2 = if (complete) Double.MaxValue else minDimL * minDimL
-        resolvePass(withD2(cand), rad2, requireK = !complete, s"lvl=$lvl")
+        resolvePass(withD2(cand), rad2, requireK = !complete)
         lvl = math.max(0, lvl - 2)
       }
     }
-    // The result is the union over the per-round parts (plus, in slim
-    // mode, the x,y re-join below): each part is
+    // The result is the union over the per-round parts: each part is
     // already a fully-materialized columnar cache (its own round's
     // okIds/count consumption scanned every partition), union cache
     // substitution hits directly-persisted branches (the r3 measured
@@ -609,21 +552,7 @@ object SpatialJoins {
     // blocks are complete, and only an executor-loss class event (which
     // local checkpoints never survive anyway — the documented
     // iterative-Spark trade) could force a recompute through them.
-    // x,y re-joined onto the output-sized union (see withD2): the join
-    // keys point_id against the CALLER's points frame, so the extra
-    // exchange moves k*N output rows + N slim point rows — strictly less
-    // than the candidate-sized x,y payload it replaces in the window sort.
-    // outputXY=false skips the re-join and returns the slim columns only —
-    // callers that don't need the input coordinates echoed back (they
-    // already hold them keyed by point_id) save the output-sized join.
-    val slimUnion = resolvedParts.reduce(_ unionByName _)
-    val result =
-      if (!slimWindow) slimUnion // fat mode: x,y already in the parts
-      else if (!outputXY) slimUnion
-      else slimUnion
-        .join(points.select(col("point_id").as("xy_id"), col("x"), col("y")),
-          col("point_id") === col("xy_id"))
-        .select("point_id", "x", "y", "poly_id", "d2", "dist", "rank")
+    val result = resolvedParts.reduce(_ unionByName _)
     // materialization barrier BEFORE the chains are released: the parts
     // are usually fully built by their own round's okIds consumption, but
     // not guaranteed partition-by-partition, and a hole would recompute
@@ -634,40 +563,36 @@ object SpatialJoins {
     // measured property), so this reads cached buffers only; the former
     // per-part foreach(count) paid one driver job launch per round, part
     // of the per-run fixed cost the scaling target punishes.
-    slimUnion.count()
+    result.count()
     // every truncated() frame was tracked at creation; the final
     // `unresolved` may be a LAZY filter over the last checkpoint (lazy
     // advancement), whose blocks are those of its tracked base
     releaseHandles.foreach(release)
-    if (carried != null) release(carried)
     lab.unpersist(blocking = false)
     Caching.adopt(result, cacheHandles.toList.distinct)
   }
 
-  /** One round's NEW candidate pairs: explode the (first round) full
-    * Chebyshev disk or (later rounds) only the annulus shell of each
-    * unresolved point, equi-join against the labels — broadcast for
-    * dimension-sized label sets, symmetric cell-shuffle otherwise.
+  /** One round's candidate pairs: explode the full Chebyshev disk of
+    * radius `r` around each unresolved point, equi-join against the
+    * labels — broadcast for dimension-sized label sets, symmetric
+    * cell-shuffle otherwise.
     * Package-private so PlanSpec can audit the physical shape directly
     * (the executed round plans hide behind the lineage-truncation
     * boundary in the composed operator).
     */
   private[graft] def roundCandidates(unresolved: DataFrame, lab: DataFrame,
-      r: Int, prevR: Int, first: Boolean, broadcastLabels: Boolean): DataFrame =
+      r: Int, broadcastLabels: Boolean): DataFrame =
     if (broadcastLabels) {
-      val ring = if (first) cell_kring(col("pcell"), lit(r))
-        else cell_annulus(col("pcell"), lit(prevR), lit(r))
       unresolved
-        .withColumn("ncell", explode(ring))
+        .withColumn("ncell", explode(cell_kring(col("pcell"), lit(r))))
         .join(broadcast(lab), col("ncell") === col("lcell"))
         .drop("ncell", "lcell")
     } else {
       // symmetric formulation: replicate each LABEL into the ring of its
       // own cell and shuffle-join on the point's cell — identical
       // candidate set (Chebyshev rings are symmetric), no broadcast
-      val ring = if (first) cell_kring(col("lcell"), lit(r))
-        else cell_annulus(col("lcell"), lit(prevR), lit(r))
-      val labRinged = lab.withColumn("rcell", explode(ring)).drop("lcell")
+      val labRinged = lab.withColumn("rcell", explode(cell_kring(col("lcell"), lit(r))))
+        .drop("lcell")
       unresolved.join(labRinged, col("pcell") === col("rcell")).drop("rcell")
     }
 

@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -47,6 +47,14 @@ object IcebergLite {
   def readLineage(spark: SparkSession, tableDir: String): DataFrame =
     spark.read.parquet(s"$tableDir/lineage")
 
+  /** Default bucket of a row: xxhash64 of `keyCols`, mod `buckets`, as
+    * int. A transform that re-derives the bucket from the key instead of
+    * carrying the column through must use exactly this expression, or
+    * [[run]]'s re-pin filter silently drops its rows.
+    */
+  def bucketOf(keyCols: Seq[String], buckets: Int): Column =
+    pmod(xxhash64(keyCols.map(col): _*), lit(buckets)).cast("int")
+
   /** Run `transform` over `input`, bucketed by hash(keyCols) into
     * `buckets` partitions, processing `bucketsPerWave` buckets per Spark
     * job; skip buckets already recorded in lineage. Returns the buckets
@@ -56,7 +64,7 @@ object IcebergLite {
     * wave); the checksum is an order-independent XOR-fold of row hashes so
     * re-runs can be audited cheaply.
     *
-    * `bucketExpr` overrides the default xxhash64 bucket assignment with a
+    * `bucketExpr` overrides the default [[bucketOf]] assignment with a
     * caller-supplied expression (must be deterministic, int, in
     * [0, buckets)) — e.g. a modular key that an external auditor can
     * re-derive.
@@ -68,6 +76,14 @@ object IcebergLite {
     * would never notice. The check costs one extra pass over the
     * transform output per wave; callers whose transforms provably
     * preserve the bucket column may disable it.
+    *
+    * SINGLE WRITER: at most one `run` may write a given `tableDir` at a
+    * time. The manifest's completed-bucket list is maintained
+    * arithmetically (lineage read once at start + the waves this run
+    * committed), not re-read per wave, so a concurrent writer's waves
+    * would be missing from this run's manifests — and two writers on the
+    * same buckets would overwrite each other's partitions. Nothing
+    * guards against it; the caller must serialize runs on one table.
     */
   def run(input: DataFrame, keyCols: Seq[String], buckets: Int,
           bucketsPerWave: Int, tableDir: String,
@@ -78,8 +94,7 @@ object IcebergLite {
     import spark.implicits._
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
-    val withBucket = input.withColumn("bucket",
-      bucketExpr.getOrElse(pmod(xxhash64(keyCols.map(col): _*), lit(buckets)).cast("int")))
+    val withBucket = input.withColumn("bucket", bucketExpr.getOrElse(bucketOf(keyCols, buckets)))
 
     val done = completedBuckets(spark, tableDir)
     val pending = (0 until buckets).filterNot(done)

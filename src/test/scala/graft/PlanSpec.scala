@@ -127,17 +127,14 @@ class PlanSpec extends AnyFunSuite {
       .withColumn("lcell", cell_of(col("lx"), col("ly"), lit(8)))
     val pts = GeoTables.syntheticPoints(spark, 100).toDF
       .withColumn("pcell", cell_of(col("x"), col("y"), lit(8)))
-    for (first <- Seq(true, false)) {
-      val plan = planOf(graft.operators.SpatialJoins.roundCandidates(
-        pts, lab, r = 2, prevR = 1, first = first, broadcastLabels = true))
-      assert(plan.contains("BroadcastHashJoin"),
-        s"labels must broadcast (first=$first):\n$plan")
-      assert(!plan.contains("CartesianProduct"), "no cross join in a round")
-    }
+    val plan = planOf(graft.operators.SpatialJoins.roundCandidates(
+      pts, lab, r = 2, broadcastLabels = true))
+    assert(plan.contains("BroadcastHashJoin"), s"labels must broadcast:\n$plan")
+    assert(!plan.contains("CartesianProduct"), "no cross join in a round")
     // symmetric (no-broadcast) mode must be an equi-join on the cell key,
     // never a cross join
     val sym = planOf(graft.operators.SpatialJoins.roundCandidates(
-      pts, lab, r = 1, prevR = 0, first = true, broadcastLabels = false))
+      pts, lab, r = 1, broadcastLabels = false))
     assert(!sym.contains("CartesianProduct"), s"symmetric mode crossed:\n$sym")
   }
 

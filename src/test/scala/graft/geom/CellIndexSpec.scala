@@ -60,17 +60,6 @@ class CellIndexSpec extends AnyFunSuite {
     for (other <- ring) assert(kRing(other, 2).contains(c))
   }
 
-  test("annulus == kRing(outer) minus kRing(inner), incl. domain boundary") {
-    val cells = Seq(CellIndex.cellOf(12.3, 45.6, 8),
-      CellIndex.cellOf(-179.99, -89.99, 8), CellIndex.cellOf(179.9, 89.9, 6))
-    for (c <- cells; ri <- 0 to 3; ro <- ri to 4) {
-      val want = (CellIndex.kRing(c, ro).toSet -- CellIndex.kRing(c, ri).toSet)
-        .toArray.sorted.toSeq
-      assert(CellIndex.annulus(c, ri, ro).toSeq === want,
-        s"annulus mismatch: cell=$c ri=$ri ro=$ro")
-    }
-  }
-
   test("kRing clamps at domain boundary") {
     val corner = pack(0, 0, 5)
     assert(kRing(corner, 1).length === 4) // 2x2 instead of 3x3

@@ -145,8 +145,8 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   test("knnJoin multi-round carry-forward: sparse labels, many rounds == brute") {
     // 25 labels over a level-11 grid: almost nothing resolves in round 1,
-    // so rounds 2..4 exercise the carried-candidate union + annulus-shell
-    // explode path specifically (and the fallback catches the rest)
+    // so rounds 2..4 re-explode the growing disk for the unresolved tail
+    // (and the fallback catches the rest)
     val labels = polys
       .withColumn("label", polylabel($"exterior", $"holes", $"tolerance"))
       .select($"poly_id", $"label.x".as("lx"), $"label.y".as("ly"))
@@ -158,14 +158,13 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .where($"rank" <= k)
       .select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
-    for (bcast <- Seq(true, false); carry <- Seq(false, true)) {
+    for (bcast <- Seq(true, false)) {
       val got = SpatialJoins.knnJoin(points.limit(500), labels, k, level = 11,
-        rounds = Seq(1, 2, 4, 8, 16), broadcastLabels = bcast,
-        carryForward = carry)
+        rounds = Seq(1, 2, 4, 8, 16), broadcastLabels = bcast)
       val gotSet = got.select($"point_id", $"poly_id", $"rank")
         .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
       Caching.release(got)
-      assert(gotSet === brute, s"broadcastLabels=$bcast carryForward=$carry")
+      assert(gotSet === brute, s"broadcastLabels=$bcast")
     }
   }
 

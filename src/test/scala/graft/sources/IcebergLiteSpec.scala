@@ -29,6 +29,12 @@ class IcebergLiteSpec extends AnyFunSuite {
       .select("id", "v2").as[(Long, Long)].collect().sorted
     val want = (0L until 10000L).map(i => (i, (i % 97) * 2)).sorted
     assert(got.toSeq === want)
+    // every committed row sits in the bucket bucketOf derives from its key
+    // (the expression transforms use when they re-derive the bucket)
+    val misplaced = IcebergLite.readTable(spark, dir)
+      .where(col("bucket").cast("int") =!= IcebergLite.bucketOf(Seq("id"), 8))
+      .count()
+    assert(misplaced === 0L)
 
     val lineage = IcebergLite.readLineage(spark, dir)
     assert(lineage.select("bucket").distinct().count() === 8)
