@@ -1,9 +1,8 @@
 package graft
 
-import graft.operators.{SpatialJoins, Tiling}
+import graft.operators.Tiling
 import graft.sources.{GeoTables, IcebergLite, Images}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.SparkSession
 
 /** The north-star job (BASELINE.json): images -> decode -> tile ->
   * re-encode -> footprint label point (polylabel kernel) -> H3-style cell
@@ -35,9 +34,6 @@ object Pipeline {
       verifyWaveClosure = false) { slice =>
       val tiles = Tiling.tile(slice.as[graft.sources.ImageRow](
         org.apache.spark.sql.Encoders.product[graft.sources.ImageRow]))
-      val assigned = Tiling.assign(tiles, level)
-        .withColumnRenamed("label_x", "x").withColumnRenamed("label_y", "y")
-        .withColumnRenamed("cell_id", "tile_cell_id")
       // bucket re-derived from image_id with IcebergLite.run's own default
       // bucket expression — bit-identical values, so wave closure still
       // provably holds. The former `.join(slice.select("image_id",
@@ -46,9 +42,7 @@ object Pipeline {
       // cannot reach inside it and the join leg re-rendered and
       // re-encoded every image just to read two columns (round-7 plan
       // audit; the optimization guide's opaque-operator pruning caveat).
-      SpatialJoins.pipJoin(assigned, polys, level)
-        .select(col("image_id"), col("tile_ix"), col("tile_iy"),
-          col("tile_cell_id").as("cell_id"), col("poly_id"))
+      Tiling.assignToPolygons(tiles, polys, level)
         .withColumn("bucket", IcebergLite.bucketOf(Seq("image_id"), buckets))
     }
   }

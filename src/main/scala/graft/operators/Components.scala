@@ -25,9 +25,8 @@ import org.apache.spark.sql.functions._
   * orderable type — string doc_ids work directly (min = lexicographic),
   * avoiding a dense-id remap shuffle over the corpus.
   *
-  * Iteration state is truncated with the engine's eager-localCheckpoint
-  * discipline (attr re-alias + eager checkpoint + ownership-tracked
-  * release; see SpatialJoins for why each piece is load-bearing).
+  * Iteration state is truncated with [[Caching.checkpoint]] (see there
+  * for why each step is load-bearing) and dropped with `Caching.release`.
   */
 object Components {
 
@@ -150,24 +149,13 @@ object Components {
       .distinct()
   }
 
-  /** Eager lineage truncation that also returns the edge set's (count,
-    * bit_xor(xxhash64)) signature, observed for free during the checkpoint
-    * job. The metric is read from the exact Dataset whose localCheckpoint
-    * executed; a missing metric degrades to a one-job aggregate rather
-    * than a wrong signature.
+  /** Eager lineage truncation ([[Caching.checkpoint]]) that also returns
+    * the edge set's (count, bit_xor(xxhash64)) signature, observed for
+    * free during the checkpoint job.
     */
   private def truncatedSigned(df: DataFrame): (DataFrame, (Long, Long)) = {
-    val fresh = df
-      .observe("graft_cc_sig", count(lit(1)).as("n"),
-        bit_xor(xxhash64(col("u"), col("v"))).as("x"))
-      .select(df.columns.toSeq.map(c => col(c).as(c)): _*)
-    val ck = Caching.own(fresh.localCheckpoint(eager = true))
-    val sig = fresh.queryExecution.observedMetrics.get("graft_cc_sig")
-      .map(r => (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
-      .getOrElse {
-        val r = ck.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).first()
-        (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-      }
-    (ck, sig)
+    val (ck, r) = Caching.checkpoint(df, count(lit(1)).as("n"),
+      bit_xor(xxhash64(col("u"), col("v"))).as("x"))
+    (ck, (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1)))
   }
 }

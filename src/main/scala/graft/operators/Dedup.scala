@@ -186,9 +186,8 @@ object Dedup {
     * array: m_j = array_min over the same closed-form (a_j, b_j) hash the
     * groupBy build uses — bit-identical values, zero exchanges (min over
     * the array elements equals min over the exploded rows). An empty
-    * array yields null m_j, which bands nowhere (null band keys never
-    * equi-join) — the same candidacy as being absent from the groupBy
-    * build.
+    * array would yield null m_j, so both callers drop zero-shingle reps
+    * first — the same candidacy as being absent from the groupBy build.
     */
   private def wideSigCols(si: Column, numHashes: Int): Seq[Column] =
     (0 until numHashes).map { j =>
@@ -240,7 +239,9 @@ object Dedup {
       .persist(StorageLevel.MEMORY_AND_DISK)
     val members = shA.select(explode(col("ids")).as("doc_id"), col("rep_id"))
 
-    val wide = shA.select(
+    // reps with no shingle have no signature: dropped here, so no null
+    // band key reaches the band explode
+    val wide = shA.where(size(col("si")) >= 1).select(
       col("rep_id").as("doc_id") +: wideSigCols(col("si"), numHashes): _*)
     val cand = bandCandidates(wide, numHashes, rowsPerBand)
 
@@ -333,13 +334,17 @@ object Dedup {
     // same one-exchange exact-duplicate collapse as minhashLshPairsImpl
     val collapsed = docs.groupBy("text")
       .agg(min("doc_id").as("rep_id"), collect_list("doc_id").as("ids"))
-    // ONE cached frame: member ids + in-row wide signatures (+ the
-    // shingle count for the within-group presence rule). The estimate
-    // path never materializes a shingle frame at all — signatures fold
-    // in-row over the shingle array (bit-identical, see wideSigCols).
+    // ONE cached frame: member ids + in-row wide signatures. The
+    // estimate path never materializes a shingle frame at all —
+    // signatures fold in-row over the shingle array (bit-identical, see
+    // wideSigCols). Reps with no shingle are dropped first: they have no
+    // signature (no null band key reaches the band explode), and no
+    // output pair — cross pairs need a banded rep, within-group pairs a
+    // rep with >= 1 shingle.
     val sigW = collapsed
       .select(col("rep_id"), col("ids"), TextOps.shingleArray(col("text")).as("sh"))
-      .select(Seq(col("rep_id"), col("ids"), size(col("sh")).as("nsh")) ++
+      .where(size(col("sh")) >= 1)
+      .select(Seq(col("rep_id"), col("ids")) ++
         wideSigCols(transform(col("sh"), s => TextOps.shingleInt(s)), numHashes): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val members = sigW.select(explode(col("ids")).as("doc_id"), col("rep_id"))
@@ -371,9 +376,7 @@ object Dedup {
     val withinBase = members.as("p").join(members.as("q"),
         col("p.rep_id") === col("q.rep_id") && col("p.doc_id") < col("q.doc_id"))
       .select(col("p.doc_id").as("doc_a"), col("q.doc_id").as("doc_b"),
-        col("p.rep_id").as("rep_id"))
-      .join(sigW.where(col("nsh") >= 1).select(col("rep_id")), "rep_id")
-      .select(col("doc_a"), col("doc_b"), lit(numHashes.toLong).as("est"))
+        lit(numHashes.toLong).as("est"))
     val within =
       if (numHashes.toLong * den >= numHashes.toLong * num) withinBase
       else withinBase.limit(0) // threshold > 1: exact duplicates don't qualify

@@ -2,9 +2,10 @@ package graft.operators
 
 import graft.functions.GraftFunctions._
 import graft.geom.CellIndex
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
 
 /** Distributed spatial joins (SURVEY.md §2.2 E7-E9), built the Spark-first
   * way: declarative cell equi-joins that Catalyst/AQE can plan (broadcast
@@ -277,10 +278,11 @@ object SpatialJoins {
     * (lazy advancement — see resolvePass), enabling early-exit without a
     * per-round pass over the survivors. The returned DataFrame is
     * the bare union over the operator's fully-materialized columnar
-    * round parts (no second output-sized cache); the parts' storage is
-    * ADOPTED by the result, so callers MUST drop it with
-    * `Caching.release(result)` (a bare `unpersist()` would leave the
-    * part caches behind) — no other cached state leaks.
+    * round parts (no second output-sized cache); the parts are OWNED
+    * persists (`Caching.own`), so callers MUST drop them with
+    * `Caching.release(result)` — or release of any frame derived from the
+    * result, which reads the same parts (a bare `unpersist()` would leave
+    * the part caches behind) — no other cached state leaks.
     *
     * Every round re-explodes the FULL disk for the unresolved points and
     * prunes its candidates lazily inside the ranking job — never stored.
@@ -292,27 +294,18 @@ object SpatialJoins {
     * round 1, so re-exploding the small unresolved TAIL is cheaper.
     *
     * LINEAGE TRUNCATION: the unresolved-points chain is periodically
-    * materialized with an EAGER `localCheckpoint`, not a bare persist —
-    * "periodically" because lazy advancement (resolvePass) stacks at most
-    * three anti-join filters between checkpoints, so plan depth stays
-    * bounded. An iterative chain of persisted frames keeps its full
-    * LOGICAL lineage, and this loop's lineage otherwise grows
+    * truncated with `Caching.checkpoint` (see there for why each step is
+    * needed) — "periodically" because lazy advancement (resolvePass)
+    * stacks at most three anti-join filters between checkpoints, so plan
+    * depth stays bounded; this loop's lineage otherwise grows
     * exponentially in the round count (each round references the
-    * previous unresolved set twice) — measured: a
-    * 5-round run built a 2.1 GB plan string and OOM'd the driver inside
-    * AQE's plan-update logging. The checkpoint replaces the chain's plan
-    * with a LogicalRDD leaf, so every round's plan is constant-size.
-    * Eager is load-bearing: a lazy local checkpoint first computed inside
-    * an AQE shuffle-map stage (submitMapStage skips `doCheckpoint`) never
-    * finalizes, and releasing it then poisons every later job that walks
-    * the lineage. Round outputs (`ranked`) and the result stay COLUMNAR
-    * persists — InMemoryRelation scans measured ~4x faster than
-    * row-format checkpoint blocks at bench scale 32 — and nothing is
-    * released until the result is materialized, because a result branch
-    * whose cache substitution misses may recompute through these blocks,
-    * and a released local checkpoint on that path is unrecoverable
-    * (blocks are not rebuildable on executor loss — the standard
-    * iterative-Spark trade, bounded to this operator's lifetime).
+    * previous unresolved set twice). Round outputs (`ranked`) and the
+    * result stay COLUMNAR persists — InMemoryRelation scans measured ~4x
+    * faster than row-format checkpoint blocks at bench scale 32 — and
+    * nothing is released until the result is materialized, because a
+    * result branch whose cache substitution misses may recompute through
+    * the checkpoints, and a released local checkpoint on that path is
+    * unrecoverable.
     *
     * OUTPUT: (point_id, poly_id, d2, dist, rank) — the caller's own
     * point coordinates are NOT echoed back: they already sit keyed by
@@ -362,28 +355,20 @@ object SpatialJoins {
       .select(candCols.map(col): _*)
 
     // the input count rides the initial checkpoint job as an OBSERVED
-    // metric (CollectMetrics accumulators fill during the eager
-    // localCheckpoint's own materialization pass), so knowing the real
-    // point population costs ZERO extra jobs — the former shape spent one
-    // full checkpoint-sized count() inside round 1, the largest single
-    // item of the operator's per-run driver fixed cost (the measured
-    // residual that capped knn's 4v16 scaling efficiency once the payload
-    // wins landed). The fallback (metric absent — e.g. a Spark version
-    // that stops reporting observed metrics through checkpoint actions)
-    // is the old lazy count in resolvePass, so correctness never depends
-    // on the metric.
-    val (unresolved0, observedN) = truncatedCounting(points
+    // metric (Caching.checkpoint), so knowing the real point population
+    // costs ZERO extra jobs — the former shape spent one full
+    // checkpoint-sized count() inside round 1, the largest single item of
+    // the operator's per-run driver fixed cost (the measured residual that
+    // capped knn's 4v16 scaling efficiency once the payload wins landed)
+    val (unresolved0, stats) = Caching.checkpoint(points
       .select(col("point_id"), col("x"), col("y"))
-      .withColumn("pcell", cell_of(col("x"), col("y"), lit(lvl0))))
+      .withColumn("pcell", cell_of(col("x"), col("y"), lit(lvl0))), count(lit(1)).as("n"))
     var unresolved = unresolved0
-    // observed 0 is treated as unknown: an actually-empty input then takes
-    // the old lazy-count path, which already handles it (one empty round)
-    var nLeft = observedN.filter(_ > 0).getOrElse(Long.MaxValue)
+    var nLeft = stats.getLong(0)
     // rounds since the unresolved chain was last checkpointed (see the
     // lazy-advancement note in resolvePass)
     var stackedDepth = 0
     var resolvedParts = List.empty[DataFrame]
-    val cacheHandles = scala.collection.mutable.ListBuffer.empty[DataFrame]
     val releaseHandles = scala.collection.mutable.ListBuffer.empty[DataFrame]
     releaseHandles += unresolved
     val wc = Window.partitionBy("point_id")
@@ -420,23 +405,17 @@ object SpatialJoins {
       // count, the dominant parallelism-insensitive cost of this
       // operator). `dist` is computed here, after the rank filter — the
       // window exchange carries d2 only, not a redundant sqrt column.
-      // every output column is RE-ALIASED (fresh expression ids): all
-      // rounds' checkpoint LogicalRDDs carry the SAME attribute ids (a
-      // localCheckpoint keeps its plan's output attrs), so the result
-      // union's branches collide and the analyzer's DeduplicateRelations
-      // rewrites one branch's ids — after which that branch no longer
-      // matches its cache entry and silently RECOMPUTES through the
-      // checkpoint chain (measured: the round-3 "result assembly" cost,
-      // and a hard crash once the chains are released before the caller's
-      // read). Disjoint output ids keep dedup a no-op and every branch
-      // substitutes its cache.
+      // every output column is RE-ALIASED, for the reason
+      // Caching.checkpoint re-aliases: two rounds may read the same
+      // checkpoint (lazy advancement), so their parts would otherwise
+      // carry the same attribute ids, and the result union's rewritten
+      // branch would miss its cache and recompute through the chain.
       val part = (if (requireK) ranked.where(col("n_cand") >= k) else ranked)
         .withColumn("dist", sqrt(col("d2")))
         .select((candCols ++ Seq("dist", "rank"))
           .map(c => col(c).as(c)): _*)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      resolvedParts ::= part
-      cacheHandles += part
+      resolvedParts ::= Caching.own(part)
       // resolved ids come off the part's cache (rank==1 marks each
       // resolved point exactly once)
       val okIds = part.where(col("rank") === 1).select(col("point_id").as("ok_id"))
@@ -455,7 +434,6 @@ object SpatialJoins {
       // the set shrank >= 30% (all later rounds then scan fewer rows) or
       // three filters have stacked (bounds plan depth and re-probe work).
       val nResolved = okIds.count()
-      if (nLeft == Long.MaxValue) nLeft = unresolved.count() // once, round 1
       val prevLeft = nLeft
       nLeft = nLeft - nResolved
       if (nResolved > 0 && nLeft > 0) {
@@ -469,10 +447,10 @@ object SpatialJoins {
           // substitution is not guaranteed across the union), and a
           // released local checkpoint in that path is an unrecoverable
           // error — the measured crash mode. All storage is dropped
-          // together after the result is materialized (all truncated
-          // frames are tracked in releaseHandles at creation);
+          // together after the result is materialized (every checkpoint
+          // is tracked in releaseHandles at creation);
           // MEMORY_AND_DISK spills rather than OOMs in the meantime.
-          unresolved = truncated(next)
+          unresolved = Caching.checkpoint(next)._1
           releaseHandles += unresolved
         } else unresolved = next
       }
@@ -545,14 +523,20 @@ object SpatialJoins {
     // output-sized cache cost a full count + cache-write pass (measured
     // 2.3-7.7 s at 3.2M points — a largely parallelism-insensitive copy,
     // exactly the kind of fixed cost the scaling target punishes). The
-    // parts' caches transfer to the result (Caching.adopt), so
-    // `Caching.release(result)` still drops every block the operator
-    // made. Releasing the checkpointed chains here is safe for the same
-    // reason the old post-count release was: the parts' MEMORY_AND_DISK
-    // blocks are complete, and only an executor-loss class event (which
-    // local checkpoints never survive anyway — the documented
-    // iterative-Spark trade) could force a recompute through them.
-    val result = resolvedParts.reduce(_ unionByName _)
+    // parts are owned (Caching.own), and the result's plan reads every
+    // one of them, so `Caching.release(result)` — or of any frame derived
+    // from it — drops every block the operator made. Releasing the
+    // checkpointed chains here is safe for the same reason the old
+    // post-count release was: the parts' MEMORY_AND_DISK blocks are
+    // complete, and only an executor-loss class event (which local
+    // checkpoints never survive anyway) could force a recompute through
+    // them. An empty point side runs no pass at all: its result is the
+    // same five columns over no rows.
+    val result = resolvedParts.reduceOption(_ unionByName _).getOrElse(
+      points.sparkSession.createDataFrame(java.util.Collections.emptyList[Row](),
+        StructType(Seq(unresolved.schema("point_id"), lab.schema("poly_id"),
+          StructField("d2", DoubleType), StructField("dist", DoubleType),
+          StructField("rank", IntegerType, nullable = false)))))
     // materialization barrier BEFORE the chains are released: the parts
     // are usually fully built by their own round's okIds consumption, but
     // not guaranteed partition-by-partition, and a hole would recompute
@@ -564,12 +548,12 @@ object SpatialJoins {
     // per-part foreach(count) paid one driver job launch per round, part
     // of the per-run fixed cost the scaling target punishes.
     result.count()
-    // every truncated() frame was tracked at creation; the final
-    // `unresolved` may be a LAZY filter over the last checkpoint (lazy
-    // advancement), whose blocks are those of its tracked base
-    releaseHandles.foreach(release)
+    // every checkpoint was tracked at creation; the final `unresolved` may
+    // be a LAZY filter over the last checkpoint (lazy advancement), whose
+    // blocks are those of its tracked base
+    releaseHandles.foreach(Caching.release)
     lab.unpersist(blocking = false)
-    Caching.adopt(result, cacheHandles.toList.distinct)
+    result
   }
 
   /** One round's candidate pairs: explode the full Chebyshev disk of
@@ -613,49 +597,4 @@ object SpatialJoins {
       .join(if (broadcastLabels) broadcast(labL) else labL,
         col("ncell") === col("lcell2"))
   }
-
-  /** Materialize-and-truncate for the iterative kNN loop: an EAGER local
-    * checkpoint replaces the frame's logical plan with a LogicalRDD leaf
-    * over materialized MEMORY_AND_DISK blocks. Eager is load-bearing, not
-    * a convenience: a LAZY local checkpoint only finalizes in a job that
-    * calls `rdd.doCheckpoint()`, and AQE materializes shuffle-map stages
-    * through `submitMapStage`, which doesn't — the checkpoint then stays
-    * pending forever, and releasing its blocks leaves a marked-but-
-    * incomplete RDD that ANY later job touching the lineage trips over
-    * ("storage level not appropriate for local checkpointing" assertion;
-    * reproduced by graft.Bench's knn workload). Eager finalization also
-    * clears the dependency chain, which is the lineage cut we want.
-    */
-  private def truncated(df: DataFrame): DataFrame = {
-    // columns re-aliased BEFORE the checkpoint: a localCheckpoint's
-    // LogicalRDD keeps its plan's output attribute ids, and without fresh
-    // ids every round's checkpoint carries the SAME ids — the result
-    // union then holds several same-id relations, DeduplicateRelations
-    // rewrites all but one, and the rewritten branches stop matching
-    // their cache entries (silent recompute through the chains; crash
-    // once the chains are released)
-    val fresh = df.select(df.columns.toSeq.map(c => col(c).as(c)): _*)
-    Caching.own(fresh.localCheckpoint(eager = true))
-  }
-
-  /** [[truncated]] that also returns the frame's row count, observed FOR
-    * FREE during the eager checkpoint's own materialization job (a
-    * CollectMetrics node's accumulators fill while the tasks run — no
-    * second pass). The metric is read from the exact Dataset whose
-    * `localCheckpoint` executed: reading it from any other wrapper's
-    * QueryExecution returns that plan's own (never-run, zero-valued)
-    * accumulators. Returns None when the metric is unavailable so callers
-    * keep a correctness-neutral fallback.
-    */
-  private def truncatedCounting(df: DataFrame): (DataFrame, Option[Long]) = {
-    val fresh = df.observe("graft_truncated_n", count(lit(1)).as("n"))
-      .select(df.columns.toSeq.map(c => col(c).as(c)): _*)
-    val ck = Caching.own(fresh.localCheckpoint(eager = true))
-    val n = fresh.queryExecution.observedMetrics.get("graft_truncated_n")
-      .map(_.getLong(0))
-    (ck, n)
-  }
-
-  /** Release the blocks behind a [[truncated]] frame. */
-  private def release(df: DataFrame): Unit = Caching.release(df)
 }

@@ -5,27 +5,32 @@ import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Cache-ownership contract: release() must drop exactly what the graft
-  * operators own — adopted parts and graft-made checkpoint leaves — and
+  * operators own — owned persists and graft-made checkpoint leaves — and
   * never a caller's own storage.
   */
 class CachingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  test("release(result) unpersists adopted parts") {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val p1 = spark.range(100).toDF("a").persist(StorageLevel.MEMORY_AND_DISK)
-    val p2 = spark.range(100, 200).toDF("a").persist(StorageLevel.MEMORY_AND_DISK)
-    p1.count(); p2.count()
-    val result = Caching.adopt(p1.unionByName(p2), Seq(p1, p2))
-    assert(result.count() === 200)
-    Caching.release(result)
+  test("own(persisted) + release(derived) drops it; a caller's persisted input stays") {
+    val input = spark.range(100).toDF("a").persist(StorageLevel.MEMORY_AND_DISK)
+    input.count()
+    val inputRdds = spark.sparkContext.getPersistentRDDs.keySet
+    val part = Caching.own(input.select($"a" * 2 as "b").persist(StorageLevel.MEMORY_AND_DISK))
+    part.count()
+    // a frame derived from the owned part that ALSO reads the caller's input
+    val derived = part.unionByName(input.select($"a" as "b")).orderBy("b")
+    assert(derived.count() === 200)
+    Caching.release(derived)
     // unpersist is async (blocking=false); poll briefly
     val deadline = System.nanoTime() + 10e9.toLong
-    while (spark.sparkContext.getPersistentRDDs.keySet.diff(before).nonEmpty &&
+    while (spark.sparkContext.getPersistentRDDs.keySet != inputRdds &&
       System.nanoTime() < deadline) Thread.sleep(50)
-    assert(spark.sparkContext.getPersistentRDDs.keySet.diff(before).isEmpty,
-      "adopted part caches must be dropped by releasing the result")
+    assert(spark.sparkContext.getPersistentRDDs.keySet === inputRdds,
+      "the owned part's cache must be dropped, the caller's input kept")
+    assert(input.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    assert(part.storageLevel === StorageLevel.NONE)
+    input.unpersist(blocking = true)
   }
 
   test("release() leaves caller-made localCheckpoint leaves alone") {

@@ -86,9 +86,10 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       .select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
 
-    // the operator contract: callers own the returned frame's (adopted)
-    // storage and MUST drop it with Caching.release — these tests also
-    // guard the ComponentsSpec/CachingSpec global leak asserts downstream
+    // the operator contract: callers own the returned frame's storage
+    // (its owned round parts) and MUST drop it with Caching.release —
+    // these tests also guard the ComponentsSpec/CachingSpec global leak
+    // asserts downstream
     val gotDf = SpatialJoins.knnJoin(points, labels, k, level = 8)
     val got = gotDf.select($"point_id", $"poly_id", $"rank")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
@@ -312,5 +313,79 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(SpatialJoins.knnAutoLevel(labs(4096)) === 6) // 4^6 = 4096
     assert(SpatialJoins.knnAutoLevel(labs(16)) === 2)
     assert(SpatialJoins.knnAutoLevel(labs(1)) === 1) // floor
+  }
+
+  private def knnLabels = polys
+    .withColumn("label", polylabel($"exterior", $"holes", $"tolerance"))
+    .select($"poly_id", $"label.x".as("lx"), $"label.y".as("ly"))
+
+  // RDD ids cached beyond `before`, polled briefly: block removal runs
+  // asynchronously (blocking = false)
+  private def leakedSince(before: Set[Int]): Set[Int] = {
+    val deadline = System.nanoTime() + 10e9.toLong
+    def now = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    while (now.nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    now
+  }
+
+  test("knnJoin: release of a select/orderBy frame over the result leaks nothing, both label modes") {
+    points.count()
+    for (bcast <- Seq(true, false)) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = SpatialJoins.knnJoin(points.limit(400), knnLabels, 3, level = 9,
+        broadcastLabels = bcast)
+      // the shape SparkEntry's knn queries build over the result
+      val derived = out.select($"point_id", $"poly_id", $"rank").orderBy("point_id", "rank")
+      assert(derived.collect().length === 400 * 3)
+      Caching.release(derived)
+      val leaked = leakedSince(before)
+      assert(leaked.isEmpty, s"broadcastLabels=$bcast leaked ${leaked.size} cached RDD(s)")
+    }
+  }
+
+  test("knnJoin with an empty point or label side: no rows, five columns, nothing leaked") {
+    points.count()
+    val cols = Seq("point_id", "poly_id", "d2", "dist", "rank")
+    for ((side, pts, labs) <- Seq(
+        ("points", points.where(lit(false)), knnLabels),
+        ("labels", points.limit(50), knnLabels.where(lit(false))))) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+      val out = SpatialJoins.knnJoin(pts, labs, 3, level = 9)
+      assert(out.columns.toSeq === cols, s"empty $side")
+      assert(out.collect().isEmpty, s"empty $side")
+      Caching.release(out)
+      val leaked = leakedSince(before)
+      assert(leaked.isEmpty, s"empty $side leaked ${leaked.size} cached RDD(s)")
+    }
+  }
+
+  test("knnJoin + release log no 'locally checkpointed' WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("graft-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      // sparse enough for several rounds, so lazy advancement re-checkpoints
+      val out = SpatialJoins.knnJoin(points.limit(400), knnLabels, 3, level = 11,
+        rounds = Seq(1, 2, 4, 8, 16))
+      out.count()
+      Caching.release(out)
+    } finally {
+      root.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    import scala.jdk.CollectionConverters._
+    val warned = lines.asScala.filter(_.contains("locally checkpointed"))
+    assert(warned.isEmpty, s"${warned.size} checkpoint-release WARN line(s): ${warned.headOption}")
   }
 }
