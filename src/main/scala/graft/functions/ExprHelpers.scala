@@ -129,14 +129,22 @@ object ExprHelpers {
     r
   }
 
-  def polylabel(ext: ArrayData, holes: ArrayData, tolerance: Double): InternalRow =
-    try {
-      val r = Polylabel.polylabel(GeomEncoding.polygonFrom(ext, holes), tolerance)
-      val row = new GenericInternalRow(3)
-      row.setDouble(0, r.x); row.setDouble(1, r.y); row.setDouble(2, r.dist)
-      row
-    } catch {
-      case _: IllegalArgumentException | _: IndexOutOfBoundsException |
-           _: NullPointerException => nanRow
-    }
+  /** Malformed input (a decode fault) and the kernel's typed errors
+    * (`IllegalArgumentException`) map to the (NaN, NaN, NaN) sentinel;
+    * anything else the kernel throws is a bug and fails the task.
+    */
+  def polylabel(ext: ArrayData, holes: ArrayData, tolerance: Double): InternalRow = {
+    val poly =
+      try GeomEncoding.polygonFrom(ext, holes)
+      catch {
+        case _: IllegalArgumentException | _: IndexOutOfBoundsException |
+             _: NullPointerException => return nanRow
+      }
+    val r =
+      try Polylabel.polylabel(poly, tolerance)
+      catch { case _: IllegalArgumentException => return nanRow }
+    val row = new GenericInternalRow(3)
+    row.setDouble(0, r.x); row.setDouble(1, r.y); row.setDouble(2, r.dist)
+    row
+  }
 }

@@ -5,9 +5,16 @@ final case class LabelResult(x: Double, y: Double, dist: Double)
 
 /** A ring pre-decomposed for the distance scan: edges grouped into
   * fixed-size blocks, one bounding box per block, so `signedDistance` can
-  * skip whole blocks in O(1) when they can neither hold a nearer edge nor
-  * flip ray-cast parity. Re-derivation of the reference's prepared-polygon
-  * structure (/root/reference/src/lib.rs:89-161).
+  * pick the block nearest a probe, skip whole blocks in O(1) when they
+  * cannot hold a nearer edge, and take the parity of a block lying wholly
+  * right of the probe from its two chain endpoints. Re-derivation of the
+  * reference's prepared-polygon structure (reference src/lib.rs:89-161).
+  *
+  * Block `b` holds edges `b*BlockSize until min((b+1)*BlockSize, nEdges)`;
+  * its bbox spans their endpoints, vertices `start..end` inclusive. A block
+  * holding a NaN coordinate gets an all-NaN bbox (a NaN vertex would
+  * otherwise be invisible to the min/max), so every bound test on it is
+  * false and the scan always visits its edges one by one.
   */
 final class PreparedRing(ring: Ring) {
   import Polylabel.BlockSize
@@ -22,13 +29,21 @@ final class PreparedRing(ring: Ring) {
   val bMinY = new Array[Double](nBlocks)
   val bMaxX = new Array[Double](nBlocks)
   val bMaxY = new Array[Double](nBlocks)
-  locally {
+  fillBoxes()
+
+  // A method, not a constructor block: scalac's `locally` leaves a value
+  // on the operand stack, HotSpot cannot OSR-compile a loop entered that
+  // way, and the loop ran interpreted until the constructor itself got
+  // compiled (Norway's prepare under C1: ~1.0 ms after 190 calls, against
+  // ~0.11 ms as a method).
+  private def fillBoxes(): Unit = {
     var b = 0
     while (b < nBlocks) {
       val start = b * BlockSize
       val end = math.min(start + BlockSize, nEdges)
       var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
       var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
+      var nan = false
       var i = start
       // every edge endpoint, i.e. vertices start..end inclusive
       while (i <= end) {
@@ -37,8 +52,10 @@ final class PreparedRing(ring: Ring) {
         if (x > maxX) maxX = x
         if (y < minY) minY = y
         if (y > maxY) maxY = y
+        if (x != x || y != y) nan = true
         i += 1
       }
+      if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
       bMinX(b) = minX; bMinY(b) = minY; bMaxX(b) = maxX; bMaxY(b) = maxY
       b += 1
     }
@@ -222,12 +239,61 @@ object Polylabel {
 
   def prepare(p: PolygonG): Array[PreparedRing] = p.rings.map(new PreparedRing(_))
 
+  /** Relative guard of the endpoint-parity shortcut in [[signedDistance]]
+    * (derivation there). The worst-case error it must cover is ~3.1u with
+    * u = 2^-53, i.e. ~2^-51.4; 1e-12 leaves a factor of ~2,900 for the
+    * rounding of the guard itself.
+    */
+  private[geom] final val ParityEps = 1e-12
+
   /** Signed distance from (px,py) to the polygon outline: positive inside,
     * negative outside. One pass over all rings accumulates both the even-odd
-    * ray-cast parity and the minimum point-to-edge distance; whole blocks are
-    * skipped when their bbox can neither contain a nearer edge (point-to-bbox
-    * clamp >= current min squared) nor straddle the rightward parity ray.
+    * ray-cast parity and the minimum point-to-edge distance.
     * Arithmetic mirrors /root/reference/src/lib.rs:163-233 for f64 parity.
+    *
+    * Visit order. When the polygon has more than one block, one pass over
+    * the block bboxes first picks the seed block: the first one with the
+    * smallest point-to-bbox squared lower bound. The scan then visits every
+    * block once in ring order (exterior, then holes), starting at the seed
+    * and wrapping around. The seed sets a near-final minimum at once, so
+    * almost every later block fails the bound and is skipped. Single-block
+    * polygons skip the seed pass.
+    *
+    * Per block, in that order:
+    *  - distance: the block's edges can hold a nearer edge only while the
+    *    point-to-bbox squared distance is below `minSq`;
+    *  - parity: edges can flip parity only if the bbox straddles the ray
+    *    (`bminY <= py < bmaxY`) and reaches right of `px`;
+    *  - endpoint parity: a straddling block lying wholly right of `px` by
+    *    the guard below flips `inside` iff `(ys(start) > py) != (ys(end) > py)`,
+    *    the telescoped XOR of its per-edge half-open tests, and is then
+    *    scanned only if the distance bound still needs it.
+    *
+    * Why the shortcut is exact. Edge i flips parity iff its half-open test
+    * holds and `px < xc`, xc = fl(fl(fl(fl(bx-ax)*fl(py-ay))/fl(by-ay)) + ax).
+    * So it suffices that every crossing edge of the block has xc > px. With
+    * ex = fl(bx-ax): if ex >= 0 the quotient is >= 0 (rounding is
+    * monotone and `py-ay`, `by-ay` share a sign), so xc >= ax >= bminX. If
+    * ex < 0, |fl(py-ay)| <= |fl(by-ay)| bounds the quotient by |ex|(1+u)^2,
+    * so xc >= bminX - 3.01u(W + M), W = bmaxX - bminX, M = max |bbox x|.
+    * The guard is therefore
+    * {{{
+    *   px < bminX - (ParityEps * (|bminX| + |bmaxX| + W) + 2^-1020 / min(|py|, 1))
+    *   and W * (bmaxY - bminY) < +Inf
+    * }}}
+    * The second term covers an underflowing product fl(bx-ax)*fl(py-ay):
+    * its absolute error 2^-1075, divided by |by-ay| >= 2^-53 |py|, stays
+    * below 2^-1022 / |py|. The finite-area test rules out overflow, since
+    * |fl(bx-ax)| <= W and |fl(py-ay)| <= |fl(by-ay)| <= bmaxY - bminY.
+    * The comparison is false on NaN or infinite bboxes (and for py = 0),
+    * so those blocks fall through to the per-edge test.
+    *
+    * Why the result is bit-identical to calling Geom.segmentDistance and
+    * Geom.pointInPolygon edge by edge. The distance is the minimum over
+    * each edge's exact per-edge value, and every gate below (the block
+    * bound, the squared-distance gate) admits every edge that could still
+    * lower the current minimum, so the order of visits cannot change it.
+    * Parity is an XOR of per-edge flips, so it cannot change either.
     */
   def signedDistance(px: Double, py: Double, rings: Array[PreparedRing]): Double = {
     var inside = false
@@ -241,15 +307,42 @@ object Polylabel {
     // calling Geom.segmentDistance on every edge, ~nEdges sqrt+div ops
     // cheaper per probe.
     var minSq = Double.PositiveInfinity
-    var ri = 0
-    while (ri < rings.length) {
+
+    // the seed block and the block count; a lone block needs no seed pass
+    var seedRing = 0; var seedBlock = 0
+    var left = if (rings.length == 1) rings(0).nBlocks else 0
+    if (rings.length > 1 || left > 1) {
+      left = 0
+      var best = Double.PositiveInfinity
+      var ri = 0
+      while (ri < rings.length) {
+        val r = rings(ri)
+        var b = 0
+        while (b < r.nBlocks) {
+          val bminX = r.bMinX(b); val bminY = r.bMinY(b)
+          val bmaxX = r.bMaxX(b); val bmaxY = r.bMaxY(b)
+          val dx = if (px < bminX) bminX - px else if (px > bmaxX) px - bmaxX else 0.0
+          val dy = if (py < bminY) bminY - py else if (py > bmaxY) py - bmaxY else 0.0
+          val lb = dx * dx + dy * dy
+          if (lb < best) { best = lb; seedRing = ri; seedBlock = b }
+          b += 1
+        }
+        left += r.nBlocks
+        ri += 1
+      }
+    }
+
+    // every block once, in ring order from the seed, wrapping around
+    var ri = seedRing
+    var b = seedBlock
+    while (left > 0) {
       val r = rings(ri)
-      var b = 0
-      while (b < r.nBlocks) {
+      while (b < r.nBlocks && left > 0) {
         val start = b * BlockSize
         val end = math.min(start + BlockSize, r.nEdges)
         val bminX = r.bMinX(b); val bminY = r.bMinY(b)
         val bmaxX = r.bMaxX(b); val bmaxY = r.bMaxY(b)
+        val xs = r.xs; val ys = r.ys
 
         // lower bound on the distance to any edge in this block
         val dx = if (px < bminX) bminX - px else if (px > bmaxX) px - bmaxX else 0.0
@@ -258,10 +351,18 @@ object Polylabel {
 
         // edges here can only flip parity if the bbox straddles y and
         // extends right of x
-        val skipCross = py < bminY || py >= bmaxY || px > bmaxX
+        var skipCross = py < bminY || py >= bmaxY || px > bmaxX
+        if (!skipCross && px < bminX) {
+          val w = bmaxX - bminX
+          if (w * (bmaxY - bminY) < Double.PositiveInfinity &&
+              px < bminX - (ParityEps * (math.abs(bminX) + math.abs(bmaxX) + w) +
+                4.0 * java.lang.Double.MIN_NORMAL / math.min(math.abs(py), 1.0))) {
+            if ((ys(start) > py) != (ys(end) > py)) inside = !inside
+            skipCross = true
+          }
+        }
 
         if (!(skipDist && skipCross)) {
-          val xs = r.xs; val ys = r.ys
           var i = start
           while (i < end) {
             val ax = xs(i); val ay = ys(i)
@@ -328,8 +429,10 @@ object Polylabel {
           }
         }
         b += 1
+        left -= 1
       }
-      ri += 1
+      ri = if (ri + 1 == rings.length) 0 else ri + 1
+      b = 0
     }
     if (inside) minDistance else -minDistance
   }

@@ -33,6 +33,17 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(df.collect().head.getDouble(0).isNaN)
   }
 
+  test("polylabel maps a malformed input (null hole ring) to the NaN sentinel") {
+    // a SQL-null ring inside `holes` fails decoding (GeomEncoding.polygonFrom);
+    // decode faults keep the sentinel, only faults inside the kernel fail the task
+    val df = GeoTables.fixtures(spark).where($"poly_id" === "ell")
+      .withColumn("label", expr(
+        "polylabel(exterior, array(CAST(NULL AS array<struct<x: double, y: double>>)), 0.1D)"))
+      .select($"label.x", $"label.y", $"label.dist")
+    val r = df.collect().head
+    assert(r.getDouble(0).isNaN && r.getDouble(1).isNaN && r.getDouble(2).isNaN)
+  }
+
   test("cell_of / cell_parent / cell_kring match CellIndex (SQL surface)") {
     val rows = spark.sql(
       """SELECT cell_of(10.5D, 59.9D, 12) AS c,

@@ -166,4 +166,97 @@ class PolylabelSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("kernel signedDistance == per-edge oracle on multi-block rings, bit-exact") {
+    // nearest-block-first order and endpoint parity must not change a bit.
+    // Rings of 33-5,000 vertices (2-157 blocks) with 0-3 holes, scales and
+    // offsets from 1e-6 to 1e150; probes on vertices, edge midpoints, at a
+    // vertex's y, on both sides of a block's bbox minX and of the
+    // endpoint-parity guard.
+    for (seed <- 1 to 40) {
+      val rnd = new scala.util.Random(seed)
+      val scale = math.pow(10.0, -6.0 + rnd.nextDouble() * 156.0)
+      val offset = (if (rnd.nextBoolean()) 1.0 else -1.0) *
+        math.pow(10.0, -6.0 + rnd.nextDouble() * (math.log10(math.min(1e150, scale * 1e6)) + 6.0))
+      def star(n: Int, cx: Double, cy: Double, r: Double): Seq[(Double, Double)] =
+        Seq.tabulate(n) { i =>
+          val a = 2.0 * math.Pi * i / n
+          val ri = r * (0.5 + 0.5 * rnd.nextDouble())
+          (offset + scale * (cx + ri * math.cos(a)), offset + scale * (cy + ri * math.sin(a)))
+        }
+      val n = seed % 10 match { case 0 => 33; case 1 => 5000; case _ => 33 + rnd.nextInt(4968) }
+      val holes = Seq.tabulate(rnd.nextInt(4)) { j =>
+        star(3 + rnd.nextInt(400), 0.2 * (j - 1), 0.1 * (j % 2), 0.05).reverse
+      }
+      val poly = PolygonG(star(n, 0.0, 0.0, 1.0), holes)
+      val prepared = Polylabel.prepare(poly)
+      val bb = Geom.boundingRect(poly.exterior)
+      def check(px: Double, py: Double): Unit = {
+        val got = Polylabel.signedDistance(px, py, prepared)
+        val want = perEdgeSignedDistance(px, py, poly)
+        assert(java.lang.Double.doubleToLongBits(got) ===
+          java.lang.Double.doubleToLongBits(want),
+          s"seed $seed (n=$n, holes=${holes.size}, scale=$scale, offset=$offset): " +
+            s"kernel $got != per-edge $want at ($px, $py)")
+      }
+      for (_ <- 0 until 30)
+        check(bb.minX - 0.1 * bb.width + rnd.nextDouble() * 1.2 * bb.width,
+          bb.minY - 0.1 * bb.height + rnd.nextDouble() * 1.2 * bb.height)
+      for (ring <- poly.rings) {
+        val step = math.max(1, ring.nEdges / 25)
+        var i = 0
+        while (i < ring.nEdges) {
+          check(ring.xs(i), ring.ys(i))
+          check((ring.xs(i) + ring.xs(i + 1)) / 2.0, (ring.ys(i) + ring.ys(i + 1)) / 2.0)
+          check(bb.minX + rnd.nextDouble() * bb.width, ring.ys(i))
+          i += step
+        }
+      }
+      for (r <- prepared; b <- 0 until r.nBlocks if rnd.nextInt(4) == 0) {
+        val bminX = r.bMinX(b); val bmaxX = r.bMaxX(b)
+        // a y the block straddles: one of its vertex ys below bmaxY
+        val start = b * Polylabel.BlockSize
+        for (py <- (start to math.min(start + Polylabel.BlockSize, r.nEdges))
+               .map(r.ys(_)).find(_ < r.bMaxY(b))) {
+          val guard = bminX - (Polylabel.ParityEps *
+            (math.abs(bminX) + math.abs(bmaxX) + (bmaxX - bminX)) +
+            4.0 * java.lang.Double.MIN_NORMAL / math.min(math.abs(py), 1.0))
+          for (px <- Seq(Math.nextDown(bminX), bminX, Math.nextUp(bminX),
+                         Math.nextDown(guard), guard, Math.nextUp(guard)))
+            check(px, py)
+        }
+      }
+    }
+  }
+
+  test("a NaN vertex disables endpoint parity for its block, bit-exact") {
+    // block 0 (edges 0-31) lies right of the probes and straddles their y;
+    // the NaN vertex makes edge 19 fail its crossing test, so the block's
+    // endpoints (y 0 and 32) must not decide its parity
+    val pts = Seq.tabulate(40)(i => (if (i == 20) Double.NaN else 10.0, i.toDouble)) ++
+      Seq((-10.0, 39.0), (-10.0, 0.0))
+    val poly = PolygonG(pts)
+    val prepared = Polylabel.prepare(poly)
+    for ((px, py) <- Seq((5.0, 19.5), (-5.0, 19.5), (5.0, 25.0), (9.0, 3.5))) {
+      val got = Polylabel.signedDistance(px, py, prepared)
+      val want = perEdgeSignedDistance(px, py, poly)
+      assert(java.lang.Double.doubleToLongBits(got) ===
+        java.lang.Double.doubleToLongBits(want), s"kernel $got != per-edge $want at ($px, $py)")
+    }
+  }
+
+  /** The naive oracle: Geom.segmentDistance per edge plus Geom.pointInPolygon. */
+  private def perEdgeSignedDistance(px: Double, py: Double, poly: PolygonG): Double = {
+    var mn = Double.PositiveInfinity
+    for (ring <- poly.rings) {
+      var i = 0
+      while (i < ring.nEdges) {
+        val d = Geom.segmentDistance(px, py,
+          ring.xs(i), ring.ys(i), ring.xs(i + 1), ring.ys(i + 1))
+        if (d < mn) mn = d
+        i += 1
+      }
+    }
+    if (Geom.pointInPolygon(px, py, poly)) mn else -mn
+  }
 }
