@@ -26,17 +26,12 @@ object Pipeline {
                        buckets: Int = 32, bucketsPerWave: Int = 8): Seq[Int] = {
     val images = Images.table(spark, n).toDF
     val polys = GeoTables.syntheticPolygons(spark, nPolys).toDF
-    // verifyWaveClosure=false: the closure probe costs a second pass over
-    // the (decode-heavy) transform, and THIS transform is provably
-    // wave-closed — every output row's bucket comes from re-joining the
-    // slice's own bucket column. IcebergLite's re-pin filter still runs.
-    IcebergLite.run(images, Seq("image_id"), buckets, bucketsPerWave, tableDir,
-      verifyWaveClosure = false) { slice =>
+    IcebergLite.run(images, Seq("image_id"), buckets, bucketsPerWave, tableDir) { slice =>
       val tiles = Tiling.tile(slice.as[graft.sources.ImageRow](
         org.apache.spark.sql.Encoders.product[graft.sources.ImageRow]))
       // bucket re-derived from image_id with IcebergLite.run's own default
-      // bucket expression — bit-identical values, so wave closure still
-      // provably holds. The former `.join(slice.select("image_id",
+      // bucket expression — bit-identical values, so every row passes the
+      // run's wave guard. The former `.join(slice.select("image_id",
       // "bucket"))` evaluated the images table a SECOND time per wave:
       // the table is an opaque typed MapPartitions, so column pruning
       // cannot reach inside it and the join leg re-rendered and

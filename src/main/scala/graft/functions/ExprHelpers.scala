@@ -112,16 +112,14 @@ object ExprHelpers {
     chosen
   }
 
-  def cover(ext: ArrayData, holes: ArrayData, level: Int): ArrayData =
-    UnsafeArrayData.fromPrimitiveArray(
-      CellIndex.cover(GeomEncoding.polygonFrom(ext, holes), level))
+  def cover(poly: PolygonG, level: Int): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(CellIndex.cover(poly, level))
 
-  def pip(x: Double, y: Double, ext: ArrayData, holes: ArrayData): Boolean =
-    Geom.pointInPolygon(x, y, GeomEncoding.polygonFrom(ext, holes))
+  def pip(x: Double, y: Double, poly: PolygonG): Boolean =
+    Geom.pointInPolygon(x, y, poly)
 
-  def signedDist(x: Double, y: Double, ext: ArrayData, holes: ArrayData): Double =
-    Polylabel.signedDistance(x, y,
-      Polylabel.prepare(GeomEncoding.polygonFrom(ext, holes)))
+  def signedDist(x: Double, y: Double, poly: PolygonG): Double =
+    Polylabel.signedDistance(x, y, Polylabel.prepare(poly))
 
   private val nanRow: InternalRow = {
     val r = new GenericInternalRow(3)
@@ -129,17 +127,13 @@ object ExprHelpers {
     r
   }
 
-  /** Malformed input (a decode fault) and the kernel's typed errors
-    * (`IllegalArgumentException`) map to the (NaN, NaN, NaN) sentinel;
-    * anything else the kernel throws is a bug and fails the task.
+  /** A malformed polygon (null from [[GeomEncoding.decodePolygon]]) and
+    * the kernel's typed errors (`IllegalArgumentException`) map to the
+    * (NaN, NaN, NaN) sentinel; anything else the kernel throws is a bug
+    * and fails the task.
     */
-  def polylabel(ext: ArrayData, holes: ArrayData, tolerance: Double): InternalRow = {
-    val poly =
-      try GeomEncoding.polygonFrom(ext, holes)
-      catch {
-        case _: IllegalArgumentException | _: IndexOutOfBoundsException |
-             _: NullPointerException => return nanRow
-      }
+  def polylabel(poly: PolygonG, tolerance: Double): InternalRow = {
+    if (poly == null) return nanRow
     val r =
       try Polylabel.polylabel(poly, tolerance)
       catch { case _: IllegalArgumentException => return nanRow }

@@ -1,5 +1,6 @@
 package graft.functions
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import graft.geom._
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
@@ -49,58 +50,127 @@ object GeomEncoding {
     Ring.of(xs, ys)
   }
 
-  def polygonFrom(ext: ArrayData, holes: ArrayData): PolygonG = {
-    val hs =
-      if (holes == null || holes.numElements() == 0) Array.empty[Ring]
-      else {
-        val out = new Array[Ring](holes.numElements())
-        var i = 0
-        while (i < out.length) { out(i) = ringFrom(holes.getArray(i)); i += 1 }
-        out
+  /** The one decode of the four polygon expressions: null holes mean no
+    * holes, and a malformed polygon (a null ring or point, a short point
+    * struct) decodes to null. `polylabel` maps that null to its NaN
+    * sentinel; `pip`, `signed_dist` and `polygon_cover` return SQL null.
+    */
+  def decodePolygon(ext: ArrayData, holes: ArrayData): PolygonG =
+    try {
+      val hs =
+        if (holes == null || holes.numElements() == 0) Array.empty[Ring]
+        else {
+          val out = new Array[Ring](holes.numElements())
+          var i = 0
+          while (i < out.length) { out(i) = ringFrom(holes.getArray(i)); i += 1 }
+          out
+        }
+      new PolygonG(ringFrom(ext), hs)
+    } catch {
+      case _: IllegalArgumentException | _: IndexOutOfBoundsException |
+           _: NullPointerException => null
+    }
+
+  /** Catalyst type of one parsed GeoJSON polygon. */
+  val polygonStructType: StructType = StructType(Seq(
+    StructField("exterior", ringType),
+    StructField("holes", holesType)))
+
+  /** The one GeoJSON polygon parser: a `Polygon` geometry, or a Feature
+    * wrapping one, as a [[polygonStructType]] row; null for any other
+    * geometry type. Malformed coordinates throw (callers map that to
+    * SQL null).
+    */
+  def geoJsonPolygon(node0: JsonNode): InternalRow = {
+    val node = if (node0.has("geometry")) node0.get("geometry") else node0
+    val tpe = node.get("type")
+    if (tpe == null || tpe.asText() != "Polygon") return null
+    val coords = node.get("coordinates")
+    if (coords == null || coords.size() == 0) return null
+    def ring(r: JsonNode): GenericArrayData = {
+      val pts = new Array[Any](r.size())
+      var i = 0
+      while (i < pts.length) {
+        val row = new GenericInternalRow(2)
+        row.setDouble(0, r.get(i).get(0).asDouble())
+        row.setDouble(1, r.get(i).get(1).asDouble())
+        pts(i) = row
+        i += 1
       }
-    new PolygonG(ringFrom(ext), hs)
+      new GenericArrayData(pts)
+    }
+    val holes = new Array[Any](coords.size() - 1)
+    var i = 1
+    while (i < coords.size()) { holes(i - 1) = ring(coords.get(i)); i += 1 }
+    val out = new GenericInternalRow(2)
+    out.update(0, ring(coords.get(0)))
+    out.update(1, new GenericArrayData(holes))
+    out
   }
 }
 
-/** Shared codegen for the (x?, y?, exterior, holes, extra?) expressions
-  * with "null holes = no holes" semantics: null out iff a required child
-  * is null; holes evaluate to Java null when SQL-null.
+/** Shared eval and codegen for the (x?, y?, exterior, holes, extra?)
+  * expressions: null out iff a required child is null; SQL-null holes
+  * mean no holes; the polygon is decoded once per row through
+  * [[GeomEncoding.decodePolygon]] and handed to the ExprHelpers method,
+  * whose signature is (leading..., polygon, trailing...). A malformed
+  * polygon yields SQL null unless `nullOnMalformed` is false, in which
+  * case the helper receives the null.
   */
-private[functions] trait PolygonCallCodegen { self: Expression =>
-  /** required children (null-propagating), in call order before holes */
-  protected def requiredChildren: Seq[Expression]
+private[functions] trait PolygonCallCodegen extends Expression {
+  /** required children (null-propagating) before the polygon */
+  protected def leadingChildren: Seq[Expression] = Seq.empty
+  protected def exteriorChild: Expression
   protected def holesChild: Expression
-  /** trailing required children AFTER holes in the helper's signature */
+  /** required children after the polygon */
   protected def trailingChildren: Seq[Expression] = Seq.empty
   /** ExprHelpers method name */
   protected def helperMethod: String
+  protected def nullOnMalformed: Boolean = true
+  /** The helper call on the evaluated (non-null) leading and trailing
+    * values, for the interpreted path.
+    */
+  protected def callHelper(args: Seq[Any], poly: PolygonG): Any
 
-  protected def genPolygonCall(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val req = requiredChildren.map(_.genCode(ctx))
+  override def eval(input: InternalRow): Any = {
+    val required = leadingChildren ++ (exteriorChild +: trailingChildren)
+    val values = required.map(_.eval(input))
+    if (values.contains(null)) return null
+    val ext = values(leadingChildren.length).asInstanceOf[ArrayData]
+    val poly = GeomEncoding.decodePolygon(ext,
+      holesChild.eval(input).asInstanceOf[ArrayData])
+    if (poly == null && nullOnMalformed) null
+    else callHelper(values.patch(leadingChildren.length, Nil, 1), poly)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lead = leadingChildren.map(_.genCode(ctx))
+    val ext = exteriorChild.genCode(ctx)
     val trail = trailingChildren.map(_.genCode(ctx))
     val h = holesChild.genCode(ctx)
+    val required = lead ++ (ext +: trail)
+    val poly = ctx.freshName("poly")
     val javaType = CodeGenerator.javaType(dataType)
     val default = CodeGenerator.defaultValue(dataType)
-    val nullCheck = (req ++ trail).map(g => s"${g.isNull}").mkString(" || ")
-    val argsBefore = req.map(_.value).mkString(", ")
-    val argsAfter = if (trail.isEmpty) "" else ", " + trail.map(_.value).mkString(", ")
-    val holesArg = s"(${h.isNull} ? null : ${h.value})"
+    val nullCheck = required.map(g => s"${g.isNull}").mkString(" || ")
+    val args = (lead.map(_.value) :+ poly) ++ trail.map(_.value)
+    val call = s"${ev.value} = graft.functions.ExprHelpers.$helperMethod(${args.mkString(", ")});"
+    val guardedCall =
+      if (nullOnMalformed) s"if ($poly == null) { ${ev.isNull} = true; } else { $call }"
+      else call
     ev.copy(code =
       code"""
-        ${req.map(_.code).fold(EmptyBlock)(_ + _)}
-        ${trail.map(_.code).fold(EmptyBlock)(_ + _)}
+        ${required.map(_.code).fold(EmptyBlock)(_ + _)}
         boolean ${ev.isNull} = $nullCheck;
         $javaType ${ev.value} = $default;
         if (!${ev.isNull}) {
           ${h.code}
-          ${ev.value} = graft.functions.ExprHelpers.$helperMethod(
-            $argsBefore, $holesArg$argsAfter);
+          graft.geom.PolygonG $poly = graft.functions.GeomEncoding.decodePolygon(${ext.value},
+            (org.apache.spark.sql.catalyst.util.ArrayData) (${h.isNull} ? null : ${h.value}));
+          $guardedCall
         }
       """)
   }
-
-  protected def evalHoles(input: InternalRow): ArrayData =
-    holesChild.eval(input).asInstanceOf[ArrayData]
 }
 
 /** `polylabel(exterior, holes, tolerance) -> struct<x, y, dist>`.
@@ -118,21 +188,14 @@ case class PolylabelExpr(exterior: Expression, holes: Expression, tolerance: Exp
   override def nullable: Boolean = true
   override def prettyName: String = "polylabel"
 
-  override protected def requiredChildren: Seq[Expression] = Seq(exterior)
+  override protected def exteriorChild: Expression = exterior
   override protected def holesChild: Expression = holes
   override protected def trailingChildren: Seq[Expression] = Seq(tolerance)
   override protected def helperMethod: String = "polylabel"
+  override protected def nullOnMalformed: Boolean = false
 
-  override def eval(input: InternalRow): Any = {
-    val ext = exterior.eval(input)
-    val tol = tolerance.eval(input)
-    if (ext == null || tol == null) return null
-    ExprHelpers.polylabel(ext.asInstanceOf[ArrayData], evalHoles(input),
-      tol.asInstanceOf[Double])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genPolygonCall(ctx, ev)
+  override protected def callHelper(args: Seq[Any], poly: PolygonG): Any =
+    ExprHelpers.polylabel(poly, args(0).asInstanceOf[Double])
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(exterior = c(0), holes = c(1), tolerance = c(2))
@@ -276,20 +339,13 @@ case class PolygonCoverExpr(exterior: Expression, holes: Expression, level: Expr
   override def nullable: Boolean = true
   override def prettyName: String = "polygon_cover"
 
-  override protected def requiredChildren: Seq[Expression] = Seq(exterior)
+  override protected def exteriorChild: Expression = exterior
   override protected def holesChild: Expression = holes
   override protected def trailingChildren: Seq[Expression] = Seq(level)
   override protected def helperMethod: String = "cover"
 
-  override def eval(input: InternalRow): Any = {
-    val ext = exterior.eval(input); val lv = level.eval(input)
-    if (ext == null || lv == null) return null
-    ExprHelpers.cover(ext.asInstanceOf[ArrayData], evalHoles(input),
-      lv.asInstanceOf[Int])
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genPolygonCall(ctx, ev)
+  override protected def callHelper(args: Seq[Any], poly: PolygonG): Any =
+    ExprHelpers.cover(poly, args(0).asInstanceOf[Int])
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(exterior = c(0), holes = c(1), level = c(2))
@@ -305,19 +361,13 @@ case class PipExpr(x: Expression, y: Expression, exterior: Expression, holes: Ex
   override def nullable: Boolean = true
   override def prettyName: String = "pip"
 
-  override protected def requiredChildren: Seq[Expression] = Seq(x, y, exterior)
+  override protected def leadingChildren: Seq[Expression] = Seq(x, y)
+  override protected def exteriorChild: Expression = exterior
   override protected def holesChild: Expression = holes
   override protected def helperMethod: String = "pip"
 
-  override def eval(input: InternalRow): Any = {
-    val xv = x.eval(input); val yv = y.eval(input); val ext = exterior.eval(input)
-    if (xv == null || yv == null || ext == null) return null
-    ExprHelpers.pip(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
-      ext.asInstanceOf[ArrayData], evalHoles(input))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genPolygonCall(ctx, ev)
+  override protected def callHelper(args: Seq[Any], poly: PolygonG): Any =
+    ExprHelpers.pip(args(0).asInstanceOf[Double], args(1).asInstanceOf[Double], poly)
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(x = c(0), y = c(1), exterior = c(2), holes = c(3))
@@ -333,19 +383,13 @@ case class SignedDistExpr(x: Expression, y: Expression, exterior: Expression, ho
   override def nullable: Boolean = true
   override def prettyName: String = "signed_dist"
 
-  override protected def requiredChildren: Seq[Expression] = Seq(x, y, exterior)
+  override protected def leadingChildren: Seq[Expression] = Seq(x, y)
+  override protected def exteriorChild: Expression = exterior
   override protected def holesChild: Expression = holes
   override protected def helperMethod: String = "signedDist"
 
-  override def eval(input: InternalRow): Any = {
-    val xv = x.eval(input); val yv = y.eval(input); val ext = exterior.eval(input)
-    if (xv == null || yv == null || ext == null) return null
-    ExprHelpers.signedDist(xv.asInstanceOf[Double], yv.asInstanceOf[Double],
-      ext.asInstanceOf[ArrayData], evalHoles(input))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genPolygonCall(ctx, ev)
+  override protected def callHelper(args: Seq[Any], poly: PolygonG): Any =
+    ExprHelpers.signedDist(args(0).asInstanceOf[Double], args(1).asInstanceOf[Double], poly)
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
     copy(x = c(0), y = c(1), exterior = c(2), holes = c(3))
@@ -354,53 +398,23 @@ case class SignedDistExpr(x: Expression, y: Expression, exterior: Expression, ho
 /** `geojson_polygon(str) -> struct<exterior: ring, holes: array<ring>>` —
   * parse a GeoJSON `Polygon` geometry (or a Feature wrapping one), per the
   * reference's ell.geojson shape (/root/reference/ell.geojson:1-23).
-  * Malformed input -> null. Parsing is cold-path (ingest), so this one
-  * stays CodegenFallback.
+  * Malformed input or another geometry type -> null. Parsing is cold-path
+  * (ingest), so this one stays CodegenFallback.
   */
 case class GeoJsonPolygonExpr(child: Expression)
     extends Expression with CodegenFallback {
-  import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-
   override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = StructType(Seq(
-    StructField("exterior", GeomEncoding.ringType),
-    StructField("holes", GeomEncoding.holesType)))
+  override def dataType: DataType = GeomEncoding.polygonStructType
   override def nullable: Boolean = true
   override def prettyName: String = "geojson_polygon"
 
   @transient private lazy val mapper = new ObjectMapper()
 
-  private def ringToCatalyst(ring: JsonNode): GenericArrayData = {
-    val pts = new Array[Any](ring.size())
-    var i = 0
-    while (i < pts.length) {
-      val pt = ring.get(i)
-      val row = new GenericInternalRow(2)
-      row.setDouble(0, pt.get(0).asDouble())
-      row.setDouble(1, pt.get(1).asDouble())
-      pts(i) = row
-      i += 1
-    }
-    new GenericArrayData(pts)
-  }
-
   override def eval(input: InternalRow): Any = {
     val s = child.eval(input)
     if (s == null) return null
-    try {
-      var node: JsonNode = mapper.readTree(s.toString)
-      if (node.has("geometry")) node = node.get("geometry")
-      if (node.get("type").asText() != "Polygon") return null
-      val coords = node.get("coordinates")
-      if (coords == null || coords.size() == 0) return null
-      val holes = new Array[Any](coords.size() - 1)
-      var i = 1
-      while (i < coords.size()) { holes(i - 1) = ringToCatalyst(coords.get(i)); i += 1 }
-      val out = new GenericInternalRow(2)
-      out.update(0, ringToCatalyst(coords.get(0)))
-      out.update(1, new GenericArrayData(holes))
-      out
-    } catch { case _: Exception => null }
+    try GeomEncoding.geoJsonPolygon(mapper.readTree(s.toString))
+    catch { case _: Exception => null }
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
@@ -409,23 +423,18 @@ case class GeoJsonPolygonExpr(child: Expression)
 
 /** `geojson_feature_collection(str) -> array<struct<exterior, holes>>` —
   * every Polygon feature of a GeoJSON FeatureCollection (the reference's
-  * ell.geojson shape). Malformed input -> null; non-Polygon features are
-  * skipped. Ingest-path, CodegenFallback.
+  * ell.geojson shape); a lone Feature or geometry counts as a collection
+  * of one. Malformed input -> null; non-Polygon features are skipped.
+  * Ingest-path, CodegenFallback.
   */
 case class GeoJsonFeatureCollectionExpr(child: Expression)
     extends Expression with CodegenFallback {
-  import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-
-  private val polyType = StructType(Seq(
-    StructField("exterior", GeomEncoding.ringType),
-    StructField("holes", GeomEncoding.holesType)))
   override def children: Seq[Expression] = Seq(child)
-  override def dataType: DataType = ArrayType(polyType)
+  override def dataType: DataType = ArrayType(GeomEncoding.polygonStructType)
   override def nullable: Boolean = true
   override def prettyName: String = "geojson_feature_collection"
 
   @transient private lazy val mapper = new ObjectMapper()
-  @transient private lazy val single = GeoJsonPolygonExpr(child)
 
   override def eval(input: InternalRow): Any = {
     val s = child.eval(input)
@@ -438,39 +447,12 @@ case class GeoJsonFeatureCollectionExpr(child: Expression)
       val out = scala.collection.mutable.ArrayBuffer.empty[Any]
       var i = 0
       while (i < feats.size()) {
-        val parsed = parseOne(feats.get(i))
+        val parsed = GeomEncoding.geoJsonPolygon(feats.get(i))
         if (parsed != null) out += parsed
         i += 1
       }
       new GenericArrayData(out.toArray)
     } catch { case _: Exception => null }
-  }
-
-  private def parseOne(node0: com.fasterxml.jackson.databind.JsonNode): Any = {
-    var node = node0
-    if (node.has("geometry")) node = node.get("geometry")
-    if (node.get("type") == null || node.get("type").asText() != "Polygon") return null
-    val coords = node.get("coordinates")
-    if (coords == null || coords.size() == 0) return null
-    def ring(r: com.fasterxml.jackson.databind.JsonNode): GenericArrayData = {
-      val pts = new Array[Any](r.size())
-      var i = 0
-      while (i < pts.length) {
-        val row = new GenericInternalRow(2)
-        row.setDouble(0, r.get(i).get(0).asDouble())
-        row.setDouble(1, r.get(i).get(1).asDouble())
-        pts(i) = row
-        i += 1
-      }
-      new GenericArrayData(pts)
-    }
-    val holes = new Array[Any](coords.size() - 1)
-    var i = 1
-    while (i < coords.size()) { holes(i - 1) = ring(coords.get(i)); i += 1 }
-    val out = new GenericInternalRow(2)
-    out.update(0, ring(coords.get(0)))
-    out.update(1, new GenericArrayData(holes))
-    out
   }
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =

@@ -206,12 +206,12 @@ object Dedup {
     (Caching.materializeAndRelease(s.out, s.shA), s.cand)
   }
 
-  /** The lazy stage frames of the exact LSH path — shared by the operator
-    * and the round-7 plan-evidence dump (graft.operators.PlanDump).
+  /** The lazy stage frames of the exact LSH path that its callers use:
+    * the shingle cache to release, the rep-level band candidates (which
+    * tests count) and the output pairs.
     */
   private[operators] final case class LshStages(
-      shA: DataFrame, members: DataFrame, wide: DataFrame, cand: DataFrame,
-      verified: DataFrame, out: DataFrame)
+      shA: DataFrame, cand: DataFrame, out: DataFrame)
 
   private[operators] def minhashLshStages(
       docs: DataFrame, numHashes: Int, rowsPerBand: Int,
@@ -307,7 +307,7 @@ object Dedup {
             col("inter"), col("uni"))
           .unionByName(memberRows)
       }
-    LshStages(shA, members, wide, cand, verified, out)
+    LshStages(shA, cand, out)
   }
 
   /** MinHash + LSH with SIGNATURE-ONLY verification — the web-scale

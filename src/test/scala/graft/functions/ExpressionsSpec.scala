@@ -34,7 +34,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("polylabel maps a malformed input (null hole ring) to the NaN sentinel") {
-    // a SQL-null ring inside `holes` fails decoding (GeomEncoding.polygonFrom);
+    // a SQL-null ring inside `holes` fails decoding (GeomEncoding.decodePolygon);
     // decode faults keep the sentinel, only faults inside the kernel fail the task
     val df = GeoTables.fixtures(spark).where($"poly_id" === "ell")
       .withColumn("label", expr(
@@ -104,5 +104,37 @@ class ExpressionsSpec extends AnyFunSuite {
       "SELECT signed_dist(35.0D, 35.0D, exterior, holes) AS d FROM sq_hole2")
       .collect().head.getDouble(0)
     assert(got === want)
+  }
+
+  test("pip, signed_dist and polygon_cover return SQL null on a null hole ring (codegen and interpreted)") {
+    // the L-shaped `ell` fixture, with its first x taken from a column
+    def ell(x0: String) =
+      s"array(named_struct('x', $x0, 'y', 0D), named_struct('x', 4D, 'y', 0D), " +
+        "named_struct('x', 4D, 'y', 1D), named_struct('x', 1D, 'y', 1D), " +
+        "named_struct('x', 1D, 'y', 4D), named_struct('x', 0D, 'y', 4D))"
+    val nullHole = "array(CAST(NULL AS array<struct<x: double, y: double>>))"
+    // a generated-code compile error must fail the query, not fall back
+    // to the interpreted path
+    val fallback = "spark.sql.codegen.fallback"
+    val orig = spark.conf.getOption(fallback)
+    spark.conf.set(fallback, "false")
+    try for (call <- Seq("pip(0.5D, 0.5D, %s, %s)", "signed_dist(0.5D, 0.5D, %s, %s)",
+                         "polygon_cover(%s, %s, 8)")) {
+      // a projection over a local relation is evaluated by the optimizer
+      // (ConvertToLocalRelation), through the interpreted `eval`
+      val folded = Seq(0.0).toDF("x0").selectExpr(call.format(ell("x0"), nullHole) + " AS r")
+      assert(folded.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation], call)
+      assert(folded.collect().head.isNullAt(0), call)
+
+      val generated = spark.range(1).selectExpr(
+        call.format(ell("CAST(id AS DOUBLE)"), nullHole) + " AS r")
+      val plan = generated.queryExecution.executedPlan
+      assert(plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]), call)
+      assert(generated.collect().head.isNullAt(0), call)
+      // the same row with untyped NULL holes (no holes) decodes and evaluates
+      assert(!spark.range(1).selectExpr(call.format(ell("CAST(id AS DOUBLE)"), "NULL") + " AS r")
+        .collect().head.isNullAt(0), call)
+    } finally orig.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
   }
 }

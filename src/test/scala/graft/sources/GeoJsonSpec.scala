@@ -49,4 +49,26 @@ class GeoJsonSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
     assert(typed === viaExpr)
   }
+
+  test("geojson_polygon equals the matching geojson_feature_collection element, or null") {
+    val inputs = Seq(
+      // a Feature wrapping the L polygon
+      """{"type":"Feature","properties":{},"geometry":{"type":"Polygon",
+        |"coordinates":[[[0.0,0.0],[4.0,0.0],[4.0,1.0],[1.0,1.0],[1.0,4.0],[0.0,4.0],[0.0,0.0]]]}}""",
+      // a bare Polygon with a hole
+      """{"type":"Polygon","coordinates":[[[0.0,0.0],[100.0,0.0],[100.0,100.0],[0.0,100.0],[0.0,0.0]],
+        |[[60.0,60.0],[60.0,80.0],[80.0,80.0],[80.0,60.0],[60.0,60.0]]]}""",
+      // a non-Polygon geometry
+      """{"type":"Feature","geometry":{"type":"Point","coordinates":[1.0,2.0]}}""",
+      // malformed JSON
+      """{"type":"Polygon","coordinates":[[[0.0,0.0],""").map(_.stripMargin.replace("\n", ""))
+    val rows = inputs.toDF("gj")
+      .select(expr("geojson_polygon(gj)").as("p"), expr("geojson_feature_collection(gj)").as("fc"))
+      .collect()
+    val got = rows.map(r => Option(r.getAs[org.apache.spark.sql.Row]("p")))
+    val want = rows.map(r => Option(r.getSeq[org.apache.spark.sql.Row](1)).flatMap(_.headOption))
+    assert(got.toSeq === want.toSeq)
+    assert(got.map(_.isDefined).toSeq === Seq(true, true, false, false))
+    assert(got(1).get.getSeq[Any](1).size === 1, "the hole must parse")
+  }
 }

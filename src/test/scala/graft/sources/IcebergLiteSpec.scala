@@ -1,10 +1,27 @@
 package graft.sources
 
 import graft.TestSpark
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
+import org.apache.hadoop.mapreduce.TaskAttemptContext
+import org.apache.spark.TaskContext
+import org.apache.spark.internal.io.FileCommitProtocol.TaskCommitMessage
+import org.apache.spark.sql.execution.datasources.SQLHadoopMapReduceCommitProtocol
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Test-only commit protocol: every write task fails in `commitTask` on
+  * its first attempt, after its rows were computed and written, so the
+  * retried attempt is the one that commits.
+  */
+class FailFirstCommitProtocol(jobId: String, path: String, dynamicPartitionOverwrite: Boolean)
+    extends SQLHadoopMapReduceCommitProtocol(jobId, path, dynamicPartitionOverwrite) {
+  override def commitTask(ctx: TaskAttemptContext): TaskCommitMessage = {
+    if (TaskContext.get().attemptNumber() == 0)
+      throw new java.io.IOException("injected commitTask failure")
+    super.commitTask(ctx)
+  }
+}
 
 /** Checkpoint/lineage/resume semantics (north_rule: "resumable from
   * checkpoint with per-partition lineage + metrics"): kill a run mid-way,
@@ -107,4 +124,190 @@ class IcebergLiteSpec extends AnyFunSuite {
     assert(lineage.agg(sum("rows")).head().getLong(0) === 4000L)
   }
 
+  // ---- helpers for the commit-boundary, guard and exactly-once specs ----
+
+  private def recount(dir: String): Map[Int, (Long, Long)] = {
+    val data = IcebergLite.readTable(spark, dir)
+    data.withColumn("h", xxhash64(data.columns.filter(_ != "bucket").map(col): _*))
+      .groupBy(col("bucket").cast("int")).agg(count(lit(1)), bit_xor(col("h")))
+      .collect().map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+  }
+
+  private def lineageOf(dir: String): Seq[(Int, Long, Long)] =
+    IcebergLite.readLineage(spark, dir).select("bucket", "rows", "checksum")
+      .as[(Int, Long, Long)].collect().toSeq.sorted
+
+  private def rowsOf(dir: String): Seq[(Long, Long, Int)] =
+    IcebergLite.readTable(spark, dir).select(col("id"), col("v2"), col("bucket").cast("int"))
+      .as[(Long, Long, Int)].collect().toSeq.sorted
+
+  private def filesUnder(dir: Path): Seq[Path] =
+    Files.walk(dir).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+
+  /** Every file under `dir` by relative path, with its bytes. */
+  private def snapshot(dir: String): Map[String, Seq[Byte]] = {
+    val root = Paths.get(dir)
+    filesUnder(root).map(p => root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+  }
+
+  private def copyDir(from: String): String = {
+    val to = freshDir()
+    val src = Paths.get(from)
+    Files.walk(src).iterator().asScala.foreach { p =>
+      val q = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(q) else Files.copy(p, q)
+    }
+    to
+  }
+
+  private def manifests(dir: String): Seq[Path] =
+    Files.list(Paths.get(dir)).iterator().asScala
+      .filter(_.getFileName.toString.matches("manifest-\\d+\\.json")).toSeq
+
+  private def newestManifest(dir: String): String = {
+    val p = manifests(dir).maxBy(_.getFileName.toString.stripPrefix("manifest-")
+      .stripSuffix(".json").toLong)
+    new String(Files.readAllBytes(p), "UTF-8")
+  }
+
+  private def jsonList(json: String, key: String): Seq[String] =
+    ("\"" + key + "\": \\[([^\\]]*)\\]").r.findFirstMatchIn(json).get.group(1)
+      .split(",").map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq
+
+  private def parquetFiles(dir: String): Set[String] = {
+    val data = Paths.get(dir, "data")
+    filesUnder(data).filter(_.toString.endsWith(".parquet"))
+      .map(p => data.relativize(p).toString).toSet
+  }
+
+  test("run leaves the session's partitionOverwriteMode alone") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val orig = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try {
+      val before = spark.conf.get(key)
+      val input = spark.range(200).select(col("id"), (col("id") % 5).as("v"))
+      IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 2, freshDir())(identity)
+      assert(spark.conf.get(key) === before)
+      // a later plain partitioned overwrite in the same session replaces
+      // the whole directory, not only the partitions it writes
+      val out = Paths.get(freshDir(), "t").toString
+      spark.range(10).select(col("id"), (col("id") % 2).as("p"))
+        .write.mode("overwrite").partitionBy("p").parquet(out)
+      spark.range(10).select(col("id"), lit(7L).as("p"))
+        .write.mode("overwrite").partitionBy("p").parquet(out)
+      assert(spark.read.parquet(out).select("p").distinct().as[Long].collect().toSeq === Seq(7L))
+    } finally orig.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("crash at each commit boundary, resumed, equals an uninterrupted run") {
+    val input = spark.range(3000).select(col("id"), (col("id") % 11).as("v"))
+    val f = (df: org.apache.spark.sql.DataFrame) => df.withColumn("v2", col("v") * 5)
+    def runOn(dir: String): Seq[Int] =
+      IcebergLite.run(input, Seq("id"), buckets = 6, bucketsPerWave = 2, dir)(f)
+    val full = freshDir()
+    assert(runOn(full).sorted === (0 until 6))
+    val lastWave = Seq(4, 5)
+    val wantRows = rowsOf(full)
+    val wantLineage = lineageOf(full)
+    assert(wantLineage.map(_._1) === (0 until 6))
+
+    // 1) data committed, no lineage rows and no manifest for the last wave
+    val afterData = copyDir(full)
+    IcebergLite.readLineage(spark, afterData)
+      .where(col("bucket").isin(lastWave: _*)).select(input_file_name()).as[String]
+      .collect().distinct.foreach { u =>
+        val p = Paths.get(new java.net.URI(u))
+        Files.delete(p)
+        Files.deleteIfExists(p.resolveSibling("." + p.getFileName + ".crc"))
+      }
+    manifests(afterData).foreach(Files.delete)
+    // 2) lineage present, but the newest manifest is missing the last wave
+    val afterLineage = copyDir(full)
+    manifests(afterLineage).foreach { p =>
+      val json = new String(Files.readAllBytes(p), "UTF-8")
+      Files.writeString(p, json.replace("[0,1,2,3,4,5]", "[0,1,2,3]"))
+    }
+    assert(jsonList(newestManifest(afterLineage), "completed_buckets") === Seq("0", "1", "2", "3"))
+    // 3) complete
+    val complete = copyDir(full)
+
+    for ((dir, redo) <- Seq(afterData -> lastWave, afterLineage -> Nil, complete -> Nil)) {
+      assert(runOn(dir).sorted === redo, dir)
+      assert(rowsOf(dir) === wantRows, dir)
+      assert(lineageOf(dir) === wantLineage, dir)
+      val manifest = newestManifest(dir)
+      assert(jsonList(manifest, "completed_buckets") === (0 until 6).map(_.toString), dir)
+      assert(jsonList(manifest, "files").toSet === parquetFiles(dir), dir)
+    }
+    assert(jsonList(newestManifest(full), "files").toSet === parquetFiles(full))
+  }
+
+  test("wave guard: a foreign or null bucket fails run and leaves every file as it was") {
+    val dir = freshDir()
+    val input = spark.range(1200).select(col("id"), (col("id") % 7).as("v"))
+    val f = (df: org.apache.spark.sql.DataFrame) => df.withColumn("v2", col("v") + 2)
+    IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 2, dir)(f)
+    // drop the last wave's lineage so that wave is pending again
+    val lineage = IcebergLite.readLineage(spark, dir)
+    val keep = lineage.where(col("bucket") < 2).collect()
+    val lineageDir = Paths.get(dir, "lineage")
+    filesUnder(lineageDir).foreach(Files.delete)
+    spark.createDataFrame(keep.toSeq.asJava, lineage.schema)
+      .write.mode("overwrite").parquet(lineageDir.toString)
+    val before = snapshot(dir)
+
+    for ((what, bucket) <- Seq("foreign" -> lit(0), "null" -> lit(null).cast("int"))) {
+      val ex = intercept[Exception] {
+        IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 2, dir)(
+          df => f(df).withColumn("bucket", bucket))
+      }
+      val msgs = Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+      assert(msgs.exists(m => m != null && m.contains("outside wave [2,3]")), what)
+      assert(snapshot(dir) === before, s"$what bucket changed committed files")
+    }
+    // the untouched table still resumes to the clean result
+    assert(IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 2, dir)(f) === Seq(2, 3))
+    assert(recount(dir).values.map(_._1).sum === 1200L)
+  }
+
+  test("a wave whose transform emits no rows commits 0/0 lineage rows") {
+    val dir = freshDir()
+    val input = spark.range(800).select(col("id"), (col("id") % 3).as("v"))
+    val processed = IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 2, dir)(
+      df => df.where(col("bucket") < 2).withColumn("v2", col("v")))
+    assert(processed.sorted === (0 until 4))
+    val lineage = lineageOf(dir)
+    assert(lineage.map(_._1) === (0 until 4))
+    assert(lineage.filter(_._1 >= 2).forall(l => l._2 == 0L && l._3 == 0L))
+    val counted = recount(dir)
+    assert(lineage.forall { case (b, n, c) => counted.getOrElse(b, (0L, 0L)) == ((n, c)) })
+  }
+
+  test("transient failure inside the write task: lineage equals a recount of the committed files") {
+    // first attempts fail twice over: in the map stage (the transform) and
+    // in every write task's commitTask, after the task computed its rows;
+    // the lineage metrics must count each committed row exactly once
+    val key = "spark.sql.sources.commitProtocolClass"
+    val orig = spark.conf.getOption(key)
+    val dir = freshDir()
+    val input = spark.range(4000).select(col("id"), (col("id") % 7).as("v"))
+    spark.conf.set(key, classOf[FailFirstCommitProtocol].getName)
+    val processed =
+      try IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 2, dir) { df =>
+        val enc = org.apache.spark.sql.Encoders.product[(Long, Long, Int)]
+        df.select(col("id"), col("v"), col("bucket")).as[(Long, Long, Int)](enc)
+          .mapPartitions { it =>
+            val tc = TaskContext.get()
+            if (tc != null && tc.attemptNumber() == 0 && tc.partitionId() == 0)
+              throw new RuntimeException("injected transient task failure")
+            it
+          }(enc).toDF("id", "v", "bucket")
+          .withColumn("v2", col("v") * 3)
+      } finally orig.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(processed.sorted === (0 until 4))
+    val counted = recount(dir)
+    assert(counted.values.map(_._1).sum === 4000L)
+    assert(lineageOf(dir) === (0 until 4).map(b => (b, counted(b)._1, counted(b)._2)))
+  }
 }
