@@ -20,14 +20,6 @@ object ExprHelpers {
   def kRing(cell: Long, k: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(CellIndex.kRing(cell, k))
 
-  /** Sign-LSH bucket of a quantized embedding: bit j of the result is
-    * (sum_i q_i * w(j, i)) > 0 with the closed-form integer plane weight
-    * w(j, i) = ((j*dim + i) * 2654435761) mod 2001 - 1000 — one pure
-    * per-row computation (Similarity.planeWeight; the SQL oracles
-    * re-derive the same closed form). Elements past min(dim,
-    * q.numElements) contribute 0, matching the relational formulation's
-    * inner join on i.
-    */
   /** TextOps.fingerprint's kernel as one scalar: positional fingerprint
     * over the first 64 CHARACTERS (code points, matching both engines'
     * ascii(substr(text, k, 1)) semantics): sum_k cp_k * ((k*2654435761)
@@ -47,6 +39,13 @@ object ExprHelpers {
     sum % 1000000007L
   }
 
+  /** Sign-LSH bucket of a quantized embedding: bit j of the result is
+    * (sum_i q_i * w(j, i)) > 0 with the closed-form integer plane weight
+    * w(j, i) = ((j*dim + i) * 2654435761) mod 2001 - 1000 — one pure
+    * per-row computation (the SQL oracles re-derive the same closed
+    * form). Elements past min(dim, q.numElements) contribute 0, matching
+    * the relational formulation's inner join on i.
+    */
   def lshBucket(q: ArrayData, planes: Int, dim: Int): Long = {
     val n = math.min(dim, q.numElements())
     var bucket = 0L

@@ -2,15 +2,19 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Deduplication operators for training-data pipelines (exact, n-gram
   * Jaccard, MinHash+LSH, SimHash, phash). Thresholds are integer
   * cross-multiplications (inter*2 >= union for tau=0.5), never float
   * divisions, so every result is engine-reproducible; every stage is a
   * shuffle-on-key relational op (the MapReduce-set-similarity shape):
-  * shingles shuffle by shingle, signatures by (doc, hash-ix), candidates
-  * by band key — no driver-side state, no quadratic blow-up outside the
-  * candidate verify.
+  * shingles shuffle by shingle, exact duplicates by text or hash,
+  * candidates by band key — no driver-side state, no quadratic blow-up
+  * outside the candidate verify. The three near-duplicate pair operators
+  * (MinHash exact, MinHash estimate, phash) share one skeleton: one
+  * collapse to representatives ([[collapse]]), a rep-level verify, and
+  * one re-expansion to member pairs ([[expand]]).
   */
 object Dedup {
 
@@ -51,8 +55,7 @@ object Dedup {
     */
   def ngramJaccardPairs(docs: DataFrame, num: Int, den: Int,
                         dfMax: Int = 0): DataFrame = {
-    val sh = TextOps.shingles3(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sh = TextOps.shingles3(docs).persist(StorageLevel.MEMORY_AND_DISK)
     val candSh =
       if (dfMax <= 0) sh
       else {
@@ -87,46 +90,6 @@ object Dedup {
     Caching.materializeAndRelease(out, sh)
   }
 
-  /** MinHash signature matrix: H hashes h_j(doc) = min over shingle ints s
-    * of (a_j*s + b_j) mod P, with closed-form (a_j, b_j). Returns
-    * (doc_id, j, minh).
-    */
-  def minhashSignatures(docs: DataFrame, numHashes: Int): DataFrame =
-    minhashSignaturesFromShingles(TextOps.shingles3(docs), numHashes)
-
-  /** Wide MinHash signatures (doc_id, m0..m{H-1}) over a (doc_id,
-    * shingle) frame, in ONE partial-agg groupBy: H independent
-    * min-aggregates over a single shingle-int projection. The previous
-    * formulation (crossJoin a broadcast params table, groupBy (doc_id,
-    * j)) pushed H x |shingles| pre-agg rows into the exchange; here
-    * map-side combine reduces the shuffle to ~1 row per (doc,
-    * partition). Nor is a distinct() exchange needed: duplicate
-    * (doc_id, s) rows (shingleInt collisions of distinct shingles —
-    * shingles3 itself already dedups) cannot change a min. Same
-    * closed-form (a_j, b_j) and integer arithmetic, so every m_j is
-    * bit-identical to the old path and the SQL oracles are untouched.
-    */
-  def minhashSignaturesWide(sh: DataFrame, numHashes: Int): DataFrame = {
-    val mins = (0 until numHashes).map { j =>
-      val a = (j * 2654435761L + 1L) % P
-      val b = (j * 40503L + 7L) % P
-      min((lit(a) * col("s") + lit(b)) % P).as(s"m$j")
-    }
-    sh.withColumn("s", TextOps.shingleInt(col("shingle")))
-      .groupBy("doc_id").agg(mins.head, mins.tail: _*)
-  }
-
-  /** Same signatures in long form (doc_id, j, minh) — derived from the
-    * wide build by a cheap per-row explode (H rows per doc, post-agg).
-    */
-  def minhashSignaturesFromShingles(sh: DataFrame, numHashes: Int): DataFrame = {
-    val jm = (0 until numHashes).map(j =>
-      struct(lit(j).as("j"), col(s"m$j").as("minh")))
-    minhashSignaturesWide(sh, numHashes)
-      .select(col("doc_id"), explode(array(jm: _*)).as("jm"))
-      .select(col("doc_id"), col("jm.j").as("j"), col("jm.minh").as("minh"))
-  }
-
   /** LSH band candidates off the wide signature frame: band keys are
     * per-row projections — key_b = sum_r m_{b*rows+r} * 31^r (exact
     * integer addition is order-free, so this equals the old sum()
@@ -158,36 +121,78 @@ object Dedup {
       .distinct()
   }
 
-  /** MinHash + LSH banding + exact verify. Bands of `rowsPerBand` hashes;
-    * band key = order-free weighted fold of the band's minhashes.
-    * Candidates (same band key in any band) are verified with the exact
-    * shingle Jaccard; pairs with jaccard >= num/den survive.
-    * Output: (doc_a, doc_b, inter, uni).
-    *
-    * SCALE SHAPE: exact duplicates are collapsed to one representative per
-    * distinct text BEFORE banding. Web corpora carry clusters of 10^5-10^6
-    * byte-identical documents; uncollapsed, every member shares every band
-    * key and the band self-join emits |cluster|^2 candidate pairs into the
-    * (expensive, shingle-join) verify. Collapsed, the verify sees one
-    * candidate per distinct-text PAIR — linear in cluster size — and group
-    * membership is re-expanded afterwards as a cheap output-producing
-    * join. The OUTPUT is provably identical to banding every document:
-    * exact duplicates have identical signatures, so (a, b) band-match iff
-    * their representatives do, and the verified jaccard depends only on
-    * the texts. PipelineOpsSpec plants a duplicate cluster and asserts
-    * the verify-side candidate count stays linear.
+  /** Stage 0 of every near-duplicate pair operator: exact duplicates
+    * (equal `key`) collapse to one representative, the min `id`, in ONE
+    * exchange — partial aggregation absorbs the heavy hitters.
+    * collect_list keeps one id per input row, so exploding `ids`
+    * reproduces the membership exactly, and the representative's key is
+    * a narrow projection of the same aggregate: no join back to the
+    * input, no second scan of it. Output (key, rep_id, ids).
     */
-  def minhashLshPairs(docs: DataFrame, numHashes: Int, rowsPerBand: Int,
-                      num: Int, den: Int,
-                      expandWithin: Boolean = true): DataFrame =
-    minhashLshPairsImpl(docs, numHashes, rowsPerBand, num, den, expandWithin)._1
+  private def collapse(df: DataFrame, key: String, id: String): DataFrame =
+    df.groupBy(key).agg(min(id).as("rep_id"), collect_list(id).as("ids"))
 
-  /** Wide MinHash signatures computed IN-ROW over a per-doc shingle-int
-    * array: m_j = array_min over the same closed-form (a_j, b_j) hash the
-    * groupBy build uses — bit-identical values, zero exchanges (min over
-    * the array elements equals min over the exploded rows). An empty
-    * array would yield null m_j, so both callers drop zero-shingle reps
-    * first — the same candidacy as being absent from the groupBy build.
+  /** Stage N of every pair operator: rep-level verdicts back to member
+    * pairs. `verified` is (rep_a < rep_b, value columns); `members` is
+    * (id, rep_id, ...), one row per member of every rep that can pair;
+    * `within` is the value columns of two exact duplicates, read off the
+    * member row aliased `p`, or None when exact duplicates miss the
+    * threshold. Constant `within` values stay literals: routed through a
+    * per-rep join they would cost a join and its exchanges.
+    *
+    * Cross-group pairs inherit their rep pair's verdict (identical keys
+    * => identical shingle sets, signatures or hashes); within-group pairs
+    * are the member self-join. Both joins produce OUTPUT rows directly —
+    * no verify work per pair. The output is therefore identical to
+    * running the operator over the uncollapsed input.
+    *
+    * `compact` is the web-scale shape: a 10^6-copy exact-duplicate
+    * cluster expands to 10^12 all-pairs rows (the answer IS quadratic in
+    * that form), so it emits the verified REP pairs plus one (rep, member)
+    * row per non-representative instead — linear, and any pair's verdict
+    * is recoverable (a~b iff their reps pair up or coincide).
+    */
+  private def expand(verified: DataFrame, members: DataFrame, a: String, b: String,
+                     within: Option[Seq[Column]], compact: Boolean): DataFrame = {
+    val values = verified.columns.toSeq.filterNot(Set("rep_a", "rep_b")).map(col)
+    val p = members.as("p")
+    if (compact) {
+      val reps = verified.select(col("rep_a").as(a) +: col("rep_b").as(b) +: values: _*)
+      within.fold(reps)(w => reps.unionByName(p.where(col("p.id") =!= col("p.rep_id"))
+        .select(col("p.rep_id").as(a) +: col("p.id").as(b) +: w: _*)))
+    } else {
+      def side(rep: String, id: String) =
+        members.select(col("rep_id").as(rep), col("id").as(id))
+      val cross = verified
+        .join(side("rep_a", "ia"), "rep_a").join(side("rep_b", "ib"), "rep_b")
+        .select(least(col("ia"), col("ib")).as(a) +:
+          greatest(col("ia"), col("ib")).as(b) +: values: _*)
+      within.fold(cross)(w => cross.unionByName(p.join(members.as("q"),
+          col("p.rep_id") === col("q.rep_id") && col("p.id") < col("q.id"))
+        .select(col("p.id").as(a) +: col("q.id").as(b) +: w: _*)))
+    }
+  }
+
+  /** The per-rep frame both MinHash paths cache, (rep_id, ids, sh, si):
+    * the exact-duplicate collapse over `text`, each distinct text's
+    * distinct shingle ARRAY (in-row — no explode, no distinct exchange;
+    * the set is identical to shingles3's, see TextOps.shingleArray) and
+    * its int encoding `si`. `si` is a projection of its own, so the
+    * numHashes signature columns read ONE evaluation of it; handed to
+    * [[wideSigCols]] as an expression instead, every m_j re-derives the
+    * shingle ints from `sh`.
+    */
+  private def minhashReps(docs: DataFrame): DataFrame =
+    collapse(docs, "text", "doc_id")
+      .select(col("rep_id"), col("ids"), TextOps.shingleArray(col("text")).as("sh"))
+      .select(col("rep_id"), col("ids"), col("sh"),
+        transform(col("sh"), s => TextOps.shingleInt(s)).as("si"))
+
+  /** Wide MinHash signatures computed IN-ROW over a per-rep shingle-int
+    * array: m_j = min over shingle ints s of (a_j*s + b_j) mod P, with
+    * closed-form (a_j, b_j) — zero exchanges. An empty array would yield
+    * null m_j, so both callers drop zero-shingle reps first: they have no
+    * signature, hence no candidacy.
     */
   private def wideSigCols(si: Column, numHashes: Int): Seq[Column] =
     (0 until numHashes).map { j =>
@@ -196,49 +201,40 @@ object Dedup {
       array_min(transform(si, s => (lit(a) * s + lit(b)) % P)).as(s"m$j")
     }
 
-  /** Implementation returning (result, rep-level candidate pairs) so tests
-    * can assert the candidate volume; the second frame is lazy.
+  /** MinHash + LSH banding + exact verify. Bands of `rowsPerBand` hashes;
+    * band key = order-free weighted fold of the band's minhashes.
+    * Candidates (same band key in any band) are verified with the exact
+    * shingle Jaccard; pairs with jaccard >= num/den survive.
+    * Output: (doc_a, doc_b, inter, uni).
+    *
+    * SCALE SHAPE: exact duplicates are collapsed to one representative per
+    * distinct text BEFORE banding ([[collapse]]). Web corpora carry
+    * clusters of 10^5-10^6 byte-identical documents; uncollapsed, every
+    * member shares every band key and the band self-join emits
+    * |cluster|^2 candidate pairs into the verify. Collapsed, the verify
+    * sees one candidate per distinct-text PAIR — linear in cluster size —
+    * and membership is re-expanded afterwards ([[expand]]). PipelineOpsSpec
+    * plants a duplicate cluster and asserts the verify-side candidate
+    * count stays linear.
     */
-  private[operators] def minhashLshPairsImpl(
-      docs: DataFrame, numHashes: Int, rowsPerBand: Int,
-      num: Int, den: Int, expandWithin: Boolean = true): (DataFrame, DataFrame) = {
-    val s = minhashLshStages(docs, numHashes, rowsPerBand, num, den, expandWithin)
-    (Caching.materializeAndRelease(s.out, s.shA), s.cand)
+  def minhashLshPairs(docs: DataFrame, numHashes: Int, rowsPerBand: Int,
+                      num: Int, den: Int): DataFrame = {
+    val s = minhashLshStages(docs, numHashes, rowsPerBand, num, den)
+    Caching.materializeAndRelease(s.pairs, s.shA)
   }
 
-  /** The lazy stage frames of the exact LSH path that its callers use:
-    * the shingle cache to release, the rep-level band candidates (which
-    * tests count) and the output pairs.
+  /** The lazy stage frames of the exact LSH path: the per-rep cache to
+    * release, the rep-level band candidates (which tests count), and the
+    * output in both shapes — all pairs, and the compact (rep, member)
+    * form [[clusterAssign]] feeds to connected components.
     */
   private[operators] final case class LshStages(
-      shA: DataFrame, cand: DataFrame, out: DataFrame)
+      shA: DataFrame, cand: DataFrame, pairs: DataFrame, compact: DataFrame)
 
   private[operators] def minhashLshStages(
       docs: DataFrame, numHashes: Int, rowsPerBand: Int,
-      num: Int, den: Int, expandWithin: Boolean): LshStages = {
-    import org.apache.spark.storage.StorageLevel
-    // Stage 0 — exact-duplicate collapse in ONE text exchange: group by
-    // text keeping the representative (min doc_id per distinct text —
-    // partial aggregation absorbs the heavy hitters) AND the member-id
-    // list. collect_list gathers one doc_id per input row, so exploding
-    // it reproduces the old members set exactly. The former shape
-    // (reps groupBy + members join-back + repDocs join) shuffled the
-    // full text column three times and re-scanned docs twice; members
-    // and the representative texts are now narrow projections of this
-    // one aggregate.
-    val collapsed = docs.groupBy("text")
-      .agg(min("doc_id").as("rep_id"), collect_list("doc_id").as("ids"))
-    // ONE cached per-rep frame feeds everything downstream: the distinct
-    // shingle ARRAY (in-row — no explode, no distinct exchange; the set
-    // is identical to shingles3's, see TextOps.shingleArray), its int
-    // encoding (for the signatures), and the member-id list.
-    val shA = collapsed
-      .select(col("rep_id"), col("ids"), TextOps.shingleArray(col("text")).as("sh"))
-      .select(col("rep_id"), col("ids"), col("sh"),
-        transform(col("sh"), s => TextOps.shingleInt(s)).as("si"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val members = shA.select(explode(col("ids")).as("doc_id"), col("rep_id"))
-
+      num: Int, den: Int): LshStages = {
+    val shA = minhashReps(docs).persist(StorageLevel.MEMORY_AND_DISK)
     // reps with no shingle have no signature: dropped here, so no null
     // band key reaches the band explode
     val wide = shA.where(size(col("si")) >= 1).select(
@@ -246,13 +242,9 @@ object Dedup {
     val cand = bandCandidates(wide, numHashes, rowsPerBand)
 
     // exact verify on the (rep-level) candidate set only: each pair pulls
-    // both reps' distinct-shingle arrays ONCE and intersects in-row —
-    // 1 slim row per pair through every exchange, where the former shape
-    // re-joined the exploded shingle frame per pair (|pairs| x
-    // |shingles/doc| exchange rows, the engine's measured worst scaler)
-    // and then paid a sizes aggregate + two more joins. array_intersect
-    // over distinct arrays counts exactly |A ∩ B| — the same number the
-    // (sa = sb) equi-join + count computed.
+    // both reps' distinct-shingle arrays ONCE and intersects in-row — 1
+    // slim row per pair through every exchange. array_intersect over
+    // distinct arrays counts exactly |A ∩ B|.
     val shSets = shA.select(col("rep_id"), col("sh"))
     val verified = cand
       .join(shSets.select(col("rep_id").as("rep_a"), col("sh").as("sa")), "rep_a")
@@ -264,50 +256,18 @@ object Dedup {
       .where(col("inter") * den >= col("uni") * num)
       .select("rep_a", "rep_b", "inter", "uni")
 
-    // Stage N — membership re-expansion. Cross-group: every (member of A,
-    // member of B) pair inherits the rep pair's verdict (identical texts
-    // => identical shingle sets). Within-group: jaccard is exactly 1, so
-    // the pair qualifies iff n*den >= n*num with n >= 1 distinct shingle
-    // (documents with < 3 tokens have no shingles, hence — exactly as in
-    // the uncollapsed formulation — no signatures, no candidacy, no pairs;
-    // presence in the old exploded sizes frame == size(sh) >= 1 here).
-    // Both joins produce OUTPUT rows directly; no verify work per pair.
-    val repSizes = shA.where(size(col("sh")) >= 1)
-      .select(col("rep_id"), size(col("sh")).cast("long").as("n"))
-    val cross = verified
-      .join(members.select(col("rep_id").as("rep_a"), col("doc_id").as("da")), "rep_a")
-      .join(members.select(col("rep_id").as("rep_b"), col("doc_id").as("db")), "rep_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("inter"), col("uni"))
-    val within = members.as("p").join(members.as("q"),
-        col("p.rep_id") === col("q.rep_id") && col("p.doc_id") < col("q.doc_id"))
-      .select(col("p.doc_id").as("doc_a"), col("q.doc_id").as("doc_b"),
-        col("p.rep_id").as("rep_id"))
-      .join(repSizes, "rep_id")
-      .where(col("n") * den >= col("n") * num)
-      .select(col("doc_a"), col("doc_b"), col("n").as("inter"), col("n").as("uni"))
-
-    // expandWithin=false is the web-scale output shape: a 10^6-copy
-    // exact-duplicate cluster would expand to 10^12 all-pairs rows (the
-    // answer IS quadratic in that form), so instead emit the verified
-    // REP-level pairs plus one (rep, member) row per non-representative
-    // — linear, and any pair's verdict is recoverable (doc_a~doc_b iff
-    // their reps pair up or coincide). The all-pairs default stays for
-    // oracle parity.
-    val out =
-      if (expandWithin) cross.unionByName(within)
-      else {
-        val memberRows = members.where(col("doc_id") =!= col("rep_id"))
-          .join(repSizes, "rep_id")
-          .where(col("n") * den >= col("n") * num) // no-shingle docs: no pairs
-          .select(col("rep_id").as("doc_a"), col("doc_id").as("doc_b"),
-            col("n").as("inter"), col("n").as("uni"))
-        verified
-          .select(col("rep_a").as("doc_a"), col("rep_b").as("doc_b"),
-            col("inter"), col("uni"))
-          .unionByName(memberRows)
-      }
-    LshStages(shA, cand, out)
+    // within a group jaccard is exactly 1 over n >= 1 distinct shingles,
+    // so the pair qualifies iff n*den >= n*num, i.e. iff den >= num — a
+    // compile-time fact. Documents with < 3 tokens have no shingles,
+    // hence (as uncollapsed) no signature, no candidacy and no pairs:
+    // their reps carry no members.
+    val members = shA.where(size(col("sh")) >= 1).select(explode(col("ids")).as("id"),
+      col("rep_id"), size(col("sh")).cast("long").as("n"))
+    val within =
+      if (den >= num) Some(Seq(col("p.n").as("inter"), col("p.n").as("uni"))) else None
+    LshStages(shA, cand,
+      expand(verified, members, "doc_a", "doc_b", within, compact = false),
+      expand(verified, members, "doc_a", "doc_b", within, compact = true))
   }
 
   /** MinHash + LSH with SIGNATURE-ONLY verification — the web-scale
@@ -316,38 +276,25 @@ object Dedup {
     * and pairs with `est * den >= numHashes * num` survive. Output
     * (doc_a, doc_b, est).
     *
-    * The exact path ([[minhashLshPairs]]) re-joins every candidate pair
-    * against the full shingle frame — |pairs| x |shingles/doc| shuffle
-    * rows. Here the score is ONE in-row `aggregate(zip_with)` over the
-    * two 16-long signature arrays (1 row per pair, no per-component
-    * explode), so verification cost is independent of document length —
-    * what production-scale dedup actually runs when the corpus is 10^12
-    * documents and the shingle re-join is the bottleneck. Same
-    * exact-duplicate collapse + re-expansion as the exact path (identical
-    * texts have identical signatures, so the estimate is
-    * collapse-invariant and the oracle can verify against the direct
-    * uncollapsed formulation).
+    * The exact path ([[minhashLshPairs]]) intersects every candidate
+    * pair's shingle arrays. Here the score is ONE in-row
+    * `aggregate(zip_with)` over the two signature arrays, so verification
+    * cost is independent of document length. Same exact-duplicate
+    * collapse and re-expansion as the exact path (identical texts have
+    * identical signatures, so the estimate is collapse-invariant and the
+    * oracle can verify against the direct uncollapsed formulation).
     */
   def minhashEstimatePairs(docs: DataFrame, numHashes: Int, rowsPerBand: Int,
                            num: Int, den: Int): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // same one-exchange exact-duplicate collapse as minhashLshPairsImpl
-    val collapsed = docs.groupBy("text")
-      .agg(min("doc_id").as("rep_id"), collect_list("doc_id").as("ids"))
-    // ONE cached frame: member ids + in-row wide signatures. The
-    // estimate path never materializes a shingle frame at all —
-    // signatures fold in-row over the shingle array (bit-identical, see
-    // wideSigCols). Reps with no shingle are dropped first: they have no
+    // ONE cached frame: member ids + in-row wide signatures, no shingle
+    // array. Reps with no shingle are dropped first: they have no
     // signature (no null band key reaches the band explode), and no
     // output pair — cross pairs need a banded rep, within-group pairs a
     // rep with >= 1 shingle.
-    val sigW = collapsed
-      .select(col("rep_id"), col("ids"), TextOps.shingleArray(col("text")).as("sh"))
-      .where(size(col("sh")) >= 1)
-      .select(Seq(col("rep_id"), col("ids")) ++
-        wideSigCols(transform(col("sh"), s => TextOps.shingleInt(s)), numHashes): _*)
+    val sigW = minhashReps(docs).where(size(col("sh")) >= 1)
+      .select(Seq(col("rep_id"), col("ids")) ++ wideSigCols(col("si"), numHashes): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val members = sigW.select(explode(col("ids")).as("doc_id"), col("rep_id"))
+    val members = sigW.select(explode(col("ids")).as("id"), col("rep_id"))
     val wide = sigW.select(
       col("rep_id").as("doc_id") +: (0 until numHashes).map(j => col(s"m$j")): _*)
     val cand = bandCandidates(wide, numHashes, rowsPerBand)
@@ -361,27 +308,14 @@ object Dedup {
             (x, y) => when(x === y, 1L).otherwise(0L)),
           lit(0L), (acc, v) => acc + v).as("est"))
       .where(col("est") * den >= lit(numHashes.toLong) * num)
-    // re-expansion, same argument as the exact path: cross-group pairs
-    // inherit the rep pair's estimate (identical texts => identical
-    // signatures); within-group pairs have est = numHashes exactly, and
-    // qualify whenever the rep has a signature at all (>= 1 shingle).
-    // Whether est = numHashes meets the threshold is a COMPILE-TIME
-    // fact, so the branch is decided here instead of shipping an
-    // always-true row predicate (the round-6 advisor's cosmetic note).
-    val cross = scored
-      .join(members.select(col("rep_id").as("rep_a"), col("doc_id").as("da")), "rep_a")
-      .join(members.select(col("rep_id").as("rep_b"), col("doc_id").as("db")), "rep_b")
-      .select(least(col("da"), col("db")).as("doc_a"),
-        greatest(col("da"), col("db")).as("doc_b"), col("est"))
-    val withinBase = members.as("p").join(members.as("q"),
-        col("p.rep_id") === col("q.rep_id") && col("p.doc_id") < col("q.doc_id"))
-      .select(col("p.doc_id").as("doc_a"), col("q.doc_id").as("doc_b"),
-        lit(numHashes.toLong).as("est"))
+    // within-group pairs have est = numHashes exactly; whether that meets
+    // the threshold is a compile-time fact
     val within =
-      if (numHashes.toLong * den >= numHashes.toLong * num) withinBase
-      else withinBase.limit(0) // threshold > 1: exact duplicates don't qualify
-    val out = cross.unionByName(within)
-    Caching.materializeAndRelease(out, sigW)
+      if (numHashes.toLong * den >= numHashes.toLong * num)
+        Some(Seq(lit(numHashes.toLong).as("est")))
+      else None
+    Caching.materializeAndRelease(
+      expand(scored, members, "doc_a", "doc_b", within, compact = false), sigW)
   }
 
   /** End-to-end near-dup cluster assignment: every document in `docs`
@@ -404,12 +338,11 @@ object Dedup {
     // full extra evaluation of the pair pipeline whose cache was read
     // exactly once — disappears. The shingle cache is dropped as soon as
     // the checkpoint exists.
-    val s = minhashLshStages(docs, numHashes, rowsPerBand, num, den,
-      expandWithin = false)
+    val s = minhashLshStages(docs, numHashes, rowsPerBand, num, den)
     // the compact pair shape is canonical by construction (see the
     // Canonical entry's scaladoc), so CC skips its normalization distinct
     val cc = Components.connectedComponentsCanonical(
-      s.out.select("doc_a", "doc_b"))
+      s.compact.select("doc_a", "doc_b"))
     s.shA.unpersist(blocking = false)
     val out = docs.select(col("doc_id").as("id"))
       .join(cc, Seq("id"), "left")
@@ -497,32 +430,20 @@ object Dedup {
     * equi-join on (band, band_key); the exact popcount verify runs on
     * candidates only. Exact duplicates (identical phash — web-scale
     * image corpora carry huge byte-identical clusters) are collapsed to
-    * one representative per distinct hash BEFORE banding, so the
-    * band self-join sees one row per DISTINCT hash and cluster
-    * membership re-expands afterwards as output-producing joins —
-    * identical hashes band identically, so the output provably equals
-    * the uncollapsed formulation (within-cluster pairs have dist 0).
-    *
-    * `bandMax > 0` is the hot-band guard (dfMax's sibling): a
-    * (band, band_key) bucket with more than bandMax DISTINCT hashes
-    * generates no candidates from that band — a near-dup pair still
-    * meets through its other, rarer bands unless t bits all fall
-    * outside every rare band. Part of the operator contract when
-    * enabled; the driver query runs with it off.
+    * one representative per distinct hash BEFORE banding ([[collapse]]),
+    * and membership re-expands afterwards ([[expand]]): identical hashes
+    * band identically, so the output equals the uncollapsed formulation
+    * (within-cluster pairs have dist 0).
     */
-  def phashNearDupPairs(images: DataFrame, t: Int, bands: Int = 4,
-                        bandMax: Int = 0,
-                        expandWithin: Boolean = true): DataFrame = {
+  def phashNearDupPairs(images: DataFrame, t: Int, bands: Int = 4): DataFrame = {
     require(t < bands, s"pigeonhole needs t < bands (got t=$t, bands=$bands)")
     require(64 % bands == 0, s"bands must divide 64 (got $bands)")
     val width = 64 / bands
-    import org.apache.spark.storage.StorageLevel
 
-    val reps = images.groupBy("phash").agg(min("image_id").as("rep_id"))
-    val members = images.select(col("image_id"), col("phash")).join(reps, "phash")
+    // a null hash pairs with nothing, not even another null
+    val reps = collapse(images.where(col("phash").isNotNull), "phash", "image_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val repImgs = members.where(col("image_id") === col("rep_id"))
-      .select(col("rep_id"), col("phash"))
+    val members = reps.select(explode(col("ids")).as("id"), col("rep_id"))
 
     // band_key MUST be extracted by masking, not `%`: Spark's `%` keeps the
     // dividend's sign, so a negative phash (bit 63 set — ~half of real
@@ -530,21 +451,13 @@ object Dedup {
     // non-negative hash with the same low bits gets low-bits, silently
     // breaking the pigeonhole guarantee on band 0.
     val bandMask = if (width == 64) -1L else (1L << width) - 1
-    val banded = repImgs
+    val banded = reps.select(col("rep_id"), col("phash"))
       .withColumn("band", explode(lit((0 until bands).toArray)))
       .withColumn("band_key",
         expr(s"shiftrightunsigned(phash, band * $width)").bitwiseAND(lit(bandMask)))
-    val candBanded =
-      if (bandMax <= 0) banded
-      else {
-        val rare = banded.groupBy("band", "band_key")
-          .agg(count(lit(1)).as("df")).where(col("df") <= bandMax)
-          .select("band", "band_key")
-        banded.join(rare, Seq("band", "band_key"))
-      }
-    val a = candBanded.select(col("rep_id").as("rep_a"),
+    val a = banded.select(col("rep_id").as("rep_a"),
       col("phash").as("ph_a"), col("band"), col("band_key"))
-    val b = candBanded.select(col("rep_id").as("rep_b"),
+    val b = banded.select(col("rep_id").as("rep_b"),
       col("phash").as("ph_b"), col("band"), col("band_key"))
     val verified = a.join(b, Seq("band", "band_key"))
       .where(col("rep_a") < col("rep_b"))
@@ -552,30 +465,7 @@ object Dedup {
       .where(expr(s"bit_count(ph_a ^ ph_b) <= $t"))
       .select(col("rep_a"), col("rep_b"),
         expr("CAST(bit_count(ph_a ^ ph_b) AS BIGINT)").as("dist"))
-
-    // membership re-expansion: cross-cluster pairs inherit the rep pair's
-    // distance (identical hashes => identical XOR); within-cluster pairs
-    // are exact duplicates at distance 0
-    val cross = verified
-      .join(members.select(col("rep_id").as("rep_a"), col("image_id").as("da")), "rep_a")
-      .join(members.select(col("rep_id").as("rep_b"), col("image_id").as("db")), "rep_b")
-      .select(least(col("da"), col("db")).as("id_a"),
-        greatest(col("da"), col("db")).as("id_b"), col("dist"))
-    val within = members.as("p").join(members.as("q"),
-        col("p.rep_id") === col("q.rep_id") && col("p.image_id") < col("q.image_id"))
-      .select(col("p.image_id").as("id_a"), col("q.image_id").as("id_b"),
-        lit(0L).as("dist"))
-    // expandWithin=false: web-scale (rep, member) shape — see the
-    // minhashLshPairs note; a mega exact-dup cluster emits |cluster|-1
-    // membership rows instead of |cluster|^2 pairs, and cross-cluster
-    // verdicts stay at rep granularity.
-    val out =
-      if (expandWithin) cross.unionByName(within)
-      else verified
-        .select(col("rep_a").as("id_a"), col("rep_b").as("id_b"), col("dist"))
-        .unionByName(members.where(col("image_id") =!= col("rep_id"))
-          .select(col("rep_id").as("id_a"), col("image_id").as("id_b"),
-            lit(0L).as("dist")))
-    Caching.materializeAndRelease(out, members)
+    Caching.materializeAndRelease(expand(verified, members, "id_a", "id_b",
+      Some(Seq(lit(0L).as("dist"))), compact = false), reps)
   }
 }

@@ -40,6 +40,47 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => coalesce(x * y, lit(0L))),
       lit(0L), (acc, v) => acc + v)
 
+  /** (vec_id, qvec): the quantized-ARRAY form every operator scores on.
+    * Null/empty embeddings are dropped — mirroring the relational
+    * per-component formulation (and the SQL oracles), where a vector with
+    * no components has no (i, q) rows and so no dot, bucket or list.
+    */
+  private def quantize(embeddings: DataFrame): DataFrame =
+    embeddings
+      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
+      .select(col("vec_id"),
+        transform(col("embedding"),
+          v => round(v.cast("double") * 1000.0, 0).cast("long")).as("qvec"))
+
+  /** The `k` best (query_id, vec_id, dot) rows per query, ties toward the
+    * lower vec_id, with their 1-based rank.
+    */
+  private def topK(dots: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("vec_id"))
+    dots.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+  }
+
+  /** The ANN re-rank: each candidate (query_id, vec_id) pair pulls both
+    * quantized arrays once and scores the exact integer dot in-row — 1
+    * row per candidate pair, no per-component explode — then [[topK]].
+    */
+  private def rerank(candPairs: DataFrame, qvec: DataFrame, k: Int): DataFrame =
+    topK(candPairs
+      .join(qvec.select(col("vec_id").as("query_id"), col("qvec").as("qa")),
+        Seq("query_id"))
+      .join(qvec.select(col("vec_id"), col("qvec").as("qb")), Seq("vec_id"))
+      .select(col("query_id"), col("vec_id"), dotCol(col("qa"), col("qb")).as("dot")), k)
+
+  /** The deterministic IVF seed codebook: the quantized vectors of the
+    * `nLists` lowest vec_ids, one per list, in vec_id order.
+    */
+  private def seedCodebook(qvec: DataFrame, nLists: Int): Seq[Seq[Long]] = {
+    val rows = qvec.where(col("vec_id") < nLists).orderBy("vec_id").collect()
+    require(rows.length == nLists,
+      s"IVF codebook needs vec_ids [0, $nLists) present with non-empty embeddings")
+    rows.toSeq.map(_.getSeq[Long](1))
+  }
+
   /** Exact top-k by integer dot product for the `nQueries` lowest vec_ids
     * against the whole table. Output: (query_id, vec_id, dot, rank).
     *
@@ -55,33 +96,19 @@ object Similarity {
     * reads it more than once must persist it first (and unpersist after).
     */
   def bruteTopK(embeddings: DataFrame, nQueries: Int, k: Int): DataFrame = {
-    // null/empty embeddings produce no pair — mirroring the relational
-    // per-component inner join, where they contribute no (i, q) rows
-    val qvec = embeddings
-      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 1000.0, 0).cast("long")).as("qvec"))
+    val qvec = quantize(embeddings)
     val queries = qvec.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("qvec").as("qa"))
     val dots = qvec.crossJoin(broadcast(queries))
       .where(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"), dotCol(col("qa"), col("qvec")).as("dot"))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("vec_id"))
     // returned LAZY: this operator persists no intermediates, so the
     // house materialize-then-release step had nothing to protect — it
     // just computed the whole query once for the count and again for the
     // caller's action. Caching.release on the result stays a harmless
     // no-op.
-    dots.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+    topK(dots, k)
   }
-
-  /** Deterministic integer hyperplane component w(j, i): closed form so
-    * any engine derives the same planes (mirrored by ExprHelpers.lshBucket
-    * and the SQL oracles).
-    */
-  def planeWeight(j: Int, dim: Int) =
-    (i: Int) => ((j.toLong * dim + i) * 2654435761L % 2001L) - 1000L
 
   /** Sign-LSH bucket per vector: bit j = (sum_i q_i * w(j,i)) > 0.
     * Returns (vec_id, bucket).
@@ -93,20 +120,13 @@ object Similarity {
     * vectors that is 5x10^14 shuffle rows for a value a per-row loop
     * computes in-place.
     */
-  def lshBuckets(embeddings: DataFrame, planes: Int, dim: Int): DataFrame = {
-    // null/empty embeddings emit NO bucket row — mirroring the relational
-    // formulation (and the SQL oracles' bk CTE), where a vector with no
-    // components never reaches the bucket aggregate. Without the filter
-    // every such vector lands in bucket 0/null, inflating candidate sets
-    // and double-counting against nearDupPairs' (label, bucket) group-size
-    // guard in a way the oracle doesn't.
-    embeddings
-      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        lsh_bucket(transform(col("embedding"),
-            v => round(v.cast("double") * 1000.0, 0).cast("long")),
-          lit(planes), lit(dim)).as("bucket"))
-  }
+  def lshBuckets(embeddings: DataFrame, planes: Int, dim: Int): DataFrame =
+    // null/empty embeddings emit NO bucket row (see quantize): without
+    // the filter every such vector lands in bucket 0/null, inflating
+    // candidate sets and double-counting against nearDupPairs' (label,
+    // bucket) group-size guard in a way the oracle doesn't
+    quantize(embeddings).select(col("vec_id"),
+      lsh_bucket(col("qvec"), lit(planes), lit(dim)).as("bucket"))
 
   /** ANN top-k: candidates share one of the query's probe buckets; exact
     * integer dot re-ranks within the candidates. Output
@@ -130,12 +150,7 @@ object Similarity {
     // per-component (vec_id, i) stream twice and groupBy'd the products,
     // shuffling dim (=64) rows per candidate pair; integer dots are
     // order-independent, so the outputs are bit-identical.
-    val qvec = embeddings
-      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 1000.0, 0).cast("long")).as("qvec"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val qvec = quantize(embeddings).persist(StorageLevel.MEMORY_AND_DISK)
     val buckets = qvec.select(col("vec_id"),
         lsh_bucket(col("qvec"), lit(planes), lit(dim)).as("bucket"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -155,14 +170,7 @@ object Similarity {
     val candPairs = queries.join(buckets, "bucket")
       .where(col("query_id") =!= col("vec_id"))
       .select("query_id", "vec_id")
-    val dots = candPairs
-      .join(qvec.select(col("vec_id").as("query_id"), col("qvec").as("qa")),
-        Seq("query_id"))
-      .join(qvec.select(col("vec_id"), col("qvec").as("qb")), Seq("vec_id"))
-      .select(col("query_id"), col("vec_id"), dotCol(col("qa"), col("qb")).as("dot"))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("vec_id"))
-    val out = dots.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-    Caching.materializeAndRelease(out, buckets, qvec)
+    Caching.materializeAndRelease(rerank(candPairs, qvec, k), buckets, qvec)
   }
 
   /** IVF-Flat ANN top-k — the second scale path beside sign-LSH.
@@ -193,23 +201,14 @@ object Similarity {
                  nLists: Int = 16, nProbe: Int = 2,
                  codebook: Option[Seq[Long]] = None): DataFrame = {
     import graft.functions.GraftFunctions.ivf_nearest
-    val qvec = embeddings
-      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 1000.0, 0).cast("long")).as("qvec"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val centLit = codebook match {
+    val qvec = quantize(embeddings).persist(StorageLevel.MEMORY_AND_DISK)
+    val centLit = typedLit(codebook match {
       case Some(cb) =>
         require(cb.nonEmpty && cb.length % nLists == 0,
           s"codebook length ${cb.length} not a multiple of nLists=$nLists")
-        typedLit(cb)
-      case None =>
-        val centRows = qvec.where(col("vec_id") < nLists).orderBy("vec_id").collect()
-        require(centRows.length == nLists,
-          s"IVF codebook needs vec_ids [0, $nLists) present with non-empty embeddings")
-        typedLit(centRows.flatMap(_.getSeq[Long](1)).toSeq)
-    }
+        cb
+      case None => seedCodebook(qvec, nLists).flatten
+    })
     val data = qvec.select(col("vec_id"),
       ivf_nearest(col("qvec"), centLit, lit(nLists), lit(0)).as("list"))
     val queries = qvec.where(col("vec_id") < nQueries)
@@ -220,14 +219,7 @@ object Similarity {
     val candPairs = queries.join(data, "list")
       .where(col("query_id") =!= col("vec_id"))
       .select("query_id", "vec_id")
-    val dots = candPairs
-      .join(qvec.select(col("vec_id").as("query_id"), col("qvec").as("qa")),
-        Seq("query_id"))
-      .join(qvec.select(col("vec_id"), col("qvec").as("qb")), Seq("vec_id"))
-      .select(col("query_id"), col("vec_id"), dotCol(col("qa"), col("qb")).as("dot"))
-    val w = Window.partitionBy("query_id").orderBy(col("dot").desc, col("vec_id"))
-    val out = dots.withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-    Caching.materializeAndRelease(out, qvec)
+    Caching.materializeAndRelease(rerank(candPairs, qvec, k), qvec)
   }
 
   /** Lloyd-refined IVF codebook: start from the deterministic seed (the
@@ -248,17 +240,10 @@ object Similarity {
   def ivfCodebookKMeans(embeddings: DataFrame, nLists: Int = 16,
                         iters: Int = 2): Seq[Long] = {
     import graft.functions.GraftFunctions.ivf_nearest
-    val qvec = embeddings
-      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 1000.0, 0).cast("long")).as("qvec"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val seedRows = qvec.where(col("vec_id") < nLists).orderBy("vec_id").collect()
-    require(seedRows.length == nLists,
-      s"IVF codebook needs vec_ids [0, $nLists) present with non-empty embeddings")
-    val dim = seedRows.head.getSeq[Long](1).length
-    var cents: Seq[Long] = seedRows.flatMap(_.getSeq[Long](1)).toSeq
+    val qvec = quantize(embeddings).persist(StorageLevel.MEMORY_AND_DISK)
+    val seed = seedCodebook(qvec, nLists)
+    val dim = seed.head.length
+    var cents: Seq[Long] = seed.flatten
     for (_ <- 0 until iters) {
       val sums = qvec.select(
           ivf_nearest(col("qvec"), typedLit(cents), lit(nLists), lit(0)).as("list"),
@@ -303,12 +288,7 @@ object Similarity {
     // dim (= 64) rows per pair through the dot exchange plus a norms
     // aggregate + two joins (the annTopK round-5 rewrite, applied here).
     // Integer dots are order-independent, so outputs are bit-identical.
-    val qvec = embeddings
-      .where(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          v => round(v.cast("double") * 1000.0, 0).cast("long")).as("qvec"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val qvec = quantize(embeddings).persist(StorageLevel.MEMORY_AND_DISK)
     val meta = lshBuckets(embeddings, planes, dim)
       .join(embeddings.select("vec_id", "label"), "vec_id")
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -2,6 +2,11 @@ package graft
 
 import graft.operators.SpatialJoins
 import graft.sources.GeoTables
+import org.apache.spark.sql.catalyst.expressions.ArrayMin
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -66,27 +71,57 @@ class PlanSpec extends AnyFunSuite {
     assert(plan.contains("*("), s"bucket build fell out of codegen:\n$plan")
   }
 
-  test("minhash signature build adds exactly ONE exchange over the shingle frame") {
-    // the old formulation (distinct -> params crossJoin -> groupBy(doc,j))
-    // pushed 3 exchanges carrying up to H x |shingles| rows; the wide
-    // build is one partial-agg'd groupBy(doc_id) — map-side combine means
-    // the single exchange carries ~1 row per (doc, partition)
+  /** Every physical node of `df`'s executed plan, through adaptive query
+    * stages, reused exchanges and cached relations (an operator's
+    * materialized intermediates); each node once.
+    */
+  private def planNodes(df: org.apache.spark.sql.DataFrame): Seq[SparkPlan] = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[SparkPlan, java.lang.Boolean])
+    val out = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    def walk(p: SparkPlan): Unit = if (seen.add(p)) {
+      out += p
+      p match {
+        case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case s: QueryStageExec => walk(s.plan)
+        case r: ReusedExchangeExec => walk(r.child)
+        case m: InMemoryTableScanExec => walk(m.relation.cachedPlan)
+        case _ =>
+      }
+      p.children.foreach(walk)
+    }
+    walk(df.queryExecution.executedPlan)
+    out.toSeq
+  }
+
+  test("minhashEstimatePairs: no signature re-derives the shingle ints from sh") {
+    // each m_j is array_min over the per-rep shingle-int array; that array
+    // must be projected once and read by all numHashes signatures, not
+    // rebuilt by transform(sh, shingleInt) inside every array_min
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val sh = graft.operators.TextOps.shingles3(docs)
-      .select("doc_id", "shingle").persist()
+    val out = graft.operators.Dedup.minhashEstimatePairs(docs, 16, 4, 1, 2)
     try {
-      sh.count()
-      val plan = planOf(graft.operators.Dedup.minhashSignaturesWide(sh, 16))
-      // count only the operators the signature build ADDS on top of the
-      // cached shingle frame (whose own plan — window, distinct — is
-      // rendered below the InMemoryTableScan leaf)
-      val added = plan.split("InMemoryTableScan")(0)
-      val exchanges = "Exchange".r.findAllIn(added).size
-      assert(exchanges <= 1, s"expected <= 1 exchange, got $exchanges:\n$added")
-      assert(added.contains("HashAggregate"), s"expected a hash agg:\n$added")
-      assert(!added.contains("CartesianProduct") && !added.contains("Join"),
-        s"signature build must not join a params table:\n$added")
-    } finally sh.unpersist()
+      val mins = planNodes(out).flatMap(_.expressions.flatMap(_.collect {
+        case m: ArrayMin => m
+      }))
+      assert(mins.size >= 16, s"expected the 16 signature array_mins, got ${mins.size}")
+      val rebuilt = mins.filter(_.child.references.exists(_.name == "sh"))
+      assert(rebuilt.isEmpty,
+        s"${rebuilt.size} of ${mins.size} array_min(s) re-derive shingle ints from sh")
+    } finally graft.operators.Caching.release(out)
+  }
+
+  test("phashNearDupPairs reads its input once: one parquet scan in the executed plan") {
+    // the exact-duplicate collapse is one aggregate over the input; the
+    // representative hashes and the member lists are projections of it,
+    // not a join back to a second scan of the input
+    val dir = java.nio.file.Files.createTempDirectory("phash-scan").resolve("imgs").toString
+    graft.sources.Images.table(spark, 60).toDF.select("image_id", "phash").write.parquet(dir)
+    val out = graft.operators.Dedup.phashNearDupPairs(spark.read.parquet(dir), 2)
+    try {
+      val scans = planNodes(out).count(_.isInstanceOf[FileSourceScanExec])
+      assert(scans === 1, s"expected one scan of the input, got $scans")
+    } finally graft.operators.Caching.release(out)
   }
 
   test("IVF list assignment is a pure per-row projection: no exchange, codegen'd") {

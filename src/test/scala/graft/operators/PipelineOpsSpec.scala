@@ -61,27 +61,12 @@ class PipelineOpsSpec extends AnyFunSuite {
     val a = (1L << 63) | (1L << 20) | 0xABCDL // negative
     val b = a ^ ((1L << 16) | (1L << 32) | (1L << 63)) // positive, dist 3
     val c = -1L // negative, far from both (dist >> 3)
-    val df = Seq(("i-a", a), ("i-b", b), ("i-c", c)).toDF("image_id", "phash")
+    // two null hashes: a null hash pairs with nothing, not even another null
+    val df = Seq[(String, java.lang.Long)](("i-a", a), ("i-b", b), ("i-c", c),
+      ("i-n", null), ("i-m", null)).toDF("image_id", "phash")
     val got = Dedup.phashNearDupPairs(df, t = 3).collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
     assert(got === Set(("i-a", "i-b", 3L)))
-  }
-
-  test("phashNearDupPairs hot-band guard: an over-threshold band emits no candidates from it") {
-    // 40 hashes of shape (i+1)<<16: bands 0, 2, 3 are all-zero (df=42 with
-    // the planted pair, > bandMax=8 -> hot, no candidates) and band 1 keys
-    // are unique — so hot-group members whose ONLY shared bands are hot
-    // never pair, even those within Hamming t of each other: that
-    // suppression is exactly the guard's documented contract. The planted
-    // pair differs in 2 LOW bits and still meets through its rare bands
-    // (band 1 key 0, band 3 key 0x0123 — df=2 each).
-    val hot = (0 until 40).map(i => (f"h-$i%04d", (i.toLong + 1) << 16))
-    val pair = Seq(("p-a", 0x0123000000000000L), ("p-b", 0x0123000000000000L ^ 3L))
-    // p-a vs p-b: differ in low bits 0,1 -> distance 2
-    val df = spark.createDataFrame(hot ++ pair).toDF("image_id", "phash")
-    val out = Dedup.phashNearDupPairs(df, t = 3, bandMax = 8).collect()
-      .map(r => (r.getString(0), r.getString(1))).toSet
-    assert(out === Set(("p-a", "p-b")))
   }
 
   test("minhash LSH finds exactly the all-pairs near-duplicates at tau=0.5") {
@@ -338,8 +323,9 @@ class PipelineOpsSpec extends AnyFunSuite {
     val others = (300L until 320L)
       .map(i => (i, s"distinct document number $i with words w${i}a w${i}b w${i}c", "en"))
     val d = (cluster ++ others).toDF("doc_id", "text", "lang")
-    val (out, repCand) = Dedup.minhashLshPairsImpl(d, 16, 4, 1, 2)
-    val nCand = repCand.count()
+    val s = Dedup.minhashLshStages(d, 16, 4, 1, 2)
+    val nCand = s.cand.count()
+    val out = Caching.materializeAndRelease(s.pairs, s.shA)
     assert(nCand <= 210L, s"verify-side candidates must be rep-level, got $nCand")
     // the OUTPUT still contains every within-cluster pair, at jaccard 1
     val within = out.where(col("doc_a") < 300 && col("doc_b") < 300)
@@ -361,7 +347,8 @@ class PipelineOpsSpec extends AnyFunSuite {
     val full = Dedup.minhashLshPairs(d, 16, 4, 1, 2)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val compact = Dedup.minhashLshPairs(d, 16, 4, 1, 2, expandWithin = false)
+    val s = Dedup.minhashLshStages(d, 16, 4, 1, 2)
+    val compact = Caching.materializeAndRelease(s.compact, s.shA)
     val rows = compact.select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val textOf = (cluster ++ others).map(p => p._1 -> p._2).toMap
@@ -379,33 +366,6 @@ class PipelineOpsSpec extends AnyFunSuite {
         yield (math.min(a, b), math.max(a, b))
     }.toSet
     assert((within ++ crossRec) === full)
-    compact.unpersist(blocking = true)
-  }
-
-  test("phash expandWithin=false: dist=0 rows ARE the membership edges") {
-    val imgs = Images.table(spark, 240).toDF.select("image_id", "phash").cache()
-    val full = Dedup.phashNearDupPairs(imgs, 2)
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    val compact = Dedup.phashNearDupPairs(imgs, 2, expandWithin = false)
-    val rows = compact.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    // verified rep pairs sit between DISTINCT hashes (dist >= 1), so
-    // dist == 0 identifies membership rows unambiguously
-    val members = rows.filter(_._3 == 0L).map(r => (r._1, r._2)).toList
-    val clusterOf: Map[String, List[String]] =
-      (members.map(_._1) ++ members.map(_._2)).distinct
-        .map(id => id -> (id :: members.filter(_._1 == id).map(_._2))).toMap
-    // reconstruct the full all-pairs set from the compact form
-    val withinRec = members.groupBy(_._1).values.toList.flatMap { ms =>
-      val ids = (ms.head._1 :: ms.map(_._2)).sorted
-      for (a <- ids; b <- ids if a < b) yield (a, b, 0L)
-    }
-    val crossRec = rows.filter(_._3 > 0L).toList.flatMap { case (ra, rb, dd) =>
-      val ca = clusterOf.getOrElse(ra, List(ra))
-      val cb = clusterOf.getOrElse(rb, List(rb))
-      for (a <- ca; b <- cb)
-        yield if (a < b) (a, b, dd) else (b, a, dd)
-    }
-    assert((withinRec ++ crossRec).toSet === full.toSet)
     compact.unpersist(blocking = true)
   }
 

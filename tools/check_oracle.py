@@ -1,40 +1,70 @@
-import duckdb, json, glob, sys, os
-import pyarrow.parquet as pq
-sf = sys.argv[1] if len(sys.argv) > 1 else '/root/testdata/sf0.01'
-out = sys.argv[2] if len(sys.argv) > 2 else '/tmp/verify_out'
-con = duckdb.connect()
-for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
-    con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
-oracle = json.load(open(f'{out}/oracle_sql.json'))
-for name, sql in sorted(oracle.items()):
+"""Replay every oracle of a graft.Verify run in DuckDB and compare.
+
+    python3 tools/check_oracle.py <sfDir> <verifyOutDir>
+
+The local correctness gate: run graft.Verify first, then this script
+replays every oracle_sql.json entry in DuckDB over the sf tables and
+compares it with the Spark output (columns sorted by name, rows sorted,
+stringified values). It prints one verdict per query, then an `N/M OK`
+summary, and exits 1 unless every query is OK (2 on a usage error).
+"""
+import glob
+import json
+import sys
+
+import duckdb
+
+TABLES = ['region', 'nation', 'customer', 'supplier', 'part', 'orders',
+          'lineitem', 'events', 'documents', 'embeddings']
+
+
+def verdict(con, name, sql, out):
+    """(ok, message) for one query: its Spark output against its oracle."""
     files = glob.glob(f'{out}/{name}/*.parquet')
     if not files:
-        print(f'{name}: NO SPARK OUTPUT'); continue
+        return False, 'NO SPARK OUTPUT'
     try:
         got = con.execute(f"SELECT * FROM read_parquet('{files[0]}')").fetchdf()
         want = con.execute(sql).fetchdf()
     except Exception as e:
-        print(f'{name}: ORACLE ERROR {e}'); continue
+        return False, f'ORACLE ERROR {e}'
     # driver-style: sort columns by name, then compare value hashes
     got = got.reindex(sorted(got.columns), axis=1)
     want = want.reindex(sorted(want.columns), axis=1)
     if list(got.columns) != list(want.columns):
-        print(f'{name}: SCHEMA MISMATCH {list(got.columns)} vs {list(want.columns)}'); continue
+        return False, f'SCHEMA MISMATCH {list(got.columns)} vs {list(want.columns)}'
     if len(got) != len(want):
-        print(f'{name}: ROWCOUNT {len(got)} vs {len(want)}'); continue
+        return False, f'ROWCOUNT {len(got)} vs {len(want)}'
     g = got.sort_values(by=list(got.columns)).reset_index(drop=True)
     w = want.sort_values(by=list(want.columns)).reset_index(drop=True)
-    same = True
     for c in got.columns:
-        gv, wv = g[c], w[c]
-        if not (gv.astype(str).values == wv.astype(str).values).all():
-            bad = (gv.astype(str).values != wv.astype(str).values)
+        bad = g[c].astype(str).values != w[c].astype(str).values
+        if bad.any():
             i = bad.argmax()
-            print(f'{name}: VALUE MISMATCH col={c} row={i}: {gv.iloc[i]!r} vs {wv.iloc[i]!r}')
-            same = False; break
-    if same: print(f'{name}: OK ({len(got)} rows)')
+            return False, f'VALUE MISMATCH col={c} row={i}: {g[c].iloc[i]!r} vs {w[c].iloc[i]!r}'
+    return True, f'OK ({len(got)} rows)'
 
-# Usage: python3 tools/check_oracle.py [sfDir] [verifyOutDir]
-# Mirrors the driver's correctness gate locally: run graft.Verify first,
-# then this script replays every oracle_sql.json entry in DuckDB and
-# compares (columns sorted by name, rows sorted, stringified values).
+
+def main(argv):
+    if len(argv) != 3:
+        print(__doc__, file=sys.stderr)
+        return 2
+    sf, out = argv[1], argv[2]
+    con = duckdb.connect()
+    for t in TABLES:
+        # a missing table fails only the oracles that read it
+        if glob.glob(f'{sf}/{t}.parquet'):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
+    with open(f'{out}/oracle_sql.json') as f:
+        oracle = json.load(f)
+    n_ok = 0
+    for name, sql in sorted(oracle.items()):
+        ok, msg = verdict(con, name, sql, out)
+        n_ok += ok
+        print(f'{name}: {msg}')
+    print(f'{n_ok}/{len(oracle)} OK')
+    return 0 if n_ok == len(oracle) else 1
+
+
+if __name__ == '__main__':
+    sys.exit(main(sys.argv))
