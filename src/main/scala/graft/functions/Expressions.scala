@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGe
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 /** Column encodings shared by all graft geometry expressions:
   * {{{
@@ -36,15 +37,34 @@ object GeomEncoding {
       StructField("y", DoubleType, nullable = false),
       StructField("dist", DoubleType, nullable = false)))
 
+  /** One ring's vertices. An `UnsafeArrayData` (cached frames, local
+    * relations, rows between operators; not the column views a vectorized
+    * parquet scan hands to generated code) is read in place: element `i`
+    * is a 24-byte `UnsafeRow` of two doubles at the offset in its
+    * offset-and-size word, x at +8 and y at +16 past the one-word null
+    * bitset. Those are the bytes `getStruct(i, 2).getDouble(0|1)` reads,
+    * without the row object that call allocates per vertex (C1 has no
+    * escape analysis to remove it). Any other `ArrayData`, and a null or
+    * differently sized element (a wider point struct), goes through
+    * `getStruct`, so a null point still fails the decode.
+    */
   def ringFrom(ad: ArrayData): Ring = {
     val n = ad.numElements()
     val xs = new Array[Double](n)
     val ys = new Array[Double](n)
+    val u = ad match { case u: UnsafeArrayData => u; case _ => null }
     var i = 0
     while (i < n) {
-      val row = ad.getStruct(i, 2)
-      xs(i) = row.getDouble(0)
-      ys(i) = row.getDouble(1)
+      val offsetAndSize = if (u == null) 0L else u.getLong(i)
+      if (offsetAndSize.toInt == 24 && !u.isNullAt(i)) {
+        val at = u.getBaseOffset + (offsetAndSize >> 32)
+        xs(i) = Platform.getDouble(u.getBaseObject, at + 8)
+        ys(i) = Platform.getDouble(u.getBaseObject, at + 16)
+      } else {
+        val row = ad.getStruct(i, 2)
+        xs(i) = row.getDouble(0)
+        ys(i) = row.getDouble(1)
+      }
       i += 1
     }
     Ring.of(xs, ys)

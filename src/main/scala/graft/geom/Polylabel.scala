@@ -7,17 +7,25 @@ final case class LabelResult(x: Double, y: Double, dist: Double)
   * fixed-size blocks, one bounding box per block, so `signedDistance` can
   * pick the block nearest a probe, skip whole blocks in O(1) when they
   * cannot hold a nearer edge, and take the parity of a block lying wholly
-  * right of the probe from its two chain endpoints. Re-derivation of the
-  * reference's prepared-polygon structure (reference src/lib.rs:89-161).
+  * right of the probe from its two chain endpoints. The 32-edge blocks
+  * re-derive the reference's prepared-polygon structure (reference
+  * src/lib.rs:89-161).
   *
   * Block `b` holds edges `b*BlockSize until min((b+1)*BlockSize, nEdges)`;
   * its bbox spans their endpoints, vertices `start..end` inclusive. A block
   * holding a NaN coordinate gets an all-NaN bbox (a NaN vertex would
   * otherwise be invisible to the min/max), so every bound test on it is
   * false and the scan always visits its edges one by one.
+  *
+  * The second level is not the reference's: superblock `s` groups blocks
+  * `s*SuperSize until min((s+1)*SuperSize, nBlocks)` under one bbox, the
+  * union of theirs, all-NaN when any of them is, so the scan can skip or
+  * settle the parity of `SuperSize * BlockSize` edges with one box test.
+  * A ring of one superblock (at most `SuperSize * BlockSize` edges) keeps
+  * no superblock bbox, and the scan never tests one for it.
   */
 final class PreparedRing(ring: Ring) {
-  import Polylabel.BlockSize
+  import Polylabel.{BlockSize, SuperSize}
   val xs: Array[Double] = ring.xs
   val ys: Array[Double] = ring.ys
   val nEdges: Int = ring.nEdges
@@ -29,6 +37,12 @@ final class PreparedRing(ring: Ring) {
   val bMinY = new Array[Double](nBlocks)
   val bMaxX = new Array[Double](nBlocks)
   val bMaxY = new Array[Double](nBlocks)
+  val nSupers: Int = (nBlocks + SuperSize - 1) / SuperSize
+  private val superBoxes = if (nSupers > 1) nSupers else 0
+  val sMinX = new Array[Double](superBoxes)
+  val sMinY = new Array[Double](superBoxes)
+  val sMaxX = new Array[Double](superBoxes)
+  val sMaxY = new Array[Double](superBoxes)
   fillBoxes()
 
   // A method, not a constructor block: scalac's `locally` leaves a value
@@ -58,6 +72,25 @@ final class PreparedRing(ring: Ring) {
       if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
       bMinX(b) = minX; bMinY(b) = minY; bMaxX(b) = maxX; bMaxY(b) = maxY
       b += 1
+    }
+    var s = 0
+    while (s < superBoxes) {
+      var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
+      var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
+      var nan = false
+      b = s * SuperSize
+      val end = math.min(b + SuperSize, nBlocks)
+      while (b < end) {
+        if (bMinX(b) < minX) minX = bMinX(b)
+        if (bMaxX(b) > maxX) maxX = bMaxX(b)
+        if (bMinY(b) < minY) minY = bMinY(b)
+        if (bMaxY(b) > maxY) maxY = bMaxY(b)
+        if (bMinX(b) != bMinX(b)) nan = true
+        b += 1
+      }
+      if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
+      sMinX(s) = minX; sMinY(s) = minY; sMaxX(s) = maxX; sMaxY(s) = maxY
+      s += 1
     }
   }
 }
@@ -235,6 +268,20 @@ object Polylabel {
   /** Edges per skip-block (reference BLOCK_SIZE, src/lib.rs:90). */
   final val BlockSize = 32
 
+  /** Blocks per superblock, the second bbox level of [[PreparedRing]]
+    * (ours, not the reference's): 8 blocks = 256 edges. Counted inside
+    * `polylabel` on seed-1 `label_skewed` polygons, box tests per
+    * `signedDistance` probe (edge-scanned blocks per probe), one level
+    * against superblocks of 4 / 8 / 16 blocks: Norway (277 blocks) 554
+    * (1.54) against 150 (2.32) / 89 (2.35) / 70 (1.75); the 512-vertex
+    * stars (16 blocks) 32 against 19.6 / 22.1 / 32. Per call under C1
+    * (medians of 5 alternating JVMs, 4-core box): Norway 0.77 ms against
+    * 0.34 / 0.30 / 0.30 ms, the 512-vertex stars 129 us against 88 / 87 /
+    * 118 us. 16 gives Norway nothing more and merges the stars' two
+    * superblocks into one; 4 tests twice the superblocks.
+    */
+  final val SuperSize = 8
+
   private val Sqrt2 = math.sqrt(2.0)
 
   def prepare(p: PolygonG): Array[PreparedRing] = p.rings.map(new PreparedRing(_))
@@ -246,58 +293,31 @@ object Polylabel {
     */
   private[geom] final val ParityEps = 1e-12
 
-  /** Signed distance from (px,py) to the polygon outline: positive inside,
-    * negative outside. One pass over all rings accumulates both the even-odd
-    * ray-cast parity and the minimum point-to-edge distance.
-    * Arithmetic mirrors /root/reference/src/lib.rs:163-233 for f64 parity.
-    *
-    * Visit order. When the polygon has more than one block, one pass over
-    * the block bboxes first picks the seed block: the first one with the
-    * smallest point-to-bbox squared lower bound. The scan then visits every
-    * block once in ring order (exterior, then holes), starting at the seed
-    * and wrapping around. The seed sets a near-final minimum at once, so
-    * almost every later block fails the bound and is skipped. Single-block
-    * polygons skip the seed pass.
-    *
-    * Per block, in that order:
-    *  - distance: the block's edges can hold a nearer edge only while the
-    *    point-to-bbox squared distance is below `minSq`;
-    *  - parity: edges can flip parity only if the bbox straddles the ray
-    *    (`bminY <= py < bmaxY`) and reaches right of `px`;
-    *  - endpoint parity: a straddling block lying wholly right of `px` by
-    *    the guard below flips `inside` iff `(ys(start) > py) != (ys(end) > py)`,
-    *    the telescoped XOR of its per-edge half-open tests, and is then
-    *    scanned only if the distance bound still needs it.
-    *
-    * Why the shortcut is exact. Edge i flips parity iff its half-open test
-    * holds and `px < xc`, xc = fl(fl(fl(fl(bx-ax)*fl(py-ay))/fl(by-ay)) + ax).
-    * So it suffices that every crossing edge of the block has xc > px. With
-    * ex = fl(bx-ax): if ex >= 0 the quotient is >= 0 (rounding is
-    * monotone and `py-ay`, `by-ay` share a sign), so xc >= ax >= bminX. If
-    * ex < 0, |fl(py-ay)| <= |fl(by-ay)| bounds the quotient by |ex|(1+u)^2,
-    * so xc >= bminX - 3.01u(W + M), W = bmaxX - bminX, M = max |bbox x|.
-    * The guard is therefore
-    * {{{
-    *   px < bminX - (ParityEps * (|bminX| + |bmaxX| + W) + 2^-1020 / min(|py|, 1))
-    *   and W * (bmaxY - bminY) < +Inf
-    * }}}
-    * The second term covers an underflowing product fl(bx-ax)*fl(py-ay):
-    * its absolute error 2^-1075, divided by |by-ay| >= 2^-53 |py|, stays
-    * below 2^-1022 / |py|. The finite-area test rules out overflow, since
-    * |fl(bx-ax)| <= W and |fl(py-ay)| <= |fl(by-ay)| <= bmaxY - bminY.
-    * The comparison is false on NaN or infinite bboxes (and for py = 0),
-    * so those blocks fall through to the per-edge test.
-    *
-    * Why the result is bit-identical to calling Geom.segmentDistance and
-    * Geom.pointInPolygon edge by edge. The distance is the minimum over
-    * each edge's exact per-edge value, and every gate below (the block
-    * bound, the squared-distance gate) admits every edge that could still
-    * lower the current minimum, so the order of visits cannot change it.
-    * Parity is an XOR of per-edge flips, so it cannot change either.
+  /** Whether every edge of a chain whose vertices all lie in the box
+    * (minX, minY, maxX, maxY) that straddles `py` passes the per-edge
+    * crossing test at `px`, so the chain's parity is the XOR of its two end
+    * vertices' `y > py` (the guard derived in [[signedDistance]]). False on
+    * a NaN or infinite box.
     */
-  def signedDistance(px: Double, py: Double, rings: Array[PreparedRing]): Double = {
+  private def whollyRight(px: Double, py: Double, minX: Double, minY: Double,
+                          maxX: Double, maxY: Double): Boolean = {
+    val w = maxX - minX
+    w * (maxY - minY) < Double.PositiveInfinity &&
+      px < minX - (ParityEps * (math.abs(minX) + math.abs(maxX) + w) +
+        4.0 * java.lang.Double.MIN_NORMAL / math.min(math.abs(py), 1.0))
+  }
+
+  /** The edges `start until end` of a ring's vertex arrays, on top of a
+    * minimum distance so far: the new minimum over their distances when
+    * `nearer`, the old one otherwise, negated (sign bit set, so -0.0 for 0)
+    * when `parity` and an odd number of them flip the ray-cast parity.
+    * Distances are >= +0, so the sign bit carries nothing else.
+    */
+  private def scanEdges(xs: Array[Double], ys: Array[Double], start: Int, end: Int,
+                        px: Double, py: Double, minDistance0: Double,
+                        parity: Boolean, nearer: Boolean): Double = {
     var inside = false
-    var minDistance = Double.PositiveInfinity
+    var minDistance = minDistance0
     // fl(minDistance * minDistance), maintained alongside. The edge scan
     // works on SQUARED distances and takes the (expensive, serial-port)
     // sqrt/div only for edges that can still beat the minimum: IEEE-754
@@ -306,133 +326,270 @@ object Polylabel {
     // per-edge result (and hence the final value) is BIT-IDENTICAL to
     // calling Geom.segmentDistance on every edge, ~nEdges sqrt+div ops
     // cheaper per probe.
+    var minSq = minDistance * minDistance
+    var i = start
+    while (i < end) {
+      val ax = xs(i); val ay = ys(i)
+      val bx = xs(i + 1); val by = ys(i + 1)
+      if (parity &&
+          ((ay > py) != (by > py)) &&
+          (px < (bx - ax) * (py - ay) / (by - ay) + ax)) {
+        inside = !inside
+      }
+      if (nearer) {
+        // Geom.segmentDistance inlined with squared-distance gating;
+        // every arithmetic expression that can win keeps its exact
+        // original shape (same ops, same order)
+        // ux/uy = px-ax / py-ay reused across dot, cross, and the
+        // endpoint-a norm: IEEE negation and sign-symmetric multiply
+        // keep every reused expression bit-equal to the originals
+        val ex = bx - ax; val ey = by - ay
+        val ux = px - ax; val uy = py - ay
+        if (ex == 0.0 && ey == 0.0) {
+          val q = ux * ux + uy * uy
+          if (q < minSq) {
+            val d = math.sqrt(q)
+            if (d < minDistance) { minDistance = d; minSq = d * d }
+          }
+        } else {
+          val d2 = ex * ex + ey * ey
+          val dot = ux * ex + uy * ey
+          // branch tests dot<=0 / dot>=d2 — the SAME classification
+          // Geom.segmentDistance uses, so kernel and per-edge
+          // surfaces agree bit-for-bit (property-checked); avoiding
+          // the division here is the measured round-2 kernel win
+          if (dot <= 0.0) {
+            val q = ux * ux + uy * uy
+            if (q < minSq) {
+              val d = math.sqrt(q)
+              if (d < minDistance) { minDistance = d; minSq = d * d }
+            }
+          } else if (dot >= d2) {
+            val vx = bx - px; val vy = by - py
+            val q = vx * vx + vy * vy
+            if (q < minSq) {
+              val d = math.sqrt(q)
+              if (d < minDistance) { minDistance = d; minSq = d * d }
+            }
+          } else {
+            // == fl((ay-py)*ex) - fl((ax-px)*ey) by sign symmetry
+            val cross = ux * ey - uy * ex
+            // (|cross|/d2*sqrt(d2))^2 == cross^2/d2 up to a few ulp;
+            // the 1e-9 relative slack over-admits candidates, never
+            // rejects a true winner. cross^2 can overflow to +Inf
+            // for ~1e160-scale coordinates while cross/d2 is still
+            // finite — an overflowed gate must ADMIT (compute the
+            // exact distance), not skip the edge.
+            val cc = cross * cross
+            if (cc < minSq * d2 * 1.000000001 || cc == Double.PositiveInfinity) {
+              val s = cross / d2
+              val d = math.abs(s) * math.sqrt(d2)
+              if (d < minDistance) { minDistance = d; minSq = d * d }
+            }
+          }
+        }
+      }
+      i += 1
+    }
+    if (inside) -minDistance else minDistance
+  }
+
+  /** Signed distance from (px,py) to the polygon outline: positive inside,
+    * negative outside. One pass over all rings accumulates both the even-odd
+    * ray-cast parity and the minimum point-to-edge distance.
+    * Arithmetic mirrors /root/reference/src/lib.rs:163-233 for f64 parity.
+    *
+    * Visit order. When the polygon has more than one block, one pass first
+    * picks the seed: the first box, in ring order, with the smallest
+    * point-to-bbox squared lower bound, among the superblocks of
+    * multi-superblock rings and the blocks of one-superblock rings. A seed
+    * superblock is then narrowed to its nearest block. The scan visits
+    * every superblock once in ring order (exterior, then holes), starting
+    * at the seed's and wrapping around; the seed superblock's blocks are
+    * visited from the seed block on, wrapping within it. The seed sets a
+    * near-final minimum at once, so almost every later superblock or block
+    * fails the bound and is skipped. A single-block polygon's edges are
+    * scanned at once, and a ring of one superblock goes straight to its
+    * blocks.
+    *
+    * Per superblock of a multi-superblock ring, then per block, in that
+    * order:
+    *  - distance: the box's edges can hold a nearer edge only while the
+    *    point-to-bbox squared distance is below `minSq`;
+    *  - parity: edges can flip parity only if the bbox straddles the ray
+    *    (`minY <= py < maxY`) and reaches right of `px`;
+    *  - endpoint parity: a straddling box lying wholly right of `px` by
+    *    the guard below flips `inside` iff `(ys(start) > py) != (ys(end) > py)`
+    *    for its chain's first and last vertices, the telescoped XOR of its
+    *    per-edge half-open tests.
+    * A superblock that fails the distance bound and cannot flip parity or
+    * settled it by its endpoints is skipped whole. Otherwise its blocks
+    * take the per-block steps, with parity already done when the
+    * superblock settled it, so each edge's flip is counted exactly once:
+    * by its superblock, by its block, or by the edge test.
+    *
+    * Why the shortcut is exact. Edge i flips parity iff its half-open test
+    * holds and `px < xc`, xc = fl(fl(fl(fl(bx-ax)*fl(py-ay))/fl(by-ay)) + ax).
+    * So it suffices that every crossing edge of the chain has xc > px. With
+    * ex = fl(bx-ax): if ex >= 0 the quotient is >= 0 (rounding is
+    * monotone and `py-ay`, `by-ay` share a sign), so xc >= ax >= minX. If
+    * ex < 0, |fl(py-ay)| <= |fl(by-ay)| bounds the quotient by |ex|(1+u)^2,
+    * so xc >= minX - 3.01u(W + M), W = maxX - minX, M = max |box x|.
+    * The guard is therefore
+    * {{{
+    *   px < minX - (ParityEps * (|minX| + |maxX| + W) + 2^-1020 / min(|py|, 1))
+    *   and W * (maxY - minY) < +Inf
+    * }}}
+    * The second term covers an underflowing product fl(bx-ax)*fl(py-ay):
+    * its absolute error 2^-1075, divided by |by-ay| >= 2^-53 |py|, stays
+    * below 2^-1022 / |py|. The finite-area test rules out overflow, since
+    * |fl(bx-ax)| <= W and |fl(py-ay)| <= |fl(by-ay)| <= maxY - minY.
+    * The derivation uses only the box's W, M and y-extent, so it holds for
+    * any contiguous chain whose vertices lie in the box: a block's 32 edges
+    * or a superblock's 256. The comparison is false on NaN or infinite
+    * boxes (and for py = 0), so those fall through to the next level down.
+    *
+    * Why the result is bit-identical to calling Geom.segmentDistance and
+    * Geom.pointInPolygon edge by edge. The distance is the minimum over
+    * each edge's exact per-edge value, and every gate below (the superblock
+    * and block bounds, the squared-distance gate) admits every edge that
+    * could still lower the current minimum, so the order of visits cannot
+    * change it. A superblock's box contains its blocks' boxes and rounding
+    * is monotone, so its bound never exceeds theirs. Parity is an XOR of
+    * per-edge flips, so it cannot change either.
+    */
+  def signedDistance(px: Double, py: Double, rings: Array[PreparedRing]): Double = {
+    // a lone block: no bound can skip it, so its edges are scanned at once
+    // (scanEdges' sign bit is set inside, the opposite of this result's)
+    if (rings.length == 1 && rings(0).nBlocks == 1) {
+      val r = rings(0)
+      return -scanEdges(r.xs, r.ys, 0, r.nEdges, px, py, Double.PositiveInfinity, true, true)
+    }
+    var inside = false
+    var minDistance = Double.PositiveInfinity
+    // fl(minDistance * minDistance), the bound the boxes are tested against
     var minSq = Double.PositiveInfinity
 
-    // the seed block and the block count; a lone block needs no seed pass
+    // the seed block and the superblock count; a lone empty ring needs no
+    // seed pass. seedSuper >= 0 while the nearest box is a superblock, not
+    // yet narrowed to a block
     var seedRing = 0; var seedBlock = 0
     var left = if (rings.length == 1) rings(0).nBlocks else 0
     if (rings.length > 1 || left > 1) {
       left = 0
       var best = Double.PositiveInfinity
+      var seedSuper = -1
       var ri = 0
       while (ri < rings.length) {
         val r = rings(ri)
-        var b = 0
-        while (b < r.nBlocks) {
+        if (r.nSupers > 1) {
+          var sb = 0
+          while (sb < r.nSupers) {
+            val sminX = r.sMinX(sb); val sminY = r.sMinY(sb)
+            val smaxX = r.sMaxX(sb); val smaxY = r.sMaxY(sb)
+            val dx = if (px < sminX) sminX - px else if (px > smaxX) px - smaxX else 0.0
+            val dy = if (py < sminY) sminY - py else if (py > smaxY) py - smaxY else 0.0
+            val lb = dx * dx + dy * dy
+            if (lb < best) { best = lb; seedRing = ri; seedSuper = sb }
+            sb += 1
+          }
+        } else {
+          var b = 0
+          while (b < r.nBlocks) {
+            val bminX = r.bMinX(b); val bminY = r.bMinY(b)
+            val bmaxX = r.bMaxX(b); val bmaxY = r.bMaxY(b)
+            val dx = if (px < bminX) bminX - px else if (px > bmaxX) px - bmaxX else 0.0
+            val dy = if (py < bminY) bminY - py else if (py > bmaxY) py - bmaxY else 0.0
+            val lb = dx * dx + dy * dy
+            if (lb < best) { best = lb; seedRing = ri; seedBlock = b; seedSuper = -1 }
+            b += 1
+          }
+        }
+        left += r.nSupers
+        ri += 1
+      }
+      if (seedSuper >= 0) {
+        val r = rings(seedRing)
+        best = Double.PositiveInfinity
+        var b = seedSuper * SuperSize
+        val end = math.min(b + SuperSize, r.nBlocks)
+        while (b < end) {
           val bminX = r.bMinX(b); val bminY = r.bMinY(b)
           val bmaxX = r.bMaxX(b); val bmaxY = r.bMaxY(b)
           val dx = if (px < bminX) bminX - px else if (px > bmaxX) px - bmaxX else 0.0
           val dy = if (py < bminY) bminY - py else if (py > bmaxY) py - bmaxY else 0.0
           val lb = dx * dx + dy * dy
-          if (lb < best) { best = lb; seedRing = ri; seedBlock = b }
+          if (lb < best) { best = lb; seedBlock = b }
           b += 1
         }
-        left += r.nBlocks
-        ri += 1
       }
     }
 
-    // every block once, in ring order from the seed, wrapping around
+    // every superblock once, in ring order from the seed's, wrapping
+    // around; `first` is the block its visit starts at
     var ri = seedRing
-    var b = seedBlock
+    var sb = seedBlock / SuperSize
+    var first = seedBlock
     while (left > 0) {
       val r = rings(ri)
-      while (b < r.nBlocks && left > 0) {
-        val start = b * BlockSize
-        val end = math.min(start + BlockSize, r.nEdges)
-        val bminX = r.bMinX(b); val bminY = r.bMinY(b)
-        val bmaxX = r.bMaxX(b); val bmaxY = r.bMaxY(b)
-        val xs = r.xs; val ys = r.ys
+      val ys = r.ys
+      while (sb < r.nSupers && left > 0) {
+        val b0 = sb * SuperSize
+        val b1 = math.min(b0 + SuperSize, r.nBlocks)
+        // parity of the whole superblock settled, or no edge of it can flip
+        var superCross = false
+        var visit = true
+        if (r.nSupers > 1) {
+          val sminX = r.sMinX(sb); val sminY = r.sMinY(sb)
+          val smaxX = r.sMaxX(sb); val smaxY = r.sMaxY(sb)
+          val dx = if (px < sminX) sminX - px else if (px > smaxX) px - smaxX else 0.0
+          val dy = if (py < sminY) sminY - py else if (py > smaxY) py - smaxY else 0.0
+          superCross = py < sminY || py >= smaxY || px > smaxX
+          if (!superCross && px < sminX && whollyRight(px, py, sminX, sminY, smaxX, smaxY)) {
+            if ((ys(b0 * BlockSize) > py) != (ys(math.min(b1 * BlockSize, r.nEdges)) > py))
+              inside = !inside
+            superCross = true
+          }
+          visit = !(superCross && dx * dx + dy * dy >= minSq)
+        }
+        var b = first
+        var n = if (visit) b1 - b0 else 0
+        while (n > 0) {
+          val start = b * BlockSize
+          val end = math.min(start + BlockSize, r.nEdges)
+          val bminX = r.bMinX(b); val bminY = r.bMinY(b)
+          val bmaxX = r.bMaxX(b); val bmaxY = r.bMaxY(b)
 
-        // lower bound on the distance to any edge in this block
-        val dx = if (px < bminX) bminX - px else if (px > bmaxX) px - bmaxX else 0.0
-        val dy = if (py < bminY) bminY - py else if (py > bmaxY) py - bmaxY else 0.0
-        val skipDist = dx * dx + dy * dy >= minSq
+          // lower bound on the distance to any edge in this block
+          val dx = if (px < bminX) bminX - px else if (px > bmaxX) px - bmaxX else 0.0
+          val dy = if (py < bminY) bminY - py else if (py > bmaxY) py - bmaxY else 0.0
+          val skipDist = dx * dx + dy * dy >= minSq
 
-        // edges here can only flip parity if the bbox straddles y and
-        // extends right of x
-        var skipCross = py < bminY || py >= bmaxY || px > bmaxX
-        if (!skipCross && px < bminX) {
-          val w = bmaxX - bminX
-          if (w * (bmaxY - bminY) < Double.PositiveInfinity &&
-              px < bminX - (ParityEps * (math.abs(bminX) + math.abs(bmaxX) + w) +
-                4.0 * java.lang.Double.MIN_NORMAL / math.min(math.abs(py), 1.0))) {
+          // edges here can only flip parity if the bbox straddles y and
+          // extends right of x
+          var skipCross = superCross || py < bminY || py >= bmaxY || px > bmaxX
+          if (!skipCross && px < bminX && whollyRight(px, py, bminX, bminY, bmaxX, bmaxY)) {
             if ((ys(start) > py) != (ys(end) > py)) inside = !inside
             skipCross = true
           }
-        }
 
-        if (!(skipDist && skipCross)) {
-          var i = start
-          while (i < end) {
-            val ax = xs(i); val ay = ys(i)
-            val bx = xs(i + 1); val by = ys(i + 1)
-            if (!skipCross &&
-                ((ay > py) != (by > py)) &&
-                (px < (bx - ax) * (py - ay) / (by - ay) + ax)) {
-              inside = !inside
-            }
-            if (!skipDist) {
-              // Geom.segmentDistance inlined with squared-distance gating;
-              // every arithmetic expression that can win keeps its exact
-              // original shape (same ops, same order)
-              // ux/uy = px-ax / py-ay reused across dot, cross, and the
-              // endpoint-a norm: IEEE negation and sign-symmetric multiply
-              // keep every reused expression bit-equal to the originals
-              val ex = bx - ax; val ey = by - ay
-              val ux = px - ax; val uy = py - ay
-              if (ex == 0.0 && ey == 0.0) {
-                val q = ux * ux + uy * uy
-                if (q < minSq) {
-                  val d = math.sqrt(q)
-                  if (d < minDistance) { minDistance = d; minSq = d * d }
-                }
-              } else {
-                val d2 = ex * ex + ey * ey
-                val dot = ux * ex + uy * ey
-                // branch tests dot<=0 / dot>=d2 — the SAME classification
-                // Geom.segmentDistance uses, so kernel and per-edge
-                // surfaces agree bit-for-bit (property-checked); avoiding
-                // the division here is the measured round-2 kernel win
-                if (dot <= 0.0) {
-                  val q = ux * ux + uy * uy
-                  if (q < minSq) {
-                    val d = math.sqrt(q)
-                    if (d < minDistance) { minDistance = d; minSq = d * d }
-                  }
-                } else if (dot >= d2) {
-                  val vx = bx - px; val vy = by - py
-                  val q = vx * vx + vy * vy
-                  if (q < minSq) {
-                    val d = math.sqrt(q)
-                    if (d < minDistance) { minDistance = d; minSq = d * d }
-                  }
-                } else {
-                  // == fl((ay-py)*ex) - fl((ax-px)*ey) by sign symmetry
-                  val cross = ux * ey - uy * ex
-                  // (|cross|/d2*sqrt(d2))^2 == cross^2/d2 up to a few ulp;
-                  // the 1e-9 relative slack over-admits candidates, never
-                  // rejects a true winner. cross^2 can overflow to +Inf
-                  // for ~1e160-scale coordinates while cross/d2 is still
-                  // finite — an overflowed gate must ADMIT (compute the
-                  // exact distance), not skip the edge.
-                  val cc = cross * cross
-                  if (cc < minSq * d2 * 1.000000001 || cc == Double.PositiveInfinity) {
-                    val s = cross / d2
-                    val d = math.abs(s) * math.sqrt(d2)
-                    if (d < minDistance) { minDistance = d; minSq = d * d }
-                  }
-                }
-              }
-            }
-            i += 1
+          if (!(skipDist && skipCross)) {
+            val m = scanEdges(r.xs, ys, start, end, px, py, minDistance, !skipCross, !skipDist)
+            if (java.lang.Double.doubleToRawLongBits(m) < 0L) { inside = !inside; minDistance = -m }
+            else minDistance = m
+            minSq = minDistance * minDistance
           }
+          b += 1
+          if (b == b1) b = b0
+          n -= 1
         }
-        b += 1
+        sb += 1
         left -= 1
+        first = sb * SuperSize
       }
       ri = if (ri + 1 == rings.length) 0 else ri + 1
-      b = 0
+      sb = 0
+      first = 0
     }
     if (inside) minDistance else -minDistance
   }

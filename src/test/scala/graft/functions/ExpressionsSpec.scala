@@ -2,10 +2,30 @@ package graft.functions
 
 import graft.TestSpark
 import graft.geom._
-import graft.sources.GeoTables
+import graft.sources.{GeoTables, PolyRow, PtRow}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.{DataType, StringType}
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
+
+/** Test probe: `<path>:<class>` of the array its child evaluates to, where
+  * path is `codegen` or `eval`. It sits beside a polygon expression on the
+  * same child, so it sees the `ArrayData` that `GeomEncoding.ringFrom` gets.
+  */
+case class ArrayClassProbe(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override protected def nullSafeEval(a: Any): Any =
+    UTF8String.fromString("eval:" + a.getClass.getSimpleName)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c =>
+      s"""org.apache.spark.unsafe.types.UTF8String.fromString("codegen:" + $c.getClass().getSimpleName())""")
+  override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
+}
 
 /** The SQL/DataFrame surface of the kernel: results through Catalyst must
   * equal the pure-Scala kernel bit-for-bit.
@@ -136,5 +156,152 @@ class ExpressionsSpec extends AnyFunSuite {
       assert(!spark.range(1).selectExpr(call.format(ell("CAST(id AS DOUBLE)"), "NULL") + " AS r")
         .collect().head.isNullAt(0), call)
     } finally orig.fold(spark.conf.unset(fallback))(spark.conf.set(fallback, _))
+  }
+
+  // ---- ring decode: UnsafeArrayData read in place vs the per-element path
+
+  private val codegenConf = Seq("spark.sql.codegen.wholeStage" -> "true",
+    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
+  private val interpretedConf = Seq("spark.sql.codegen.wholeStage" -> "false",
+    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+
+  private def withConf[T](kv: Seq[(String, String)])(f: => T): T = {
+    val orig = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try f
+    finally orig.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+  }
+
+  private def polyRow(name: String, p: PolygonG, tol: Double): PolyRow = {
+    def pts(r: Ring) = r.xs.indices.map(i => PtRow(r.xs(i), r.ys(i)))
+    PolyRow(name, pts(p.exterior), p.holes.toSeq.map(pts), tol)
+  }
+
+  /** The fixtures (Norway's 8,854-vertex ring among them) and a 600-vertex
+    * star with a 300-vertex star hole: rings of one block up to 35
+    * superblocks.
+    */
+  private lazy val decodeRows: Seq[PolyRow] = {
+    val ext = GeoTables.syntheticPolygon(1L, 5.0, 50.0, 1.0, 600).exterior
+    val hole = GeoTables.syntheticPolygon(2L, 5.0, 50.0, 0.3, 300).exterior
+    val star = new PolygonG(ext, Array(Ring.of(hole.xs.reverse, hole.ys.reverse)))
+    Fixtures.all.map { case (n, p, t) => polyRow(n, p, t) } :+ polyRow("star600_hole300", star, 0.001)
+  }
+
+  /** The four polygon expressions on the (E)xterior and (H)oles arguments,
+    * probed at a vertex, a point between two vertices and a vertex moved by
+    * 1e-9 in y (read from the stored exterior).
+    */
+  private val decodeCalls = {
+    val probes = Seq(
+      ("exterior[0].x", "exterior[0].y"),
+      ("(exterior[0].x + exterior[size(exterior) DIV 2].x) / 2",
+        "(exterior[0].y + exterior[size(exterior) DIV 2].y) / 2"),
+      ("exterior[1].x", "exterior[1].y + 1e-9"))
+    Seq("polylabel(%E, %H, tolerance)", "polygon_cover(%E, %H, 6)") ++
+      probes.flatMap { case (x, y) => Seq(s"signed_dist($x, $y, %E, %H)", s"pip($x, $y, %E, %H)") }
+  }
+
+  /** `exterior`/`holes` rebuilt by `transform` inside the same projection:
+    * `GenericArrayData` of `GenericInternalRow` points (a null point stays
+    * null).
+    */
+  private val rebuiltExterior = "transform(exterior, p -> IF(p IS NULL, NULL, named_struct('x', p.x, 'y', p.y)))"
+  private val rebuiltHoles =
+    "transform(holes, r -> transform(r, p -> IF(p IS NULL, NULL, named_struct('x', p.x, 'y', p.y))))"
+
+  /** poly_id -> (decode probe, bit patterns of every call's result). */
+  private def decodeResults(df: DataFrame, rebuilt: Boolean): Map[String, (String, Seq[Any])] = {
+    val (e, h) = if (rebuilt) (rebuiltExterior, rebuiltHoles) else ("exterior", "holes")
+    val cols = col("poly_id") +: ColumnBridge.column(ArrayClassProbe(ColumnBridge.expression(expr(e)))) +:
+      decodeCalls.map(c => expr(c.replace("%E", e).replace("%H", h)))
+    def bits(v: Any): Any = v match {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d)
+      case r: Row => r.toSeq.map(bits)
+      case s: scala.collection.Seq[_] => s.map(bits)
+      case o => o
+    }
+    df.select(cols: _*).collect().map(r =>
+      r.getString(0) -> (r.getString(1), r.toSeq.drop(2).map(bits))).toMap
+  }
+
+  /** The polygon frame as read from a cache and from parquet, each with the
+    * `ArrayData` class its rings reach the polygon expressions as, by mode:
+    * the cache's rows are unsafe rows, and so are parquet's interpreted
+    * rows, but whole-stage codegen reads the vectorized parquet reader's
+    * column vectors in place, as views that take the per-element decode.
+    */
+  private def storedFrames(df: DataFrame, name: String)(
+      f: Seq[(String, DataFrame, String => String)] => Unit): Unit = {
+    val dir = java.nio.file.Files.createTempDirectory(name).toString
+    df.write.mode("overwrite").parquet(dir)
+    val cached = df.cache()
+    cached.count()
+    try f(Seq(("cached", cached, _ => "UnsafeArrayData"),
+      ("parquet", spark.read.parquet(dir), m => if (m == "codegen") "ColumnarArray" else "UnsafeArrayData")))
+    finally cached.unpersist()
+  }
+
+  test("cached (UnsafeArrayData) and parquet-read rings decode bit-identically to rings built in-query (codegen and interpreted)") {
+    val base = decodeRows.toDF()
+    // points with a third field: the decode reads x and y as it does for two
+    val wide = base.selectExpr("poly_id",
+      "transform(exterior, p -> named_struct('x', p.x, 'y', p.y, 'z', -1D)) AS exterior",
+      "transform(holes, r -> transform(r, p -> named_struct('x', p.x, 'y', p.y, 'z', -1D))) AS holes",
+      "tolerance")
+    for ((mode, conf) <- Seq("codegen" -> codegenConf, "eval" -> interpretedConf)) {
+      val want = withConf(conf)(decodeResults(base.cache(), rebuilt = true))
+      assert(want.size === decodeRows.size)
+      assert(want.values.map(_._1).toSet === Set(s"$mode:GenericArrayData"), mode)
+      // the kernel itself, on the same polygons
+      for (r <- decodeRows) {
+        val k = Polylabel.polylabel(GeoTables.toPolygon(r), r.tolerance)
+        assert(want(r.poly_id)._2.head === Seq(k.x, k.y, k.dist).map(java.lang.Double.doubleToRawLongBits),
+          s"$mode ${r.poly_id}")
+      }
+      for ((shape, df) <- Seq("two-field" -> base, "three-field" -> wide))
+        storedFrames(df, s"decode_$shape") { frames =>
+          for ((source, stored, arrayClass) <- frames) {
+            val what = s"$mode, $shape points, $source"
+            val got = withConf(conf)(decodeResults(stored, rebuilt = false))
+            assert(got.values.map(_._1).toSet === Set(s"$mode:${arrayClass(mode)}"), what)
+            for (r <- decodeRows)
+              assert(got(r.poly_id)._2 === want(r.poly_id)._2, s"$what: ${r.poly_id}")
+            val rebuilt = withConf(conf)(decodeResults(stored, rebuilt = true))
+            assert(rebuilt.values.map(_._1).toSet === Set(s"$mode:GenericArrayData"), what)
+            for (r <- decodeRows)
+              assert(rebuilt(r.poly_id)._2 === want(r.poly_id)._2, s"$what, rebuilt: ${r.poly_id}")
+          }
+        }
+    }
+    base.unpersist()
+  }
+
+  test("a null point keeps the NaN sentinel and SQL null on stored and in-query rings (codegen and interpreted)") {
+    // the `ell` fixture with its third point null, and a null point in a hole
+    val ell = "array(named_struct('x', 0D, 'y', 0D), named_struct('x', 4D, 'y', 0D), " +
+      "CAST(NULL AS struct<x: double, y: double>), named_struct('x', 1D, 'y', 1D), " +
+      "named_struct('x', 1D, 'y', 4D), named_struct('x', 0D, 'y', 4D))"
+    val sq = "array(named_struct('x', 0D, 'y', 0D), named_struct('x', 9D, 'y', 0D), " +
+      "named_struct('x', 9D, 'y', 9D), named_struct('x', 0D, 'y', 9D))"
+    val hole = "array(named_struct('x', 4D, 'y', 4D), CAST(NULL AS struct<x: double, y: double>), " +
+      "named_struct('x', 5D, 'y', 5D))"
+    val df = spark.range(2).selectExpr("CAST(id AS STRING) AS poly_id",
+      s"IF(id = 0, $ell, $sq) AS exterior", s"IF(id = 0, array(), array($hole)) AS holes",
+      "0.1D AS tolerance")
+    storedFrames(df, "decode_null_point") { frames =>
+      for ((mode, conf) <- Seq("codegen" -> codegenConf, "eval" -> interpretedConf);
+           (source, stored, arrayClass) <- frames; rebuilt <- Seq(false, true)) {
+        val what = s"$mode, $source, ${if (rebuilt) "in-query" else "stored"}"
+        val got = withConf(conf)(decodeResults(stored, rebuilt))
+        val nan = java.lang.Double.doubleToRawLongBits(Double.NaN)
+        for (id <- Seq("0", "1")) {
+          val (cls, values) = got(id)
+          assert(cls === s"$mode:${if (rebuilt) "GenericArrayData" else arrayClass(mode)}", what)
+          assert(values.head === Seq(nan, nan, nan), s"$what: polylabel of $id")
+          assert(values.tail.forall(_ == null), s"$what: $id gave $values")
+        }
+      }
+    }
   }
 }

@@ -245,6 +245,106 @@ class PolylabelSpec extends AnyFunSuite {
     }
   }
 
+  test("kernel signedDistance == per-edge oracle across superblocks, bit-exact") {
+    // superblock skips, superblock endpoint parity and the superblock seed
+    // must not change a bit. Exteriors of 600-5,000 vertices (3-20
+    // superblocks) with 1-2 holes of 300-1,200 vertices (2-5 superblocks),
+    // every third seed with a NaN vertex; probes at superblock boundary
+    // vertex ys, on both sides of a superblock's bbox minX and guard, and
+    // inside the holes, where the seed superblock is a hole's.
+    val superEdges = Polylabel.SuperSize * Polylabel.BlockSize
+    var holeSeeds = 0
+    for (seed <- 1 to 24) {
+      val rnd = new scala.util.Random(1000 + seed)
+      val scale = math.pow(10.0, -6.0 + rnd.nextDouble() * 156.0)
+      val offset = (if (rnd.nextBoolean()) 1.0 else -1.0) *
+        math.pow(10.0, -6.0 + rnd.nextDouble() * (math.log10(math.min(1e150, scale * 1e6)) + 6.0))
+      def star(n: Int, cx: Double, cy: Double, r0: Double, r1: Double): Seq[(Double, Double)] =
+        Seq.tabulate(n) { i =>
+          val a = 2.0 * math.Pi * i / n
+          val ri = r0 + (r1 - r0) * rnd.nextDouble()
+          (offset + scale * (cx + ri * math.cos(a)), offset + scale * (cy + ri * math.sin(a)))
+        }
+      val n = 600 + rnd.nextInt(4401)
+      val ext0 = star(n, 0.0, 0.0, 0.6, 1.0)
+      val ext = if (seed % 3 == 0) {
+        val k = rnd.nextInt(n)
+        ext0.updated(k, if (rnd.nextBoolean()) (Double.NaN, ext0(k)._2) else (ext0(k)._1, Double.NaN))
+      } else ext0
+      val holeCentres = Seq((-0.25, 0.0), (0.25, 0.05)).take(1 + rnd.nextInt(2))
+      val holes = holeCentres.map { case (cx, cy) => star(300 + rnd.nextInt(901), cx, cy, 0.1, 0.2).reverse }
+      val poly = PolygonG(ext, holes)
+      val prepared = Polylabel.prepare(poly)
+      assert(prepared.forall(_.nSupers >= 2), s"seed $seed: a ring of one superblock")
+      val bb = Geom.boundingRect(poly.exterior)
+      def check(px: Double, py: Double): Unit = {
+        val got = Polylabel.signedDistance(px, py, prepared)
+        val want = perEdgeSignedDistance(px, py, poly)
+        assert(java.lang.Double.doubleToLongBits(got) ===
+          java.lang.Double.doubleToLongBits(want),
+          s"seed $seed (n=$n, holes=${holes.map(_.size)}, scale=$scale, offset=$offset): " +
+            s"kernel $got != per-edge $want at ($px, $py)")
+      }
+      for (_ <- 0 until 30)
+        check(bb.minX - 0.1 * bb.width + rnd.nextDouble() * 1.2 * bb.width,
+          bb.minY - 0.1 * bb.height + rnd.nextDouble() * 1.2 * bb.height)
+      for (r <- prepared; sb <- 0 until r.nSupers) {
+        val sminX = r.sMinX(sb); val smaxX = r.sMaxX(sb)
+        val first = sb * superEdges
+        val last = math.min(first + superEdges, r.nEdges)
+        // the ys of the superblock's boundary vertices, across the polygon
+        for (py <- Seq(r.ys(first), r.ys(last)); _ <- 0 until 2)
+          check(bb.minX - 0.1 * bb.width + rnd.nextDouble() * 1.2 * bb.width, py)
+        // a y the superblock straddles, on both sides of minX and the guard
+        for (py <- (first to last).map(r.ys(_)).find(_ < r.sMaxY(sb))) {
+          val guard = sminX - (Polylabel.ParityEps *
+            (math.abs(sminX) + math.abs(smaxX) + (smaxX - sminX)) +
+            4.0 * java.lang.Double.MIN_NORMAL / math.min(math.abs(py), 1.0))
+          for (px <- Seq(Math.nextDown(sminX), sminX, Math.nextUp(sminX),
+                         Math.nextDown(guard), guard, Math.nextUp(guard)))
+            check(px, py)
+        }
+      }
+      // inside each hole, near its outline: the nearest superblock bbox (the
+      // seed's) is then usually the hole's; count the probes where it is
+      for ((h, hi) <- poly.holes.zipWithIndex) {
+        val cx = offset + scale * holeCentres(hi)._1
+        val cy = offset + scale * holeCentres(hi)._2
+        for (i <- 0 until h.nEdges by 7) {
+          val px = cx + 0.9 * (h.xs(i) - cx)
+          val py = cy + 0.9 * (h.ys(i) - cy)
+          val bounds = for ((r, ri) <- prepared.zipWithIndex; sb <- 0 until r.nSupers) yield {
+            val dx = math.max(math.max(r.sMinX(sb) - px, px - r.sMaxX(sb)), 0.0)
+            val dy = math.max(math.max(r.sMinY(sb) - py, py - r.sMaxY(sb)), 0.0)
+            (dx * dx + dy * dy, ri)
+          }
+          if (bounds.minBy(_._1)._2 > 0) holeSeeds += 1
+          check(px, py)
+        }
+      }
+    }
+    assert(holeSeeds > 100, s"only $holeSeeds probes had a hole's superblock nearest")
+  }
+
+  test("a NaN vertex disables endpoint parity for its superblock, bit-exact") {
+    // edges 0-599 run up x = 10 and span three superblocks; superblock 1
+    // (edges 256-511) lies right of the probes and straddles their y, and
+    // the NaN vertex 300 makes edge 299 fail its crossing test, so neither
+    // the superblock's endpoints (y 256 and 512) nor its block's may decide
+    // its parity
+    val pts = Seq.tabulate(601)(i => (if (i == 300) Double.NaN else 10.0, i.toDouble)) ++
+      Seq((-10.0, 600.0), (-10.0, 0.0))
+    val poly = PolygonG(pts)
+    val prepared = Polylabel.prepare(poly)
+    assert(prepared(0).nSupers === 3)
+    for ((px, py) <- Seq((5.0, 299.5), (-5.0, 299.5), (5.0, 400.0), (9.0, 260.5), (5.0, 256.0))) {
+      val got = Polylabel.signedDistance(px, py, prepared)
+      val want = perEdgeSignedDistance(px, py, poly)
+      assert(java.lang.Double.doubleToLongBits(got) ===
+        java.lang.Double.doubleToLongBits(want), s"kernel $got != per-edge $want at ($px, $py)")
+    }
+  }
+
   /** The naive oracle: Geom.segmentDistance per edge plus Geom.pointInPolygon. */
   private def perEdgeSignedDistance(px: Double, py: Double, poly: PolygonG): Double = {
     var mn = Double.PositiveInfinity
