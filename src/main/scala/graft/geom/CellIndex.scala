@@ -215,10 +215,17 @@ object CellIndex {
     */
   def coverLevelFor(poly: PolygonG, targetCells: Int = 16): Int = {
     val bb = Geom.boundingRect(poly.exterior)
-    val frac = math.max(bb.width / SpanX, bb.height / SpanY)
+    levelForSpan(math.max(bb.width / SpanX, bb.height / SpanY), targetCells)
+  }
+
+  /** The level at which a bbox spanning `frac` of the domain on its wider
+    * axis (relative to SpanX/SpanY) covers ~`targetCells` cells:
+    * floor(log2(sqrt(targetCells) / frac)), clamped to [0, MaxLevel].
+    * A degenerate span (frac <= 0) gets MaxLevel.
+    */
+  def levelForSpan(frac: Double, targetCells: Int): Int = {
     if (frac <= 0.0) return MaxLevel
-    val perAxis = math.sqrt(targetCells.toDouble)
-    val lvl = math.floor(math.log(perAxis / frac) / math.log(2.0)).toInt
+    val lvl = math.floor(math.log(math.sqrt(targetCells.toDouble) / frac) / math.log(2.0)).toInt
     math.max(0, math.min(MaxLevel, lvl))
   }
 }

@@ -37,13 +37,13 @@ object Components {
     * self-loops) do not appear — union identity rows for the full corpus
     * if every document needs a row.
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 30): DataFrame = {
+  def connectedComponents(edges: DataFrame): DataFrame = {
     val Array(ca, cb) = edges.columns.take(2)
     run(edges.select(col(ca).as("u"), col(cb).as("v"))
       .where(col("u") =!= col("v"))
       .select(least(col("u"), col("v")).as("u"),
         greatest(col("u"), col("v")).as("v"))
-      .distinct(), maxIters)
+      .distinct())
   }
 
   /** [[connectedComponents]] for an input the CALLER guarantees is
@@ -56,13 +56,17 @@ object Components {
     * group's MIN doc_id, and the two branches are disjoint (a member
     * row's right side is never a representative).
     */
-  private[operators] def connectedComponentsCanonical(
-      edges: DataFrame, maxIters: Int = 30): DataFrame = {
+  private[operators] def connectedComponentsCanonical(edges: DataFrame): DataFrame = {
     val Array(ca, cb) = edges.columns.take(2)
-    run(edges.select(col(ca).as("u"), col(cb).as("v")), maxIters)
+    run(edges.select(col(ca).as("u"), col(cb).as("v")))
   }
 
-  private def run(edges0: DataFrame, maxIters: Int): DataFrame = {
+  /** Iteration cap: large-star/small-star needs O(log n) rounds, so 30
+    * covers any graph this engine can hold; hitting it is an error.
+    */
+  private val MaxIters = 30
+
+  private def run(edges0: DataFrame): DataFrame = {
     // (edge count, order-free xor checksum) per iterate, OBSERVED during
     // the iterate's own eager-checkpoint job (CollectMetrics accumulators
     // fill while the checkpoint materializes) — the former separate
@@ -79,7 +83,7 @@ object Components {
     var it = 0
     var converged = false
     try {
-      while (!converged && it < maxIters) {
+      while (!converged && it < MaxIters) {
         val (next, nextSig) = truncatedSigned(smallStar(largeStar(e)))
         try {
           if (nextSig == sig) {
@@ -101,8 +105,8 @@ object Components {
       }
       if (!converged)
         throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters iterations " +
-            "(raise maxIters; large-star/small-star needs O(log n) rounds)")
+          s"connectedComponents did not converge in $MaxIters iterations " +
+            "(large-star/small-star needs O(log n) rounds)")
       // star forest, canonical (root, child) with root = component min:
       // children plus one identity row per root
       val out = e.select(col("v").as("id"), col("u").as("component"))

@@ -286,14 +286,19 @@ object Dedup {
     */
   def minhashEstimatePairs(docs: DataFrame, numHashes: Int, rowsPerBand: Int,
                            num: Int, den: Int): DataFrame = {
-    // ONE cached frame: member ids + in-row wide signatures, no shingle
-    // array. Reps with no shingle are dropped first: they have no
-    // signature (no null band key reaches the band explode), and no
-    // output pair — cross pairs need a banded rep, within-group pairs a
-    // rep with >= 1 shingle.
-    val sigW = minhashReps(docs).where(size(col("sh")) >= 1)
-      .select(Seq(col("rep_id"), col("ids")) ++ wideSigCols(col("si"), numHashes): _*)
+    // ONE cached frame: member ids + in-row wide signatures + shingle
+    // count, no shingle array. Reps with no shingle are dropped right
+    // after the cache: they have no signature (no null band key reaches
+    // the band explode), and no output pair — cross pairs need a banded
+    // rep, within-group pairs a rep with >= 1 shingle. Filtered before
+    // the cache instead, the optimizer pushes the predicate below the
+    // collapse into the scan and every document builds its shingle array
+    // twice (PlanSpec counts the builds).
+    val cached = minhashReps(docs)
+      .select(Seq(col("rep_id"), col("ids"), size(col("sh")).as("n_sh")) ++
+        wideSigCols(col("si"), numHashes): _*)
       .persist(StorageLevel.MEMORY_AND_DISK)
+    val sigW = cached.where(col("n_sh") >= 1)
     val members = sigW.select(explode(col("ids")).as("id"), col("rep_id"))
     val wide = sigW.select(
       col("rep_id").as("doc_id") +: (0 until numHashes).map(j => col(s"m$j")): _*)
@@ -315,7 +320,7 @@ object Dedup {
         Some(Seq(lit(numHashes.toLong).as("est")))
       else None
     Caching.materializeAndRelease(
-      expand(scored, members, "doc_a", "doc_b", within, compact = false), sigW)
+      expand(scored, members, "doc_a", "doc_b", within, compact = false), cached)
   }
 
   /** End-to-end near-dup cluster assignment: every document in `docs`
@@ -424,8 +429,8 @@ object Dedup {
     * finds bit-identical hashes). Input: (image_id, phash).
     *
     * Shape (the minhashLshPairs shape, pigeonhole instead of MinHash):
-    * the 64-bit phash splits into `bands` contiguous keys; any pair
-    * within Hamming distance t < bands leaves at least one band
+    * the 64-bit phash splits into 4 contiguous 16-bit band keys; any
+    * pair within Hamming distance t < 4 leaves at least one band
     * untouched, so banding is a LOSSLESS candidate filter. Candidates
     * equi-join on (band, band_key); the exact popcount verify runs on
     * candidates only. Exact duplicates (identical phash — web-scale
@@ -435,10 +440,9 @@ object Dedup {
     * band identically, so the output equals the uncollapsed formulation
     * (within-cluster pairs have dist 0).
     */
-  def phashNearDupPairs(images: DataFrame, t: Int, bands: Int = 4): DataFrame = {
+  def phashNearDupPairs(images: DataFrame, t: Int): DataFrame = {
+    val bands = 4
     require(t < bands, s"pigeonhole needs t < bands (got t=$t, bands=$bands)")
-    require(64 % bands == 0, s"bands must divide 64 (got $bands)")
-    val width = 64 / bands
 
     // a null hash pairs with nothing, not even another null
     val reps = collapse(images.where(col("phash").isNotNull), "phash", "image_id")
@@ -447,14 +451,13 @@ object Dedup {
 
     // band_key MUST be extracted by masking, not `%`: Spark's `%` keeps the
     // dividend's sign, so a negative phash (bit 63 set — ~half of real
-    // image hashes) would get band_key = low-bits − 2^width while a
+    // image hashes) would get band_key = low-bits − 2^16 while a
     // non-negative hash with the same low bits gets low-bits, silently
     // breaking the pigeonhole guarantee on band 0.
-    val bandMask = if (width == 64) -1L else (1L << width) - 1
     val banded = reps.select(col("rep_id"), col("phash"))
       .withColumn("band", explode(lit((0 until bands).toArray)))
       .withColumn("band_key",
-        expr(s"shiftrightunsigned(phash, band * $width)").bitwiseAND(lit(bandMask)))
+        expr("shiftrightunsigned(phash, band * 16)").bitwiseAND(lit(0xFFFFL)))
     val a = banded.select(col("rep_id").as("rep_a"),
       col("phash").as("ph_a"), col("band"), col("band_key"))
     val b = banded.select(col("rep_id").as("rep_b"),

@@ -22,6 +22,12 @@ import org.apache.spark.storage.StorageLevel
   */
 object Similarity {
 
+  /** Sign-LSH hyperplanes and embedding dimension of annTopK and
+    * nearDupPairs (mirrored by their SQL oracles).
+    */
+  private val Planes = 8
+  private val Dim = 64
+
   /** (vec_id, i [0-based], q) quantized component stream. */
   def quantized(embeddings: DataFrame): DataFrame =
     embeddings.select(col("vec_id"), posexplode(col("embedding")))
@@ -137,11 +143,10 @@ object Similarity {
     * Hamming distance 1 (flip each plane bit once) — the classic
     * multi-probe LSH recall fix: a near-neighbour straddling one
     * hyperplane lands one bit away, and single-probe misses it. Only the
-    * query side fans out (x planes+1 rows), the data side stays one row
+    * query side fans out (x Planes+1 rows), the data side stays one row
     * per vector, and the join stays an equi-join on the bucket key.
     */
   def annTopK(embeddings: DataFrame, nQueries: Int, k: Int,
-              planes: Int = 8, dim: Int = 64,
               multiProbe: Boolean = false): DataFrame = {
     // one cached quantized-ARRAY frame feeds both the bucket build and the
     // re-rank: buckets are a cheap codegen'd projection over it, and the
@@ -152,14 +157,14 @@ object Similarity {
     // order-independent, so the outputs are bit-identical.
     val qvec = quantize(embeddings).persist(StorageLevel.MEMORY_AND_DISK)
     val buckets = qvec.select(col("vec_id"),
-        lsh_bucket(col("qvec"), lit(planes), lit(dim)).as("bucket"))
+        lsh_bucket(col("qvec"), lit(Planes), lit(Dim)).as("bucket"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val queries0 = buckets.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("query_id"), col("bucket"))
     val queries =
       if (!multiProbe) queries0
       else queries0
-        .withColumn("j", explode(lit((-1 until planes).toArray)))
+        .withColumn("j", explode(lit((-1 until Planes).toArray)))
         .withColumn("bucket",
           when(col("j") === -1, col("bucket"))
             .otherwise(expr("bucket ^ shiftleft(CAST(1 AS BIGINT), j)")))
@@ -266,22 +271,20 @@ object Similarity {
     * Candidates are pairs sharing BOTH the blocking label and the sign-LSH
     * bucket — the scale path: a per-label all-pairs join is quadratic in
     * the label's population, while bucketed candidates split every label
-    * into 2^planes cells first (high-cosine pairs land in the same bucket
+    * into 2^Planes cells first (high-cosine pairs land in the same bucket
     * with high probability; the bucket criterion is part of the operator
     * contract, mirrored by the SQL oracle). The exact integer verify runs
     * on candidates only.
     *
-    * `bucketMax` is the HOT-BAND GUARD: a (label, bucket) group larger
-    * than it generates NO candidate pairs (e.g. a corpus of near-zero
+    * HOT-BAND GUARD: a (label, bucket) group of more than 65,536 vectors
+    * generates NO candidate pairs (e.g. a corpus of near-zero
     * embeddings collapsing into one bucket would otherwise emit |group|^2
     * pairs). Like ngram dedup's dfMax, the cutoff is part of the operator
     * contract and mirrored by the SQL oracle; a group that hot means the
     * bucketing failed for it and the caller should re-block (more planes
-    * or a finer label). 0 disables the guard.
+    * or a finer label).
     */
-  def nearDupPairs(embeddings: DataFrame, tau2x10000: Int,
-                   planes: Int = 8, dim: Int = 64,
-                   bucketMax: Int = 65536): DataFrame = {
+  def nearDupPairs(embeddings: DataFrame, tau2x10000: Int): DataFrame = {
     // one cached quantized-ARRAY frame: the exact verify computes dot and
     // both norms with in-row aggregate(zip_with) — 1 slim row per
     // candidate pair, where the former per-component formulation shipped
@@ -289,23 +292,20 @@ object Similarity {
     // aggregate + two joins (the annTopK round-5 rewrite, applied here).
     // Integer dots are order-independent, so outputs are bit-identical.
     val qvec = quantize(embeddings).persist(StorageLevel.MEMORY_AND_DISK)
-    val meta = lshBuckets(embeddings, planes, dim)
+    val meta = lshBuckets(embeddings, Planes, Dim)
       .join(embeddings.select("vec_id", "label"), "vec_id")
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val candBase = meta.as("a").join(meta.as("b"),
+    // group-size guard: the sizes frame is tiny (distinct label x
+    // bucket) and broadcasts; hot groups are excluded BEFORE the
+    // quadratic self-join output materializes
+    val sizes = meta.groupBy("label", "bucket").agg(count(lit(1)).as("gsz"))
+      .where(col("gsz") <= 65536)
+      .select(col("label").as("ok_label"), col("bucket").as("ok_bucket"))
+    val cand = meta.as("a").join(meta.as("b"),
         col("a.label") === col("b.label") && col("a.bucket") === col("b.bucket") &&
           col("a.vec_id") < col("b.vec_id"))
-    val cand = (if (bucketMax <= 0) candBase
-      else {
-        // group-size guard: the sizes frame is tiny (distinct label x
-        // bucket) and broadcasts; hot groups are excluded BEFORE the
-        // quadratic self-join output materializes
-        val sizes = meta.groupBy("label", "bucket").agg(count(lit(1)).as("gsz"))
-          .where(col("gsz") <= bucketMax)
-          .select(col("label").as("ok_label"), col("bucket").as("ok_bucket"))
-        candBase.join(broadcast(sizes),
-          col("a.label") === col("ok_label") && col("a.bucket") === col("ok_bucket"))
-      })
+      .join(broadcast(sizes),
+        col("a.label") === col("ok_label") && col("a.bucket") === col("ok_bucket"))
       .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
     val out = cand
       .join(qvec.select(col("vec_id").as("vec_a"), col("qvec").as("qa")), "vec_a")

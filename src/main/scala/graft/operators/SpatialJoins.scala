@@ -2,7 +2,7 @@ package graft.operators
 
 import graft.functions.GraftFunctions._
 import graft.geom.CellIndex
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
@@ -24,29 +24,24 @@ object SpatialJoins {
   val AutoLevel: Int = Int.MinValue
 
   /** Cell level for a PIP join, from the polygon side's TYPICAL bbox: the
-    * level at which the MEDIAN sampled polygon's bbox spans ~`targetCells`
-    * cover cells (the per-polygon rule CellIndex.coverLevelFor applies to
-    * one polygon, aggregated here with an approximate median over a
-    * bounded sample — robust to one Norway in a sea of parcels; the skew
-    * machinery, AQE + salting, owns the outliers). One tiny sampling job
-    * (`limit` keeps it a partial scan) per auto-level join.
+    * level at which the MEDIAN sampled polygon's bbox spans ~16 cover
+    * cells (the per-polygon rule CellIndex.coverLevelFor applies to one
+    * polygon, aggregated here with an approximate median over a bounded
+    * sample of 1,024 polygons — robust to one Norway in a sea of parcels;
+    * the skew machinery, AQE + salting, owns the outliers). One tiny
+    * sampling job (`limit` keeps it a partial scan) per auto-level join.
     */
-  def autoLevel(polygons: DataFrame, targetCells: Int = 16,
-                sampleN: Int = 1024): Int = {
+  def autoLevel(polygons: DataFrame): Int = {
     val fx = expr("array_max(transform(exterior, p -> p.x))") -
       expr("array_min(transform(exterior, p -> p.x))")
     val fy = expr("array_max(transform(exterior, p -> p.y))") -
       expr("array_min(transform(exterior, p -> p.y))")
-    val row = polygons.select(col("exterior")).limit(sampleN)
+    val row = polygons.select(col("exterior")).limit(1024)
       .select(greatest(fx / CellIndex.SpanX, fy / CellIndex.SpanY).as("f"))
       .agg(expr("percentile_approx(f, 0.5, 1000)")).head()
     val frac = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
     if (frac <= 0.0) 9 // empty/degenerate side: the historical default
-    else {
-      val perAxis = math.sqrt(targetCells.toDouble)
-      val lvlF = math.floor(math.log(perAxis / frac) / math.log(2.0)).toInt
-      math.max(0, math.min(CellIndex.MaxLevel, lvlF))
-    }
+    else CellIndex.levelForSpan(frac, 16)
   }
 
   /** Cell level for a kNN join, from label density: ~one label per cell
@@ -140,35 +135,31 @@ object SpatialJoins {
         }
       }
     }
-    val pts = points.withColumn("cell_id", cell_of(col("x"), col("y"), lit(lvl)))
-    val joined = if (doBroadcast) {
-      val cellMap = polygons.select(col("poly_id"),
-        explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id"))
-      pts.join(broadcast(cellMap), "cell_id")
-        .join(broadcast(polygons), "poly_id")
-    } else {
-      // shuffle path, two-stage like the broadcast path: shuffle the SLIM
-      // (cell_id, poly_id) cover against the points, then re-join the
-      // geometry once per matched pair by poly_id for the refine. The
-      // alternative (geometry riding the cell shuffle) replicates each
-      // polygon's full geometry once per cover cell — an 8,854-vertex
-      // Norway-class polygon's ~140 KB rides the shuffle thousands of
-      // times at level 12+, and this path is exactly the one chosen for
-      // KNOWN-huge polygon tables. Measured A/B (2M points, min over
-      // interleaved passes; table in COVERAGE.md): level 12 x 1 Norway
-      // copy slim 2.0 s vs fat 13.5 s (6.8x); level 12 x 4 copies slim
-      // 8.3 s vs fat OutOfMemoryError (the ~36 GB replicated-geometry
-      // shuffle exhausts the 16 GB JVM); level 10 x 30 copies (small
-      // covers, the fat plan's best regime) slim 5.0 s vs fat 7.7 s — the
-      // slim re-join's extra shuffle of (point, poly_id) pairs never loses.
-      val cover = polygons.select(col("poly_id"),
-        explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id"))
-      pts.join(cover, "cell_id")
-        .join(polygons, "poly_id")
-    }
-    joined
+    // One body for both paths, two-stage: join the SLIM (cell_id,
+    // poly_id) cover against the points, then re-join the geometry once
+    // per matched pair by poly_id for the refine — broadcast or shuffled
+    // as decided above. The alternative (geometry riding the cell join)
+    // replicates each polygon's full geometry once per cover cell — an
+    // 8,854-vertex Norway-class polygon's ~140 KB rides the shuffle
+    // thousands of times at level 12+, and the shuffle path is exactly
+    // the one chosen for KNOWN-huge polygon tables. Measured A/B on the
+    // shuffle path (2M points, min over interleaved passes; table in
+    // COVERAGE.md): level 12 x 1 Norway copy slim 2.0 s vs fat 13.5 s
+    // (6.8x); level 12 x 4 copies slim 8.3 s vs fat OutOfMemoryError (the
+    // ~36 GB replicated-geometry shuffle exhausts the 16 GB JVM); level
+    // 10 x 30 copies (small covers, the fat plan's best regime) slim
+    // 5.0 s vs fat 7.7 s — the slim re-join's extra shuffle of (point,
+    // poly_id) pairs never loses. The point-side key is private and
+    // dropped, so a caller's own `cell_id` column passes through.
+    def side(df: DataFrame) = if (doBroadcast) broadcast(df) else df
+    val cover = side(polygons.select(col("poly_id"),
+      explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id")))
+    points.withColumn("pip_cell", cell_of(col("x"), col("y"), lit(lvl)))
+      .join(cover, col("pip_cell") === cover("cell_id"))
+      .drop(cover("cell_id")).drop("pip_cell")
+      .join(side(polygons), "poly_id")
       .where(pip(col("x"), col("y"), col("exterior"), col("holes")))
-      .drop("cell_id", "exterior", "holes", "tolerance")
+      .drop("exterior", "holes", "tolerance")
   }
 
   /** PIP join with explicit salting for hot cells (E8): dense point
@@ -200,15 +191,16 @@ object SpatialJoins {
     *
     * points: (point_id, x, y, ...); labels: (poly_id, lx, ly).
     *
-    * Plan shape (the 100 TB contract): each point explodes the kRing of
-    * its own cell whose Chebyshev ring provably covers the radius
-    * (k = floor(radius/cellDim) + 1 per axis — the +1 absorbs boundary
-    * straddling, so the cover is lossless at any level); labels keep
-    * their ONE home cell, so the cell equi-join emits each qualifying
-    * pair exactly once — no distinct, no window, no cross join at any
-    * density. The refine step is one codegen'd d2 <= r² filter. With
-    * `broadcastLabels = false` the join shuffles both sides
-    * co-partitioned by cell (AQE-splittable; same truth).
+    * Plan shape (the 100 TB contract): one [[cellDiskJoin]] at the
+    * Chebyshev radius whose disk provably covers the radius (k =
+    * floor(radius/cellDim) + 1 per axis — the +1 absorbs boundary
+    * straddling, so the cover is lossless at any level). One side keeps
+    * its ONE home cell, so the cell equi-join emits each qualifying pair
+    * exactly once — no distinct, no window, no cross join at any density.
+    * The refine step is one codegen'd d2 <= r² filter. With
+    * `broadcastLabels = false` the labels are replicated into their disks
+    * and shuffled co-partitioned by cell with the points (AQE-splittable;
+    * same truth).
     *
     * AutoLevel picks the FINEST grid whose cell still exceeds the
     * radius (k stays 1, ring = 9 cells/point) — finer cells would grow
@@ -228,14 +220,8 @@ object SpatialJoins {
     val cellH = CellIndex.SpanY / CellIndex.gridSize(lvl).toDouble
     val k = math.max(math.floor(radius / cellW).toInt + 1,
       math.floor(radius / cellH).toInt + 1)
-    val lab = labels
-      .withColumn("lcell", cell_of(col("lx"), col("ly"), lit(lvl)))
-    val labSide = if (broadcastLabels) broadcast(lab) else lab
     val ptCols = points.columns.toSeq
-    points
-      .withColumn("cell",
-        explode(cell_kring(cell_of(col("x"), col("y"), lit(lvl)), lit(k))))
-      .join(labSide, col("cell") === col("lcell"))
+    cellDiskJoin(points, labels, lvl, k, broadcastLabels)
       .withColumn("d2", (col("x") - col("lx")) * (col("x") - col("lx")) +
         (col("y") - col("ly")) * (col("y") - col("ly")))
       .where(col("d2") <= lit(radius * radius))
@@ -255,12 +241,13 @@ object SpatialJoins {
     *
     * points: (point_id, x, y);  labels: (poly_id, lx, ly)
     *
-    * Rounds with growing Chebyshev ring radius r: candidates = equi-join
-    * on the exploded kRing(cell, r) of each unresolved point. A point is
-    * resolved when it has >= k candidates AND its kth distance is
-    * <= r * cellSize — the geometric guarantee that nothing outside the
-    * ring can be closer. Unresolved points (sparse regions) go to the
-    * next round; past the caller's rounds, ADAPTIVE EXTENSION rounds keep
+    * One loop over a schedule of (level, Chebyshev radius r) steps; each
+    * step's candidates are one [[cellDiskJoin]] of the unresolved points
+    * against the labels. A point is resolved when it has >= k candidates
+    * AND its kth distance is <= r * cellSize — the geometric guarantee
+    * that nothing outside the disk can be closer. Unresolved points
+    * (sparse regions) go to the next step. The schedule is the caller's
+    * `rounds` at the start level, then ADAPTIVE EXTENSION steps that keep
     * quadrupling the search radius by re-keying both sides at coarser
     * grid levels (still 3x3-disk cell equi-joins — never a cross join)
     * until the disk covers the grid and everything resolves.
@@ -268,10 +255,10 @@ object SpatialJoins {
     *
     * `broadcastLabels = true` assumes the label set fits on every executor
     * (dimension-table case). With false, NEITHER side is broadcast: each
-    * label is replicated into the kRing of its own cell (Chebyshev rings
-    * are symmetric, so the candidate set is identical) and the join is a
-    * shuffle on the cell key — the path for label sets that rival the
-    * point set in size (both sides co-partition by cell).
+    * label is replicated into the disk of its own cell in every step
+    * (Chebyshev disks are symmetric, so the candidate set is identical)
+    * and the join is a shuffle on the cell key — the path for label sets
+    * that rival the point set in size (both sides co-partition by cell).
     *
     * Each round materializes its own RESOLVED OUTPUT SLICE; the count of
     * still-unresolved points is maintained arithmetically off that slice
@@ -284,8 +271,8 @@ object SpatialJoins {
     * result, which reads the same parts (a bare `unpersist()` would leave
     * the part caches behind) — no other cached state leaks.
     *
-    * Every round re-explodes the FULL disk for the unresolved points and
-    * prunes its candidates lazily inside the ranking job — never stored.
+    * Every round re-builds the FULL disk join for the unresolved points
+    * and prunes its candidates lazily inside the ranking job — never stored.
     * Carrying the previous round's candidates forward and exploding only
     * the new ring shell was measured and deleted (COVERAGE.md): it forces
     * materializing the unpruned candidate frame (~190M rows / ~8 GB at
@@ -321,18 +308,12 @@ object SpatialJoins {
               rounds: Seq[Int] = Seq(1, 2, 4, 8),
               broadcastLabels: Boolean = true): DataFrame = {
     val lvl0 = if (level == AutoLevel) knnAutoLevel(labels) else level
-    val cellW = CellIndex.SpanX / CellIndex.gridSize(lvl0).toDouble
-    val cellH = CellIndex.SpanY / CellIndex.gridSize(lvl0).toDouble
-    val minDim = math.min(cellW, cellH)
 
-    // materialized once: every round (and the fallback) rebuilds its
-    // broadcast from `lab`, and without the cache each build re-runs the
-    // label-side lineage (often a polylabel computation) as its own
-    // serial-ish job — measured as part of the operator's
-    // parallelism-insensitive cost
-    val lab = labels
-      .withColumn("lcell", cell_of(col("lx"), col("ly"), lit(lvl0)))
-      .select("poly_id", "lx", "ly", "lcell")
+    // materialized once: every round rebuilds its label side from `lab`,
+    // and without the cache each build re-runs the label-side lineage
+    // (often a polylabel computation) as its own serial-ish job —
+    // measured as part of the operator's parallelism-insensitive cost
+    val lab = labels.select("poly_id", "lx", "ly")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // rank on SQUARED distance (exact arithmetic — products and sums only),
@@ -360,9 +341,8 @@ object SpatialJoins {
     // checkpoint-sized count() inside round 1, the largest single item of
     // the operator's per-run driver fixed cost (the measured residual that
     // capped knn's 4v16 scaling efficiency once the payload wins landed)
-    val (unresolved0, stats) = Caching.checkpoint(points
-      .select(col("point_id"), col("x"), col("y"))
-      .withColumn("pcell", cell_of(col("x"), col("y"), lit(lvl0))), count(lit(1)).as("n"))
+    val (unresolved0, stats) = Caching.checkpoint(
+      points.select(col("point_id"), col("x"), col("y")), count(lit(1)).as("n"))
     var unresolved = unresolved0
     var nLeft = stats.getLong(0)
     // rounds since the unresolved chain was last checkpointed (see the
@@ -374,8 +354,7 @@ object SpatialJoins {
     val wc = Window.partitionBy("point_id")
 
     // One pass = rank candidates + slice the resolved output + advance the
-    // unresolved chain. Shared by the main ring rounds and the adaptive
-    // extension rounds below.
+    // unresolved chain; one per schedule step below.
     //
     // One window pass carries BOTH the ranking and the resolution proof.
     // The <= rad2 prune is lossless: a point resolves at guarantee radius
@@ -471,49 +450,38 @@ object SpatialJoins {
     // can never fire for k <= 9 because occupied density is >= 1 by
     // definition — dead code. Scheduled rounds therefore always run;
     // the schedule stays the caller's scale knob.
-    val it = rounds.iterator
-    while (it.hasNext && nLeft > 0) {
-      val r = it.next()
-      resolvePass(withD2(roundCandidates(unresolved, lab, r, broadcastLabels)),
-        (r * minDim) * (r * minDim), requireK = true)
-    }
-    // ADAPTIVE EXTENSION ROUNDS replace the old all-labels cross-join
-    // fallback (which, in cell-partitioned mode, was the engine's one
-    // remaining shuffle-cartesian cliff: an adversarial density mismatch
-    // with a large unresolved tail AND a non-broadcastable label side
-    // built a cartesian over both). The search radius keeps doubling by
-    // COARSENING THE GRID instead of widening the ring: a 3x3 disk of
-    // level-(L-d) cells covers the same ground as a ring of radius
-    // 3*2^d level-L cells but explodes a constant 9 cells per leftover
-    // point per round, and both sides re-key at the coarser level so the
-    // join stays a cell equi-join in either mode — never a cartesian
-    // (SpatialJoinSpec asserts the executed plans). Descending two levels
-    // per round quadruples the radius, so the round count is logarithmic
-    // in the domain/cell ratio; at gridSize <= 3 the disk covers the
-    // whole grid, the candidate set is COMPLETE, and every remaining
-    // point resolves (requireK=false — with fewer than k labels in the
-    // whole table, top-(what exists) is the correct kNN answer, exactly
-    // what the cross join produced).
-    if (nLeft > 0) {
-      // first coarsening whose guarantee radius EXCEEDS the last ring's
-      // (2^d > rounds.last): re-searching a smaller disk would waste a
-      // round
-      // rounds = Seq.empty is a legal schedule (skip straight to the
-      // adaptive extension — the old cross-join fallback accepted it too);
-      // treat it as "last ring radius 1"
-      val dLvl = 32 - Integer.numberOfLeadingZeros(
-        math.max(1, rounds.lastOption.getOrElse(1)))
-      var lvl = math.max(0, lvl0 - dLvl)
-      var complete = false
-      while (nLeft > 0 && !complete) {
-        complete = CellIndex.gridSize(lvl) <= 3 // 3x3 disk covers the grid
-        val minDimL = math.min(CellIndex.SpanX / CellIndex.gridSize(lvl).toDouble,
-          CellIndex.SpanY / CellIndex.gridSize(lvl).toDouble)
-        val cand = extensionCandidates(unresolved, lab, lvl, broadcastLabels)
-        val rad2 = if (complete) Double.MaxValue else minDimL * minDimL
-        resolvePass(withD2(cand), rad2, requireK = !complete)
-        lvl = math.max(0, lvl - 2)
-      }
+    //
+    // ADAPTIVE EXTENSION steps follow the caller's rounds; they replace the
+    // old all-labels cross-join fallback (which, in cell-partitioned mode,
+    // was the engine's one remaining shuffle-cartesian cliff: an
+    // adversarial density mismatch with a large unresolved tail AND a
+    // non-broadcastable label side built a cartesian over both). The
+    // search radius keeps growing by COARSENING THE GRID instead of
+    // widening the ring: a 3x3 disk of level-(L-d) cells covers the same
+    // ground as a ring of radius 3*2^d level-L cells but explodes a
+    // constant 9 cells per row, and both sides re-key at the coarser level
+    // so the join stays a cell equi-join in either mode — never a
+    // cartesian (SpatialJoinSpec asserts the executed plans). The first
+    // coarsening is the one whose guarantee radius EXCEEDS the last
+    // ring's (2^d > rounds.last; an empty schedule reads as "last ring
+    // radius 1"), since re-searching a smaller disk would waste a round.
+    // Each later step descends two levels, quadrupling the radius, so the
+    // step count is logarithmic in the domain/cell ratio. Once a disk
+    // covers the whole grid (r >= gridSize - 1) the candidate set is
+    // COMPLETE and every remaining point resolves (requireK = false —
+    // with fewer than k labels in the whole table, top-(what exists) is
+    // the correct kNN answer, exactly what the cross join produced).
+    val dLvl = 32 - Integer.numberOfLeadingZeros(math.max(1, rounds.lastOption.getOrElse(1)))
+    val steps = rounds.iterator.map(r => (lvl0, r)) ++
+      Iterator.iterate(math.max(0, lvl0 - dLvl))(l => math.max(0, l - 2)).map(l => (l, 1))
+    var complete = false
+    while (nLeft > 0 && !complete) {
+      val (lvl, r) = steps.next()
+      val n = CellIndex.gridSize(lvl)
+      complete = n <= r + 1L
+      val rad = r * math.min(CellIndex.SpanX / n.toDouble, CellIndex.SpanY / n.toDouble)
+      resolvePass(withD2(cellDiskJoin(unresolved, lab, lvl, r, broadcastLabels)),
+        if (complete) Double.MaxValue else rad * rad, requireK = !complete)
     }
     // The result is the union over the per-round parts: each part is
     // already a fully-materialized columnar cache (its own round's
@@ -556,45 +524,34 @@ object SpatialJoins {
     result
   }
 
-  /** One round's candidate pairs: explode the full Chebyshev disk of
-    * radius `r` around each unresolved point, equi-join against the
-    * labels — broadcast for dimension-sized label sets, symmetric
-    * cell-shuffle otherwise.
-    * Package-private so PlanSpec can audit the physical shape directly
-    * (the executed round plans hide behind the lineage-truncation
-    * boundary in the composed operator).
+  /** Cell-disk join: every (point, label) pair whose cells at `level`
+    * lie within Chebyshev distance `r` of each other — the one candidate
+    * plan of radiusJoin and of every kNN step. Points carry (x, y),
+    * labels (lx, ly); the output is both sides' columns.
+    *
+    * Broadcast form: each point explodes its disk (`ncell`) against the
+    * broadcast labels keyed by their own cell. Partitioned form: each
+    * label is replicated into its disk (`ncell`) and shuffle-joined on the
+    * point's own cell — Chebyshev disks (clamped to the grid) are
+    * symmetric, so both forms emit the same pairs, and neither is ever a
+    * cross join. The key columns are dropped after the join.
+    * Package-private so PlanSpec and SpatialJoinSpec can audit the
+    * physical shape directly (the composed kNN operator's executed plans
+    * hide behind its lineage-truncation boundaries).
     */
-  private[graft] def roundCandidates(unresolved: DataFrame, lab: DataFrame,
-      r: Int, broadcastLabels: Boolean): DataFrame =
+  private[graft] def cellDiskJoin(points: DataFrame, labels: DataFrame, level: Int,
+      r: Int, broadcastLabels: Boolean): DataFrame = {
+    def disk(x: String, y: String) = explode(cell_kring(cell_of(col(x), col(y), lit(level)), lit(r)))
     if (broadcastLabels) {
-      unresolved
-        .withColumn("ncell", explode(cell_kring(col("pcell"), lit(r))))
+      val lab = labels.withColumn("lcell", cell_of(col("lx"), col("ly"), lit(level)))
+      points.withColumn("ncell", disk("x", "y"))
         .join(broadcast(lab), col("ncell") === col("lcell"))
         .drop("ncell", "lcell")
     } else {
-      // symmetric formulation: replicate each LABEL into the ring of its
-      // own cell and shuffle-join on the point's cell — identical
-      // candidate set (Chebyshev rings are symmetric), no broadcast
-      val labRinged = lab.withColumn("rcell", explode(cell_kring(col("lcell"), lit(r))))
-        .drop("lcell")
-      unresolved.join(labRinged, col("pcell") === col("rcell")).drop("rcell")
+      val lab = labels.withColumn("ncell", disk("lx", "ly"))
+      points.withColumn("pcell", cell_of(col("x"), col("y"), lit(level)))
+        .join(lab, col("pcell") === col("ncell"))
+        .drop("pcell", "ncell")
     }
-
-  /** One adaptive extension round's candidates: both sides re-keyed at
-    * the coarser level `lvl`, the leftover points exploded into their 3x3
-    * disk, cell equi-join against the labels — broadcast only in
-    * dimension-label mode. Package-private so SpatialJoinSpec can audit
-    * the physical shape directly (the composed operator's executed plans
-    * hide behind the lineage-truncation boundary).
-    */
-  private[graft] def extensionCandidates(unresolved: DataFrame, lab: DataFrame,
-      lvl: Int, broadcastLabels: Boolean): DataFrame = {
-    val labL = lab.withColumn("lcell2", cell_of(col("lx"), col("ly"), lit(lvl)))
-      .select("poly_id", "lx", "ly", "lcell2")
-    unresolved
-      .withColumn("ncell",
-        explode(cell_kring(cell_of(col("x"), col("y"), lit(lvl)), lit(1))))
-      .join(if (broadcastLabels) broadcast(labL) else labL,
-        col("ncell") === col("lcell2"))
   }
 }

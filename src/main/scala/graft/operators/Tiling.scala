@@ -87,10 +87,8 @@ object Tiling {
                        level: Int): DataFrame = {
     val pts = assign(tiles, level)
       .withColumnRenamed("label_x", "x").withColumnRenamed("label_y", "y")
-      .withColumnRenamed("cell_id", "tile_cell_id") // pipJoin owns "cell_id" internally
     SpatialJoins.pipJoin(pts, polygons, level)
-      .select(col("image_id"), col("tile_ix"), col("tile_iy"),
-        col("tile_cell_id").as("cell_id"), col("poly_id"))
+      .select(col("image_id"), col("tile_ix"), col("tile_iy"), col("cell_id"), col("poly_id"))
   }
 
   /** Vector→raster (E11): for each cell of the polygon's cover at `level`,

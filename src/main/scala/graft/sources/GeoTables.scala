@@ -41,13 +41,14 @@ object GeoTables {
     PolygonG(pts)
   }
 
-  /** `n` synthetic polygons scattered deterministically over a lon/lat
-    * window; vertex counts cycle through small..large so the workload has
-    * size skew like real map data.
+  /** The lon/lat window both synthetic tables scatter over. */
+  private val Window = Rect2(-20.0, 30.0, 20.0, 60.0)
+
+  /** `n` synthetic polygons scattered deterministically (seed 42) over
+    * [[Window]]; vertex counts cycle through small..large so the workload
+    * has size skew like real map data.
     */
-  def syntheticPolygons(spark: SparkSession, n: Int, seed: Long = 42L,
-                        minX: Double = -20.0, minY: Double = 30.0,
-                        spanX: Double = 40.0, spanY: Double = 30.0): Dataset[PolyRow] = {
+  def syntheticPolygons(spark: SparkSession, n: Int): Dataset[PolyRow] = {
     import spark.implicits._
     // many small partitions, NOT one-per-core: per-row cost varies ~100x
     // (6..512 vertices), and at n/cores rows per partition a straggler
@@ -59,9 +60,9 @@ object GeoTables {
     ids.mapPartitions { it =>
       it.map { boxed =>
         val id = boxed.longValue
-        val rng = new scala.util.Random(seed ^ (id * 0x5DEECE66DL + 0xBL))
-        val cx = minX + rng.nextDouble() * spanX
-        val cy = minY + rng.nextDouble() * spanY
+        val rng = new scala.util.Random(42L ^ (id * 0x5DEECE66DL + 0xBL))
+        val cx = Window.minX + rng.nextDouble() * Window.width
+        val cy = Window.minY + rng.nextDouble() * Window.height
         val radius = 0.05 + rng.nextDouble() * 0.8
         val nv = Seq(6, 12, 24, 48, 96, 512)(rng.nextInt(6))
         val p = syntheticPolygon(id, cx, cy, radius, nv)
@@ -70,7 +71,8 @@ object GeoTables {
     }
   }
 
-  /** `n` deterministic points over the same window (join probe side).
+  /** `n` deterministic points (seed 7) over the same [[Window]] (join
+    * probe side).
     * Generated ENTIRELY inside whole-stage codegen (range -> xxhash64 ->
     * arithmetic): the previous typed-map version allocated a
     * java.util.Random plus a case-class object per row, and at 10^8 rows
@@ -78,14 +80,12 @@ object GeoTables {
     * systematic scaling-efficiency penalty at high parallelism (idle cores
     * absorb GC at low parallelism, none are spare at high).
     */
-  def syntheticPoints(spark: SparkSession, n: Long, seed: Long = 7L,
-                      minX: Double = -20.0, minY: Double = 30.0,
-                      spanX: Double = 40.0, spanY: Double = 30.0): Dataset[PointRow] = {
+  def syntheticPoints(spark: SparkSession, n: Long): Dataset[PointRow] = {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val M = 1000000000L
     def unit(salt: Long) =
-      pmod(xxhash64(col("id"), lit(seed), lit(salt)), lit(M)).cast("double") / M.toDouble
+      pmod(xxhash64(col("id"), lit(7L), lit(salt)), lit(M)).cast("double") / M.toDouble
     // coalesce never fires (the pmod modulus is a non-zero literal) but
     // makes x/y PROVABLY non-nullable: pmod is declared nullable, so
     // every downstream join key derived from these columns dragged a
@@ -95,8 +95,8 @@ object GeoTables {
     // across 2M rows). Values are bit-identical.
     spark.range(n).select(
       col("id").as("point_id"),
-      coalesce(lit(minX) + unit(1L) * spanX, lit(0.0)).as("x"),
-      coalesce(lit(minY) + unit(2L) * spanY, lit(0.0)).as("y")
+      coalesce(lit(Window.minX) + unit(1L) * Window.width, lit(0.0)).as("x"),
+      coalesce(lit(Window.minY) + unit(2L) * Window.height, lit(0.0)).as("y")
     ).as[PointRow]
   }
 

@@ -152,25 +152,58 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("kNN join keeps the label side broadcast in every round") {
-    // audited on the round-candidate builder itself: the composed
-    // operator's executed plans hide behind its lineage-truncation
-    // (localCheckpoint) boundaries
-    import graft.functions.GraftFunctions.cell_of
+    // audited on the cell-disk builder itself, at ring-round and
+    // coarsening-step (level, radius) pairs: the composed operator's
+    // executed plans hide behind its lineage-truncation (localCheckpoint)
+    // boundaries. Automatic broadcasting is off, so a broadcast in the
+    // plan is the builder's own.
+    import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastHashJoinExec, SortMergeJoinExec}
+    import org.apache.spark.sql.execution.GenerateExec
     val lab = GeoTables.syntheticPoints(spark, 10).toDF
       .select(concat(lit("p"), col("point_id")).as("poly_id"),
         col("x").as("lx"), col("y").as("ly"))
-      .withColumn("lcell", cell_of(col("lx"), col("ly"), lit(8)))
     val pts = GeoTables.syntheticPoints(spark, 100).toDF
-      .withColumn("pcell", cell_of(col("x"), col("y"), lit(8)))
-    val plan = planOf(graft.operators.SpatialJoins.roundCandidates(
-      pts, lab, r = 2, broadcastLabels = true))
-    assert(plan.contains("BroadcastHashJoin"), s"labels must broadcast:\n$plan")
-    assert(!plan.contains("CartesianProduct"), "no cross join in a round")
-    // symmetric (no-broadcast) mode must be an equi-join on the cell key,
-    // never a cross join
-    val sym = planOf(graft.operators.SpatialJoins.roundCandidates(
-      pts, lab, r = 1, broadcastLabels = false))
-    assert(!sym.contains("CartesianProduct"), s"symmetric mode crossed:\n$sym")
+    def joins(df: org.apache.spark.sql.DataFrame) = planNodes(df).collect { case j: BaseJoinExec => j }
+    def keys(j: BaseJoinExec) = (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+    def explodes(p: SparkPlan) = p.exists(_.isInstanceOf[GenerateExec])
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for ((level, r) <- Seq((8, 1), (8, 2), (8, 8), (4, 1), (0, 1))) {
+        val js = joins(SpatialJoins.cellDiskJoin(pts, lab, level, r, broadcastLabels = true))
+        assert(js.size === 1, s"one join per step: $js")
+        val j = js.head
+        assert(j.isInstanceOf[BroadcastHashJoinExec], s"labels must broadcast:\n$j")
+        assert(keys(j).contains("ncell"), s"not keyed on the point disk:\n$j")
+        assert(explodes(j.left) && !explodes(j.right), s"the points explode their disk:\n$j")
+      }
+      // partitioned mode: a shuffle equi-join on the cell key, labels
+      // replicated into their disks, never a cross join
+      for ((level, r) <- Seq((8, 1), (4, 1))) {
+        val js = joins(SpatialJoins.cellDiskJoin(pts, lab, level, r, broadcastLabels = false))
+        assert(js.size === 1, s"one join per step: $js")
+        val j = js.head
+        assert(j.isInstanceOf[SortMergeJoinExec], s"partitioned mode must shuffle:\n$j")
+        assert(keys(j).contains("ncell"), s"not keyed on the label disk:\n$j")
+        assert(explodes(j.right) && !explodes(j.left), s"the labels explode their disk:\n$j")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+  }
+
+  test("minhashEstimatePairs builds each document's shingle array once") {
+    // the zero-shingle filter must not be pushed below the exact-duplicate
+    // collapse into the scan, where it would build every shingle array a
+    // second time
+    import org.apache.spark.sql.catalyst.expressions.ArrayDistinct
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val out = graft.operators.Dedup.minhashEstimatePairs(docs, 16, 4, 1, 2)
+    try {
+      val nodes = planNodes(out).filterNot(_.isInstanceOf[FileSourceScanExec])
+      val builds = nodes.flatMap(_.expressions.flatMap(_.collect {
+        case d: ArrayDistinct if d.references.exists(_.name == "text") => d
+      }))
+      assert(builds.size === 1, s"shingle array built ${builds.size} times")
+    } finally graft.operators.Caching.release(out)
   }
 
   test("CC phases: partial-agg min + equi-join, never a cross join") {

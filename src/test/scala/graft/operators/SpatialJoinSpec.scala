@@ -237,17 +237,110 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("knnJoin extension round shape: cell equi-join in both modes, broadcast only when asked") {
+    // audited on the cell-disk builder every kNN step and radiusJoin run,
+    // at a coarsening step's level and radius (the composed operator's
+    // executed plans hide behind its lineage-truncation boundaries);
+    // automatic broadcasting is off so only the builder's own hint counts
     val lab = spark.range(10).select(concat(lit("p"), $"id").as("poly_id"),
-      ($"id" * 1.0).as("lx"), ($"id" * 0.5).as("ly"),
-      cell_of($"id" * 1.0, $"id" * 0.5, lit(8)).as("lcell"))
+      ($"id" * 1.0).as("lx"), ($"id" * 0.5).as("ly"))
     val pts = spark.range(20).select($"id".as("point_id"),
       ($"id" * 2.0 - 120.0).as("x"), ($"id" * 1.0 - 60.0).as("y"))
+    val old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      for (bcast <- Seq(true, false)) {
+        val plan = SpatialJoins.cellDiskJoin(pts, lab, level = 5, r = 1, broadcastLabels = bcast)
+          .queryExecution.executedPlan.toString
+        assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+          s"extension round must stay an equi-join (bcast=$bcast):\n$plan")
+        assert(plan.contains("BroadcastHashJoin") === bcast,
+          s"broadcast exactly when asked (bcast=$bcast):\n$plan")
+      }
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+  }
+
+  // labels in three tight clusters, points spread over most of the globe
+  // (far points resolve only in the coarsening steps after the caller's
+  // rounds) plus a few around the clusters
+  private def clusteredLabels = spark.range(300).select(
+    concat(lit("c"), $"id").as("poly_id"),
+    (($"id" % 3) * 40.0 - 40.0 + ($"id" * 7 % 50) / 100.0).as("lx"),
+    (($"id" % 3) * 20.0 - 20.0 + ($"id" * 11 % 50) / 100.0).as("ly"))
+  private def spreadPoints = spark.range(400).select($"id".as("point_id"),
+      ($"id" * 37 % 340 - 170.0 + 0.25).as("x"), ($"id" * 53 % 160 - 80.0 + 0.5).as("y"))
+    .union(spark.range(400, 460).select($"id".as("point_id"),
+      (($"id" % 3) * 40.0 - 42.0 + ($"id" * 13 % 40) / 10.0).as("x"),
+      (($"id" % 3) * 20.0 - 22.0 + ($"id" * 17 % 40) / 10.0).as("y")))
+
+  test("knnJoin and radiusJoin == brute force on clustered labels through coarsening steps, both modes") {
+    val labels = clusteredLabels.cache()
+    val pts = spreadPoints.cache()
+    val k = 4
+    val w = Window.partitionBy("point_id").orderBy($"d2", $"poly_id")
+    val ranked = pts.crossJoin(labels)
+      .withColumn("d2", ($"x" - $"lx") * ($"x" - $"lx") + ($"y" - $"ly") * ($"y" - $"ly"))
+      .withColumn("rank", row_number().over(w))
+      .where($"rank" <= k)
+      .select($"point_id", $"poly_id", $"rank", $"d2")
+      .collect()
+    val brute = ranked.map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+    // the caller's rounds at level 10 reach 2 cells (< 0.36 degrees): a
+    // point whose nearest label lies farther needs a coarsening step
+    val ringReach = 2 * graft.geom.CellIndex.SpanY / graft.geom.CellIndex.gridSize(10)
+    assert(ranked.exists(r => r.getInt(2) == 1 && math.sqrt(r.getDouble(3)) > 10 * ringReach),
+      "the layout must force coarsening steps")
     for (bcast <- Seq(true, false)) {
-      val plan = SpatialJoins.extensionCandidates(pts, lab, lvl = 5, broadcastLabels = bcast)
-        .queryExecution.executedPlan.toString
-      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-        s"extension round must stay an equi-join (bcast=$bcast):\n$plan")
-      if (bcast) assert(plan.contains("BroadcastHashJoin"), s"dimension mode should broadcast:\n$plan")
+      val got = SpatialJoins.knnJoin(pts, labels, k, level = 10, rounds = Seq(1, 2),
+        broadcastLabels = bcast)
+      val gotSet = got.select($"point_id", $"poly_id", $"rank")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSet
+      Caching.release(got)
+      assert(gotSet === brute, s"knn broadcastLabels=$bcast")
+    }
+    val radius = 3.0
+    val bruteR = pts.crossJoin(labels)
+      .where(($"x" - $"lx") * ($"x" - $"lx") + ($"y" - $"ly") * ($"y" - $"ly")
+        <= lit(radius * radius))
+      .select($"point_id", $"poly_id")
+      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    assert(bruteR.nonEmpty, "radius oracle must match something")
+    // level 8: the disk spans k = 5 cells per axis
+    for (bcast <- Seq(true, false)) {
+      val got = SpatialJoins.radiusJoin(pts, labels, radius, level = 8, broadcastLabels = bcast)
+        .select($"point_id", $"poly_id")
+        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(got === bruteR, s"radius broadcastLabels=$bcast")
+    }
+    labels.unpersist(blocking = false)
+    pts.unpersist(blocking = false)
+  }
+
+  // caller columns named like the joins' cell keys
+  private def keyedPoints =
+    points.withColumn("cell", $"point_id" * 10).withColumn("cell_id", $"point_id" + 7)
+
+  test("radiusJoin passes a caller's cell column through, both modes") {
+    val labels = knnLabels.cache()
+    val pts = keyedPoints
+    for (bcast <- Seq(true, false)) {
+      val out = SpatialJoins.radiusJoin(pts, labels, 6.0, broadcastLabels = bcast)
+      assert(out.columns.toSeq === pts.columns.toSeq :+ "poly_id" :+ "dist")
+      val rows = out.select($"point_id", $"cell", $"cell_id").collect()
+      assert(rows.nonEmpty)
+      assert(rows.forall(r => r.getLong(1) == r.getLong(0) * 10 && r.getLong(2) == r.getLong(0) + 7),
+        s"radius broadcastLabels=$bcast rewrote a caller column")
+    }
+    labels.unpersist(blocking = false)
+  }
+
+  test("pipJoin passes a caller's cell_id column through, both paths") {
+    val pts = keyedPoints
+    for (bcast <- Seq(Some(true), Some(false))) {
+      val out = SpatialJoins.pipJoin(pts, polys, 9, bcast)
+      val rows = out.select($"point_id", $"cell_id", $"cell").collect()
+      assert(rows.nonEmpty)
+      assert(rows.forall(r => r.getLong(1) == r.getLong(0) + 7 && r.getLong(2) == r.getLong(0) * 10),
+        s"pip broadcast=$bcast rewrote a caller column")
     }
   }
 

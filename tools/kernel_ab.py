@@ -12,9 +12,11 @@ benchmark's JVM flags (C1, 2 GB heap, ParallelGC).
 It prints each side's label and signedDistance probe hashes over the fixed
 corpus described in KernelAb.scala, then runs --rounds alternating rounds
 (the parent first on even rounds) of per-call label timing and prints, per
-vertex-count group, each side's median over the rounds [min, max] and
-change/parent. Exits 1 when the hashes differ, 2 when a side fails to
-build or run. Standard library only.
+vertex-count group, each side's median over the rounds [first quartile,
+third quartile] and change/parent. A group whose two quartile ranges
+overlap is marked "unresolved": its rounds spread too widely to tell the
+sides apart. Exits 1 when the hashes differ, 2 when a side fails to build
+or run. Standard library only.
 """
 import argparse
 import os
@@ -73,6 +75,14 @@ def fmt(v):
     return f"{v:,.1f}" if v >= 100 else f"{v:.3f}"
 
 
+def quartiles(xs):
+    """(first quartile, median, third quartile) of the per-round times."""
+    if len(xs) == 1:
+        return xs[0], xs[0], xs[0]
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, q2, q3
+
+
 def main(argv=None, prepare=prepare_side):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--parent", required=True, help="directory or git revision")
@@ -102,16 +112,14 @@ def main(argv=None, prepare=prepare_side):
             return 2
 
     groups = [g for g in times["parent"][0] if g != "sink"]
-    print(f"\nper-call label time (us), median of {args.rounds} alternating rounds [min, max]:")
+    print(f"\nper-call label time (us), median of {args.rounds} alternating rounds [q1, q3]:")
     print(f"  {'vertices':<9} {'parent':>26} {'change':>26}  change/parent")
     for g in groups:
-        cells = []
-        meds = {}
-        for s in SIDES:
-            xs = [t[g] for t in times[s]]
-            meds[s] = statistics.median(xs)
-            cells.append(f"{fmt(meds[s])} [{fmt(min(xs))}, {fmt(max(xs))}]")
-        print(f"  {g:<9} {cells[0]:>26} {cells[1]:>26}  {meds['change'] / meds['parent']:.3f}")
+        q = {s: quartiles([t[g] for t in times[s]]) for s in SIDES}
+        cells = [f"{fmt(q[s][1])} [{fmt(q[s][0])}, {fmt(q[s][2])}]" for s in SIDES]
+        overlap = q["parent"][0] <= q["change"][2] and q["change"][0] <= q["parent"][2]
+        print(f"  {g:<9} {cells[0]:>26} {cells[1]:>26}  {q['change'][1] / q['parent'][1]:.3f}"
+              + ("  unresolved" if overlap else ""))
     return 0 if same else 1
 
 

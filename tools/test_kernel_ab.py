@@ -73,6 +73,33 @@ class VerdictTest(unittest.TestCase):
         self.assertEqual(code, 1)
         self.assertIn("hashes: DIFFER", out)
 
+    def test_quartiles_print_and_overlapping_ranges_are_unresolved(self):
+        # per-round times: "6" spreads on both sides so the quartile ranges
+        # overlap; "norway" is apart on every round
+        rounds = {"parent": iter([(10.0, 300.0), (14.0, 310.0), (12.0, 290.0), (11.0, 305.0), (13.0, 295.0)]),
+                  "change": iter([(11.0, 150.0), (15.0, 155.0), (9.0, 145.0), (12.0, 152.0), (13.0, 148.0)])}
+
+        def prepare(arg, tmp, name):
+            def run(mode):
+                if mode == "hash":
+                    return HASH
+                six, norway = next(rounds[name])
+                return {"6": six, "norway": norway, "sink": "0"}
+            return run
+        code, out = quiet(["--parent", "a", "--change", "b", "--rounds", "5"], prepare)
+        self.assertEqual(code, 0)
+        self.assertIn("[q1, q3]", out)
+        self.assertRegex(out, r"6 +12\.000 \[11\.000, 13\.000\] +12\.000 \[11\.000, 13\.000\] +1\.000  unresolved")
+        self.assertRegex(out, r"norway +300\.0 \[295\.0, 305\.0\] +150\.0 \[148\.0, 152\.0\] +0\.500\n")
+
+    def test_touching_ranges_are_unresolved(self):
+        self.assertEqual(kernel_ab.quartiles([5.0]), (5.0, 5.0, 5.0))
+        calls = []
+        _, out = quiet(["--parent", "a", "--change", "b", "--rounds", "1"],
+                       fake({"parent": HASH, "change": HASH}, calls))
+        self.assertRegex(out, r"6 +10\.000 \[10\.000, 10\.000\] +10\.000 \[10\.000, 10\.000\] +1\.000  unresolved")
+        self.assertNotRegex(out, r"norway.*unresolved")
+
     def test_a_failing_side_exits_2(self):
         def prepare(arg, tmp, name):
             raise kernel_ab.SideError("no build")
