@@ -114,11 +114,14 @@ object ExprHelpers {
   def cover(poly: PolygonG, level: Int): ArrayData =
     UnsafeArrayData.fromPrimitiveArray(CellIndex.cover(poly, level))
 
+  /** Even-odd point-in-polygon: the sign bit of the kernel's signed
+    * distance (clear inside; -0.0 is an outside point on the outline).
+    */
   def pip(x: Double, y: Double, poly: PolygonG): Boolean =
-    Geom.pointInPolygon(x, y, poly)
+    java.lang.Double.doubleToRawLongBits(Polylabel.signedDistance(x, y, poly)) >= 0L
 
   def signedDist(x: Double, y: Double, poly: PolygonG): Double =
-    Polylabel.signedDistance(x, y, Polylabel.prepare(poly))
+    Polylabel.signedDistance(x, y, poly)
 
   private val nanRow: InternalRow = {
     val r = new GenericInternalRow(3)

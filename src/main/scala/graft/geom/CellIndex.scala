@@ -196,7 +196,7 @@ object CellIndex {
           val gx = arr(i) + 1
           val cx = MinX + (gx.toDouble + 0.5) * cw
           val cy = MinY + (iy.toDouble + 0.5) * ch
-          if (Geom.pointInPolygon(cx, cy, poly)) {
+          if (java.lang.Double.doubleToRawLongBits(Polylabel.signedDistance(cx, cy, poly)) >= 0L) {
             var x = gx
             while (x < arr(i + 1)) { out += pack(x, iy, level); x += 1 }
           }

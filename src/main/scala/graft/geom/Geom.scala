@@ -14,16 +14,107 @@ final case class Rect2(minX: Double, minY: Double, maxX: Double, maxY: Double) {
   def centerY: Double = (maxY + minY) / 2.0
 }
 
-/** A closed linear ring. `xs`/`ys` always carry the duplicated closing
-  * vertex (the constructor appends it when absent, mirroring geo's
-  * `Polygon::new` ring closing). Edge `i` runs from vertex `i` to `i+1`.
+/** A closed linear ring, indexed for the distance scan. `xs`/`ys` always
+  * carry the duplicated closing vertex (the constructor appends it when
+  * absent, mirroring geo's `Polygon::new` ring closing). Edge `i` runs from
+  * vertex `i` to `i+1`.
+  *
+  * The index groups the edges into fixed-size blocks, one bounding box per
+  * block, so `Polylabel.signedDistance` can pick the block nearest a probe,
+  * skip whole blocks in O(1) when they cannot hold a nearer edge, and take
+  * the parity of a block lying wholly right of the probe from its two chain
+  * endpoints. The 32-edge blocks re-derive the reference's prepared-polygon
+  * structure (reference src/lib.rs:89-161); every ring is built with them,
+  * once, so every consumer of a decoded polygon reads the same index.
+  *
+  * Block `b` holds edges `b*BlockSize until min((b+1)*BlockSize, nEdges)`;
+  * its bbox spans their endpoints, vertices `start..end` inclusive. A block
+  * holding a NaN coordinate gets an all-NaN bbox (a NaN vertex would
+  * otherwise be invisible to the min/max), so every bound test on it is
+  * false and the scan always visits its edges one by one.
+  *
+  * The second level is not the reference's: superblock `s` groups blocks
+  * `s*SuperSize until min((s+1)*SuperSize, nBlocks)` under one bbox, the
+  * union of theirs, all-NaN when any of them is, so the scan can skip or
+  * settle the parity of `SuperSize * BlockSize` edges with one box test.
+  * A ring of one superblock (at most `SuperSize * BlockSize` edges) keeps
+  * no superblock bbox, and the scan never tests one for it.
   */
 final class Ring private (val xs: Array[Double], val ys: Array[Double]) {
+  import Polylabel.{BlockSize, SuperSize}
   def nVertices: Int = xs.length
-  def nEdges: Int = math.max(xs.length - 1, 0)
+  val nEdges: Int = math.max(xs.length - 1, 0)
+  // NOTE: precomputing per-edge deltas/lengths was measured 2.3x SLOWER
+  // than recomputing them in the scan — the probe loop is memory-bound and
+  // three extra arrays (212 KB for Norway) evict the vertex data from L2
+  val nBlocks: Int = if (nEdges == 0) 0 else (nEdges + BlockSize - 1) / BlockSize
+  val bMinX: Array[Double] = Ring.boxes(nBlocks)
+  val bMinY: Array[Double] = Ring.boxes(nBlocks)
+  val bMaxX: Array[Double] = Ring.boxes(nBlocks)
+  val bMaxY: Array[Double] = Ring.boxes(nBlocks)
+  val nSupers: Int = (nBlocks + SuperSize - 1) / SuperSize
+  private def superBoxes = if (nSupers > 1) nSupers else 0
+  val sMinX: Array[Double] = Ring.boxes(superBoxes)
+  val sMinY: Array[Double] = Ring.boxes(superBoxes)
+  val sMaxX: Array[Double] = Ring.boxes(superBoxes)
+  val sMaxY: Array[Double] = Ring.boxes(superBoxes)
+  fillBoxes()
+
+  // A method, not a constructor block: scalac's `locally` leaves a value
+  // on the operand stack, HotSpot cannot OSR-compile a loop entered that
+  // way, and the loop ran interpreted until the constructor itself got
+  // compiled (Norway's box fill under C1: ~1.0 ms after 190 calls, against
+  // ~0.11 ms as a method).
+  private def fillBoxes(): Unit = {
+    var b = 0
+    while (b < nBlocks) {
+      val start = b * BlockSize
+      val end = math.min(start + BlockSize, nEdges)
+      var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
+      var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
+      var nan = false
+      var i = start
+      // every edge endpoint, i.e. vertices start..end inclusive
+      while (i <= end) {
+        val x = xs(i); val y = ys(i)
+        if (x < minX) minX = x
+        if (x > maxX) maxX = x
+        if (y < minY) minY = y
+        if (y > maxY) maxY = y
+        if (x != x || y != y) nan = true
+        i += 1
+      }
+      if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
+      bMinX(b) = minX; bMinY(b) = minY; bMaxX(b) = maxX; bMaxY(b) = maxY
+      b += 1
+    }
+    var s = 0
+    while (s < superBoxes) {
+      var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
+      var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
+      var nan = false
+      b = s * SuperSize
+      val end = math.min(b + SuperSize, nBlocks)
+      while (b < end) {
+        if (bMinX(b) < minX) minX = bMinX(b)
+        if (bMaxX(b) > maxX) maxX = bMaxX(b)
+        if (bMinY(b) < minY) minY = bMinY(b)
+        if (bMaxY(b) > maxY) maxY = bMaxY(b)
+        if (bMinX(b) != bMinX(b)) nan = true
+        b += 1
+      }
+      if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
+      sMinX(s) = minX; sMinY(s) = minY; sMaxX(s) = maxX; sMaxY(s) = maxY
+      s += 1
+    }
+  }
 }
 
 object Ring {
+  private val NoBoxes = new Array[Double](0)
+  // a ring of one superblock shares one empty array for its four
+  private def boxes(n: Int): Array[Double] = if (n == 0) NoBoxes else new Array[Double](n)
+
   def apply(pts: Iterable[(Double, Double)]): Ring =
     of(pts.map(_._1).toArray, pts.map(_._2).toArray)
 
@@ -40,7 +131,7 @@ final class PolygonG(val exterior: Ring, val holes: Array[Ring]) {
   /** Exterior first, then holes — the ring iteration order the reference
     * uses in its distance scan (/root/reference/src/lib.rs:116-118).
     */
-  def rings: Array[Ring] = exterior +: holes
+  val rings: Array[Ring] = exterior +: holes
 }
 
 object PolygonG {
@@ -173,7 +264,10 @@ object Geom {
   }
 
   /** Even-odd ray-cast point-in-polygon over all rings (a point inside a
-    * hole gets odd-parity flipped back to outside).
+    * hole gets odd-parity flipped back to outside), edge by edge: the
+    * per-edge reference for tests and oracles. The engine tests points by
+    * the sign bit of [[Polylabel.signedDistance]], which equals this bit
+    * for bit and skips blocks through the ring index.
     */
   def pointInPolygon(px: Double, py: Double, p: PolygonG): Boolean = {
     var inside = false

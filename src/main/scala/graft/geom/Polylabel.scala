@@ -3,98 +3,6 @@ package graft.geom
 /** Pole-of-inaccessibility label point + its distance to the outline. */
 final case class LabelResult(x: Double, y: Double, dist: Double)
 
-/** A ring pre-decomposed for the distance scan: edges grouped into
-  * fixed-size blocks, one bounding box per block, so `signedDistance` can
-  * pick the block nearest a probe, skip whole blocks in O(1) when they
-  * cannot hold a nearer edge, and take the parity of a block lying wholly
-  * right of the probe from its two chain endpoints. The 32-edge blocks
-  * re-derive the reference's prepared-polygon structure (reference
-  * src/lib.rs:89-161).
-  *
-  * Block `b` holds edges `b*BlockSize until min((b+1)*BlockSize, nEdges)`;
-  * its bbox spans their endpoints, vertices `start..end` inclusive. A block
-  * holding a NaN coordinate gets an all-NaN bbox (a NaN vertex would
-  * otherwise be invisible to the min/max), so every bound test on it is
-  * false and the scan always visits its edges one by one.
-  *
-  * The second level is not the reference's: superblock `s` groups blocks
-  * `s*SuperSize until min((s+1)*SuperSize, nBlocks)` under one bbox, the
-  * union of theirs, all-NaN when any of them is, so the scan can skip or
-  * settle the parity of `SuperSize * BlockSize` edges with one box test.
-  * A ring of one superblock (at most `SuperSize * BlockSize` edges) keeps
-  * no superblock bbox, and the scan never tests one for it.
-  */
-final class PreparedRing(ring: Ring) {
-  import Polylabel.{BlockSize, SuperSize}
-  val xs: Array[Double] = ring.xs
-  val ys: Array[Double] = ring.ys
-  val nEdges: Int = ring.nEdges
-  // NOTE: precomputing per-edge deltas/lengths was measured 2.3x SLOWER
-  // than recomputing them in the scan — the probe loop is memory-bound and
-  // three extra arrays (212 KB for Norway) evict the vertex data from L2
-  val nBlocks: Int = if (nEdges == 0) 0 else (nEdges + BlockSize - 1) / BlockSize
-  val bMinX = new Array[Double](nBlocks)
-  val bMinY = new Array[Double](nBlocks)
-  val bMaxX = new Array[Double](nBlocks)
-  val bMaxY = new Array[Double](nBlocks)
-  val nSupers: Int = (nBlocks + SuperSize - 1) / SuperSize
-  private val superBoxes = if (nSupers > 1) nSupers else 0
-  val sMinX = new Array[Double](superBoxes)
-  val sMinY = new Array[Double](superBoxes)
-  val sMaxX = new Array[Double](superBoxes)
-  val sMaxY = new Array[Double](superBoxes)
-  fillBoxes()
-
-  // A method, not a constructor block: scalac's `locally` leaves a value
-  // on the operand stack, HotSpot cannot OSR-compile a loop entered that
-  // way, and the loop ran interpreted until the constructor itself got
-  // compiled (Norway's prepare under C1: ~1.0 ms after 190 calls, against
-  // ~0.11 ms as a method).
-  private def fillBoxes(): Unit = {
-    var b = 0
-    while (b < nBlocks) {
-      val start = b * BlockSize
-      val end = math.min(start + BlockSize, nEdges)
-      var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
-      var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
-      var nan = false
-      var i = start
-      // every edge endpoint, i.e. vertices start..end inclusive
-      while (i <= end) {
-        val x = xs(i); val y = ys(i)
-        if (x < minX) minX = x
-        if (x > maxX) maxX = x
-        if (y < minY) minY = y
-        if (y > maxY) maxY = y
-        if (x != x || y != y) nan = true
-        i += 1
-      }
-      if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
-      bMinX(b) = minX; bMinY(b) = minY; bMaxX(b) = maxX; bMaxY(b) = maxY
-      b += 1
-    }
-    var s = 0
-    while (s < superBoxes) {
-      var minX = Double.PositiveInfinity; var minY = Double.PositiveInfinity
-      var maxX = Double.NegativeInfinity; var maxY = Double.NegativeInfinity
-      var nan = false
-      b = s * SuperSize
-      val end = math.min(b + SuperSize, nBlocks)
-      while (b < end) {
-        if (bMinX(b) < minX) minX = bMinX(b)
-        if (bMaxX(b) > maxX) maxX = bMaxX(b)
-        if (bMinY(b) < minY) minY = bMinY(b)
-        if (bMaxY(b) > maxY) maxY = bMaxY(b)
-        if (bMinX(b) != bMinX(b)) nan = true
-        b += 1
-      }
-      if (nan) { minX = Double.NaN; minY = Double.NaN; maxX = Double.NaN; maxY = Double.NaN }
-      sMinX(s) = minX; sMinY(s) = minY; sMaxX(s) = maxX; sMaxY(s) = maxY
-      s += 1
-    }
-  }
-}
-
 /** Binary max-heap of quadtree search nodes (reference `Qcell`,
   * /root/reference/src/lib.rs:27-58: cell centroid, half extent, signed
   * distance of the centroid, and the admissible upper bound
@@ -268,7 +176,7 @@ object Polylabel {
   /** Edges per skip-block (reference BLOCK_SIZE, src/lib.rs:90). */
   final val BlockSize = 32
 
-  /** Blocks per superblock, the second bbox level of [[PreparedRing]]
+  /** Blocks per superblock, the second bbox level of [[Ring]]
     * (ours, not the reference's): 8 blocks = 256 edges. Counted inside
     * `polylabel` on seed-1 `label_skewed` polygons, box tests per
     * `signedDistance` probe (edge-scanned blocks per probe), one level
@@ -283,8 +191,6 @@ object Polylabel {
   final val SuperSize = 8
 
   private val Sqrt2 = math.sqrt(2.0)
-
-  def prepare(p: PolygonG): Array[PreparedRing] = p.rings.map(new PreparedRing(_))
 
   /** Relative guard of the endpoint-parity shortcut in [[signedDistance]]
     * (derivation there). The worst-case error it must cover is ~3.1u with
@@ -396,8 +302,15 @@ object Polylabel {
 
   /** Signed distance from (px,py) to the polygon outline: positive inside,
     * negative outside. One pass over all rings accumulates both the even-odd
-    * ray-cast parity and the minimum point-to-edge distance.
+    * ray-cast parity and the minimum point-to-edge distance, reading the
+    * block index every [[Ring]] carries.
     * Arithmetic mirrors /root/reference/src/lib.rs:163-233 for f64 parity.
+    *
+    * The sign bit is the even-odd parity, exactly: clear inside, set
+    * outside (-0.0 for an outside point on the outline). So
+    * `doubleToRawLongBits(signedDistance(x, y, poly)) >= 0` is the engine's
+    * one point-in-polygon test (`pip`, the cover's gap fill, `rasterize`),
+    * equal to [[Geom.pointInPolygon]] on every input.
     *
     * Visit order. When the polygon has more than one block, one pass first
     * picks the seed: the first box, in ring order, with the smallest
@@ -458,7 +371,8 @@ object Polylabel {
     * is monotone, so its bound never exceeds theirs. Parity is an XOR of
     * per-edge flips, so it cannot change either.
     */
-  def signedDistance(px: Double, py: Double, rings: Array[PreparedRing]): Double = {
+  def signedDistance(px: Double, py: Double, poly: PolygonG): Double = {
+    val rings = poly.rings
     // a lone block: no bound can skip it, so its edges are scanned at once
     // (scanEdges' sign bit is set inside, the opposite of this result's)
     if (rings.length == 1 && rings(0).nBlocks == 1) {
@@ -595,8 +509,8 @@ object Polylabel {
   }
 
   @inline private def appendCell(queue: CellHeap, cx: Double, cy: Double,
-                                 halfExtent: Double, rings: Array[PreparedRing]): Unit = {
-    val d = signedDistance(cx, cy, rings)
+                                 halfExtent: Double, poly: PolygonG): Unit = {
+    val d = signedDistance(cx, cy, poly)
     queue.append(cx, cy, halfExtent, d, d + halfExtent * Sqrt2)
   }
 
@@ -663,12 +577,11 @@ object Polylabel {
   private def search(poly: PolygonG, tolerance: Double, bbox: Rect2,
                      cellSize: Double, c: Pt): LabelResult = {
     var halfExtent = cellSize / 2.0
-    val rings = prepare(poly)
 
     // initial guesses: polygon centroid and bbox center, with the
     // reference's seed selection (src/lib.rs:361-374)
-    val centroidDist = signedDistance(c.x, c.y, rings)
-    val bboxDist = signedDistance(bbox.centerX, bbox.centerY, rings)
+    val centroidDist = signedDistance(c.x, c.y, poly)
+    val bboxDist = signedDistance(bbox.centerX, bbox.centerY, poly)
     var bestX = c.x; var bestY = c.y; var bestDist = centroidDist
     if (bboxDist < centroidDist) {
       bestX = bbox.centerX; bestY = bbox.centerY; bestDist = bboxDist
@@ -713,7 +626,7 @@ object Polylabel {
         while (gy < ny) {
           val px = (bbox.minX + gx.toDouble * gridCellSize) + seedHalf
           val py = (bbox.minY + gy.toDouble * gridCellSize) + seedHalf
-          appendCell(queue, px, py, seedHalf, rings)
+          appendCell(queue, px, py, seedHalf, poly)
           gy += 1
         }
         gx += 1
@@ -732,10 +645,10 @@ object Polylabel {
       if (queue.maxDistance - bestDist > tolerance) {
         halfExtent = queue.halfExtent / 2.0
         queue.beginExtend(4)
-        appendCell(queue, cellX - halfExtent, cellY - halfExtent, halfExtent, rings)
-        appendCell(queue, cellX + halfExtent, cellY - halfExtent, halfExtent, rings)
-        appendCell(queue, cellX - halfExtent, cellY + halfExtent, halfExtent, rings)
-        appendCell(queue, cellX + halfExtent, cellY + halfExtent, halfExtent, rings)
+        appendCell(queue, cellX - halfExtent, cellY - halfExtent, halfExtent, poly)
+        appendCell(queue, cellX + halfExtent, cellY - halfExtent, halfExtent, poly)
+        appendCell(queue, cellX - halfExtent, cellY + halfExtent, halfExtent, poly)
+        appendCell(queue, cellX + halfExtent, cellY + halfExtent, halfExtent, poly)
         queue.finishExtend(4)
       }
     }

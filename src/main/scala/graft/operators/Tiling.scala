@@ -1,8 +1,8 @@
 package graft.operators
 
 import graft.functions.GraftFunctions._
-import graft.geom.{PolygonG, Geom, Polylabel, Ring}
-import graft.sources.Images
+import graft.geom.Polylabel
+import graft.sources.{GeoTables, Images}
 import java.awt.image.BufferedImage
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -104,8 +104,7 @@ object Tiling {
     polygons.select("poly_id", "exterior", "holes")
       .as[RastIn]
       .flatMap { case RastIn(id, ext, holes) =>
-        val poly = new PolygonG(Ring(ext.map(p => (p.x, p.y))),
-          Option(holes).getOrElse(Seq.empty).map(h => Ring(h.map(p => (p.x, p.y)))).toArray)
+        val poly = GeoTables.polygonOf(ext, holes)
         graft.geom.CellIndex.cover(poly, level).map { cell =>
           val r = graft.geom.CellIndex.cellRect(cell)
           var hit = 0
@@ -115,7 +114,7 @@ object Tiling {
             while (j < samples) {
               val px = r.minX + (i + 0.5) / samples * r.width
               val py = r.minY + (j + 0.5) / samples * r.height
-              if (Geom.pointInPolygon(px, py, poly)) hit += 1
+              if (java.lang.Double.doubleToRawLongBits(Polylabel.signedDistance(px, py, poly)) >= 0L) hit += 1
               j += 1
             }
             i += 1

@@ -15,11 +15,11 @@ final case class PointRow(point_id: Long, x: Double, y: Double)
   */
 object GeoTables {
 
-  private def toRow(name: String, p: PolygonG, tol: Double): PolyRow =
-    PolyRow(name,
-      p.exterior.xs.indices.map(i => PtRow(p.exterior.xs(i), p.exterior.ys(i))),
-      p.holes.toSeq.map(h => h.xs.indices.map(i => PtRow(h.xs(i), h.ys(i)))),
-      tol)
+  /** Kernel polygon -> PolyRow, closing vertices included. */
+  def toRow(name: String, p: PolygonG, tol: Double): PolyRow = {
+    def pts(r: Ring) = r.xs.indices.map(i => PtRow(r.xs(i), r.ys(i)))
+    PolyRow(name, pts(p.exterior), p.holes.toSeq.map(pts), tol)
+  }
 
   /** The nine reference fixtures as a DataFrame. */
   def fixtures(spark: SparkSession): Dataset[PolyRow] = {
@@ -128,7 +128,14 @@ object GeoTables {
   }
 
   /** PolyRow -> kernel polygon (driver-side tests / oracles). */
-  def toPolygon(r: PolyRow): PolygonG =
-    new PolygonG(Ring(r.exterior.map(p => (p.x, p.y))),
-      r.holes.map(h => Ring(h.map(p => (p.x, p.y)))).toArray)
+  def toPolygon(r: PolyRow): PolygonG = polygonOf(r.exterior, r.holes)
+
+  /** Typed-row rings -> kernel polygon. Null holes mean no holes, as in
+    * the polygon expressions' decode.
+    */
+  def polygonOf(exterior: Seq[PtRow], holes: Seq[Seq[PtRow]]): PolygonG = {
+    def ring(pts: Seq[PtRow]) = Ring.of(pts.map(_.x).toArray, pts.map(_.y).toArray)
+    new PolygonG(ring(exterior),
+      if (holes == null) Array.empty[Ring] else holes.map(ring).toArray)
+  }
 }

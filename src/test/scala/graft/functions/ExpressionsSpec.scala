@@ -1,8 +1,9 @@
 package graft.functions
 
 import graft.TestSpark
+import graft.gen.SparkModes._
 import graft.geom._
-import graft.sources.{GeoTables, PolyRow, PtRow}
+import graft.sources.{GeoTables, PolyRow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -116,8 +117,7 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("signed_dist through SQL equals kernel signedDistance") {
-    val want = Polylabel.signedDistance(35.0, 35.0,
-      Polylabel.prepare(Fixtures.squareWithHole))
+    val want = Polylabel.signedDistance(35.0, 35.0, Fixtures.squareWithHole)
     GeoTables.fixtures(spark).where($"poly_id" === "square_with_hole")
       .createOrReplaceTempView("sq_hole2")
     val got = spark.sql(
@@ -160,23 +160,6 @@ class ExpressionsSpec extends AnyFunSuite {
 
   // ---- ring decode: UnsafeArrayData read in place vs the per-element path
 
-  private val codegenConf = Seq("spark.sql.codegen.wholeStage" -> "true",
-    "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY", "spark.sql.codegen.fallback" -> "false")
-  private val interpretedConf = Seq("spark.sql.codegen.wholeStage" -> "false",
-    "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-
-  private def withConf[T](kv: Seq[(String, String)])(f: => T): T = {
-    val orig = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try f
-    finally orig.foreach { case (k, o) => o.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
-  }
-
-  private def polyRow(name: String, p: PolygonG, tol: Double): PolyRow = {
-    def pts(r: Ring) = r.xs.indices.map(i => PtRow(r.xs(i), r.ys(i)))
-    PolyRow(name, pts(p.exterior), p.holes.toSeq.map(pts), tol)
-  }
-
   /** The fixtures (Norway's 8,854-vertex ring among them) and a 600-vertex
     * star with a 300-vertex star hole: rings of one block up to 35
     * superblocks.
@@ -185,7 +168,7 @@ class ExpressionsSpec extends AnyFunSuite {
     val ext = GeoTables.syntheticPolygon(1L, 5.0, 50.0, 1.0, 600).exterior
     val hole = GeoTables.syntheticPolygon(2L, 5.0, 50.0, 0.3, 300).exterior
     val star = new PolygonG(ext, Array(Ring.of(hole.xs.reverse, hole.ys.reverse)))
-    Fixtures.all.map { case (n, p, t) => polyRow(n, p, t) } :+ polyRow("star600_hole300", star, 0.001)
+    Fixtures.all.map { case (n, p, t) => GeoTables.toRow(n, p, t) } :+ GeoTables.toRow("star600_hole300", star, 0.001)
   }
 
   /** The four polygon expressions on the (E)xterior and (H)oles arguments,
@@ -202,14 +185,6 @@ class ExpressionsSpec extends AnyFunSuite {
       probes.flatMap { case (x, y) => Seq(s"signed_dist($x, $y, %E, %H)", s"pip($x, $y, %E, %H)") }
   }
 
-  /** `exterior`/`holes` rebuilt by `transform` inside the same projection:
-    * `GenericArrayData` of `GenericInternalRow` points (a null point stays
-    * null).
-    */
-  private val rebuiltExterior = "transform(exterior, p -> IF(p IS NULL, NULL, named_struct('x', p.x, 'y', p.y)))"
-  private val rebuiltHoles =
-    "transform(holes, r -> transform(r, p -> IF(p IS NULL, NULL, named_struct('x', p.x, 'y', p.y))))"
-
   /** poly_id -> (decode probe, bit patterns of every call's result). */
   private def decodeResults(df: DataFrame, rebuilt: Boolean): Map[String, (String, Seq[Any])] = {
     val (e, h) = if (rebuilt) (rebuiltExterior, rebuiltHoles) else ("exterior", "holes")
@@ -225,23 +200,6 @@ class ExpressionsSpec extends AnyFunSuite {
       r.getString(0) -> (r.getString(1), r.toSeq.drop(2).map(bits))).toMap
   }
 
-  /** The polygon frame as read from a cache and from parquet, each with the
-    * `ArrayData` class its rings reach the polygon expressions as, by mode:
-    * the cache's rows are unsafe rows, and so are parquet's interpreted
-    * rows, but whole-stage codegen reads the vectorized parquet reader's
-    * column vectors in place, as views that take the per-element decode.
-    */
-  private def storedFrames(df: DataFrame, name: String)(
-      f: Seq[(String, DataFrame, String => String)] => Unit): Unit = {
-    val dir = java.nio.file.Files.createTempDirectory(name).toString
-    df.write.mode("overwrite").parquet(dir)
-    val cached = df.cache()
-    cached.count()
-    try f(Seq(("cached", cached, _ => "UnsafeArrayData"),
-      ("parquet", spark.read.parquet(dir), m => if (m == "codegen") "ColumnarArray" else "UnsafeArrayData")))
-    finally cached.unpersist()
-  }
-
   test("cached (UnsafeArrayData) and parquet-read rings decode bit-identically to rings built in-query (codegen and interpreted)") {
     val base = decodeRows.toDF()
     // points with a third field: the decode reads x and y as it does for two
@@ -249,7 +207,7 @@ class ExpressionsSpec extends AnyFunSuite {
       "transform(exterior, p -> named_struct('x', p.x, 'y', p.y, 'z', -1D)) AS exterior",
       "transform(holes, r -> transform(r, p -> named_struct('x', p.x, 'y', p.y, 'z', -1D))) AS holes",
       "tolerance")
-    for ((mode, conf) <- Seq("codegen" -> codegenConf, "eval" -> interpretedConf)) {
+    for ((mode, conf) <- modes) {
       val want = withConf(conf)(decodeResults(base.cache(), rebuilt = true))
       assert(want.size === decodeRows.size)
       assert(want.values.map(_._1).toSet === Set(s"$mode:GenericArrayData"), mode)
@@ -290,7 +248,7 @@ class ExpressionsSpec extends AnyFunSuite {
       s"IF(id = 0, $ell, $sq) AS exterior", s"IF(id = 0, array(), array($hole)) AS holes",
       "0.1D AS tolerance")
     storedFrames(df, "decode_null_point") { frames =>
-      for ((mode, conf) <- Seq("codegen" -> codegenConf, "eval" -> interpretedConf);
+      for ((mode, conf) <- modes;
            (source, stored, arrayClass) <- frames; rebuilt <- Seq(false, true)) {
         val what = s"$mode, $source, ${if (rebuilt) "in-query" else "stored"}"
         val got = withConf(conf)(decodeResults(stored, rebuilt))

@@ -24,10 +24,9 @@ class JtsDifferentialSpec extends AnyFunSuite {
     val j = jts(poly)
     val boundary = j.getBoundary
     val covers = PreparedGeometryFactory.prepare(j)
-    val rings = Polylabel.prepare(poly)
     var signed = 0
     for ((x, y) <- probes) {
-      val sd = Polylabel.signedDistance(x, y, rings)
+      val sd = Polylabel.signedDistance(x, y, poly)
       val pt = gf.createPoint(new Coordinate(x, y))
       val dj = boundary.distance(pt)
       assert(math.abs(math.abs(sd) - dj) <= 1e-12 * dj,

@@ -19,15 +19,13 @@ class NorwayCrossCheckSpec extends AnyFunSuite {
 
   test("golden label is feasible: clearance at the pinned point equals dist") {
     val poly = Fixtures.norway
-    val rings = Polylabel.prepare(poly)
-    val d = Polylabel.signedDistance(10.29301152092468, 61.6784192527327, rings)
+    val d = Polylabel.signedDistance(10.29301152092468, 61.6784192527327, poly)
     assert(d === 1.636877832493017) // the pinned golden distance, exactly
     assert(Geom.pointInPolygon(10.29301152092468, 61.6784192527327, poly))
   }
 
   test("golden label is optimal within tolerance: exhaustive grid + refinement") {
     val poly = Fixtures.norway
-    val rings = Polylabel.prepare(poly)
     val bb = Geom.boundingRect(poly.exterior)
     val golden = 1.636877832493017
     val tol = 1.0 // the tolerance the golden was computed at
@@ -47,7 +45,7 @@ class NorwayCrossCheckSpec extends AnyFunSuite {
       while (gx < n) {
         val x = bb.minX + (gx + 0.5) * sx
         val y = bb.minY + (gy + 0.5) * sy
-        val d = Polylabel.signedDistance(x, y, rings)
+        val d = Polylabel.signedDistance(x, y, poly)
         if (d > best - 0.3) { // keep everything near the running best
           cand ::= ((x, y, d))
           if (d > best) best = d
@@ -66,7 +64,7 @@ class NorwayCrossCheckSpec extends AnyFunSuite {
       while (iy <= m) {
         var ix = -m
         while (ix <= m) {
-          val d = Polylabel.signedDistance(cx + ix * rx, cy + iy * ry, rings)
+          val d = Polylabel.signedDistance(cx + ix * rx, cy + iy * ry, poly)
           if (d > refined) refined = d
           ix += 1
         }

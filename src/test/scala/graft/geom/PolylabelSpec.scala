@@ -1,5 +1,6 @@
 package graft.geom
 
+import graft.gen.BruteForce
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Kernel correctness: the reference's own unit tests, ported with their
@@ -144,22 +145,11 @@ class PolylabelSpec extends AnyFunSuite {
       val pts = Seq.tabulate(n)(_ =>
         (rnd.nextDouble() * 20.0 - 10.0, rnd.nextDouble() * 20.0 - 10.0))
       val poly = PolygonG(pts :+ pts.head)
-      val prepared = Polylabel.prepare(poly)
       for (_ <- 0 until 40) {
         val px = rnd.nextDouble() * 30.0 - 15.0
         val py = rnd.nextDouble() * 30.0 - 15.0
-        val got = Polylabel.signedDistance(px, py, prepared)
-        var mn = Double.PositiveInfinity
-        for (ring <- poly.rings) {
-          var i = 0
-          while (i < ring.nEdges) {
-            val d = Geom.segmentDistance(px, py,
-              ring.xs(i), ring.ys(i), ring.xs(i + 1), ring.ys(i + 1))
-            if (d < mn) mn = d
-            i += 1
-          }
-        }
-        val want = if (Geom.pointInPolygon(px, py, poly)) mn else -mn
+        val got = Polylabel.signedDistance(px, py, poly)
+        val want = BruteForce.signedDistance(px, py, poly)
         assert(java.lang.Double.doubleToLongBits(got) ===
           java.lang.Double.doubleToLongBits(want),
           s"kernel $got != per-edge $want at ($px, $py)")
@@ -189,11 +179,10 @@ class PolylabelSpec extends AnyFunSuite {
         star(3 + rnd.nextInt(400), 0.2 * (j - 1), 0.1 * (j % 2), 0.05).reverse
       }
       val poly = PolygonG(star(n, 0.0, 0.0, 1.0), holes)
-      val prepared = Polylabel.prepare(poly)
       val bb = Geom.boundingRect(poly.exterior)
       def check(px: Double, py: Double): Unit = {
-        val got = Polylabel.signedDistance(px, py, prepared)
-        val want = perEdgeSignedDistance(px, py, poly)
+        val got = Polylabel.signedDistance(px, py, poly)
+        val want = BruteForce.signedDistance(px, py, poly)
         assert(java.lang.Double.doubleToLongBits(got) ===
           java.lang.Double.doubleToLongBits(want),
           s"seed $seed (n=$n, holes=${holes.size}, scale=$scale, offset=$offset): " +
@@ -212,7 +201,7 @@ class PolylabelSpec extends AnyFunSuite {
           i += step
         }
       }
-      for (r <- prepared; b <- 0 until r.nBlocks if rnd.nextInt(4) == 0) {
+      for (r <- poly.rings; b <- 0 until r.nBlocks if rnd.nextInt(4) == 0) {
         val bminX = r.bMinX(b); val bmaxX = r.bMaxX(b)
         // a y the block straddles: one of its vertex ys below bmaxY
         val start = b * Polylabel.BlockSize
@@ -236,10 +225,9 @@ class PolylabelSpec extends AnyFunSuite {
     val pts = Seq.tabulate(40)(i => (if (i == 20) Double.NaN else 10.0, i.toDouble)) ++
       Seq((-10.0, 39.0), (-10.0, 0.0))
     val poly = PolygonG(pts)
-    val prepared = Polylabel.prepare(poly)
     for ((px, py) <- Seq((5.0, 19.5), (-5.0, 19.5), (5.0, 25.0), (9.0, 3.5))) {
-      val got = Polylabel.signedDistance(px, py, prepared)
-      val want = perEdgeSignedDistance(px, py, poly)
+      val got = Polylabel.signedDistance(px, py, poly)
+      val want = BruteForce.signedDistance(px, py, poly)
       assert(java.lang.Double.doubleToLongBits(got) ===
         java.lang.Double.doubleToLongBits(want), s"kernel $got != per-edge $want at ($px, $py)")
     }
@@ -274,12 +262,11 @@ class PolylabelSpec extends AnyFunSuite {
       val holeCentres = Seq((-0.25, 0.0), (0.25, 0.05)).take(1 + rnd.nextInt(2))
       val holes = holeCentres.map { case (cx, cy) => star(300 + rnd.nextInt(901), cx, cy, 0.1, 0.2).reverse }
       val poly = PolygonG(ext, holes)
-      val prepared = Polylabel.prepare(poly)
-      assert(prepared.forall(_.nSupers >= 2), s"seed $seed: a ring of one superblock")
+      assert(poly.rings.forall(_.nSupers >= 2), s"seed $seed: a ring of one superblock")
       val bb = Geom.boundingRect(poly.exterior)
       def check(px: Double, py: Double): Unit = {
-        val got = Polylabel.signedDistance(px, py, prepared)
-        val want = perEdgeSignedDistance(px, py, poly)
+        val got = Polylabel.signedDistance(px, py, poly)
+        val want = BruteForce.signedDistance(px, py, poly)
         assert(java.lang.Double.doubleToLongBits(got) ===
           java.lang.Double.doubleToLongBits(want),
           s"seed $seed (n=$n, holes=${holes.map(_.size)}, scale=$scale, offset=$offset): " +
@@ -288,7 +275,7 @@ class PolylabelSpec extends AnyFunSuite {
       for (_ <- 0 until 30)
         check(bb.minX - 0.1 * bb.width + rnd.nextDouble() * 1.2 * bb.width,
           bb.minY - 0.1 * bb.height + rnd.nextDouble() * 1.2 * bb.height)
-      for (r <- prepared; sb <- 0 until r.nSupers) {
+      for (r <- poly.rings; sb <- 0 until r.nSupers) {
         val sminX = r.sMinX(sb); val smaxX = r.sMaxX(sb)
         val first = sb * superEdges
         val last = math.min(first + superEdges, r.nEdges)
@@ -313,7 +300,7 @@ class PolylabelSpec extends AnyFunSuite {
         for (i <- 0 until h.nEdges by 7) {
           val px = cx + 0.9 * (h.xs(i) - cx)
           val py = cy + 0.9 * (h.ys(i) - cy)
-          val bounds = for ((r, ri) <- prepared.zipWithIndex; sb <- 0 until r.nSupers) yield {
+          val bounds = for ((r, ri) <- poly.rings.zipWithIndex; sb <- 0 until r.nSupers) yield {
             val dx = math.max(math.max(r.sMinX(sb) - px, px - r.sMaxX(sb)), 0.0)
             val dy = math.max(math.max(r.sMinY(sb) - py, py - r.sMaxY(sb)), 0.0)
             (dx * dx + dy * dy, ri)
@@ -335,28 +322,12 @@ class PolylabelSpec extends AnyFunSuite {
     val pts = Seq.tabulate(601)(i => (if (i == 300) Double.NaN else 10.0, i.toDouble)) ++
       Seq((-10.0, 600.0), (-10.0, 0.0))
     val poly = PolygonG(pts)
-    val prepared = Polylabel.prepare(poly)
-    assert(prepared(0).nSupers === 3)
+    assert(poly.rings(0).nSupers === 3)
     for ((px, py) <- Seq((5.0, 299.5), (-5.0, 299.5), (5.0, 400.0), (9.0, 260.5), (5.0, 256.0))) {
-      val got = Polylabel.signedDistance(px, py, prepared)
-      val want = perEdgeSignedDistance(px, py, poly)
+      val got = Polylabel.signedDistance(px, py, poly)
+      val want = BruteForce.signedDistance(px, py, poly)
       assert(java.lang.Double.doubleToLongBits(got) ===
         java.lang.Double.doubleToLongBits(want), s"kernel $got != per-edge $want at ($px, $py)")
     }
-  }
-
-  /** The naive oracle: Geom.segmentDistance per edge plus Geom.pointInPolygon. */
-  private def perEdgeSignedDistance(px: Double, py: Double, poly: PolygonG): Double = {
-    var mn = Double.PositiveInfinity
-    for (ring <- poly.rings) {
-      var i = 0
-      while (i < ring.nEdges) {
-        val d = Geom.segmentDistance(px, py,
-          ring.xs(i), ring.ys(i), ring.xs(i + 1), ring.ys(i + 1))
-        if (d < mn) mn = d
-        i += 1
-      }
-    }
-    if (Geom.pointInPolygon(px, py, poly)) mn else -mn
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.TestSpark
 import graft.functions.GraftFunctions._
+import graft.gen.BruteForce
 import graft.sources.GeoTables
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -14,6 +15,11 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
 
   private lazy val polys = GeoTables.syntheticPolygons(spark, 25).toDF.cache()
   private lazy val points = GeoTables.syntheticPoints(spark, 2000).toDF.cache()
+  /** Every (point_id, poly_id) match, by `Geom.pointInPolygon` on the
+    * driver: a `pip`-filtered cross join would itself be planned as a
+    * cover join (`PipJoinRewrite`), so it could not catch a cover defect.
+    */
+  private lazy val brutePip = BruteForce.pipPairs(points, polys)
 
   // drop the suite-level caches so suites sharing the session (e.g. the
   // global leak tripwires in Bench) never see this suite's blocks
@@ -22,17 +28,13 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     points.unpersist(blocking = false)
   }
 
-  test("pipJoin == brute-force cross-join PIP at several levels") {
-    val brute = points.crossJoin(polys)
-      .where(pip($"x", $"y", $"exterior", $"holes"))
-      .select($"point_id", $"poly_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(brute.nonEmpty, "oracle must produce matches for the test to mean anything")
+  test("pipJoin == driver-side brute-force PIP at several levels") {
+    assert(brutePip.nonEmpty, "oracle must produce matches for the test to mean anything")
     for (level <- Seq(6, 9, 12); bcast <- Seq(Some(true), Some(false), None)) {
       val got = SpatialJoins.pipJoin(points, polys, level, bcast)
         .select($"point_id", $"poly_id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(got === brute, s"level=$level broadcast=$bcast")
+      assert(got === brutePip, s"level=$level broadcast=$bcast")
     }
   }
 
@@ -51,25 +53,17 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
       assert(!plan.contains("BroadcastHashJoin"),
         s"auto mode must fall back to a shuffle join for oversized file-backed tables:\n$plan")
       // and the fallback path is still correct
-      val brute = points.crossJoin(polys)
-        .where(pip($"x", $"y", $"exterior", $"holes"))
-        .select($"point_id", $"poly_id")
-        .collect().map(r => (r.getLong(0), r.getString(1))).toSet
       val got = joined.select($"point_id", $"poly_id")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-      assert(got === brute)
+      assert(got === brutePip)
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
   }
 
   test("pipJoinSalted == brute force") {
-    val brute = points.crossJoin(polys)
-      .where(pip($"x", $"y", $"exterior", $"holes"))
-      .select($"point_id", $"poly_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val got = SpatialJoins.pipJoinSalted(points, polys, 9, salt = 4)
       .select($"point_id", $"poly_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(got === brute)
+    assert(got === brutePip)
   }
 
   test("knnJoin == brute-force kNN (k=3)") {
@@ -357,14 +351,10 @@ class SpatialJoinSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   }
 
   test("AutoLevel (default level): pipJoin and knnJoin pick a level and stay exact") {
-    val bruteP = points.crossJoin(polys)
-      .where(pip($"x", $"y", $"exterior", $"holes"))
-      .select($"point_id", $"poly_id")
-      .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val gotP = SpatialJoins.pipJoin(points, polys) // no level passed
       .select($"point_id", $"poly_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    assert(gotP === bruteP)
+    assert(gotP === brutePip)
 
     val labels = polys
       .withColumn("label", polylabel($"exterior", $"holes", $"tolerance"))

@@ -32,14 +32,8 @@ class PipJoinRewriteSpec extends AnyFunSuite {
       .where(pip($"x", $"y", $"exterior", $"holes"))
       .select("point_id", "poly_id")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
-    // ground truth: driver-side evaluation of the kernel predicate
-    val polyMap = polys.as[graft.sources.PolyRow].collect()
-      .map(p => p.poly_id -> GeoTables.toPolygon(p))
-    val want = (for {
-      pt <- points.as[graft.sources.PointRow].collect()
-      (pid, poly) <- polyMap
-      if graft.geom.Geom.pointInPolygon(pt.x, pt.y, poly)
-    } yield (pt.point_id, pid)).toSet
+    // ground truth: driver-side evaluation of the per-edge predicate
+    val want = graft.gen.BruteForce.pipPairs(points, polys)
     assert(viaRule === want)
     assert(want.nonEmpty)
   }

@@ -1,10 +1,12 @@
+import graft.functions.ExprHelpers
 import graft.geom.{Fixtures, Polylabel, PolygonG, Ring}
 import graft.sources.GeoTables
 
 /** The JVM side of tools/kernel_ab.py, compiled against one source tree's
-  * classes. It uses only kernel API that both sides of an A/B share:
-  * `Polylabel.polylabel`, `prepare` and `signedDistance`, `Fixtures` and
-  * `GeoTables.syntheticPolygon`.
+  * classes. It uses only API that both sides of an A/B share:
+  * `Polylabel.polylabel`, `Fixtures`, `GeoTables.syntheticPolygon`, and
+  * `ExprHelpers.signedDist(x, y, PolygonG)`, the `signed_dist` expression's
+  * entry, for the signed-distance probes.
   *
   * {{{
   *   KernelAb hash   one JSON line: counts and hashes of every label and
@@ -72,7 +74,6 @@ object KernelAb {
     * by 5 % on each side.
     */
   def uniformProbes(p: PolygonG, n: Int, seed: Long, into: Hash): Unit = {
-    val rings = Polylabel.prepare(p)
     val ext = Fixtures.norway.exterior
     val minX = ext.xs.min; val maxX = ext.xs.max
     val minY = ext.ys.min; val maxY = ext.ys.max
@@ -81,7 +82,7 @@ object KernelAb {
     while (i < n) {
       val px = minX + (rnd.nextDouble() * 1.1 - 0.05) * (maxX - minX)
       val py = minY + (rnd.nextDouble() * 1.1 - 0.05) * (maxY - minY)
-      into.add(Polylabel.signedDistance(px, py, rings))
+      into.add(ExprHelpers.signedDist(px, py, p))
       i += 1
     }
   }
@@ -93,10 +94,9 @@ object KernelAb {
     corpus.foreach { case (p, t) => label(p, t, labels) }
     val probes = new Hash
     for ((p, _) <- corpus) {
-      val rings = Polylabel.prepare(p)
       for (r <- p.rings; i <- r.xs.indices) {
-        probes.add(Polylabel.signedDistance(r.xs(i), r.ys(i), rings))
-        probes.add(Polylabel.signedDistance(r.xs(i), r.ys(i) + 1e-9, rings))
+        probes.add(ExprHelpers.signedDist(r.xs(i), r.ys(i), p))
+        probes.add(ExprHelpers.signedDist(r.xs(i), r.ys(i) + 1e-9, p))
       }
     }
     uniformProbes(Fixtures.norway, 200000, 42L, probes)

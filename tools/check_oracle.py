@@ -5,12 +5,15 @@
 The local correctness gate: run graft.Verify first, then this script
 replays every oracle_sql.json entry in DuckDB over the sf tables and
 compares it with the Spark output (columns sorted by name, rows sorted,
-stringified values). It prints one verdict per query, then an `N/M OK`
-summary, and exits 1 unless every query is OK (2 on a usage error).
+stringified values). It prints one verdict per query with its wall time
+(the oracle, the output read and the compare), then an `N/M OK` summary
+and the 5 slowest queries, and exits 1 unless every query is OK (2 on a
+usage error).
 """
 import glob
 import json
 import sys
+import time
 
 import duckdb
 
@@ -57,12 +60,22 @@ def main(argv):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')")
     with open(f'{out}/oracle_sql.json') as f:
         oracle = json.load(f)
+    # fetchdf imports pandas on first use (~0.5 s); keep that out of the
+    # first query's time
+    con.execute('SELECT 1').fetchdf()
     n_ok = 0
+    secs = {}
     for name, sql in sorted(oracle.items()):
+        t0 = time.perf_counter()
         ok, msg = verdict(con, name, sql, out)
+        secs[name] = time.perf_counter() - t0
         n_ok += ok
-        print(f'{name}: {msg}')
+        print(f'{name}: {msg} [{secs[name]:.2f} s]', flush=True)
     print(f'{n_ok}/{len(oracle)} OK')
+    slowest = sorted(secs, key=lambda n: (-secs[n], n))[:5]
+    print(f'slowest {len(slowest)}:')
+    for name in slowest:
+        print(f'  {secs[name]:8.2f} s  {name}')
     return 0 if n_ok == len(oracle) else 1
 
 
