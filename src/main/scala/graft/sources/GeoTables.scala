@@ -44,18 +44,35 @@ object GeoTables {
   /** The lon/lat window both synthetic tables scatter over. */
   private val Window = Rect2(-20.0, 30.0, 20.0, 60.0)
 
+  /** Rows per slice of [[syntheticPolygons]] between its two per-core
+    * bounds. At ~8-row slices a table task took ~5 ms, of which 1–2 ms ran
+    * the generator (traced `image_pipeline`, 500 polygons, 4 cores), so
+    * slices of a few rows are mostly scheduling.
+    */
+  private val RowsPerSlice = 64
+
   /** `n` synthetic polygons scattered deterministically (seed 42) over
     * [[Window]]; vertex counts cycle through small..large so the workload
     * has size skew like real map data.
+    *
+    * Slices: `ceil(n / RowsPerSlice)`, held between 2 and 8 per core
+    * (`defaultParallelism`). Per-row cost varies ~100x (6..512 vertices),
+    * and at n/cores rows per slice a straggler holding a few 512-vertex
+    * polygons serializes the whole build (the 2,000-polygon table once
+    * took the same 2.5 s at 8 and at 32 cores); two slices per core let
+    * the scheduler re-balance that tail. Eight per core (the old count at
+    * 8 cores and more) caps large tables: 12,000 polygons at local[8] in
+    * 188 slices instead of 64 ran `graft.Bench`'s `polylabel_mixed`
+    * slower. With the cap, that workload, `pip_join` and `knn_join` (2,000
+    * polygons) ran no slower than at the old count in interleaved Bench
+    * pairs at local[8] and local[32] (4-core machine). Each row depends
+    * only on its id, so the rows do not depend on the slicing.
     */
   def syntheticPolygons(spark: SparkSession, n: Int): Dataset[PolyRow] = {
     import spark.implicits._
-    // many small partitions, NOT one-per-core: per-row cost varies ~100x
-    // (6..512 vertices), and at n/cores rows per partition a straggler
-    // holding a few 512-vertex polygons serializes the whole table build
-    // (measured: the 2000-poly dimension table took the same 2.5 s wall at
-    // 8 and at 32 cores). Fine-grained ranges let the scheduler re-balance.
-    val slices = math.max(64, 8 * spark.sparkContext.defaultParallelism)
+    val cores = spark.sparkContext.defaultParallelism
+    val slices = math.min(8 * cores,
+      math.max(2 * cores, math.ceil(n / RowsPerSlice.toDouble).toInt))
     val ids = spark.range(0L, n.toLong, 1L, math.min(n.max(1), slices))
     ids.mapPartitions { it =>
       it.map { boxed =>

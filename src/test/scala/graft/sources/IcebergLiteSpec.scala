@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.TestSpark
+import graft.sources.IcebergLite.LineageRow
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.mapreduce.TaskAttemptContext
@@ -309,5 +310,62 @@ class IcebergLiteSpec extends AnyFunSuite {
     val counted = recount(dir)
     assert(counted.values.map(_._1).sum === 4000L)
     assert(lineageOf(dir) === (0 until 4).map(b => (b, counted(b)._1, counted(b)._2)))
+  }
+
+  test("driver-side lineage append reads back like a Spark write of the same rows") {
+    val rows = Seq(LineageRow(3, 17L, -5L, 12L, 1700000000000L), LineageRow(0, 0L, 0L, 12L, 1700000000000L),
+      LineageRow(7, Long.MaxValue, Long.MinValue, 0L, 1L))
+    val driver = freshDir()
+    IcebergLite.appendLineage(driver, rows)
+    val sparkDir = Paths.get(freshDir(), "lineage").toString
+    rows.toDF().write.parquet(sparkDir)
+    val fromDriver = spark.read.parquet(Paths.get(driver, "lineage").toString)
+    val fromSpark = spark.read.parquet(sparkDir)
+    assert(fromDriver.schema === fromSpark.schema)
+    assert(fromDriver.columns.toSeq === Seq("bucket", "rows", "checksum", "wall_ms", "snapshot_id"))
+    assert(fromDriver.as[LineageRow].collect().toSeq === rows)
+    assert(fromSpark.as[LineageRow].collect().sortBy(_.bucket).toSeq === rows.sortBy(_.bucket))
+    assert(IcebergLite.readLineage(spark, driver).schema === fromSpark.schema)
+    // one visible part file, no temp file left behind
+    val names = Files.list(Paths.get(driver, "lineage")).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.size === 1 && names.head.matches("part-.*\\.parquet"), names)
+  }
+
+  test("a crash before the lineage rename leaves a hidden file that nothing reads; the wave is redone") {
+    val input = spark.range(2400).select(col("id"), (col("id") % 9).as("v"))
+    val f = (df: org.apache.spark.sql.DataFrame) => df.withColumn("v2", col("v") - 4)
+    def runOn(dir: String): Seq[Int] =
+      IcebergLite.run(input, Seq("id"), buckets = 6, bucketsPerWave = 3, dir)(f)
+    val full = freshDir()
+    assert(runOn(full).sorted === (0 until 6))
+    val wantRows = rowsOf(full)
+    val wantLineage = lineageOf(full)
+
+    /** A copy of `full` as a crash leaves it: the lineage file of `hidden`
+      * still under the temp name it was written under, and the waves of
+      * `neverRan` gone entirely.
+      */
+    def crashed(hidden: Seq[Int], neverRan: Seq[Int]): String = {
+      val dir = copyDir(full)
+      manifests(dir).foreach(Files.delete)
+      def lineageFiles(wave: Seq[Int]) =
+        IcebergLite.readLineage(spark, dir).where(col("bucket").isin(wave: _*))
+          .select(input_file_name()).as[String].collect().distinct.map(u => Paths.get(new java.net.URI(u)))
+      lineageFiles(neverRan).foreach(Files.delete)
+      neverRan.foreach(b => org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(dir, "data", s"bucket=$b").toFile))
+      lineageFiles(hidden).foreach(p => Files.move(p, p.resolveSibling("." + p.getFileName)))
+      dir
+    }
+    // the last wave; the first wave, whose temp file is the only lineage file
+    for ((dir, before) <- Seq(crashed(Seq(3, 4, 5), Nil) -> Set(0, 1, 2),
+                              crashed(Seq(0, 1, 2), Seq(3, 4, 5)) -> Set.empty[Int])) {
+      assert(Files.list(Paths.get(dir, "lineage")).iterator().asScala.exists(_.getFileName.toString.startsWith(".")))
+      assert(IcebergLite.completedBuckets(spark, dir) === before, dir)
+      assert(lineageOf(dir).map(_._1).toSet === before, dir)
+      assert(runOn(dir).sorted === (0 until 6).filterNot(before), dir)
+      assert(rowsOf(dir) === wantRows, dir)
+      assert(lineageOf(dir) === wantLineage, dir)
+      assert(jsonList(newestManifest(dir), "files").toSet === parquetFiles(dir), dir)
+    }
   }
 }
