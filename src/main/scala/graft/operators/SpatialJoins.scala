@@ -1,11 +1,20 @@
 package graft.operators
 
+import graft.functions.{CellOfExpr, PipExpr, PolygonCoverExpr}
 import graft.functions.GraftFunctions._
 import graft.geom.CellIndex
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.analysis.DeduplicateRelations
+import org.apache.spark.sql.catalyst.expressions.{Add, Alias, And, Attribute, AttributeMap, AttributeReference,
+  Cast, DirectShufflePartitionID, EqualTo, Explode, Expression, Literal, Multiply, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, BROADCAST, Filter, Generate, HintInfo, Join,
+  JoinHint, LogicalPlan, Project, RepartitionByExpression}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Distributed spatial joins (SURVEY.md §2.2 E7-E9), built the Spark-first
   * way: declarative cell equi-joins that Catalyst/AQE can plan (broadcast
@@ -22,6 +31,14 @@ object SpatialJoins {
     * resolving nothing; a too-coarse one stops pruning.
     */
   val AutoLevel: Int = Int.MinValue
+
+  /** PIP cell level when the polygon side says nothing about its size:
+    * [[autoLevel]]'s answer for an empty or degenerate sample, and
+    * `PipJoinRewrite.levelFor`'s for a side with no row-count stats.
+    * Coarse enough that any polygon's cover stays small, fine enough to
+    * prune.
+    */
+  val FallbackLevel = 9
 
   /** Cell level for a PIP join, from the polygon side's TYPICAL bbox: the
     * level at which the MEDIAN sampled polygon's bbox spans ~16 cover
@@ -40,7 +57,7 @@ object SpatialJoins {
       .select(greatest(fx / CellIndex.SpanX, fy / CellIndex.SpanY).as("f"))
       .agg(expr("percentile_approx(f, 0.5, 1000)")).head()
     val frac = if (row.isNullAt(0)) 0.0 else row.getDouble(0)
-    if (frac <= 0.0) 9 // empty/degenerate side: the historical default
+    if (frac <= 0.0) FallbackLevel
     else CellIndex.levelForSpan(frac, 16)
   }
 
@@ -60,127 +77,223 @@ object SpatialJoins {
   /** Point-in-polygon join.
     *
     * points:   (..., x: double, y: double)
-    * polygons: (poly_id, exterior, holes)
+    * polygons: (poly_id, exterior, holes), `poly_id` unique: the geometry
+    *           re-join is keyed on it, so a polygon whose id appears on k
+    *           rows matches each of its points k x k times.
     *
-    * Stage 1 — prefilter: explode each polygon's exact cell cover at
-    * `level` and equi-join on the point's cell (the shuffle key is a
-    * single long — dense, salt-able, AQE-splittable). Stage 2 — refine:
-    * exact ray-cast `pip`. The cover is exact (cells intersecting the
-    * polygon), so prefilter ⊇ truth and refine ⊆ prefilter = truth.
+    * Output: `poly_id`, then every point column, then the polygon side's
+    * other columns except `exterior`, `holes` and `tolerance`.
     *
-    * The broadcast path uses TWO SLIM broadcasts instead of one fat one:
-    * the per-cell fan-out carries only (cell_id, poly_id) and the geometry
-    * is broadcast once per polygon for the refine. Broadcasting geometry
-    * per cover cell made the (single-threaded) broadcast-relation build
-    * the dominant serial fraction at high parallelism — measured as the
-    * round-1 pip_join scaling-efficiency miss (0.43).
+    * The plan is [[pipPlan]]'s, keyed on `poly_id`: stage 1 joins the
+    * points' cells against the slim `(poly_id, cell_id)` cover at
+    * `level`, stage 2 re-joins the geometry once per candidate and
+    * refines with the exact `pip`. Broadcasting geometry per cover cell
+    * made the (single-threaded) broadcast-relation build the dominant
+    * serial fraction at high parallelism — measured as the round-1
+    * pip_join scaling-efficiency miss (0.43) — hence two slim broadcasts.
     *
     * `broadcastPolygons`: Some(true)/Some(false) force the path; None
-    * (default) broadcasts unless the polygon side's optimizer stats are
-    * file-backed AND above 16x autoBroadcastJoinThreshold — a mega-polygon
-    * parquet table routes to the sort-merge path automatically (AQE still
-    * splits skewed cells), while synthesized/unknown-stats dimension
-    * tables keep the broadcast.
+    * (default) takes [[broadcastCover]]'s stats-only decision.
     */
   def pipJoin(points: DataFrame, polygons: DataFrame, level: Int = AutoLevel,
               broadcastPolygons: Option[Boolean] = None): DataFrame = {
-    val spark = points.sparkSession
     val lvl = if (level == AutoLevel) autoLevel(polygons) else level
-    val doBroadcast = broadcastPolygons.getOrElse {
-      val thr = spark.sessionState.conf.autoBroadcastJoinThreshold
-      if (thr <= 0) false // user disabled broadcasting entirely — honor it
-      else {
-        val st = polygons.queryExecution.optimizedPlan.stats
-        // "unknown stats" means the plan contains a stats-less LEAF (its
-        // sizeInBytes is the conf's defaultSizeInBytes sentinel): that
-        // reads as the dimension-table assumption (a caller with a
-        // genuinely huge stats-less table passes Some(false)). The leaf
-        // check matters: a projection/filter over a stats-less leaf
-        // SCALES the sentinel, so the old top-of-plan equality test
-        // misread any such frame as known-huge and silently disabled the
-        // documented dimension-table default. A plan whose leaves all
-        // have real stats but whose estimate multiplied its way to a
-        // huge number is KNOWN-huge — no broadcast.
-        val sentinel = BigInt(spark.sessionState.conf.defaultSizeInBytes)
-        // A plan MIXING a stats-less leaf with a known-huge scan (join /
-        // union over both) must NOT read as "unknown => broadcast": that
-        // would flip the safe failure mode (skip broadcast, slower) into
-        // a multi-GB broadcast build and a driver OOM. "Unknown" only
-        // when every known leaf is already individually under the
-        // broadcast cap — then the stats-less part is the only wildcard
-        // and the dimension-table assumption stands.
-        val leaves = polygons.queryExecution.optimizedPlan.collectLeaves()
-        val (statless, known) =
-          leaves.partition(_.stats.sizeInBytes == sentinel)
-        val unknown = (st.sizeInBytes == sentinel || statless.nonEmpty) &&
-          known.forall(_.stats.sizeInBytes <= BigInt(thr) * 16)
-        if (unknown) true
-        else {
-          // size what is actually broadcast: the slim (cell_id, poly_id)
-          // cover fan-out (16 B x cells-per-polygon; rowCount when CBO
-          // stats exist, else geometry bytes as a same-order proxy — a
-          // ~100-vertex polygon's geometry and its cover rows are
-          // comparable at the nominal level 10) PLUS the geometry once
-          // per polygon. Cover fan-out grows ~4x per level past the
-          // nominal measurement level (area-dominated covers), so the
-          // per-polygon cell estimate scales with `level` instead of
-          // pinning 64 — a level-14 cover is ~256x a level-10 one and a
-          // fixed estimate would under-size the broadcast badly.
-          val cellsPerPoly =
-            if (lvl >= 10) BigInt(64) << (2 * math.min(lvl - 10, 16))
-            else (BigInt(64) >> (2 * (10 - lvl))) max BigInt(4)
-          val coverBytes = st.rowCount.map(rc => rc * 16 * cellsPerPoly)
-            .getOrElse(st.sizeInBytes * cellsPerPoly / 64)
-          st.sizeInBytes + coverBytes <= BigInt(thr) * 16
-        }
-      }
-    }
-    // One body for both paths, two-stage: join the SLIM (cell_id,
-    // poly_id) cover against the points, then re-join the geometry once
-    // per matched pair by poly_id for the refine — broadcast or shuffled
-    // as decided above. The alternative (geometry riding the cell join)
-    // replicates each polygon's full geometry once per cover cell — an
-    // 8,854-vertex Norway-class polygon's ~140 KB rides the shuffle
-    // thousands of times at level 12+, and the shuffle path is exactly
-    // the one chosen for KNOWN-huge polygon tables. Measured A/B on the
-    // shuffle path (2M points, min over interleaved passes; table in
-    // COVERAGE.md): level 12 x 1 Norway copy slim 2.0 s vs fat 13.5 s
-    // (6.8x); level 12 x 4 copies slim 8.3 s vs fat OutOfMemoryError (the
-    // ~36 GB replicated-geometry shuffle exhausts the 16 GB JVM); level
-    // 10 x 30 copies (small covers, the fat plan's best regime) slim
-    // 5.0 s vs fat 7.7 s — the slim re-join's extra shuffle of (point,
-    // poly_id) pairs never loses. The point-side key is private and
-    // dropped, so a caller's own `cell_id` column passes through.
-    def side(df: DataFrame) = if (doBroadcast) broadcast(df) else df
-    val cover = side(polygons.select(col("poly_id"),
-      explode(polygon_cover(col("exterior"), col("holes"), lit(lvl))).as("cell_id")))
-    points.withColumn("pip_cell", cell_of(col("x"), col("y"), lit(lvl)))
-      .join(cover, col("pip_cell") === cover("cell_id"))
-      .drop(cover("cell_id")).drop("pip_cell")
-      .join(side(polygons), "poly_id")
-      .where(pip(col("x"), col("y"), col("exterior"), col("holes")))
-      .drop("exterior", "holes", "tolerance")
+    val doBroadcast = broadcastPolygons.getOrElse(broadcastCover(polygons.queryExecution.optimizedPlan, lvl,
+      points.sparkSession.sessionState.conf, ifUnknown = true))
+    pipJoinById(points, polygons, lvl, doBroadcast, salt = 1, distinctCover = false)
   }
 
   /** PIP join with explicit salting for hot cells (E8): dense point
     * regions joined against mega-polygon covers make single cell_ids
-    * carry a disproportionate share of the shuffle. Points get a
-    * deterministic salt in [0, salt); the polygon side replicates each
-    * cover cell across all salt values, so one hot cell fans out over
-    * `salt` shuffle partitions. Use the unsalted variant + AQE when in
-    * doubt; this one is for known-pathological skew.
+    * carry a disproportionate share of the shuffle, and one mega-polygon
+    * a disproportionate share of the refines. Points get a deterministic
+    * salt in [0, salt); the slim `(poly_id, cell_id)` cover rows and the
+    * polygon rows are each replicated across all salt values, so one hot
+    * cell, and one polygon's refines, fan out over `salt` shuffle
+    * partitions (the re-join places them, see [[pipPlan]]). The geometry
+    * is copied `salt` times, never once per cover cell. Neither side is
+    * hinted for broadcast. Same plan and output columns as [[pipJoin]],
+    * but `poly_id` need not be unique: the cover is de-duplicated on
+    * `(cell_id, poly_id)`, so a polygon whose id appears on k rows matches
+    * each of its points k times, as a cross join does. Use the unsalted
+    * variant + AQE when in doubt; this one is for known-pathological skew.
     */
   def pipJoinSalted(points: DataFrame, polygons: DataFrame, level: Int,
-                    salt: Int): DataFrame = {
-    val cover = polygons
-      .withColumn("cell_id", explode(polygon_cover(col("exterior"), col("holes"), lit(level))))
-      .withColumn("salt", explode(lit((0 until salt).toArray)))
-    points
-      .withColumn("cell_id", cell_of(col("x"), col("y"), lit(level)))
-      .withColumn("salt", pmod(xxhash64(col("x"), col("y")), lit(salt)).cast("int"))
-      .join(cover, Seq("cell_id", "salt"))
-      .where(pip(col("x"), col("y"), col("exterior"), col("holes")))
-      .drop("cell_id", "salt", "exterior", "holes", "tolerance")
+                    salt: Int): DataFrame =
+    pipJoinById(points, polygons, level, broadcast = false, salt, distinctCover = true)
+
+  /** [[pipPlan]] keyed on `poly_id`, in [[pipJoin]]'s output columns. The
+    * point side's cell and salt columns are private, so a caller's own
+    * `cell_id` column passes through.
+    */
+  private def pipJoinById(points: DataFrame, polygons: DataFrame, level: Int,
+                          broadcast: Boolean, salt: Int, distinctCover: Boolean): DataFrame = {
+    val spark = points.sparkSession
+    // the analyzer gives the two sides disjoint attribute ids, as for any join
+    val Join(pts, polys, _, _, _) = points.crossJoin(polygons).queryExecution.analyzed
+    val resolver = spark.sessionState.conf.resolver
+    def attr(side: LogicalPlan, name: String): Attribute =
+      side.output.find(a => resolver(a.name, name))
+        .getOrElse(throw new IllegalArgumentException(s"pipJoin: no column `$name` in ${side.schema.simpleString}"))
+    val polyId = attr(polys, "poly_id")
+    val pip = PipExpr(attr(pts, "x"), attr(pts, "y"), attr(polys, "exterior"), attr(polys, "holes"))
+    val plan = pipPlan(pts, polys, pip, pip, polyId, level, broadcast, salt, distinctCover)
+    val dropped = Seq("poly_id", "exterior", "holes", "tolerance")
+    ColumnBridge.frame(spark, Project(polyId +: plan.output.filterNot(a => dropped.exists(resolver(a.name, _))), plan))
+  }
+
+  /** Whether a PIP join broadcasts its polygon side, from `polygons`'
+    * optimizer stats alone (no job, so the optimizer rule takes it too):
+    * when the stats are unknown, `ifUnknown`; else only when the geometry
+    * plus the slim cover at `level` fit in 16x autoBroadcastJoinThreshold.
+    * So a mega-polygon parquet table routes to the sort-merge path
+    * automatically (AQE still splits skewed cells). [[pipJoin]] passes
+    * `ifUnknown = true`, the dimension-table assumption, and a caller with
+    * a genuinely huge stats-less table passes `Some(false)`; the optimizer
+    * rule, whose SQL callers have no such way out, passes false and leaves
+    * a stats-less side to Spark's own threshold.
+    */
+  private[graft] def broadcastCover(polygons: LogicalPlan, level: Int, conf: SQLConf,
+                                    ifUnknown: Boolean): Boolean = {
+    val thr = conf.autoBroadcastJoinThreshold
+    if (thr <= 0) false // user disabled broadcasting entirely — honor it
+    else {
+      val st = polygons.stats
+      // "unknown stats" means the plan contains a stats-less LEAF (its
+      // sizeInBytes is the conf's defaultSizeInBytes sentinel). The leaf
+      // check matters: a projection/filter over a stats-less leaf SCALES
+      // the sentinel, so a top-of-plan equality test would misread any
+      // such frame as known-huge. A plan whose leaves all have real stats
+      // but whose estimate multiplied its way to a huge number is
+      // KNOWN-huge — no broadcast.
+      val sentinel = BigInt(conf.defaultSizeInBytes)
+      // A plan MIXING a stats-less leaf with a known-huge scan (join /
+      // union over both) must NOT read as "unknown => broadcast": that
+      // would flip the safe failure mode (skip broadcast, slower) into
+      // a multi-GB broadcast build and a driver OOM. "Unknown" only
+      // when every known leaf is already individually under the
+      // broadcast cap — then the stats-less part is the only wildcard
+      // and the dimension-table assumption stands.
+      val (statless, known) = polygons.collectLeaves().partition(_.stats.sizeInBytes == sentinel)
+      val unknown = (st.sizeInBytes == sentinel || statless.nonEmpty) &&
+        known.forall(_.stats.sizeInBytes <= BigInt(thr) * 16)
+      if (unknown) ifUnknown
+      else {
+        // size what is actually broadcast: the slim (cell_id, key) cover
+        // fan-out (16 B x cells-per-polygon; rowCount when CBO stats
+        // exist, else geometry bytes as a same-order proxy — a
+        // ~100-vertex polygon's geometry and its cover rows are
+        // comparable at the nominal level 10) PLUS the geometry once per
+        // polygon. Cover fan-out grows ~4x per level past the nominal
+        // measurement level (area-dominated covers), so the per-polygon
+        // cell estimate scales with `level` instead of pinning 64 — a
+        // level-14 cover is ~256x a level-10 one.
+        val cellsPerPoly =
+          if (level >= 10) BigInt(64) << (2 * math.min(level - 10, 16))
+          else (BigInt(64) >> (2 * (10 - level))) max BigInt(4)
+        val coverBytes = st.rowCount.map(rc => rc * 16 * cellsPerPoly)
+          .getOrElse(st.sizeInBytes * cellsPerPoly / 64)
+        st.sizeInBytes + coverBytes <= BigInt(thr) * 16
+      }
+    }
+  }
+
+  /** The one PIP join plan (SURVEY.md E7/E8, §4.2), which [[pipJoin]],
+    * [[pipJoinSalted]] and `PipJoinRewrite` all build:
+    *
+    * {{{
+    *   Project points.output ++ polygons.output
+    *     Filter refine                                   <- exact refine
+    *       Join Inner (cover key = key [AND pip_part])   <- geometry once per candidate
+    *         [Repartition pip_part] Project points.output, cover key [, pip_part]
+    *           Join Inner (cell_of(x, y, level) = cell_id [AND salt])
+    *             Project points.output, pip_cell [, pip_salt]
+    *               points
+    *             cover: (key, cell_id [, salt]) over a copy of polygons
+    *         [Repartition pip_part] polygons [x salt]
+    * }}}
+    *
+    * The cover carries only `(key, cell_id)`: the polygon's geometry never
+    * rides a cover cell. Geometry replicated per cover cell measured 6.8x
+    * slower on the shuffle path at level 12 over one Norway copy and ran
+    * out of memory at 4 copies (table in COVERAGE.md). The cover is exact
+    * (cells meeting the polygon), so prefilter ⊇ truth and the refine
+    * restores equality.
+    *
+    * `pip` is the point/polygon split of `refine` (x, y over `points`,
+    * exterior and holes over `polygons`); `refine` is the whole join
+    * predicate and `key` an expression over `polygons`, evaluated once
+    * per polygon row on each side. With `distinctCover` the cover is
+    * de-duplicated on `(cell_id, key)`, so rows sharing a key (duplicate
+    * rows, or a hash collision) add candidates but never duplicate a pair.
+    * `broadcast` hints both joins' polygon sides. `salt` > 1 salts both
+    * joins as [[pipJoinSalted]] describes: the point row's salt rides the
+    * candidate to the geometry re-join, whose partition `pip_part` is the
+    * polygon's group of `salt` partitions plus that salt, so one
+    * polygon's refines run on `salt` distinct tasks instead of one;
+    * `salt` = 1 adds nothing to the plan. The cover reads a second copy
+    * of the polygon subtree with fresh attribute ids (made as Spark's
+    * InlineCTE copies a CTE body), so the refine and the output keep the
+    * caller's attributes.
+    */
+  private[graft] def pipPlan(points: LogicalPlan, polygons: LogicalPlan, pip: PipExpr,
+                             refine: Expression, key: Expression, level: Int,
+                             broadcast: Boolean, salt: Int, distinctCover: Boolean): LogicalPlan = {
+    val copy = DeduplicateRelations(Join(polygons, polygons, Inner, None, JoinHint.NONE)).children(1)
+    val toCopy = AttributeMap(polygons.output.zip(copy.output))
+    def onCopy(e: Expression) = e.transform { case a: Attribute => toCopy.getOrElse(a, a) }
+    // the key once per polygon row, before the cover explodes it
+    val (keyed, coverKey) = onCopy(key) match {
+      case a: Attribute => (copy, a)
+      case e =>
+        val k = Alias(e, "pip_key")()
+        (Project(copy.output :+ k, copy), k.toAttribute)
+    }
+    val cell = AttributeReference("cell_id", LongType, nullable = false)()
+    val gen = Generate(Explode(PolygonCoverExpr(onCopy(pip.exterior), onCopy(pip.holes), Literal(level))),
+      unrequiredChildIndex = Nil, outer = false, qualifier = None, generatorOutput = Seq(cell), child = keyed)
+    val cover =
+      if (distinctCover) Aggregate(Seq(cell, coverKey), Seq(coverKey, cell), gen)
+      else Project(Seq(coverKey, cell), gen)
+    val pipCell = Alias(CellOfExpr(pip.x, pip.y, Literal(level)), "pip_cell")()
+    val hint = if (broadcast) JoinHint(None, Some(HintInfo(Some(BROADCAST)))) else JoinHint.NONE
+    if (salt <= 1) {
+      val candidates = Project(points.output :+ coverKey,
+        Join(Project(points.output :+ pipCell, points), cover, Inner, Some(EqualTo(pipCell.toAttribute, cell)), hint))
+      Project(points.output ++ polygons.output,
+        Filter(refine, Join(candidates, polygons, Inner, Some(EqualTo(coverKey, key)), hint)))
+    } else {
+      // the point row's salt, and a side replicated over 0 until salt
+      val pipSalt = Alias(Cast(Pmod(new XxHash64(Seq(pip.x, pip.y)), Literal(salt.toLong)), IntegerType), "pip_salt")()
+      def replicated(side: LogicalPlan): (LogicalPlan, Attribute) = {
+        val s = AttributeReference("salt", IntegerType, nullable = false)()
+        (Generate(Explode(Literal.create((0 until salt).toArray, ArrayType(IntegerType, false))),
+          Nil, outer = false, None, Seq(s), side), s)
+      }
+      val (coverSide, coverSalt) = replicated(cover)
+      val candidates = Project(points.output ++ Seq(coverKey, pipSalt.toAttribute),
+        Join(Project(points.output ++ Seq(pipCell, pipSalt), points), coverSide, Inner,
+          Some(And(EqualTo(pipCell.toAttribute, cell), EqualTo(pipSalt.toAttribute, coverSalt))), hint))
+      // The re-join's shuffle partition is chosen, not hashed: a group of
+      // `salt` partitions per polygon (by its key's hash), then the salt
+      // within the group, so one polygon's refines land on `salt`
+      // distinct tasks; hashing (key, salt) can put all of one polygon's
+      // salts in one partition. A numbered repartition is also one AQE
+      // does not coalesce: the candidates are few bytes, but each costs a
+      // full `pip` over its polygon.
+      val groups = (SQLConf.get.numShufflePartitions + salt - 1) / salt
+      def part(k: Expression, s: Attribute) = Alias(Add(Multiply(
+        Cast(Pmod(new XxHash64(Seq(k)), Literal(groups.toLong)), IntegerType), Literal(salt)), s), "pip_part")()
+      def byPart(p: Alias, side: LogicalPlan) =
+        RepartitionByExpression(Seq(DirectShufflePartitionID(p.toAttribute)), Project(side.output :+ p, side),
+          Some(groups * salt))
+      val candPart = part(coverKey, pipSalt.toAttribute)
+      val (polyRep, polySalt) = replicated(polygons)
+      val polyPart = part(key, polySalt)
+      Project(points.output ++ polygons.output,
+        Filter(refine, Join(byPart(candPart, candidates), byPart(polyPart, polyRep), Inner,
+          Some(And(EqualTo(coverKey, key), EqualTo(candPart.toAttribute, polyPart.toAttribute))), hint)))
+    }
   }
 
   /** Distance-within (radius) join: every (point, label) pair with

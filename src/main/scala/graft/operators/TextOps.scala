@@ -46,51 +46,36 @@ object TextOps {
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("tok"))
 
   /** Distinct word-3-gram shingles per document, with the doc's blocking
-    * key (`lang`) carried through.
-    *
-    * Built in-row from the token array (explode the 3-gram start
-    * indices): a doc's consecutive tokens are adjacent array elements,
-    * so no window `lead` — the former formulation paid a full sort
-    * exchange over EVERY token row plus a join back for `lang`; here the
-    * only exchange is the final distinct. Same split / MaxTokens slice /
-    * tail cut (i <= n-2 == lead(2).isNotNull), so the shingle set is
-    * identical.
+    * key (`lang`) carried through: [[shingleArray]] exploded, so the two
+    * forms hold the same shingle set by construction. The final distinct
+    * stays because `doc_id` need not be unique in the input: two rows of
+    * one document would emit its shingles twice.
     */
-  def shingles3(docs: DataFrame): DataFrame = {
-    // guard: sequence(1, n-2) DESCENDS for n < 3 (Spark defaults step to
-    // -1 when start > stop) — docs with < 3 tokens must emit no shingles
-    val n = size(col("tk"))
-    docs
-      .select(col("doc_id"), col("lang"),
-        slice(split(col("text"), " "), 1, MaxTokens).as("tk"))
-      .select(col("doc_id"), col("lang"), col("tk"),
-        explode(when(n >= 3, sequence(lit(1), n - 2))
-          .otherwise(array().cast("array<int>"))).as("i"))
-      .select(col("doc_id"), col("lang"),
-        concat_ws(" ", element_at(col("tk"), col("i")),
-          element_at(col("tk"), col("i") + 1),
-          element_at(col("tk"), col("i") + 2)).as("shingle"))
+  def shingles3(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"), col("lang"), explode(shingleArray(col("text"))).as("shingle"))
       .distinct()
-  }
 
   /** Per-document DISTINCT word-3-gram shingle ARRAY, built entirely
-    * in-row from the token array: consecutive tokens are adjacent array
-    * elements and `array_distinct` dedups within the row, so the column
-    * costs one codegen'd projection — no explode, no distinct exchange.
-    * Same split / MaxTokens slice / n >= 3 guard as [[shingles3]], so
-    * the per-document shingle SET is identical; only the carrier shape
-    * differs (one array cell vs exploded rows). This is the form the
-    * MinHash operators consume: at 10^12 documents the exploded stream
-    * pushed |corpus| x |shingles/doc| rows through a distinct exchange
-    * for a set a row-local fold computes in place.
+    * in-row from the token array over the first MaxTokens tokens:
+    * consecutive tokens are adjacent array elements and `array_distinct`
+    * dedups within the row, so the column costs one codegen'd projection —
+    * no window `lead`, no explode, no distinct exchange. This is the form
+    * the MinHash operators consume (at 10^12 documents an exploded stream
+    * pushes |corpus| x |shingles/doc| rows through a distinct exchange for
+    * a set a row-local fold computes in place); [[shingles3]] explodes it.
     */
-  def shingleArray(text: Column): Column = {
-    val tk = slice(split(text, " "), 1, MaxTokens)
+  def shingleArray(text: Column): Column =
+    array_distinct(grams3(slice(split(text, " "), 1, MaxTokens)))
+
+  /** Every word-3-gram of the token array `tk`, in order, repeats kept. */
+  private def grams3(tk: Column): Column = {
     val n = size(tk)
-    array_distinct(transform(
+    // guard: sequence(1, n-2) DESCENDS for n < 3 (Spark defaults step to
+    // -1 when start > stop) — docs with < 3 tokens must have no grams
+    transform(
       when(n >= 3, sequence(lit(1), n - 2)).otherwise(array().cast("array<int>")),
       i => concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
-        element_at(tk, i + 2))))
+        element_at(tk, i + 2)))
   }
 
   /** Modular integer id of a shingle (for MinHash): fold the three token
@@ -154,8 +139,8 @@ object TextOps {
     // grouped aggregates (one with a countDistinct expansion) plus a
     // join. Every signal is a per-document function of the doc's own
     // token array:
-    //   - n_grams / n_gram_distinct: the gram ARRAY (same construction
-    //     as before) and size(array_distinct(...));
+    //   - n_grams / n_gram_distinct: the gram ARRAY (grams3, the
+    //     shingles' construction) and size(array_distinct(...));
     //   - the most-frequent token: one pass over array_sort(tk) counting
     //     runs — a strict `run > best` update means the FIRST token to
     //     reach a count wins, and in ascending order that is the
@@ -166,10 +151,7 @@ object TextOps {
     // are integer-identical, and the milli ratios keep the exact same
     // `div` expressions.
     val n = size(col("tk"))
-    val gramArr = transform(
-      when(n >= 3, sequence(lit(1), n - 2)).otherwise(array().cast("array<int>")),
-      i => concat_ws(" ", element_at(col("tk"), i),
-        element_at(col("tk"), i + 1), element_at(col("tk"), i + 2)))
+    val gramArr = grams3(col("tk"))
     // run-length argmax over the sorted token array: state =
     // (prev token, current run, best count, best token)
     val best = aggregate(array_sort(col("tk")),

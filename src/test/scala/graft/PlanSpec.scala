@@ -40,6 +40,52 @@ class PlanSpec extends AnyFunSuite {
     assert(!plan.contains("CartesianProduct"), "must never degrade to a cross join")
   }
 
+  test("PIP plans: no geometry rides the cover explode or its exchange; re-optimizing adds no cover") {
+    // pipJoin on both paths, pipJoinSalted and the SQL pip cross join
+    // (PipJoinRewrite) share one plan: the cover carries (key, cell_id
+    // [, salt]) only, and the geometry is re-joined once per candidate
+    import graft.functions.GraftFunctions.pip
+    import graft.functions.PolygonCoverExpr
+    import org.apache.spark.sql.catalyst.expressions.Explode
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan}
+    import org.apache.spark.sql.execution.{GenerateExec, joins}
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.ArrayType
+    val polys = GeoTables.syntheticPolygons(spark, 10).toDF
+    val pts = GeoTables.syntheticPoints(spark, 100).toDF
+    val sql = () => pts.crossJoin(polys).where(pip(col("x"), col("y"), col("exterior"), col("holes")))
+    val plans = Seq(
+      ("pipJoin broadcast", Nil, () => SpatialJoins.pipJoin(pts, polys, 9, Some(true))),
+      ("pipJoin shuffle", Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"),
+        () => SpatialJoins.pipJoin(pts, polys, 9, Some(false))),
+      ("pipJoinSalted", Nil, () => SpatialJoins.pipJoinSalted(pts, polys, 9, salt = 4)),
+      ("SQL pip cross join", Nil, sql),
+      ("SQL pip cross join, no broadcast", Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1"), sql))
+    def covers(p: LogicalPlan) = p.collect { case g @ Generate(Explode(_: PolygonCoverExpr), _, _, _, _, _) => g }
+    for ((name, conf, build) <- plans) graft.gen.SparkModes.withConf(conf) {
+      val df = build()
+      val nodes = planNodes(df)
+      val isCover: SparkPlan => Boolean = {
+        case GenerateExec(Explode(_: PolygonCoverExpr), _, _, _, _) => true
+        case _ => false
+      }
+      val gens = nodes.filter(isCover)
+      assert(gens.size === 1, s"$name: expected one cover explode:\n${df.queryExecution.executedPlan}")
+      // the exchanges between the cover explode and its cell join
+      val coverExchanges = nodes.collect {
+        case e: Exchange if e.find(isCover).nonEmpty && e.find(_.isInstanceOf[joins.BaseJoinExec]).isEmpty => e
+      }
+      assert(coverExchanges.nonEmpty, s"$name: no exchange above the cover:\n${df.queryExecution.executedPlan}")
+      for (n <- gens ++ coverExchanges)
+        assert(!n.output.exists(_.dataType.isInstanceOf[ArrayType]),
+          s"$name: ${n.nodeName} carries geometry ${n.output.mkString(", ")}:\n${df.queryExecution.executedPlan}")
+      val optimized = df.queryExecution.optimizedPlan
+      assert(covers(optimized).size === 1, s"$name:\n$optimized")
+      assert(covers(spark.sessionState.optimizer.execute(optimized)).size === 1,
+        s"$name: optimizing again added a cover explode")
+    }
+  }
+
   test("aggregation is partial+final (map-side combine before the shuffle)") {
     val df = SparkEntry.queries("q_cell_of")(spark, "/root/testdata/sf0.001")
     val plan = planOf(df)

@@ -53,13 +53,21 @@ object BruteForce {
     * (point_id, x, y) and a `polygons` frame (poly_id, exterior, holes,
     * tolerance).
     */
-  def pipPairs(points: DataFrame, polygons: DataFrame): Set[(Long, String)] = {
+  def pipPairs(points: DataFrame, polygons: DataFrame): Set[(Long, String)] =
+    pipPairCounts(points, polygons).keySet
+
+  /** [[pipPairs]] as a multiset: how many times each (point_id, poly_id)
+    * pair comes out of a `pip`-filtered cross join of the two frames, one
+    * per (point row, polygon row) pair, so duplicated rows count once per
+    * copy.
+    */
+  def pipPairCounts(points: DataFrame, polygons: DataFrame): Map[(Long, String), Int] = {
     import points.sparkSession.implicits._
     val polys = polygons.as[PolyRow].collect().map(p => p.poly_id -> GeoTables.toPolygon(p))
     (for {
       pt <- points.select("point_id", "x", "y").as[PointRow].collect()
       (id, poly) <- polys
       if Geom.pointInPolygon(pt.x, pt.y, poly)
-    } yield (pt.point_id, id)).toSet
+    } yield (pt.point_id, id)).groupBy(identity).map { case (k, v) => k -> v.length }
   }
 }

@@ -46,10 +46,23 @@ object GeomGen {
     */
   private val holeSlots = Seq((-0.25, 0.0), (0.25, 0.05), (0.0, -0.3))
 
-  /** A star exterior of `nExt` vertices (radii 0.6-1) with `nHoles` star
-    * holes of 3-300 vertices (radius <= 0.15, clockwise), scaled and offset.
+  /** A scale of 0.05-5 degrees and a centre inside the cell grid's domain
+    * with a margin of 10 degrees, so the placed unit star stays inside it.
     */
-  private def starWithHoles(nExt: Gen[Int], nHoles: Gen[Int], holeVertices: Gen[Int]): Gen[(Pts, Seq[Pts])] =
+  private val inDomain: Gen[(Double, Double, Double)] = for {
+    scale <- Gen.choose(0.05, 5.0)
+    cx <- Gen.choose(CellIndex.MinX + 10.0, CellIndex.MinX + CellIndex.SpanX - 10.0)
+    cy <- Gen.choose(CellIndex.MinY + 10.0, CellIndex.MinY + CellIndex.SpanY - 10.0)
+  } yield (scale, cx, cy)
+
+  /** A star exterior of `nExt` vertices (radii 0.6-1) with `nHoles` star
+    * holes of 3-300 vertices (radius <= 0.15, clockwise), scaled by and
+    * moved to `at`'s (scale, x, y); by default [[scaleAndOffset]], the same
+    * offset on both axes.
+    */
+  private def starWithHoles(nExt: Gen[Int], nHoles: Gen[Int], holeVertices: Gen[Int],
+                            at: Gen[(Double, Double, Double)] = scaleAndOffset.map { case (s, o) => (s, o, o) })
+      : Gen[(Pts, Seq[Pts])] =
     for {
       n <- nExt
       ext <- star(n, 0.0, 0.0, 0.6, 1.0)
@@ -57,9 +70,9 @@ object GeomGen {
       holes <- Gen.sequence[Seq[Pts], Pts](holeSlots.take(k).map { case (cx, cy) =>
         for { m <- holeVertices; r <- Gen.choose(0.05, 0.15); h <- star(m, cx, cy, 0.5 * r, r) } yield h.reverse
       })
-      (scale, offset) <- scaleAndOffset
+      (scale, ox, oy) <- at
     } yield {
-      def place(ring: Pts): Pts = ring.map { case (x, y) => (offset + scale * x, offset + scale * y) }
+      def place(ring: Pts): Pts = ring.map { case (x, y) => (ox + scale * x, oy + scale * y) }
       (place(ext), holes.map(place))
     }
 
@@ -69,6 +82,14 @@ object GeomGen {
   val withHoles: Gen[GenPoly] =
     starWithHoles(Gen.choose(3, 600), Gen.choose(0, 3), Gen.choose(3, 300)).map { case (e, hs) =>
       GenPoly("holes", PolygonG(e, if (e.size >= 12) hs else Nil))
+    }
+
+  /** A 12-200-vertex star with 1-3 holes of 3-60 vertices, placed by
+    * [[inDomain]]: a polygon with holes that the cell grid indexes.
+    */
+  val withHolesInDomain: Gen[GenPoly] =
+    starWithHoles(Gen.choose(12, 200), Gen.choose(1, 3), Gen.choose(3, 60), inDomain).map { case (e, hs) =>
+      GenPoly("holes, in domain", PolygonG(e, hs))
     }
 
   /** A polygon of [[withHoles]] with one coordinate of one vertex set to

@@ -3,6 +3,12 @@ package graft.plans
 import graft.TestSpark
 import graft.functions.GraftFunctions._
 import graft.sources.GeoTables
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, Project, RepartitionByExpression}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
+import org.apache.spark.sql.functions.spark_partition_id
+import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.types.ArrayType
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The optimizer rule must turn a naive pip-filtered cross join into a
@@ -45,6 +51,60 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     assert(small < big, s"more polygons must get a finer prefilter ($small vs $big)")
     assert(small >= 6 && big <= 12)
     assert(PipJoinRewrite.levelFor(planOf(1)) === 6) // clamp floor
+  }
+
+  test("rule leaves a cross join over a non-deterministic polygon side alone") {
+    // the PIP plan reads the polygon side twice; two reads of rand() differ
+    val noisy = polys.withColumn("r", org.apache.spark.sql.functions.rand(7))
+    val plan = points.crossJoin(noisy).where(pip($"x", $"y", $"exterior", $"holes"))
+      .queryExecution.optimizedPlan.toString
+    assert(!plan.contains("polygon_cover"), s"rewrite fired over rand():\n$plan")
+  }
+
+  test("rule hints no broadcast over a stats-less polygon side; Spark's threshold decides") {
+    // an RDD-backed frame has no stats: the rule must not force a
+    // broadcast build of what may be a huge table
+    val rdd = spark.createDataFrame(polys.rdd, polys.schema)
+    val df = points.crossJoin(rdd).where(pip($"x", $"y", $"exterior", $"holes"))
+    val optimized = df.queryExecution.optimizedPlan
+    assert(optimized.toString.contains("polygon_cover"), s"rewrite did not fire:\n$optimized")
+    val hinted = optimized.collect { case j: Join if j.hint != JoinHint.NONE => j.hint }
+    assert(hinted.isEmpty, s"forced broadcast over unknown stats: $hinted\n$optimized")
+    val physical = df.queryExecution.sparkPlan
+    // (the small cached point side may still be broadcast, by Spark's own choice)
+    assert(physical.collect { case b: BroadcastHashJoinExec if b.buildSide == BuildRight => b }.isEmpty,
+      s"polygon side broadcast:\n$physical")
+    assert(df.select("point_id", "poly_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+      graft.gen.BruteForce.pipPairs(points, polys))
+  }
+
+  test("shuffle-path rewrite over fewer polygons than partitions salts the geometry re-join") {
+    // one polygon row: unsalted, all its refines would run in one task
+    val one = GeoTables.syntheticPolygons(spark, 1).collect().toSeq.toDF()
+    val leaf = one.queryExecution.optimizedPlan
+    assert(PipJoinRewrite.saltFor(leaf) === spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // column pruning puts a Project over the leaf; the row count holds through it
+    assert(PipJoinRewrite.saltFor(Project(leaf.output.take(2), leaf)) === PipJoinRewrite.saltFor(leaf))
+    graft.gen.SparkModes.withConf(Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")) {
+      val df = points.crossJoin(one).where(pip($"x", $"y", $"exterior", $"holes"))
+      val physical = df.queryExecution.sparkPlan
+      val geometryJoins = physical.collect {
+        case j: SortMergeJoinExec if j.right.output.exists(_.dataType.isInstanceOf[ArrayType]) => j
+      }
+      assert(geometryJoins.size === 1 && geometryJoins.head.rightKeys.size === 2,
+        s"geometry re-join not keyed on (key, salt):\n$physical")
+      // the polygon's copies land one per partition, so its refines run
+      // on every task (hashing (key, salt) can put all copies in one)
+      val polyCopies = df.queryExecution.optimizedPlan.collect {
+        case r: RepartitionByExpression if r.child.output.exists(_.dataType.isInstanceOf[ArrayType]) => r
+      }
+      assert(polyCopies.size === 1, df.queryExecution.optimizedPlan.toString)
+      val perPartition = ColumnBridge.frame(spark, polyCopies.head).groupBy(spark_partition_id()).count()
+        .collect().map(_.getLong(1)).toSeq
+      assert(perPartition === Seq.fill(PipJoinRewrite.saltFor(one.queryExecution.optimizedPlan))(1L))
+      assert(df.select("point_id", "poly_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
+        graft.gen.BruteForce.pipPairs(points, one))
+    }
   }
 
   test("rule leaves non-spatial joins untouched") {

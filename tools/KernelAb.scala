@@ -13,7 +13,12 @@ import graft.sources.GeoTables
   *                   every signedDistance probe over the corpus below
   *   KernelAb time   one JSON line: per-call label time (us) per vertex-
   *                   count group, for `image_pipeline`-like rectangles and
-  *                   for Norway, the median of 5 passes after 2 warm-up
+  *                   for Norway, the median of 5 passes after 2 warm-up;
+  *                   and the same per "<group>+build", where each call
+  *                   first builds its polygon from raw coordinate arrays
+  *                   (`Ring.of`, `new PolygonG`), so work that a change
+  *                   moves between polygon construction and the label
+  *                   call cannot read as a kernel gain or loss
   * }}}
   *
   * Corpus: the 12,000 seed-1 `label_skewed` polygons (6-512 vertices,
@@ -117,20 +122,30 @@ object KernelAb {
     }
   }
 
+  /** Each ring of `p` as fresh raw coordinate arrays, closed. */
+  def raw(p: PolygonG): Array[(Array[Double], Array[Double])] = p.rings.map(r => (r.xs.clone(), r.ys.clone()))
+
+  /** The polygon of `rings`, built as a decoder builds it. */
+  def build(rings: Array[(Array[Double], Array[Double])]): PolygonG =
+    new PolygonG(Ring.of(rings(0)._1, rings(0)._2), rings.tail.map { case (xs, ys) => Ring.of(xs, ys) })
+
   def time(): String = {
     val groups = vertexCycle.map { nv =>
       nv.toString -> (0L until nSynthetic.toLong).filter(id => vertexCycle((id % vertexCycle.size).toInt) == nv)
         .map(synthetic(1L, _)).map((_, 0.01))
     } ++ Seq("rect" -> rects, "norway" -> Seq.fill(20)((Fixtures.norway, 1.0)))
+    val rawGroups = groups.map { case (name, ps) => s"$name+build" -> ps.map { case (p, t) => (raw(p), t) } }
     val sink = new Hash
+    def perCall[T](name: String, ps: Seq[(T, Double)])(call: (T, Double) => Unit) = {
+      val t0 = System.nanoTime()
+      ps.foreach { case (p, t) => call(p, t) }
+      name -> (System.nanoTime() - t0) / 1e3 / ps.size
+    }
     val perPass = (0 until 7).map { _ =>
-      groups.map { case (name, ps) =>
-        val t0 = System.nanoTime()
-        ps.foreach { case (p, t) => label(p, t, sink) }
-        name -> (System.nanoTime() - t0) / 1e3 / ps.size
-      }
+      groups.map { case (name, ps) => perCall(name, ps)(label(_, _, sink)) } ++
+        rawGroups.map { case (name, rs) => perCall(name, rs)((r, t) => label(build(r), t, sink)) }
     }.drop(2)
-    val medians = groups.map(_._1).map { name =>
+    val medians = (groups.map(_._1) ++ rawGroups.map(_._1)).map { name =>
       val xs = perPass.map(_.toMap.apply(name)).sorted
       f""""$name": ${xs(xs.size / 2)}%.3f"""
     }

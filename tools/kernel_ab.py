@@ -15,7 +15,10 @@ corpus described in KernelAb.scala, then runs --rounds alternating rounds
 vertex-count group, each side's median over the rounds [first quartile,
 third quartile] and change/parent. A group whose two quartile ranges
 overlap is marked "unresolved": its rounds spread too widely to tell the
-sides apart. Exits 1 when the hashes differ, 2 when a side fails to build
+sides apart. Each group "<g>+build" times the same calls with the polygon
+built from raw coordinate arrays inside the timed call, so work a change
+moves between polygon construction and the label call shows there and not
+as a kernel gain or loss. Exits 1 when the hashes differ, 2 when a side fails to build
 or run. Standard library only.
 """
 import argparse
@@ -112,13 +115,14 @@ def main(argv=None, prepare=prepare_side):
             return 2
 
     groups = [g for g in times["parent"][0] if g != "sink"]
-    print(f"\nper-call label time (us), median of {args.rounds} alternating rounds [q1, q3]:")
-    print(f"  {'vertices':<9} {'parent':>26} {'change':>26}  change/parent")
+    print(f"\nper-call label time (us), median of {args.rounds} alternating rounds [q1, q3]"
+          " (+build: polygon built inside the call):")
+    print(f"  {'vertices':<13} {'parent':>26} {'change':>26}  change/parent")
     for g in groups:
         q = {s: quartiles([t[g] for t in times[s]]) for s in SIDES}
         cells = [f"{fmt(q[s][1])} [{fmt(q[s][0])}, {fmt(q[s][2])}]" for s in SIDES]
         overlap = q["parent"][0] <= q["change"][2] and q["change"][0] <= q["parent"][2]
-        print(f"  {g:<9} {cells[0]:>26} {cells[1]:>26}  {q['change'][1] / q['parent'][1]:.3f}"
+        print(f"  {g:<13} {cells[0]:>26} {cells[1]:>26}  {q['change'][1] / q['parent'][1]:.3f}"
               + ("  unresolved" if overlap else ""))
     return 0 if same else 1
 

@@ -22,7 +22,8 @@ def fake(hashes, calls):
             calls.append((name, mode))
             if mode == "hash":
                 return hashes[name]
-            return {"6": 10.0, "norway": 300.0 if name == "parent" else 150.0, "sink": "0"}
+            return {"6": 10.0, "norway": 300.0 if name == "parent" else 150.0,
+                    "norway+build": 400.0 if name == "parent" else 390.0, "sink": "0"}
         return run
     return prepare
 
@@ -65,6 +66,16 @@ class VerdictTest(unittest.TestCase):
         times = [side for side, mode in calls if mode == "time"]
         self.assertEqual(times, ["parent", "change", "change", "parent", "parent", "change"])
         self.assertRegex(out, r"norway +300\.0 \[300\.0, 300\.0\] +150\.0 \[150\.0, 150\.0\] +0\.500")
+
+    def test_build_groups_print_next_to_the_label_groups(self):
+        # a change that moves work out of the label call into polygon
+        # construction halves "norway" but barely moves "norway+build"
+        code, out = quiet(["--parent", "a", "--change", "b", "--rounds", "1"],
+                          fake({"parent": HASH, "change": HASH}, []))
+        self.assertEqual(code, 0)
+        self.assertIn("+build: polygon built inside the call", out)
+        self.assertRegex(out, r"norway +300\.0 \[300\.0, 300\.0\] +150\.0 \[150\.0, 150\.0\] +0\.500\n")
+        self.assertRegex(out, r"norway\+build +400\.0 \[400\.0, 400\.0\] +390\.0 \[390\.0, 390\.0\] +0\.975\n")
 
     def test_differing_hashes_exit_1(self):
         other = dict(HASH, probe_hash="abce")
