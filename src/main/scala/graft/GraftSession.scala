@@ -6,7 +6,8 @@ import graft.functions.GraftFunctions
 /** One place to build a correctly-configured session: AQE on (skew join
   * splitting is load-bearing for mega-polygon covers, SURVEY.md §2.2 E8),
   * shuffle partitions sized to the core count (never the 200 default),
-  * UTC, and the graft function registry installed.
+  * UTC, `file://` through [[graft.sources.LocalFs]] (no forked `chmod`
+  * per written file), and the graft function registry installed.
   */
 object GraftSession {
 
@@ -57,6 +58,9 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      // file:// through LocalFs: the stock LocalFileSystem's checksums and
+      // permission bits, with no forked chmod per file and directory
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.LocalFs].getName)
       // shuffle/spill files on tmpfs: in local mode all executor threads
       // share ONE disk, and shuffle-heavy ops anti-scale past ~8 threads
       // (measured: kNN 84s@8 -> 117s@32 on /tmp). A real cluster spreads

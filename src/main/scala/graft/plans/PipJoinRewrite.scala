@@ -62,7 +62,7 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
     * actual bboxes, build the join with `SpatialJoins.pipJoin`.
     */
   private[graft] def levelFor(polySide: LogicalPlan): Int =
-    polySide.stats.rowCount match {
+    rowCount(polySide) match {
       case Some(n) =>
         val lvl = (math.log(math.max(1.0, n.toDouble)) / math.log(4.0)).round.toInt + 4
         math.max(6, math.min(12, lvl))
@@ -72,8 +72,9 @@ object PipJoinRewrite extends Rule[LogicalPlan] {
   /** The side's row-count stats, looked up through projections: without
     * CBO a `Project` drops its child's row count, so a column-pruned
     * polygon side (any query that does not read every polygon column)
-    * would otherwise lose the count its leaf knows. (Only [[saltFor]]
-    * reads it; [[levelFor]] keeps the top node's stats.)
+    * would otherwise lose the count its leaf knows, and `select *` and a
+    * `count()` over the same side would plan different levels. [[levelFor]]
+    * and [[saltFor]] both read it.
     */
   private def rowCount(plan: LogicalPlan): Option[BigInt] =
     plan.stats.rowCount.orElse(plan match {

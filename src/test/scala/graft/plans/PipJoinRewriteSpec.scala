@@ -2,7 +2,9 @@ package graft.plans
 
 import graft.TestSpark
 import graft.functions.GraftFunctions._
+import graft.functions.PolygonCoverExpr
 import graft.sources.GeoTables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.optimizer.BuildRight
 import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint, Project, RepartitionByExpression}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
@@ -20,6 +22,14 @@ class PipJoinRewriteSpec extends AnyFunSuite {
 
   private lazy val polys = GeoTables.syntheticPolygons(spark, 15).toDF.cache()
   private lazy val points = GeoTables.syntheticPoints(spark, 800).toDF.cache()
+
+  /** A one-row polygon side: the polygon of [[polys]] that holds the most
+    * [[points]], so a brute-force comparison over it is not empty.
+    */
+  private lazy val fullest = {
+    val best = graft.gen.BruteForce.pipPairs(points, polys).toSeq.groupBy(_._2).maxBy(_._2.size)._1
+    GeoTables.syntheticPolygons(spark, 15).collect().filter(_.poly_id == best).toSeq.toDF()
+  }
 
   test("naive cross join + pip filter is rewritten to a cell equi-join") {
     val naive = points.crossJoin(polys)
@@ -53,6 +63,27 @@ class PipJoinRewriteSpec extends AnyFunSuite {
     assert(PipJoinRewrite.levelFor(planOf(1)) === 6) // clamp floor
   }
 
+  test("select *, a column-pruned and a count() query over one polygon side plan the same level") {
+    // without CBO a Project drops the side's row count; the level must be
+    // read through it, as the salt is
+    val joined = points.crossJoin(fullest).where(pip($"x", $"y", $"exterior", $"holes"))
+    def levels(df: DataFrame): Seq[Any] = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case c: PolygonCoverExpr => c.level.eval() }))
+    val pruned = joined.select("point_id", "poly_id")
+    val counted = joined.groupBy().count()
+    assert(levels(joined) === Seq(6), joined.queryExecution.optimizedPlan.toString)
+    assert(levels(pruned) === levels(joined), pruned.queryExecution.optimizedPlan.toString)
+    assert(levels(counted) === levels(joined), counted.queryExecution.optimizedPlan.toString)
+    val want = graft.gen.BruteForce.pipPairCounts(points, fullest)
+    assert(want.nonEmpty)
+    val got = joined.collect().map(r => (r.getAs[Long]("point_id"), r.getAs[String]("poly_id")))
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+    assert(got === want)
+    assert(pruned.collect().map(r => (r.getLong(0), r.getString(1))).groupBy(identity)
+      .map { case (k, v) => k -> v.length } === want)
+    assert(counted.head().getLong(0) === want.values.sum.toLong)
+  }
+
   test("rule leaves a cross join over a non-deterministic polygon side alone") {
     // the PIP plan reads the polygon side twice; two reads of rand() differ
     val noisy = polys.withColumn("r", org.apache.spark.sql.functions.rand(7))
@@ -80,7 +111,7 @@ class PipJoinRewriteSpec extends AnyFunSuite {
 
   test("shuffle-path rewrite over fewer polygons than partitions salts the geometry re-join") {
     // one polygon row: unsalted, all its refines would run in one task
-    val one = GeoTables.syntheticPolygons(spark, 1).collect().toSeq.toDF()
+    val one = fullest
     val leaf = one.queryExecution.optimizedPlan
     assert(PipJoinRewrite.saltFor(leaf) === spark.conf.get("spark.sql.shuffle.partitions").toInt)
     // column pruning puts a Project over the leaf; the row count holds through it
@@ -102,8 +133,9 @@ class PipJoinRewriteSpec extends AnyFunSuite {
       val perPartition = ColumnBridge.frame(spark, polyCopies.head).groupBy(spark_partition_id()).count()
         .collect().map(_.getLong(1)).toSeq
       assert(perPartition === Seq.fill(PipJoinRewrite.saltFor(one.queryExecution.optimizedPlan))(1L))
-      assert(df.select("point_id", "poly_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet ===
-        graft.gen.BruteForce.pipPairs(points, one))
+      val want = graft.gen.BruteForce.pipPairs(points, one)
+      assert(want.nonEmpty)
+      assert(df.select("point_id", "poly_id").collect().map(r => (r.getLong(0), r.getString(1))).toSet === want)
     }
   }
 

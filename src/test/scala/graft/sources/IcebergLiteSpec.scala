@@ -181,6 +181,29 @@ class IcebergLiteSpec extends AnyFunSuite {
       .map(p => data.relativize(p).toString).toSet
   }
 
+  test("a committed table keeps its layout, files 0666 and directories 0777 under the umask") {
+    val dir = freshDir()
+    val input = spark.range(2000).select(col("id"), (col("id") % 17).as("v"))
+    IcebergLite.run(input, Seq("id"), buckets = 4, bucketsPerWave = 4, dir)(_.withColumn("v2", col("v") + 1))
+    val root = Paths.get(dir)
+    val entries = Files.walk(root).iterator().asScala.filter(_ != root).toSeq
+    // file names modulo the write's UUID and the snapshot id
+    val layout = entries.map(p => root.relativize(p).toString
+      .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "<uuid>")
+      .replaceAll("manifest-\\d+", "manifest-<id>")).sorted
+    val perBucket = (0 until 4).flatMap(b => Seq(s"data/bucket=$b",
+      s"data/bucket=$b/.part-00000-<uuid>.c000.snappy.parquet.crc",
+      s"data/bucket=$b/part-00000-<uuid>.c000.snappy.parquet"))
+    assert(layout === (Seq("data") ++ perBucket ++
+      Seq("lineage", "lineage/part-<uuid>.parquet", "manifest-<id>.json")).sorted)
+    val umask = org.apache.hadoop.fs.permission.FsPermission.getUMask(spark.sparkContext.hadoopConfiguration).toShort
+    for (p <- entries) {
+      val mode = Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff
+      val want = (if (Files.isDirectory(p)) 0x1ff else 0x1b6) & ~umask
+      assert(mode === want, f"${root.relativize(p)}: 0$mode%o, want 0$want%o")
+    }
+  }
+
   test("run leaves the session's partitionOverwriteMode alone") {
     val key = "spark.sql.sources.partitionOverwriteMode"
     val orig = spark.conf.getOption(key)

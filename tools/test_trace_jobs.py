@@ -31,7 +31,8 @@ class BreakdownTest(unittest.TestCase):
                  tasks=[(100, 100, 90, 80), (150, 150, 140, 120), (400, 50, 45, 30)])
         b = trace_jobs.breakdown(s, [s])
         self.assertEqual(b, {"wall_ms": 1000, "jobs": 2, "tasks": 3, "first_task_ms": 100,
-                             "run_ms": 275, "cpu_ms": 230, "driver_only_ms": 1000 - 250})
+                             "run_ms": 275, "cpu_ms": 230, "offcpu_ms": 45,
+                             "driver_only_ms": 1000 - 250})
 
     def test_nested_span_tasks_shift_and_clip(self):
         outer = span(1, "outer", 1000, 2000, jobs=1, tasks=[(900, 300, 10, 5)])
@@ -44,6 +45,15 @@ class BreakdownTest(unittest.TestCase):
         self.assertEqual(b["first_task_ms"], 200)
         self.assertEqual(b["driver_only_ms"], 1000 - 100 - 100)
         self.assertEqual(trace_jobs.breakdown(inner, trees[2])["driver_only_ms"], 200)
+
+    def test_offcpu_sums_run_minus_cpu_over_the_subtree(self):
+        # a task that waits 120 of its 300 ms run (a spawned process, say),
+        # and a nested span's task that waits 10 of 50
+        outer = span(1, "outer", 0, 1000, jobs=1, tasks=[(0, 310, 300, 180)])
+        inner = span(2, "inner", 400, 500, parent=1, jobs=1, tasks=[(0, 60, 50, 40)])
+        trees = trace_jobs.subtrees([outer, inner])
+        self.assertEqual(trace_jobs.breakdown(outer, trees[1])["offcpu_ms"], 130)
+        self.assertEqual(trace_jobs.breakdown(inner, trees[2])["offcpu_ms"], 10)
 
     def test_no_tasks(self):
         b = trace_jobs.breakdown(span(1, "x", 0, 40), [span(1, "x", 0, 40)])
@@ -61,9 +71,10 @@ class TableTest(unittest.TestCase):
         lines = trace_jobs.table(self.spans(), "job")
         self.assertEqual(lines[0].split("\t"), ["id", "name"] + list(trace_jobs.COLUMNS))
         self.assertEqual(len(lines), 4)
-        self.assertEqual(lines[1].split("\t"), ["1", "job", "100", "1", "1", "10", "15", "12", "80"])
+        self.assertEqual(lines[1].split("\t"), ["1", "job", "100", "1", "1", "10", "15", "12", "3",
+                                                "80"])
         self.assertEqual(lines[3].split("\t"), ["median(2)", "job", "150", "2", "1.5", "20", "16",
-                                                "12.5", "130"])
+                                                "12.5", "3.5", "130"])
 
     def test_cli_reads_a_trace_file(self):
         with tempfile.TemporaryDirectory() as d:
@@ -73,7 +84,7 @@ class TableTest(unittest.TestCase):
             out = subprocess.run([sys.executable, str(Path(trace_jobs.__file__)), p],
                                  check=True, capture_output=True, text=True).stdout
         self.assertEqual(len(out.strip().split("\n")), 5)
-        self.assertIn("2\tprobe\t10\t0\t0\t\t0\t0\t10", out)
+        self.assertIn("2\tprobe\t10\t0\t0\t\t0\t0\t0\t10", out)
 
 
 if __name__ == "__main__":

@@ -12,6 +12,8 @@ over the span and the spans nested in it, this prints:
 - wall ms, Spark jobs and tasks;
 - `first_task_ms`: the offset of the first task launch (empty if none);
 - `run_ms` and `cpu_ms`: the tasks' summed run and CPU time;
+- `offcpu_ms`: `run_ms - cpu_ms`, the tasks' time off the CPU (blocked on
+  I/O, locks or a spawned process, or waiting for a core);
 - `driver_only_ms`: the span's time with no task running.
 
 `--name` keeps only spans of that name; when several spans share a name,
@@ -23,7 +25,7 @@ import statistics
 import sys
 
 COLUMNS = ("wall_ms", "jobs", "tasks", "first_task_ms", "run_ms", "cpu_ms",
-           "driver_only_ms")
+           "offcpu_ms", "driver_only_ms")
 
 
 def load(lines):
@@ -71,13 +73,16 @@ def breakdown(span, tree):
              for t in tree for off, w, run, cpu in t.get("task_offsets_ms", [])]
     busy = covered([(max(0, off), min(wall, off + w)) for off, w, _, _ in tasks
                     if off + w > 0 and off < wall])
+    run_ms = sum(run for _, _, run, _ in tasks)
+    cpu_ms = sum(cpu for _, _, _, cpu in tasks)
     return {
         "wall_ms": wall,
         "jobs": sum(t.get("spark_jobs", 0) for t in tree),
         "tasks": len(tasks),
         "first_task_ms": min((off for off, _, _, _ in tasks), default=None),
-        "run_ms": sum(run for _, _, run, _ in tasks),
-        "cpu_ms": sum(cpu for _, _, _, cpu in tasks),
+        "run_ms": run_ms,
+        "cpu_ms": cpu_ms,
+        "offcpu_ms": run_ms - cpu_ms,
         "driver_only_ms": wall - busy,
     }
 
