@@ -25,6 +25,13 @@ import org.apache.spark.unsafe.Platform
   * graft.functions.ExprHelpers, so the surrounding stage STAYS inside
   * whole-stage codegen (a CodegenFallback expression would force the whole
   * stage into interpreted projection — measured in PlanSpec).
+  *
+  * Every expression declares its exact `nullable`, never a blanket `true`.
+  * Spark infers `isnotnull(e)` from a join key or a null-intolerant
+  * predicate over a nullable `e` and pushes that filter below the
+  * `Project` that computes `e`, where it evaluates `e` again: on a
+  * join-key path an over-declared `nullable` re-runs the expression
+  * inside the filter. A non-nullable `e` lets the filter fold away.
   */
 object GeomEncoding {
   val pointType: StructType =
@@ -135,7 +142,8 @@ object GeomEncoding {
   * [[GeomEncoding.decodePolygon]] and handed to the ExprHelpers method,
   * whose signature is (leading..., polygon, trailing...). A malformed
   * polygon yields SQL null unless `nullOnMalformed` is false, in which
-  * case the helper receives the null.
+  * case the helper receives the null. Each one declares its exact
+  * `nullable` ([[GeomEncoding]]).
   */
 private[functions] trait PolygonCallCodegen extends Expression {
   /** required children (null-propagating) before the polygon */
@@ -199,13 +207,14 @@ private[functions] trait PolygonCallCodegen extends Expression {
   * malformed ring, non-positive tolerance — yields the (NaN, NaN, NaN)
   * sentinel, the same error collapse as the reference's C ABI
   * (/root/reference/src/ffi.rs:78-80). Null exterior/tolerance yield null;
-  * null holes mean "no holes". Deterministic.
+  * null holes mean "no holes". Deterministic. So it is nullable exactly
+  * when `exterior` or `tolerance` is (the [[GeomEncoding]] rule).
   */
 case class PolylabelExpr(exterior: Expression, holes: Expression, tolerance: Expression)
     extends Expression with PolygonCallCodegen {
   override def children: Seq[Expression] = Seq(exterior, holes, tolerance)
   override def dataType: DataType = GeomEncoding.labelType
-  override def nullable: Boolean = true
+  override def nullable: Boolean = exterior.nullable || tolerance.nullable
   override def prettyName: String = "polylabel"
 
   override protected def exteriorChild: Expression = exterior

@@ -15,16 +15,23 @@ final case class LabelResult(x: Double, y: Double, dist: Double)
   * two candidate cells have identical distances (observable on the FFI
   * octagon fixture).
   *
-  * Storage is a packed strided double array (cx, cy, halfExtent, distance,
-  * maxDistance per slot) — no per-cell allocation, no pointer chasing in
-  * the hot loop. Record moves copy 5 doubles; comparisons read slot+4.
+  * Storage is an index heap: the heap holds record ids with a parallel
+  * key array, and each record's (cx, cy, halfExtent, distance) sits in a
+  * strided pool whose slots are reused after their record pops. A sift
+  * step moves one int and one double and compares keys in place; no
+  * per-cell allocation. The comparisons are those of a heap of whole
+  * records, so the pop order is the same.
   */
-private[geom] final class CellHeap(initialCapacity: Int = 64) {
-  private final val S = 5 // doubles per record; slot 4 = maxDistance key
-  private var data = new Array[Double](math.max(initialCapacity, 8) * S)
+private[graft] final class CellHeap(initialCapacity: Int = 64) {
+  private final val S = 4 // pool doubles per record: cx, cy, halfExtent, distance
+  private var ids = new Array[Int](math.max(initialCapacity, 8))
+  private var keys = new Array[Double](ids.length)
   private var n = 0
-  // the "hole element" scratch record used during sifts
-  private val el = new Array[Double](S)
+  private var pool = new Array[Double](ids.length * S)
+  // ids of popped records, ready for reuse; `used` slots were ever handed out
+  private var free = new Array[Int](ids.length)
+  private var nFree = 0
+  private var used = 0
 
   def size: Int = n
   def nonEmpty: Boolean = n > 0
@@ -33,54 +40,49 @@ private[geom] final class CellHeap(initialCapacity: Int = 64) {
   var cx = 0.0; var cy = 0.0; var halfExtent = 0.0
   var distance = 0.0; var maxDistance = 0.0
 
-  private def ensure(cap: Int): Unit = {
-    if (cap * S > data.length) {
-      var c = data.length / S
-      while (c < cap) c *= 2
-      val bigger = new Array[Double](c * S)
-      System.arraycopy(data, 0, bigger, 0, n * S)
-      data = bigger
+  /** Room for `more` further records, in the heap and in the pool. */
+  private def ensure(more: Int): Unit = {
+    if (n + more > ids.length) {
+      var c = ids.length
+      while (c < n + more) c *= 2
+      ids = java.util.Arrays.copyOf(ids, c)
+      keys = java.util.Arrays.copyOf(keys, c)
+    }
+    if ((used + more) * S > pool.length) {
+      var c = pool.length / S
+      while (c < used + more) c *= 2
+      pool = java.util.Arrays.copyOf(pool, c * S)
+      free = java.util.Arrays.copyOf(free, c)
     }
   }
 
-  @inline private def key(pos: Int): Double = data(pos * S + 4)
-  @inline private def move(from: Int, to: Int): Unit =
-    System.arraycopy(data, from * S, data, to * S, S)
-  @inline private def loadEl(pos: Int): Unit =
-    System.arraycopy(data, pos * S, el, 0, S)
-  @inline private def storeEl(pos: Int): Unit =
-    System.arraycopy(el, 0, data, pos * S, S)
-
-  /** Write a record directly into slot `pos` (no heap maintenance). */
-  @inline private def put(pos: Int, x: Double, y: Double, he: Double,
-                          d: Double, maxD: Double): Unit = {
-    val b = pos * S
-    data(b) = x; data(b + 1) = y; data(b + 2) = he
-    data(b + 3) = d; data(b + 4) = maxD
+  @inline private def move(from: Int, to: Int): Unit = {
+    ids(to) = ids(from); keys(to) = keys(from)
   }
 
+  // each sift lifts the record at pos0 out as the "hole element" (id, key)
+  // and writes it back where the hole stops
   private def siftUp(start: Int, pos0: Int): Unit = {
     var pos = pos0
-    loadEl(pos)
-    val k = el(4)
+    val id = ids(pos); val key = keys(pos)
     var done = false
     while (!done && pos > start) {
       val parent = (pos - 1) / 2
-      if (k <= key(parent)) done = true
+      if (key <= keys(parent)) done = true
       else { move(parent, pos); pos = parent }
     }
-    storeEl(pos)
+    ids(pos) = id; keys(pos) = key
   }
 
   def pop(): Unit = {
     n -= 1
-    val lastBase = n * S
-    if (n == 0) {
-      cx = data(lastBase); cy = data(lastBase + 1); halfExtent = data(lastBase + 2)
-      distance = data(lastBase + 3); maxDistance = data(lastBase + 4)
-    } else {
-      cx = data(0); cy = data(1); halfExtent = data(2)
-      distance = data(3); maxDistance = data(4)
+    val id = ids(0)
+    val b = id * S
+    cx = pool(b); cy = pool(b + 1); halfExtent = pool(b + 2)
+    distance = pool(b + 3); maxDistance = keys(0)
+    free(nFree) = id
+    nFree += 1
+    if (n > 0) {
       move(n, 0)
       siftDownToBottom(0)
     }
@@ -90,10 +92,10 @@ private[geom] final class CellHeap(initialCapacity: Int = 64) {
     val end = n
     val start = pos0
     var pos = pos0
-    loadEl(pos)
+    val id = ids(pos); val key = keys(pos)
     var child = 2 * pos + 1
     while (child <= end - 2) {
-      if (key(child) <= key(child + 1)) child += 1
+      if (keys(child) <= keys(child + 1)) child += 1
       move(child, pos)
       pos = child
       child = 2 * pos + 1
@@ -102,7 +104,7 @@ private[geom] final class CellHeap(initialCapacity: Int = 64) {
       move(child, pos)
       pos = child
     }
-    storeEl(pos)
+    ids(pos) = id; keys(pos) = key
     siftUp(start, pos)
   }
 
@@ -112,20 +114,19 @@ private[geom] final class CellHeap(initialCapacity: Int = 64) {
   private def siftDownRange(pos0: Int): Unit = {
     val end = n
     var pos = pos0
-    loadEl(pos)
-    val k = el(4)
+    val id = ids(pos); val key = keys(pos)
     var child = 2 * pos + 1
     var done = false
     while (!done && child <= end - 2) {
-      if (key(child) <= key(child + 1)) child += 1
-      if (k >= key(child)) done = true
+      if (keys(child) <= keys(child + 1)) child += 1
+      if (key >= keys(child)) done = true
       else { move(child, pos); pos = child; child = 2 * pos + 1 }
     }
-    if (!done && child == end - 1 && k < key(child)) {
+    if (!done && child == end - 1 && key < keys(child)) {
       move(child, pos)
       pos = child
     }
-    storeEl(pos)
+    ids(pos) = id; keys(pos) = key
   }
 
   /** Floyd heapify of the whole array. */
@@ -137,17 +138,22 @@ private[geom] final class CellHeap(initialCapacity: Int = 64) {
   /** Begin appending `count` records for extend; call `append` exactly
     * `count` times, then `finishExtend(count)`.
     */
-  def beginExtend(count: Int): Unit = ensure(n + count)
+  def beginExtend(count: Int): Unit = ensure(count)
 
   @inline def append(x: Double, y: Double, he: Double, d: Double, maxD: Double): Unit = {
-    put(n, x, y, he, d, maxD)
+    val id =
+      if (nFree > 0) { nFree -= 1; free(nFree) }
+      else { used += 1; used - 1 }
+    val b = id * S
+    pool(b) = x; pool(b + 1) = y; pool(b + 2) = he; pool(b + 3) = d
+    ids(n) = id; keys(n) = maxD
     n += 1
   }
 
   /** Restore the heap property after `count` appended records, with the
     * batch-vs-size policy Rust's `BinaryHeap::extend` uses (full Floyd
-    * rebuild when the batch rivals the existing heap — element footprint
-    * 40 bytes gives the 2048/40 = 51 small-heap hybrid threshold).
+    * rebuild when the batch rivals the existing heap — the reference's
+    * 40-byte element gives the 2048/40 = 51 small-heap hybrid threshold).
     */
   def finishExtend(count: Int): Unit = {
     val start = n - count

@@ -70,8 +70,11 @@ object Tiling {
     // is already optimal and `best` only improves on STRICTLY greater
     // distance) while capping the quadtree work — a tiny absolute tolerance
     // would explode the queue along the rectangle's medial-axis ridge where
-    // a 1-D set of points ties for optimal
-    val tol = least(col("fmaxx") - col("fminx"), col("fmaxy") - col("fminy")) / 64.0
+    // a 1-D set of points ties for optimal. A product, not `/ 64.0`: the
+    // two round the same real number (64 is a power of two), but Spark's
+    // Divide is always nullable, and a nullable label would bring back
+    // the pushed-down `isnotnull` filter that re-runs the kernel
+    val tol = least(col("fmaxx") - col("fminx"), col("fmaxy") - col("fminy")) * (1.0 / 64.0)
     tiles.toDF
       .withColumn("label", polylabel(ring,
         lit(null).cast(graft.functions.GeomEncoding.holesType), tol))

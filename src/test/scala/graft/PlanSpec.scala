@@ -86,6 +86,30 @@ class PlanSpec extends AnyFunSuite {
     }
   }
 
+  test("tile assignment labels each tile once: one polylabel in the plans, none in a filter") {
+    // the PIP cell join makes Spark infer `isnotnull` on the tile's cell;
+    // over a nullable label it is pushed below the label projection and
+    // re-derives polylabel(...) inside the filter
+    import graft.functions.PolylabelExpr
+    import graft.operators.Tiling
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import org.apache.spark.sql.execution.FilterExec
+    val tiles = Tiling.tile(graft.sources.Images.table(spark, 16))
+    val df = Tiling.assignToPolygons(tiles, GeoTables.syntheticPolygons(spark, 500).toDF, 9)
+    assert(df.collect().nonEmpty)
+    def labels(e: Expression) = e.collect { case p: PolylabelExpr => p }
+    val optimized = df.queryExecution.optimizedPlan
+    assert(optimized.flatMap(_.expressions.flatMap(labels)).size === 1, s"optimized:\n$optimized")
+    assert(optimized.collect { case f: Filter => labels(f.condition) }.flatten.isEmpty,
+      s"a filter re-derives the label:\n$optimized")
+    val nodes = planNodes(df)
+    val executed = df.queryExecution.executedPlan
+    assert(nodes.flatMap(_.expressions.flatMap(labels)).size === 1, s"executed:\n$executed")
+    assert(nodes.collect { case f: FilterExec => labels(f.condition) }.flatten.isEmpty,
+      s"a filter re-derives the label:\n$executed")
+  }
+
   test("aggregation is partial+final (map-side combine before the shuffle)") {
     val df = SparkEntry.queries("q_cell_of")(spark, "/root/testdata/sf0.001")
     val plan = planOf(df)

@@ -65,6 +65,32 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(r.getDouble(0).isNaN && r.getDouble(1).isNaN && r.getDouble(2).isNaN)
   }
 
+  test("polylabel is nullable exactly when exterior or tolerance is; null in gives null, malformed gives NaN (codegen and interpreted)") {
+    val sq = "array(named_struct('x', 0D, 'y', 0D), named_struct('x', 4D, 'y', 0D), " +
+      "named_struct('x', 4D, 'y', 4D), named_struct('x', 0D, 'y', 4D))"
+    // the square with a null point: a non-null but malformed exterior
+    val malformed = "array(named_struct('x', 0D, 'y', 0D), CAST(NULL AS struct<x: double, y: double>), " +
+      "named_struct('x', 4D, 'y', 4D), named_struct('x', 0D, 'y', 4D))"
+    val nan = Seq.fill(3)(java.lang.Double.doubleToRawLongBits(Double.NaN))
+    // (exterior, holes, tolerance, nullable, result of row id 0: None = SQL null)
+    val cases = Seq(
+      (sq, "NULL", "0.1D", false, Some(Seq(2.0, 2.0, 2.0).map(java.lang.Double.doubleToRawLongBits))),
+      (malformed, "NULL", "0.1D", false, Some(nan)),
+      (sq, "NULL", "-1D", false, Some(nan)),
+      (sq, "array(CAST(NULL AS array<struct<x: double, y: double>>))", "0.1D", false, Some(nan)),
+      (s"IF(id = 0, NULL, $sq)", "NULL", "0.1D", true, None),
+      (sq, "NULL", "IF(id = 0, NULL, 0.1D)", true, None))
+    for ((mode, conf) <- modes; (e, h, t, nullable, want) <- cases) withConf(conf) {
+      val what = s"$mode: polylabel($e, $h, $t)"
+      val df = spark.range(2).selectExpr(s"polylabel($e, $h, $t) AS l")
+      assert(df.schema("l").nullable === nullable, what)
+      val got = df.collect().head
+      assert((if (got.isNullAt(0)) None
+        else Some(got.getStruct(0).toSeq.map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double])))) === want,
+        what)
+    }
+  }
+
   test("cell_of / cell_parent / cell_kring match CellIndex (SQL surface)") {
     val rows = spark.sql(
       """SELECT cell_of(10.5D, 59.9D, 12) AS c,

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.TestSpark
-import graft.geom.{CellIndex, Fixtures, Geom}
+import graft.geom.{CellIndex, Fixtures, Geom, Polylabel, PolygonG}
 import graft.sources.{GeoTables, Images}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,6 +74,26 @@ class TilingSpec extends AnyFunSuite {
       assert(math.abs(r.getDouble(3) - cx) < 1e-6, "label_x should be the rect center")
       assert(math.abs(r.getDouble(4) - cy) < 1e-6)
       assert(r.getLong(5) === CellIndex.cellOf(r.getDouble(3), r.getDouble(4), 12))
+    }
+  }
+
+  test("assign labels all 1,430 tiles of the 160-image table bit for bit as Polylabel.polylabel") {
+    // the pipeline's table; its tolerance is `* (1.0 / 64.0)`, which must
+    // round exactly as `/ 64.0`
+    val tiles160 = Tiling.tile(Images.table(spark, 160))
+    val byKey = tiles160.collect().map(t => (t.image_id, t.tile_ix, t.tile_iy) -> t).toMap
+    assert(byKey.size === 1430)
+    val got = Tiling.assign(tiles160, level = 12).collect()
+    assert(got.length === 1430)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    for (r <- got) {
+      val t = byKey((r.getString(0), r.getInt(1), r.getInt(2)))
+      val rect = PolygonG(Seq((t.fminx, t.fminy), (t.fmaxx, t.fminy), (t.fmaxx, t.fmaxy),
+        (t.fminx, t.fmaxy), (t.fminx, t.fminy)))
+      val want = Polylabel.polylabel(rect, math.min(t.fmaxx - t.fminx, t.fmaxy - t.fminy) / 64.0)
+      assert((bits(r.getDouble(3)), bits(r.getDouble(4))) === ((bits(want.x), bits(want.y))),
+        s"${t.image_id} tile (${t.tile_ix}, ${t.tile_iy})")
+      assert(r.getLong(5) === CellIndex.cellOf(want.x, want.y, 12))
     }
   }
 

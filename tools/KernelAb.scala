@@ -1,10 +1,12 @@
 import graft.functions.ExprHelpers
 import graft.geom.{Fixtures, Polylabel, PolygonG, Ring}
-import graft.sources.GeoTables
+import graft.operators.Tiling
+import graft.sources.{GeoTables, Images}
 
 /** The JVM side of tools/kernel_ab.py, compiled against one source tree's
   * classes. It uses only API that both sides of an A/B share:
-  * `Polylabel.polylabel`, `Fixtures`, `GeoTables.syntheticPolygon`, and
+  * `Polylabel.polylabel`, `Fixtures`, `GeoTables.syntheticPolygon`,
+  * `Images.footprint`, `widthOf` and `heightOf`, `Tiling.TileSize`, and
   * `ExprHelpers.signedDist(x, y, PolygonG)`, the `signed_dist` expression's
   * entry, for the signed-distance probes.
   *
@@ -12,8 +14,9 @@ import graft.sources.GeoTables
   *   KernelAb hash   one JSON line: counts and hashes of every label and
   *                   every signedDistance probe over the corpus below
   *   KernelAb time   one JSON line: per-call label time (us) per vertex-
-  *                   count group, for `image_pipeline`-like rectangles and
-  *                   for Norway, the median of 5 passes after 2 warm-up;
+  *                   count group, for `image_pipeline`-like rectangles, for
+  *                   the tiles `image_pipeline` labels and for Norway, the
+  *                   median of 5 passes after 2 warm-up;
   *                   and the same per "<group>+build", where each call
   *                   first builds its polygon from raw coordinate arrays
   *                   (`Ring.of`, `new PolygonG`), so work that a change
@@ -122,6 +125,24 @@ object KernelAb {
     }
   }
 
+  /** The 1,430 tile footprints of `image_pipeline`'s 160 images, cut as
+    * `Tiling.tile` cuts them, as the rings `Tiling.assign` labels, with
+    * its tolerance, a 64th of the shorter side. Aspect ratios reach 9.4,
+    * against at most 6 in `rects`.
+    */
+  def tiles: Seq[(PolygonG, Double)] = (0L until 160L).flatMap { id =>
+    val (fx0, fy0, fx1, fy1) = Images.footprint(id)
+    val nx = Images.widthOf(id) / Tiling.TileSize
+    val ny = Images.heightOf(id) / Tiling.TileSize
+    val stepX = (fx1 - fx0) / nx
+    val stepY = (fy1 - fy0) / ny
+    for (ty <- 0 until ny; tx <- 0 until nx) yield {
+      val (x0, y0) = (fx0 + tx * stepX, fy1 - (ty + 1) * stepY)
+      val (x1, y1) = (fx0 + (tx + 1) * stepX, fy1 - ty * stepY)
+      (PolygonG(Seq((x0, y0), (x1, y0), (x1, y1), (x0, y1), (x0, y0))), math.min(x1 - x0, y1 - y0) / 64.0)
+    }
+  }
+
   /** Each ring of `p` as fresh raw coordinate arrays, closed. */
   def raw(p: PolygonG): Array[(Array[Double], Array[Double])] = p.rings.map(r => (r.xs.clone(), r.ys.clone()))
 
@@ -133,7 +154,7 @@ object KernelAb {
     val groups = vertexCycle.map { nv =>
       nv.toString -> (0L until nSynthetic.toLong).filter(id => vertexCycle((id % vertexCycle.size).toInt) == nv)
         .map(synthetic(1L, _)).map((_, 0.01))
-    } ++ Seq("rect" -> rects, "norway" -> Seq.fill(20)((Fixtures.norway, 1.0)))
+    } ++ Seq("rect" -> rects, "tiles" -> tiles, "norway" -> Seq.fill(20)((Fixtures.norway, 1.0)))
     val rawGroups = groups.map { case (name, ps) => s"$name+build" -> ps.map { case (p, t) => (raw(p), t) } }
     val sink = new Hash
     def perCall[T](name: String, ps: Seq[(T, Double)])(call: (T, Double) => Unit) = {
